@@ -543,7 +543,7 @@ def run_ablation(train_fn: Callable, config: AblationConfig, spark: SparkSession
         t.info_dict["seq"] = len(done)
         done.append(t)
 
-    result = _aggregate_result(spark, done, config.direction)
+    result = _aggregate_result(done, config.direction)
     best = next((t for t in done if t.trial_id == result.get("best_id")), None)
     if best is not None:
         result["best_config"] = dict(best.params)
@@ -668,7 +668,7 @@ def _run_custom_ablator(train_fn: Callable, config: AblationConfig, spark: Spark
             finished_q.append(t)
 
     ablator.finalize_experiment(done)
-    result = _aggregate_result(spark, done, config.direction)
+    result = _aggregate_result(done, config.direction)
     best = next((t for t in done if t.trial_id == result.get("best_id")), None)
     if best is not None:
         result["best_config"] = {k: v for k, v in best.params.items() if not callable(v)}

@@ -5,9 +5,12 @@ control plane (`maggy/core/executors/trial_executor.py:35-213`,
 `maggy/core/rpc.py`) with short-lived Spark jobs: each wave of
 pending trials becomes a DataFrame with exactly one trial per
 partition (`parallelize` slicing), `mapInPandas` fans the user
-function out one task per trial, and results come back as rows.
-Spark task retries replace the reference's lost-trial blacklist
-(C10); no sockets.
+function out one task per trial, and results come back as rows; no
+sockets. A trial that raises comes back as an ERROR row, but nothing
+yet replaces the reference's lost-trial blacklist (C10): a trial
+whose Python worker dies fails its task, Spark's task retries (none
+in local mode) only re-run it, and the job failure aborts the whole
+experiment.
 
 Kwarg injection mirrors `trial_executor.py:166-179` (signature
 inspection); return normalization mirrors `util.handle_return_val`

@@ -5,9 +5,9 @@ Reference lifecycle (SURVEY.md §3.1, `maggy/experiment/experiment.py:
 drive trials to completion, return the result dict. The rebuild's
 loop is wave-based: the controller emits pending trials, each wave
 runs as a grouped pandas UDF (executor.py), finalized trials feed
-back into the controller, and the final result is a Spark
-aggregation over the trials DataFrame (operator A1) — no RPC server,
-no reservation registry, no digestion threads.
+back into the controller, and the final result is the A1 summary
+computed on the driver over the trials it already holds — no RPC
+server, no reservation registry, no digestion threads.
 
 Asynchrony note (SURVEY.md §7.3b): the reference assigns a new trial
 the instant one finishes. Wave scheduling approximates that with
@@ -17,6 +17,7 @@ wave size = parallelism; ASHA promotions are checked between waves.
 from __future__ import annotations
 
 import json
+import math
 import time
 from typing import Any, Callable
 
@@ -32,6 +33,7 @@ from maggy_spark.config import (
 )
 from maggy_spark.executor import run_trial_wave
 from maggy_spark.optimizers import get_controller
+from maggy_spark.store import TRIALS_SCHEMA, ExperimentStore, trial_rows
 from maggy_spark.trial import Trial
 
 DEC = "decimal(18,4)"
@@ -270,8 +272,6 @@ def _run_hpo(train_fn: Callable, config: HyperparameterOptConfig, spark: SparkSe
         run_id = next_run_id(config.log_dir, config.name)
         exp_dir = register_environment(config.name, run_id, config.log_dir)
         if getattr(config, "stream_artifacts", False):
-            from maggy_spark.store import ExperimentStore
-
             store = ExperimentStore(spark, exp_dir + "/live", direction=config.direction)
 
     t_start = time.time()
@@ -280,7 +280,7 @@ def _run_hpo(train_fn: Callable, config: HyperparameterOptConfig, spark: SparkSe
     else:
         all_trials, waves = _drive_waves(train_fn, config, spark, controller, parallelism, store, exp_dir)
 
-    result = _aggregate_result(spark, all_trials, config.direction)
+    result = _aggregate_result(all_trials, config.direction)
     result["duration_sec"] = round(time.time() - t_start, 3)
     result["num_waves"] = waves
     result["errors"] = sum(t.status == Trial.ERROR for t in all_trials)
@@ -470,15 +470,8 @@ def _drive_async(train_fn, config, spark, controller, parallelism, store=None, e
 
 def trials_to_df(spark: SparkSession, trials: list[Trial], direction: str = "max"):
     """Materialize driver-side trials as the `trials` DataFrame
-    (FIXTURES.md F2 schema)."""
-    rows = [t.to_row(seq=t.info_dict.get("seq", i), direction=direction, budget=int(t.info_dict.get("budget", 0)))
-            for i, t in enumerate(trials)]
-    schema = (
-        "trial_id string, seq bigint, params map<string,string>, budget int, "
-        "sample_type string, status string, direction string, final_metric double, "
-        "early_stop boolean, duration_ms bigint"
-    )
-    return spark.createDataFrame(rows, schema)
+    (FIXTURES.md F2 schema, defined once in store.py)."""
+    return spark.createDataFrame(trial_rows(trials, direction), TRIALS_SCHEMA)
 
 
 def summarize_finalized(finalized_df, direction: str) -> dict:
@@ -524,13 +517,44 @@ def summarize_finalized(finalized_df, direction: str) -> dict:
     }
 
 
-def _aggregate_result(spark: SparkSession, trials: list[Trial], direction: str) -> dict:
-    """The A1 result aggregation over the experiment's own trials DF
-    (reference optimization_driver.py:344-406 + prep_results)."""
+def _aggregate_result(trials: list[Trial], direction: str) -> dict:
+    """The A1 result aggregation over the experiment's own trials
+    (reference optimization_driver.py:344-406 + prep_results).
+
+    Computed in Python: the driver already holds every row. It follows
+    summarize_finalized's rules exactly — that function computes the
+    same summary over the live store, and the two are checked against
+    each other. Only FINALIZED trials count; null metrics are left out
+    of best/worst/avg; best is max (sign*m, -seq) and worst is
+    min (sign*m, seq), with seq defaulting to the list index as in
+    trials_to_df; NaN orders above every number, as Spark orders
+    doubles.
+    """
     if not trials:
         return {"num_trials": 0, "early_stopped": 0}
-    df = trials_to_df(spark, trials, direction).where(F.col("status") == "FINALIZED")
-    if df.isEmpty():
+    finalized = [(t.info_dict.get("seq", i), t) for i, t in enumerate(trials) if t.status == Trial.FINALIZED]
+    if not finalized:
         errs = sum(t.status == Trial.ERROR for t in trials)
         return {"num_trials": len(trials), "errors": errs, "early_stopped": 0}
-    return summarize_finalized(df, direction)
+    early_stopped = sum(bool(t.early_stop) for _, t in finalized)
+    scored = [(seq, t.trial_id, float(t.final_metric)) for seq, t in finalized if t.final_metric is not None]
+    if not scored:
+        return {"num_trials": len(finalized), "early_stopped": early_stopped}
+    sign = -1.0 if direction == "min" else 1.0
+
+    def order(m: float) -> tuple:
+        m *= sign
+        return (True, 0.0) if math.isnan(m) else (False, m)
+
+    # struct order as in summarize_finalized: metric, seq, then trial_id
+    _, best_id, best_val = max(scored, key=lambda r: (order(r[2]), -r[0], r[1]))
+    _, worst_id, worst_val = min(scored, key=lambda r: (order(r[2]), r[0], r[1]))
+    return {
+        "best_id": best_id,
+        "best_val": best_val,
+        "worst_id": worst_id,
+        "worst_val": worst_val,
+        "avg": sum(m for _, _, m in scored) / len(scored),
+        "num_trials": len(finalized),
+        "early_stopped": early_stopped,
+    }

@@ -10,24 +10,79 @@ plain Spark SQL instead of asking the driver process.
 
 Append-only parquet with one file per wave: cheap atomic appends, no
 compaction needed at experiment scale (thousands of trials, not
-billions of rows). The metric stream reuses the same expressions as
-operators/earlystop.py.
+billions of rows). Appends are written by the driver with pyarrow —
+the rows are already in its memory, so no Spark job is needed to put
+them on disk — and read back with Spark. The metric stream reuses the
+same expressions as operators/earlystop.py.
 """
 
 from __future__ import annotations
 
 import os
-import time
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from maggy_spark.trial import Trial
 
-# the trials row shape lives with its one producer,
-# experiment.trials_to_df (FIXTURES.md F2); this store appends through
-# that function, so there is deliberately no second schema copy here
-METRICS_SCHEMA = "trial_id string, step bigint, value double"
+# The one definition of each table's row shape (FIXTURES.md F2 for
+# trials). The store writes the Arrow form; the Spark form, used by
+# experiment.trials_to_df and seen by every reader, is derived from it.
+TRIALS_ARROW_SCHEMA = pa.schema([
+    ("trial_id", pa.string()),
+    ("seq", pa.int64()),
+    ("params", pa.map_(pa.string(), pa.string())),
+    ("budget", pa.int32()),
+    ("sample_type", pa.string()),
+    ("status", pa.string()),
+    ("direction", pa.string()),
+    ("final_metric", pa.float64()),
+    ("early_stop", pa.bool_()),
+    ("duration_ms", pa.int64()),
+])
+TRIALS_SCHEMA = from_arrow_schema(TRIALS_ARROW_SCHEMA)
+METRICS_ARROW_SCHEMA = pa.schema([
+    ("trial_id", pa.string()),
+    ("step", pa.int64()),
+    ("value", pa.float64()),
+])
+METRICS_SCHEMA = from_arrow_schema(METRICS_ARROW_SCHEMA)
+
+
+def trial_rows(trials: list[Trial], direction: str) -> list[dict]:
+    """Trials as `trials` table rows; seq defaults to the list index."""
+    return [
+        t.to_row(seq=t.info_dict.get("seq", i), direction=direction, budget=int(t.info_dict.get("budget", 0)))
+        for i, t in enumerate(trials)
+    ]
+
+
+def _data_files(path: str) -> list[str]:
+    """The parquet files Spark reads from a table directory: it skips
+    names starting with '.' or '_' (temp files, checksums, _SUCCESS)."""
+    if not os.path.isdir(path):
+        return []
+    return [os.path.join(path, n) for n in sorted(os.listdir(path)) if not n.startswith((".", "_"))]
+
+
+def _write_parquet(table: pa.Table, path: str) -> None:
+    """Add `table` to the directory as one new file. It is written
+    under a hidden name and published with os.replace, so a concurrent
+    Spark reader sees the whole file or none of it."""
+    os.makedirs(path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(path, "." + name)
+    try:
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(path, name))
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
 
 
 class ExperimentStore:
@@ -44,20 +99,18 @@ class ExperimentStore:
 
     def _next_seq(self) -> int:
         """Monotone seq across appends AND across store handles: the
-        tie-break key in summaries/promotions must stay unique."""
+        tie-break key in summaries/promotions must stay unique. The
+        existing row count comes from the parquet footers."""
         if self._seq_counter is None:
-            try:
-                self._seq_counter = self.trials().count()
-            except Exception:  # noqa: BLE001 - nothing written yet
-                self._seq_counter = 0
+            self._seq_counter = sum(
+                pq.read_metadata(f).num_rows for f in _data_files(self._trials_path)
+            )
         return self._seq_counter
 
     def append_trials(self, trials: list[Trial]) -> None:
         if not trials:
             return
         base = self._next_seq()
-        from maggy_spark.experiment import trials_to_df  # single source of the row shape
-
         # REBASE onto the store's counter rather than setdefault: every
         # real caller presets a 1-based per-run seq, so keeping it
         # verbatim would collide when a second run appends into an
@@ -78,21 +131,18 @@ class ExperimentStore:
         for pos, i in enumerate(order):
             trials[i].info_dict["seq"] = base + pos + 1
         self._seq_counter = base + len(trials)
-        trials_to_df(self.spark, trials, self.direction).coalesce(1).write.mode("append").parquet(
-            self._trials_path
-        )
+        rows = trial_rows(trials, self.direction)
+        _write_parquet(pa.Table.from_pylist(rows, schema=TRIALS_ARROW_SCHEMA), self._trials_path)
 
     def append_metrics(self, trials: list[Trial]) -> None:
         rows = [
-            (t.trial_id, int(s), float(v))
+            {"trial_id": t.trial_id, "step": int(s), "value": float(v)}
             for t in trials
             for s, v in zip(t.step_history, t.metric_history, strict=True)
         ]
         if not rows:
             return
-        self.spark.createDataFrame(rows, METRICS_SCHEMA).coalesce(1).write.mode("append").parquet(
-            self._metrics_path
-        )
+        _write_parquet(pa.Table.from_pylist(rows, schema=METRICS_ARROW_SCHEMA), self._metrics_path)
 
     # -- live relations ------------------------------------------------
 

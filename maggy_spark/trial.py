@@ -117,7 +117,7 @@ class Trial:
             "sample_type": self.info_dict.get("sample_type", "random"),
             "status": self.status,
             "direction": direction,
-            "final_metric": self.final_metric,
+            "final_metric": None if self.final_metric is None else float(self.final_metric),
             "early_stop": bool(self.early_stop),
             "duration_ms": int(self.duration * 1000) if self.duration is not None else None,
         }

@@ -299,3 +299,93 @@ def test_async_scheduling_also_sinks_full_logs(spark, tmp_path):
     assert len(os.listdir(ldir)) == 3
     for f in os.listdir(ldir):
         assert open(os.path.join(ldir, f)).read().count("\n") == 250
+
+
+# -- A1 result aggregation: driver-side Python vs the Spark kernel ------
+
+def _agg_trial(n, metric, seq=None, status="FINALIZED", early_stop=False):
+    from maggy_spark.trial import Trial
+
+    t = Trial({"n": n})
+    t.status = status
+    t.final_metric = metric
+    t.early_stop = early_stop
+    if seq is not None:
+        t.info_dict["seq"] = seq
+    return t
+
+
+AGG_CASES = {
+    # 5.0 and 1.0 are each held by several trials: the lower seq wins
+    # best among equal metrics, and also wins worst
+    "ties": lambda: [
+        _agg_trial(1, 5.0, seq=3), _agg_trial(2, 5.0, seq=1), _agg_trial(3, 1.0, seq=5),
+        _agg_trial(4, 1.0, seq=4, early_stop=True), _agg_trial(5, 3.0, seq=2),
+        _agg_trial(6, None, seq=6, status="ERROR"),
+    ],
+    "null_metrics": lambda: [
+        _agg_trial(1, None, seq=1), _agg_trial(2, 4.0, seq=2),
+        _agg_trial(3, None, seq=3), _agg_trial(4, -2.0, seq=4),
+    ],
+    "nan_metric": lambda: [
+        _agg_trial(1, 1.0, seq=1), _agg_trial(2, float("nan"), seq=2), _agg_trial(3, 3.0, seq=3),
+    ],
+    "int_metrics": lambda: [
+        _agg_trial(1, 3, seq=1), _agg_trial(2, 7, seq=2), _agg_trial(3, 1, seq=3),
+    ],
+    # seq falls back to the list index, ERROR rows included
+    "seqless": lambda: [
+        _agg_trial(1, 2.0), _agg_trial(2, None, status="ERROR"), _agg_trial(3, 2.0), _agg_trial(4, 0.5),
+    ],
+    "all_metrics_null": lambda: [_agg_trial(1, None, seq=1), _agg_trial(2, None, seq=2)],
+    "empty": lambda: [],
+}
+
+
+@pytest.mark.parametrize("direction", ["max", "min"])
+@pytest.mark.parametrize("case", sorted(AGG_CASES))
+def test_aggregate_result_matches_spark_summary(spark, case, direction):
+    from pyspark.sql import functions as F
+
+    from maggy_spark.experiment import _aggregate_result, summarize_finalized, trials_to_df
+
+    trials = AGG_CASES[case]()
+    got = _aggregate_result(trials, direction)
+    finalized = trials_to_df(spark, trials, direction).where(F.col("status") == "FINALIZED")
+    want = summarize_finalized(finalized, direction)
+    assert got.keys() == want.keys()
+    for key, value in want.items():
+        if key in ("best_val", "worst_val", "avg"):
+            assert type(got[key]) is float
+            assert got[key] == pytest.approx(value, nan_ok=True), key
+        else:
+            assert got[key] == value, key
+
+
+def test_aggregate_result_tie_break_by_seq():
+    from maggy_spark.experiment import _aggregate_result
+
+    trials = AGG_CASES["ties"]()
+    ids = {t.info_dict["seq"]: t.trial_id for t in trials}
+    res = _aggregate_result(trials, "max")
+    assert (res["best_id"], res["worst_id"]) == (ids[1], ids[4])
+    assert res["num_trials"] == 5 and res["early_stopped"] == 1
+    res = _aggregate_result(trials, "min")
+    assert (res["best_id"], res["worst_id"]) == (ids[4], ids[1])
+
+
+def test_aggregate_result_nan_orders_above_numbers():
+    from maggy_spark.experiment import _aggregate_result
+
+    trials = AGG_CASES["nan_metric"]()
+    nan_id = trials[1].trial_id
+    assert _aggregate_result(trials, "max")["best_id"] == nan_id
+    assert _aggregate_result(trials, "min")["best_id"] == nan_id  # -NaN is NaN
+
+
+def test_aggregate_result_keeps_error_only_shape():
+    from maggy_spark.experiment import _aggregate_result
+
+    trials = [_agg_trial(i, None, status="ERROR") for i in range(3)]
+    assert _aggregate_result(trials, "max") == {"num_trials": 3, "errors": 3, "early_stopped": 0}
+    assert _aggregate_result([], "min") == {"num_trials": 0, "early_stopped": 0}

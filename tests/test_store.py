@@ -165,3 +165,74 @@ def test_append_rebases_preset_seq_across_handles(spark, tmp_path):
     s2.append_trials([_trial(1, 3.0), _trial(2, 4.0)])
     seqs = sorted(r.seq for r in s2.trials().collect())
     assert seqs == [1, 2, 3, 4]  # unique and monotone, not 1,1,2,2
+
+
+LEGACY_TRIALS_DDL = (
+    "trial_id string, seq bigint, params map<string,string>, budget int, "
+    "sample_type string, status string, direction string, final_metric double, "
+    "early_stop boolean, duration_ms bigint"
+)
+
+
+def test_trials_schema_derived_from_arrow_matches_legacy_ddl(spark):
+    from maggy_spark.store import TRIALS_SCHEMA
+
+    assert TRIALS_SCHEMA == spark.createDataFrame([], LEGACY_TRIALS_DDL).schema
+
+
+def test_pyarrow_appends_keep_spark_schema(spark, tmp_path):
+    import os
+
+    from maggy_spark.experiment import trials_to_df
+    from maggy_spark.store import METRICS_SCHEMA
+
+    s = ExperimentStore(spark, str(tmp_path / "fmt"), direction="max")
+    trials = [_trial(1, 10.0, budget=1), _trial(2, 30.0, budget=2)]
+    s.append_trials(trials)
+    s.append_metrics(trials)
+    assert s.trials().schema == trials_to_df(spark, trials, "max").schema
+    assert s.metrics().schema == METRICS_SCHEMA
+    for table in ("trials", "metrics"):
+        assert not [n for n in os.listdir(tmp_path / "fmt" / table) if n.startswith(".")]
+    rows = {r.trial_id: r for r in s.trials().collect()}
+    assert rows[trials[1].trial_id].params == {"x": "2"}
+    assert rows[trials[1].trial_id].budget == 2
+
+
+def test_store_first_written_by_spark_stays_readable(spark, tmp_path):
+    """A store whose first append was written by Spark (the store's
+    earlier format) reads back and summarizes after a pyarrow append."""
+    from maggy_spark.experiment import trials_to_df
+    from maggy_spark.store import METRICS_SCHEMA
+
+    path = tmp_path / "legacy"
+    old = [_trial(1, 10.0, budget=1), _trial(2, 30.0, budget=1)]
+    trials_to_df(spark, old, "max").coalesce(1).write.mode("append").parquet(str(path / "trials"))
+    spark.createDataFrame(
+        [(t.trial_id, s, v) for t in old for s, v in zip(t.step_history, t.metric_history)], METRICS_SCHEMA
+    ).coalesce(1).write.mode("append").parquet(str(path / "metrics"))
+
+    s = ExperimentStore(spark, str(path), direction="max")
+    new = [_trial(1, 20.0, budget=2), _trial(2, 40.0, budget=2)]
+    s.append_trials(new)
+    s.append_metrics(new)
+    assert sorted(r.seq for r in s.trials().collect()) == [1, 2, 3, 4]
+    assert s.metrics().count() == 12
+    res = s.result_summary()
+    assert (res["best_id"], res["best_val"]) == (new[1].trial_id, 40.0)
+    assert (res["worst_id"], res["worst_val"]) == (old[0].trial_id, 10.0)
+    assert res["num_trials"] == 4 and res["avg"] == pytest.approx(25.0)
+
+
+def test_next_seq_read_errors_propagate(spark, tmp_path):
+    """seq restarts at 0 only when there is no data file; an
+    unreadable one must fail the append, not silently reuse seqs."""
+    import pyarrow as pa
+
+    path = tmp_path / "broken"
+    (path / "trials").mkdir(parents=True)
+    (path / "trials" / "_SUCCESS").write_text("")
+    assert ExperimentStore(spark, str(path))._next_seq() == 0
+    (path / "trials" / "part-0.parquet").write_bytes(b"not parquet")
+    with pytest.raises(pa.ArrowInvalid):
+        ExperimentStore(spark, str(path)).append_trials([_trial(1, 1.0)])
