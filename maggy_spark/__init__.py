@@ -3,8 +3,8 @@
 A ground-up rebuild of the capabilities of logicalclocks/maggy
 (distribution-transparent hyperparameter optimization, ablation
 studies, and distributed training on Spark), re-expressed as
-idiomatic Spark: DataFrame/SQL relational kernel, pandas-UDF trial
-execution, Structured Streaming metric ingest — no custom sockets,
+idiomatic Spark: DataFrame/SQL relational kernel, one Spark job per
+trial, Structured Streaming metric ingest — no custom sockets,
 no long-held foreachPartition workers.
 
 Reference semantics are documented per-operator in SURVEY.md §2 with

@@ -11,7 +11,7 @@ Rebuild: the component inventory is a relational `components` table
 (FIXTURES.md F4); the trial list is a UNION ALL projection over it
 (operator G11); feature ablation is `.drop(column)` — i.e. column
 pruning, which parquet gives us for free; the ablated training table
-is read executor-side via pyarrow inside the trial UDF (the
+is read executor-side via pyarrow inside the trial task (the
 dataset_function contract, `loco.py:222-230`).
 """
 

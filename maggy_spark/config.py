@@ -51,13 +51,15 @@ class HyperparameterOptConfig(BaseConfig):
     pruner_kwargs: dict | None = None
     seed: int | None = None
     parallelism: int | None = None  # max concurrent trials (defaults to cores)
-    # "wave": batch-synchronous waves of `parallelism` trials — lowest
-    # overhead; use for short trials.
-    # "async": per-trial Spark jobs from a driver thread pool (FAIR
-    # pool) — a finished slot is refilled immediately, preserving the
-    # reference's async scheduling (optimization_driver.py:519-541),
-    # which ASHA/BO exploit. Each job pays ~1 s submission overhead,
-    # so prefer it only when trial runtime dominates (real training).
+    # Both modes run every trial as its own single-task Spark job from
+    # a driver thread pool ('maggy' scheduler pool); they differ only
+    # in when a freed slot is refilled.
+    # "wave": only once the whole wave of `parallelism` trials has
+    # settled; results apply in submission order, so one seed gives
+    # one result.
+    # "async": the moment a trial settles, preserving the reference's
+    # async scheduling (optimization_driver.py:519-541), which ASHA/BO
+    # exploit; results apply in completion order.
     scheduling: str = "wave"
 
 

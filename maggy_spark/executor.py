@@ -1,15 +1,18 @@
-"""Distributed trial execution: the user train_fn as a grouped pandas UDF.
+"""Distributed trial execution: the user train_fn as a plain-RDD task.
 
 Replaces the reference's long-held `foreachPartition` workers + TCP
 control plane (`maggy/core/executors/trial_executor.py:35-213`,
-`maggy/core/rpc.py`) with short-lived Spark jobs: each wave of
-pending trials becomes a DataFrame with exactly one trial per
-partition (`parallelize` slicing), `mapInPandas` fans the user
-function out one task per trial, and results come back as rows; no
-sockets. A trial that raises comes back as an ERROR row, but nothing
-yet replaces the reference's lost-trial blacklist (C10): a trial
-whose Python worker dies fails its task, Spark's task retries (none
-in local mode) only re-run it, and the job failure aborts the whole
+`maggy/core/rpc.py`) with short-lived Spark jobs: `run_trial_wave`
+turns its pending trials into an RDD with exactly one trial per
+partition (`parallelize` slicing), `mapPartitions` runs the user
+function once per task, and each task yields one plain result dict
+that `collect()` brings back; no sockets, and no Arrow/pandas
+conversion for what is one small row per task. The experiment driver
+calls it with one trial per call, so every trial is its own job. A
+trial that raises comes back as an ERROR row, but nothing yet
+replaces the reference's lost-trial blacklist (C10): a trial whose
+Python worker dies fails its task, Spark's task retries (none in
+local mode) only re-run it, and the job failure aborts the whole
 experiment.
 
 Kwarg injection mirrors `trial_executor.py:166-179` (signature
@@ -18,10 +21,10 @@ inspection); return normalization mirrors `util.handle_return_val`
 `reporter.broadcast`, exactly the reference's cooperative contract
 (`reporter.py:100-101`).
 
-Scale: one trial = one group = one task; a 10k-trial wave is a 10k-
-task stage. Params travel as JSON strings (bytes per trial), datasets
-are read by the train_fn from shared storage — identical data
-movement profile to the reference (§4.2) minus the socket chatter.
+Scale: one trial = one partition = one task. Params travel as JSON
+strings (bytes per trial), datasets are read by the train_fn from
+shared storage — identical data movement profile to the reference
+(§4.2) minus the socket chatter.
 """
 
 from __future__ import annotations
@@ -32,28 +35,13 @@ import time
 from pathlib import Path
 from typing import Any, Callable
 
-import pandas as pd
 from pyspark.sql import SparkSession
-from pyspark.sql import types as T
 
 from maggy_spark.reporter import EarlyStopException, Reporter
 
 # Result rows are control-plane: per-trial logs above this line count
 # ride the S7 file sink (run_trial_wave log_dir), not the collect()
 MAX_RESULT_LOG_LINES = 200
-
-RESULT_SCHEMA = T.StructType(
-    [
-        T.StructField("trial_id", T.StringType()),
-        T.StructField("final_metric", T.DoubleType()),
-        T.StructField("metric_history", T.ArrayType(T.DoubleType())),
-        T.StructField("step_history", T.ArrayType(T.LongType())),
-        T.StructField("early_stop", T.BooleanType()),
-        T.StructField("error", T.StringType()),
-        T.StructField("logs", T.ArrayType(T.StringType())),
-        T.StructField("duration_ms", T.LongType()),
-    ]
-)
 
 
 def build_kwargs(train_fn: Callable, hparams: dict, reporter: Reporter, extras: dict | None = None) -> dict:
@@ -116,15 +104,19 @@ def run_trial_wave(
     fn_bytes: bytes | None = None,
     log_dir: str | None = None,
 ) -> list[dict]:
-    """Execute one wave of pending trials as a grouped pandas UDF.
+    """Execute pending trials as one Spark job, one trial per task.
 
     `pending`: [{"trial_id": ..., "params": {...}, "budget": int}].
+    Returns one plain result dict per trial, in `pending` order:
+    trial_id (str), final_metric (float or None), metric_history
+    (list of float), step_history (list of int), early_stop (bool),
+    error (str or None), logs (list of str), duration_ms (int).
     `stop_check_source` is an optional serialized early-stop state
     (JSON) evaluated trial-locally at each broadcast — cooperative
     cancellation, SURVEY.md §7.3a.
 
     Results are the CONTROL PLANE (one row per trial), so the `logs`
-    column is capped at MAX_RESULT_LOG_LINES tail lines per trial — a
+    list is capped at MAX_RESULT_LOG_LINES tail lines per trial — a
     chatty train_fn printing MBs across 10k trials must not become
     driver memory. With `log_dir` set, each task writes its trial's
     FULL print capture to <log_dir>/trial_logs/<trial_id>.log before
@@ -138,23 +130,14 @@ def run_trial_wave(
          int(p.get("budget", 0)))
         for p in pending
     ]
-    # Exactly one trial per task: parallelize with numSlices=len(rows)
-    # puts exactly one row in each partition with no shuffle. Neither
-    # groupBy().applyInPandas (re-shuffles to
-    # spark.sql.shuffle.partitions, then AQE coalesces the tiny wave)
-    # nor repartition(n) (round-robin starts at a RANDOM offset per
-    # input partition, so partitions collide — measured [2,2,1,1,1,1,
-    # 0,0] for 8 rows) guarantees that; both serialize trials.
-    rdd = spark.sparkContext.parallelize(rows, numSlices=len(rows))
-    df = spark.createDataFrame(rdd, "trial_id string, params_json string, budget int")
 
     # Serialize the train_fn BY VALUE: user functions typically live in
     # modules (notebooks, test files, scripts) that executor Python
     # workers cannot re-import; plain closure capture would pickle them
     # by reference and fail with ModuleNotFoundError on the worker.
-    # Callers that dispatch MANY single-trial waves (the async driver)
-    # pass pre-serialized bytes so the closure walk + registry dance
-    # runs once per experiment, not once per trial.
+    # The experiment driver dispatches one call per trial and passes
+    # pre-serialized bytes, so the closure walk + registry dance runs
+    # once per experiment, not once per trial.
     if fn_bytes is None:
         fn_bytes = _dumps_by_value(train_fn)
     opt_key = optimization_key
@@ -163,19 +146,18 @@ def run_trial_wave(
     tb_base = tb_base_dir
     log_base = log_dir
 
-    # Captured as a plain string so the UDF closure below carries NO
+    # Captured as a plain string so the task closure below carries NO
     # references to maggy_spark module globals: python workers do not
     # inherit the driver's sys.path, so the closure must be able to
     # unpickle with stdlib alone, then bootstrap the package path and
     # import what it needs at call time.
     pkg_path = str(Path(__file__).resolve().parent.parent)
 
-    def run_group(pdf):
+    def run_one(trial_id, params_json, budget) -> dict:
         import json as _json
         import sys as _sys
         import time as _time
 
-        import pandas as _pd
         from pyspark import cloudpickle as _cp
 
         if pkg_path not in _sys.path:
@@ -184,9 +166,7 @@ def run_trial_wave(
         from maggy_spark.reporter import EarlyStopException, Reporter
 
         fn = _cp.loads(fn_bytes)
-        trial_id = pdf["trial_id"].iloc[0]
-        hparams = _json.loads(pdf["params_json"].iloc[0])
-        budget = int(pdf["budget"].iloc[0])
+        hparams = _json.loads(params_json)
         if tb_base:
             # reference registers the trial's TensorBoard dir before the
             # user function runs (tensorboard.py:28-31), so in-function
@@ -246,31 +226,30 @@ def run_trial_wave(
                 f"; full log: {full_path}]" if full_path else "]"
             )
             logs = [marker] + logs[-MAX_RESULT_LOG_LINES:]
-        return _pd.DataFrame(
-            [
-                {
-                    "trial_id": trial_id,
-                    "final_metric": final,
-                    "metric_history": reporter.metric_history,
-                    "step_history": reporter.step_history,
-                    "early_stop": early,
-                    "error": error,
-                    "logs": logs,
-                    "duration_ms": int((_time.time() - t0) * 1000),
-                }
-            ]
-        )
+        return {
+            "trial_id": trial_id,
+            "final_metric": None if final is None else float(final),
+            "metric_history": reporter.metric_history,
+            "step_history": reporter.step_history,
+            "early_stop": early,
+            "error": error,
+            "logs": logs,
+            "duration_ms": int((_time.time() - t0) * 1000),
+        }
 
-    def run_partition(batches):
+    def run_partition(part):
         # normally exactly one trial per partition (parallelize
-        # slicing above); the row loop still executes every trial
+        # slicing below); the loop still executes every trial
         # correctly if a partition ever carries more
-        for pdf in batches:
-            for i in range(len(pdf)):
-                yield run_group(pdf.iloc[i : i + 1])
+        for row in part:
+            yield run_one(*row)
 
-    out = df.mapInPandas(run_partition, RESULT_SCHEMA)
-    return [r.asDict() for r in out.collect()]
+    # Exactly one trial per task: parallelize with numSlices=len(rows)
+    # puts exactly one row in each partition with no shuffle (a
+    # repartition(n) round-robin starts at a RANDOM offset per input
+    # partition, so partitions collide and trials serialize). collect()
+    # returns partitions in order, so rows come back in `pending` order.
+    return spark.sparkContext.parallelize(rows, len(rows)).mapPartitions(run_partition).collect()
 
 
 _PICKLE_LOCK = __import__("threading").Lock()
@@ -326,9 +305,10 @@ def _dumps_by_value(fn) -> bytes:
     restore the registry.
 
     Serialized under a lock: the register/unregister pair mutates
-    cloudpickle's GLOBAL registry, and _drive_async calls this from a
-    thread pool — an interleaved unregister would silently flip a
-    concurrent dumps back to by-reference pickling.
+    cloudpickle's GLOBAL registry, and experiments (or ablation waves)
+    may run from several driver threads at once — an interleaved
+    unregister would silently flip a concurrent dumps back to
+    by-reference pickling.
     """
     from pyspark import cloudpickle as cp
 

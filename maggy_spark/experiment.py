@@ -2,16 +2,19 @@
 
 Reference lifecycle (SURVEY.md §3.1, `maggy/experiment/experiment.py:
 21-45`, `experiment_pyspark.py:43-146`): dispatch on config type,
-drive trials to completion, return the result dict. The rebuild's
-loop is wave-based: the controller emits pending trials, each wave
-runs as a grouped pandas UDF (executor.py), finalized trials feed
-back into the controller, and the final result is the A1 summary
-computed on the driver over the trials it already holds — no RPC
-server, no reservation registry, no digestion threads.
+drive trials to completion, return the result dict. The rebuild has
+one dispatch loop (`_drive`): the controller emits pending trials,
+a driver thread pool runs each as its own single-task Spark job
+(executor.py), finalized trials feed back into the controller, and
+the final result is the A1 summary computed on the driver over the
+trials it already holds — no RPC server, no reservation registry, no
+digestion threads.
 
 Asynchrony note (SURVEY.md §7.3b): the reference assigns a new trial
-the instant one finishes. Wave scheduling approximates that with
-wave size = parallelism; ASHA promotions are checked between waves.
+the instant one finishes; `scheduling="async"` does the same.
+`scheduling="wave"` refills only when a whole wave of `parallelism`
+trials has settled, so ASHA promotions are checked between waves and
+one seed gives one result.
 """
 
 from __future__ import annotations
@@ -275,10 +278,7 @@ def _run_hpo(train_fn: Callable, config: HyperparameterOptConfig, spark: SparkSe
             store = ExperimentStore(spark, exp_dir + "/live", direction=config.direction)
 
     t_start = time.time()
-    if config.scheduling == "async":
-        all_trials, waves = _drive_async(train_fn, config, spark, controller, parallelism, store, exp_dir)
-    else:
-        all_trials, waves = _drive_waves(train_fn, config, spark, controller, parallelism, store, exp_dir)
+    all_trials, waves = _drive(train_fn, config, spark, controller, parallelism, store, exp_dir)
 
     result = _aggregate_result(all_trials, config.direction)
     result["duration_sec"] = round(time.time() - t_start, 3)
@@ -323,149 +323,109 @@ def _tb_base(config) -> str:
     return os.path.join(base, f"{config.name}_tb")
 
 
-def _drive_waves(train_fn, config, spark, controller, parallelism, store=None, exp_dir=None) -> tuple[list[Trial], int]:
-    """Batch-synchronous scheduling: waves of `parallelism` trials."""
-    all_trials: list[Trial] = []
-    seq = 0
-    waves = 0
-    while not controller.done():
-        wave = controller.next_batch(parallelism)
-        if not wave:
-            # the controller exhausted at a wave boundary (e.g. a
-            # custom optimizer out of suggestions before num_trials):
-            # ask done() one last time — it is the hook that fires a
-            # reference optimizer's finalize_experiment, which must run
-            # on EVERY exit path, not only the done()-gated one
-            controller.done()
-            break
-        stop_src = _stop_source(controller, config)
-        pending = [
-            {"trial_id": t.trial_id, "params": t.params, "budget": int(t.info_dict.get("budget", 0))}
-            for t in wave
-        ]
-        by_id = {t.trial_id: t for t in wave}
-        results = run_trial_wave(
-            spark, pending, train_fn,
-            optimization_key=config.optimization_key,
-            stop_check_source=stop_src,
-            tb_base_dir=_tb_base(config),
-            log_dir=exp_dir,
-        )
-        done_wave = []
-        for r in results:
-            seq += 1
-            t = by_id[r["trial_id"]]
-            _apply_result(controller, t, r, seq)
-            all_trials.append(t)
-            done_wave.append(t)
-        if store is not None:
-            store.append_trials(done_wave)
-            store.append_metrics(done_wave)
-        _log_progress(controller, len(all_trials))
-        waves += 1
-        if waves > 10_000:
-            raise RuntimeError("experiment did not converge (wave limit)")
-    return all_trials, waves
+def _drive(train_fn, config, spark, controller, parallelism, store=None, exp_dir=None) -> tuple[list[Trial], int]:
+    """The dispatch loop: a driver thread pool keeps up to `parallelism`
+    trials in flight, each as its own single-task Spark job in the
+    'maggy' scheduler pool (SURVEY.md §7.3b), without the reference's
+    socket plane. `config.scheduling` picks only the refill rule:
 
+    - "wave" refills only once the pool is empty, with one
+      next_batch(parallelism) call and one stop source per wave. It
+      applies results, assigns `seq` and appends to the live store in
+      submission order once the whole wave has settled, so one seed
+      gives one result however the trials finish.
+    - "async" refills a slot the moment its trial settles
+      (`optimization_driver.py:519-541`) and applies results in
+      completion order. In-flight trials re-read a bar file that the
+      driver republishes as trials settle — the reference re-evaluates
+      its rule at every METRIC heartbeat (`optimization_driver.py:
+      456-471`).
 
-def _drive_async(train_fn, config, spark, controller, parallelism, store=None, exp_dir=None) -> tuple[list[Trial], int]:
-    """Per-trial scheduling: a driver thread pool keeps `parallelism`
-    single-trial Spark jobs in flight and refills a slot the moment a
-    trial finishes — the reference's asynchrony
-    (`optimization_driver.py:519-541`) without its socket plane.
-    Each job runs in the 'maggy' FAIR scheduler pool so concurrent
-    trials share executors fairly (SURVEY.md §7.3b)."""
-    from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+    Returns (trials in `seq` order, waves run in wave mode or jobs run
+    in async mode)."""
+    import os
+    from concurrent.futures import ALL_COMPLETED, FIRST_COMPLETED, ThreadPoolExecutor, wait
 
-    all_trials: list[Trial] = []
-    seq = 0
-    jobs = 0
-    # serialize the train_fn ONCE: the async path dispatches one wave
-    # per trial, and per-call _dumps_by_value would redo the closure
-    # walk + cloudpickle registry dance (under a global lock) for
-    # every single trial
     from maggy_spark.executor import _dumps_by_value
 
+    wave_mode = config.scheduling != "async"
+    # serialized ONCE per experiment: per-call _dumps_by_value would redo
+    # the closure walk + cloudpickle registry dance (under a global
+    # lock) for every trial
     fn_bytes = _dumps_by_value(train_fn)
+    tb_base = _tb_base(config)
+    # Under log_dir the bar file is on the experiment's (shared)
+    # storage; tmpdir in local mode.
+    bar_path = None
+    if not wave_mode and _es_enabled(config):
+        import tempfile
 
-    def run_one(trial: Trial, stop_src: str | None) -> tuple[Trial, dict]:
+        base = config.log_dir or tempfile.gettempdir()
+        os.makedirs(base, exist_ok=True)
+        bar_path = os.path.join(base, f".maggy_bar_{config.name}_{os.getpid()}_{id(controller):x}.json")
+
+    def run_one(trial: Trial, stop_src: str | None) -> dict:
         spark.sparkContext.setLocalProperty("spark.scheduler.pool", "maggy")
-        res = run_trial_wave(
+        [r] = run_trial_wave(
             spark,
             [{"trial_id": trial.trial_id, "params": trial.params,
               "budget": int(trial.info_dict.get("budget", 0))}],
             train_fn,
             optimization_key=config.optimization_key,
             stop_check_source=stop_src,
-            tb_base_dir=_tb_base(config),
+            tb_base_dir=tb_base,
             fn_bytes=fn_bytes,
             log_dir=exp_dir,
         )
-        return trial, res[0]
+        return r
 
-    # continuous early-stop bar (reference re-evaluates the rule at
-    # every METRIC heartbeat, optimization_driver.py:456-471): the
-    # driver republishes the bar file as trials settle and in-flight
-    # trials re-read it at their next broadcast. Under log_dir the file
-    # is on the experiment's (shared) storage; tmpdir in local mode.
-    es_refresh_path = None
-    if _es_enabled(config):
-        import os
-        import tempfile
-
-        base = config.log_dir or tempfile.gettempdir()
-        os.makedirs(base, exist_ok=True)
-        es_refresh_path = os.path.join(
-            base, f".maggy_bar_{config.name}_{os.getpid()}_{id(controller):x}.json"
-        )
-
+    all_trials: list[Trial] = []
+    rounds = 0
+    limit, unit = (10_000, "wave") if wave_mode else (100_000, "job")
     try:
         with ThreadPoolExecutor(max_workers=parallelism) as pool:
-            in_flight = set()
-            stall = 0
+            in_flight: dict = {}  # future -> trial, in submission order
             while True:
-                while len(in_flight) < parallelism and not controller.done():
-                    batch = controller.next_batch(1)
+                # the refill rule: a wave only into an empty pool, an
+                # async trial into any free slot
+                while len(in_flight) < parallelism and not (wave_mode and in_flight) and not controller.done():
+                    batch = controller.next_batch(parallelism if wave_mode else 1)
                     if not batch:
                         break
-                    in_flight.add(
-                        pool.submit(
-                            run_one, batch[0], _stop_source(controller, config, es_refresh_path)
-                        )
-                    )
-                    jobs += 1
+                    stop_src = _stop_source(controller, config, bar_path)
+                    for t in batch:
+                        in_flight[pool.submit(run_one, t, stop_src)] = t
+                    rounds += 1
                 if not in_flight:
-                    if controller.done():
-                        break
-                    stall += 1
-                    if stall > 3:
-                        break  # controller has nothing runnable and nothing in flight
-                    continue
-                stall = 0
-                done, in_flight = wait(in_flight, return_when=FIRST_COMPLETED)
+                    # the controller is done or ran dry (e.g. a custom
+                    # optimizer out of suggestions before num_trials):
+                    # ask done() one last time — it is the hook that
+                    # fires a reference optimizer's finalize_experiment,
+                    # which must run on EVERY exit path
+                    controller.done()
+                    break
+                finished, _ = wait(in_flight, return_when=ALL_COMPLETED if wave_mode else FIRST_COMPLETED)
                 settled = []
-                for f in done:
-                    trial, r = f.result()
-                    seq += 1
-                    _apply_result(controller, trial, r, seq)
+                for f in [f for f in in_flight if f in finished]:  # submission order
+                    trial = in_flight.pop(f)
+                    _apply_result(controller, trial, f.result(), len(all_trials) + 1)
                     all_trials.append(trial)
                     settled.append(trial)
-                if settled and es_refresh_path is not None:
-                    _publish_bar(controller, config, es_refresh_path)
-                if store is not None and settled:
+                if bar_path is not None:
+                    _publish_bar(controller, config, bar_path)
+                if store is not None:
                     store.append_trials(settled)
                     store.append_metrics(settled)
-                if jobs > 100_000:
-                    raise RuntimeError("experiment did not converge (job limit)")
+                _log_progress(controller, len(all_trials))
+                if rounds > limit:
+                    raise RuntimeError(f"experiment did not converge ({unit} limit)")
     finally:
-        if es_refresh_path is not None:
-            import os
-
+        if bar_path is not None:
             try:
-                os.remove(es_refresh_path)
+                os.remove(bar_path)
             except OSError:
                 pass
-    return all_trials, jobs
+    return all_trials, rounds
 
 
 def trials_to_df(spark: SparkSession, trials: list[Trial], direction: str = "max"):

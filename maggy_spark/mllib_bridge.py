@@ -9,7 +9,7 @@ Two integration points:
 - `fit_with_lagom`: our controllers (random/ASHA/GP/TPE) drive MLlib
   estimator fits. Each fit is itself a distributed Spark job, so
   trials run driver-threaded (FAIR-pool style) rather than inside a
-  pandas UDF — two nested levels of Spark parallelism.
+  trial task — two nested levels of Spark parallelism.
 """
 
 from __future__ import annotations

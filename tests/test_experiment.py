@@ -272,7 +272,7 @@ def test_lagom_full_logs_under_experiment_dir(spark, tmp_path):
 
 
 def test_async_scheduling_also_sinks_full_logs(spark, tmp_path):
-    """The async (per-trial FAIR-pool) dispatch path passes the
+    """The async (slot-refill) dispatch mode passes the
     experiment dir to the executor exactly like the wave path."""
     def chatty(x, reporter):
         for i in range(250):
@@ -389,3 +389,185 @@ def test_aggregate_result_keeps_error_only_shape():
     trials = [_agg_trial(i, None, status="ERROR") for i in range(3)]
     assert _aggregate_result(trials, "max") == {"num_trials": 3, "errors": 3, "early_stopped": 0}
     assert _aggregate_result([], "min") == {"num_trials": 0, "early_stopped": 0}
+
+
+# -- the executor's result rows and the dispatch loop ------------------
+
+RESULT_KEYS = {
+    "trial_id", "final_metric", "metric_history", "step_history",
+    "early_stop", "error", "logs", "duration_ms",
+}
+
+
+def _contract_train_fn(x, reporter):
+    """x=0 raises, x=1 reports below the stop bar, x=2 finishes; int
+    metrics in, numpy.float64 out."""
+    import numpy as np
+
+    if x == 0:
+        raise RuntimeError("boom")
+    base = 1 if x == 1 else 100
+    for step in range(3):
+        reporter.broadcast(base + step, step)
+    return np.float64(base + 0.5)
+
+
+def _assert_plain_row(row):
+    assert set(row) == RESULT_KEYS
+    assert type(row["trial_id"]) is str
+    assert row["final_metric"] is None or type(row["final_metric"]) is float
+    assert type(row["metric_history"]) is list and all(type(m) is float for m in row["metric_history"])
+    assert type(row["step_history"]) is list and all(type(s) is int for s in row["step_history"])
+    assert type(row["early_stop"]) is bool
+    assert row["error"] is None or type(row["error"]) is str
+    assert type(row["logs"]) is list and all(type(line) is str for line in row["logs"])
+    assert type(row["duration_ms"]) is int
+
+
+def test_run_trial_wave_result_rows_are_plain_python(spark):
+    """The row contract a Spark result schema used to enforce: exact
+    keys, plain Python types, rows in `pending` order, for one trial
+    and for several in one call."""
+    import json
+
+    from maggy_spark.executor import run_trial_wave
+
+    [row] = run_trial_wave(spark, [{"trial_id": "solo", "params": {"x": 2}}], _contract_train_fn)
+    _assert_plain_row(row)
+    assert row["final_metric"] == 100.5 and row["error"] is None and not row["early_stop"]
+    assert row["metric_history"] == [100.0, 101.0, 102.0] and row["step_history"] == [0, 1, 2]
+
+    # a finished history far above trial x=1's reports: the median rule
+    # stops x=1 at its first broadcast and leaves x=2 running
+    stop_src = json.dumps({"direction": "max", "es_interval": 1, "prefix_histories": [[50.0, 50.0, 50.0]]})
+    pending = [
+        {"trial_id": "t_done", "params": {"x": 2}},
+        {"trial_id": "t_error", "params": {"x": 0}},
+        {"trial_id": "t_stopped", "params": {"x": 1}},
+    ]
+    rows = run_trial_wave(spark, pending, _contract_train_fn, stop_check_source=stop_src)
+    assert [r["trial_id"] for r in rows] == ["t_done", "t_error", "t_stopped"]
+    for r in rows:
+        _assert_plain_row(r)
+    done, error, stopped = rows
+    assert done["final_metric"] == 100.5 and not done["early_stop"] and done["error"] is None
+    assert error["final_metric"] is None and error["error"] == "RuntimeError: boom"
+    assert not error["early_stop"] and error["metric_history"] == []
+    assert stopped["early_stop"] and stopped["error"] is None
+    assert stopped["final_metric"] == 1.0 and stopped["metric_history"] == [1.0]
+
+
+def _capture_trials(monkeypatch):
+    """Record the trial list every lagom run hands to _aggregate_result."""
+    from maggy_spark import experiment
+
+    runs = []
+    original = experiment._aggregate_result
+
+    def recording(trials, direction):
+        runs.append(list(trials))
+        return original(trials, direction)
+
+    monkeypatch.setattr(experiment, "_aggregate_result", recording)
+    return runs
+
+
+def test_wave_mode_settles_in_submission_order(spark, tmp_path, monkeypatch):
+    """Trial 0 of each run finishes last, yet wave mode applies results,
+    assigns seq and appends to the live store in submission order, so
+    two runs of one seed agree exactly."""
+    import time
+
+    from maggy_spark.store import ExperimentStore
+
+    runs = _capture_trials(monkeypatch)
+    appended = []
+    original_append = ExperimentStore.append_trials
+
+    def recording_append(self, trials):
+        appended.append([t.trial_id for t in trials])
+        return original_append(self, trials)
+
+    monkeypatch.setattr(ExperimentStore, "append_trials", recording_append)
+
+    def fn(x):
+        if x == 0:
+            time.sleep(0.3)
+        return float(x)
+
+    def run(name):
+        config = HyperparameterOptConfig(
+            optimizer="gridsearch",
+            searchspace=Searchspace(x=("DISCRETE", [0, 1, 2, 3, 4, 5])),
+            direction="max", es_policy="none", parallelism=3, scheduling="wave",
+            name=name, log_dir=str(tmp_path), stream_artifacts=True,
+        )
+        return lagom(fn, config, spark)
+
+    r1 = run("wave_order_a")
+    r2 = run("wave_order_b")
+    assert r1["num_waves"] == r2["num_waves"] == 2
+    trials1, trials2 = runs
+    assert [t.params["x"] for t in trials1] == [0, 1, 2, 3, 4, 5]  # grid (submission) order
+    assert [t.info_dict["seq"] for t in trials1] == [1, 2, 3, 4, 5, 6]
+
+    def key(trials):
+        return [(t.trial_id, t.info_dict["seq"], t.final_metric) for t in trials]
+
+    assert key(trials1) == key(trials2)
+    assert r1["best_id"] == r2["best_id"] == trials1[-1].trial_id
+    ids = [t.trial_id for t in trials1]
+    assert appended == [ids[:3], ids[3:], ids[:3], ids[3:]]  # once per wave, in order
+
+
+@pytest.mark.parametrize("scheduling", ["wave", "async"])
+def test_train_fn_pickled_once_per_experiment(spark, monkeypatch, scheduling):
+    from maggy_spark import executor
+
+    calls = []
+    original = executor._dumps_by_value
+
+    def counting(fn):
+        calls.append(fn)
+        return original(fn)
+
+    monkeypatch.setattr(executor, "_dumps_by_value", counting)
+    config = HyperparameterOptConfig(
+        num_trials=6, optimizer="randomsearch", searchspace=Searchspace(**SP),
+        direction="max", es_policy="none", seed=21, parallelism=2, scheduling=scheduling,
+    )
+    res = lagom(quadratic_train_fn, config, spark)
+    assert res["num_trials"] == 6
+    assert res["num_waves"] == (3 if scheduling == "wave" else 6)
+    assert calls == [quadratic_train_fn]
+
+
+def test_wave_mode_finalizes_optimizer_that_runs_dry(spark):
+    """A custom optimizer out of suggestions before num_trials still
+    gets finalize_experiment once its last wave settles."""
+    from maggy_spark.optimizers import AbstractOptimizer
+
+    class TwoValues(AbstractOptimizer):
+        def __init__(self):
+            super().__init__()
+            self.finalized_with = None
+
+        def initialize(self):
+            self.values = [1.0, 2.0]
+
+        def get_suggestion(self, trial=None):
+            if not self.values:
+                return None
+            return self.create_trial({"x": self.values.pop(0)}, sample_type="random")
+
+        def finalize_experiment(self, trials):
+            self.finalized_with = list(trials)
+
+    opt = TwoValues()
+    config = HyperparameterOptConfig(
+        num_trials=5, optimizer=opt, searchspace=Searchspace(x=("DOUBLE", [0.0, 10.0])),
+        direction="max", es_policy="none", parallelism=4, scheduling="wave",
+    )
+    res = lagom(lambda x: float(x), config, spark)
+    assert res["num_trials"] == 2 and res["best_val"] == 2.0
+    assert opt.finalized_with is not None and len(opt.finalized_with) == 2

@@ -161,7 +161,7 @@ def test_lagom_hyperband_large_ladder_under_fair_pool(spark):
         es_policy="none",
         seed=42,
         parallelism=8,
-        scheduling="async",  # the FAIR-pool per-trial scheduler, not waves
+        scheduling="async",  # refill a slot as each trial settles, not per wave
         pruner="hyperband",
         pruner_kwargs={"min_budget": 1, "max_budget": 27, "eta": 3, "n_iterations": 1},
     )
