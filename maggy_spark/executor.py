@@ -25,6 +25,15 @@ Scale: one trial = one partition = one task. Params travel as JSON
 strings (bytes per trial), datasets are read by the train_fn from
 shared storage — identical data movement profile to the reference
 (§4.2) minus the socket chatter.
+
+Zip-directory invalidation: a reused pyspark worker calls
+`importlib.invalidate_caches()` before every task. On CPython
+3.10-3.12 that makes each `zipimporter` on `sys.path` re-parse its
+archive's central directory, and a worker importing pyspark from
+`$SPARK_HOME/python/lib/pyspark.zip` holds ~16 of them (pyspark.zip,
+the py4j zip, the spark-core jar). Each trial task installs
+`_install_zip_invalidation`, which stat-gates that re-read; a fresh
+worker still pays it once, on its first trial.
 """
 
 from __future__ import annotations
@@ -162,8 +171,15 @@ def run_trial_wave(
 
         if pkg_path not in _sys.path:
             _sys.path.insert(0, pkg_path)
-        from maggy_spark.executor import _make_stop_check, build_kwargs, normalize_return
+        from maggy_spark.executor import (
+            _install_zip_invalidation,
+            _make_stop_check,
+            build_kwargs,
+            normalize_return,
+        )
         from maggy_spark.reporter import EarlyStopException, Reporter
+
+        _install_zip_invalidation()
 
         fn = _cp.loads(fn_bytes)
         hparams = _json.loads(params_json)
@@ -329,6 +345,47 @@ def _dumps_by_value(fn) -> bytes:
                     cp.unregister_pickle_by_value(mod)
                 except Exception:  # noqa: BLE001
                     pass
+
+
+def _install_zip_invalidation() -> None:
+    """Make `zipimporter.invalidate_caches` skip archives unchanged on disk
+    (see the module docstring).
+
+    The replacement stats the archive and, while `(st_mtime_ns,
+    st_size)` matches the stamp taken at its last read, reuses the
+    shared `zipimport._zip_directory_cache` entry, so several importers
+    over one archive share one read. A changed stamp (an `addPyFile`
+    rewrite) or a failed stat falls through to the original re-read.
+    Idempotent per process. A no-op outside CPython 3.10-3.12: 3.9 has
+    no `zipimporter.invalidate_caches` (the sweep skips zipimporters),
+    and 3.13+ only drops the cache entry there.
+    """
+    import os
+    import sys
+    import zipimport
+
+    if not (3, 10) <= sys.version_info < (3, 13):
+        return
+    original = zipimport.zipimporter.invalidate_caches
+    if getattr(original, "_stat_gated", False):
+        return
+    stamps: dict[str, tuple[int, int] | None] = {}
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            stamp = None
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if stamp is not None and files is not None and stamps.get(self.archive) == stamp:
+            self._files = files
+            return
+        original(self)
+        stamps[self.archive] = stamp
+
+    invalidate_caches._stat_gated = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
 def _make_stop_check(stop_src: str | None):

@@ -20,6 +20,7 @@ one seed gives one result.
 from __future__ import annotations
 
 import json
+import logging
 import math
 import time
 from typing import Any, Callable
@@ -39,7 +40,7 @@ from maggy_spark.optimizers import get_controller
 from maggy_spark.store import TRIALS_SCHEMA, ExperimentStore, trial_rows
 from maggy_spark.trial import Trial
 
-DEC = "decimal(18,4)"
+_LOG = logging.getLogger("maggy_spark")
 
 
 def lagom(
@@ -133,11 +134,6 @@ def _es_enabled(config) -> bool:
         f"unsupported es_policy {policy!r}: expected 'median', 'none', None, "
         "or a rule implementing earlystop_check"
     )
-
-
-import logging
-
-_LOG = logging.getLogger("maggy_spark")
 
 
 def _log_progress(controller, settled: int) -> None:
