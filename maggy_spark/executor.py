@@ -34,6 +34,16 @@ archive's central directory, and a worker importing pyspark from
 the py4j zip, the spark-core jar). Each trial task installs
 `_install_zip_invalidation`, which stat-gates that re-read; a fresh
 worker still pays it once, on its first trial.
+
+Delayed-ACK flush: the JVM sends a Python task's command and its input
+partition in two writes on a loopback TCP socket without
+`TCP_NODELAY`, so Nagle's algorithm holds the second write until the
+worker ACKs the first, and Linux delays that ACK by at least 40 ms.
+Every trial task would sit out that delay waiting for its one row.
+`run_partition` calls `_flush_delayed_ack` before it pulls the row;
+setting `TCP_QUICKACK` sends the pending ACK at once. Sessions with
+`spark.python.unix.domain.socket.enabled` have no stall, and the
+flush leaves their sockets alone.
 """
 
 from __future__ import annotations
@@ -164,13 +174,10 @@ def run_trial_wave(
 
     def run_one(trial_id, params_json, budget) -> dict:
         import json as _json
-        import sys as _sys
         import time as _time
 
         from pyspark import cloudpickle as _cp
 
-        if pkg_path not in _sys.path:
-            _sys.path.insert(0, pkg_path)
         from maggy_spark.executor import (
             _install_zip_invalidation,
             _make_stop_check,
@@ -254,6 +261,15 @@ def run_trial_wave(
         }
 
     def run_partition(part):
+        import sys as _sys
+
+        if pkg_path not in _sys.path:
+            _sys.path.insert(0, pkg_path)
+        from maggy_spark.executor import _flush_delayed_ack
+
+        # before the first row is pulled: the JVM holds it back until
+        # this worker ACKs the task command (see the module docstring)
+        _flush_delayed_ack()
         # normally exactly one trial per partition (parallelize
         # slicing below); the loop still executes every trial
         # correctly if a partition ever carries more
@@ -386,6 +402,62 @@ def _install_zip_invalidation() -> None:
 
     invalidate_caches._stat_gated = True
     zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+def _flush_delayed_ack() -> None:
+    """Send this worker's pending TCP ACK to the JVM now (see the module
+    docstring).
+
+    Sets `TCP_QUICKACK` on every loopback TCP connection the process
+    holds; setting it flushes an ACK the kernel is delaying. The option
+    does not stick, so each task sets it again. Each socket is reached
+    through a dup of its fd, and only the dup is closed; each fd keeps
+    its blocking mode, whatever `socket.setdefaulttimeout` a trial or
+    library has set in this reused worker. A no-op without
+    `socket.TCP_QUICKACK` or `/proc`, and for Unix-domain sockets. Never
+    raises: a trial task must not fail here.
+    """
+    try:
+        import ipaddress
+        import os
+        import socket
+        import stat
+
+        quickack = getattr(socket, "TCP_QUICKACK", None)
+        if quickack is None:
+            return
+        for name in os.listdir("/proc/self/fd"):
+            try:
+                fd = int(name)
+                if not stat.S_ISSOCK(os.fstat(fd).st_mode):
+                    continue
+                dup = os.dup(fd)
+            except (OSError, ValueError):
+                continue  # includes listdir's own, already closed, fd
+            try:
+                # with a default timeout set, socket() makes the fd
+                # non-blocking, and the dup shares that flag with the
+                # original (the worker's JVM connection): put it back
+                blocking = os.get_blocking(dup)
+                try:
+                    sock = socket.socket(fileno=dup)
+                finally:
+                    os.set_blocking(dup, blocking)
+            except OSError:
+                os.close(dup)
+                continue
+            with sock:
+                try:
+                    if sock.family not in (socket.AF_INET, socket.AF_INET6) or sock.type != socket.SOCK_STREAM:
+                        continue
+                    peer = ipaddress.ip_address(sock.getpeername()[0])
+                    peer = getattr(peer, "ipv4_mapped", None) or peer
+                    if peer.is_loopback:
+                        sock.setsockopt(socket.IPPROTO_TCP, quickack, 1)
+                except (OSError, ValueError):
+                    pass  # not connected, or an address it cannot parse
+    except Exception:  # noqa: BLE001 - an optimisation only
+        pass
 
 
 def _make_stop_check(stop_src: str | None):

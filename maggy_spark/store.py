@@ -146,11 +146,14 @@ class ExperimentStore:
 
     # -- live relations ------------------------------------------------
 
+    # Read with the known schema: inferring it costs a Spark job per
+    # read. A table with no file yet still raises (path not found).
+
     def trials(self) -> DataFrame:
-        return self.spark.read.parquet(self._trials_path)
+        return self.spark.read.schema(TRIALS_SCHEMA).parquet(self._trials_path)
 
     def metrics(self) -> DataFrame:
-        return self.spark.read.parquet(self._metrics_path)
+        return self.spark.read.schema(METRICS_SCHEMA).parquet(self._metrics_path)
 
     # -- kernel queries over the live store ----------------------------
 

@@ -1,11 +1,15 @@
-"""Worker-side zip-directory invalidation (`executor._install_zip_invalidation`).
+"""Worker-side task set-up: zip-directory invalidation
+(`executor._install_zip_invalidation`) and the delayed-ACK flush
+(`executor._flush_delayed_ack`).
 
 Each check runs in a fresh interpreter: the installer patches
-`zipimport.zipimporter` for the whole process, and the pytest process's
-own importers must stay untouched.
+`zipimport.zipimporter` for the whole process, the flush touches every
+socket the process holds, and the pytest process's own importers and
+sockets must stay untouched.
 """
 
 import os
+import socket
 import subprocess
 import sys
 import textwrap
@@ -48,9 +52,9 @@ def sweep_reads(archive):
 """
 
 
-def _run(tmp_path, body: str, timeout: int = 120) -> None:
+def _run(tmp_path, body: str, timeout: int = 120, prelude: str = PRELUDE) -> None:
     script = tmp_path / "probe.py"
-    script.write_text(PRELUDE + f"ARC = {str(tmp_path / 'lib.zip')!r}\n" + textwrap.dedent(body))
+    script.write_text(prelude + f"ARC = {str(tmp_path / 'lib.zip')!r}\n" + textwrap.dedent(body))
     env = dict(os.environ, PYTHONPATH=os.pathsep.join(filter(None, [str(ROOT), os.environ.get("PYTHONPATH")])))
     proc = subprocess.run(
         [sys.executable, str(script)], cwd=tmp_path, env=env, capture_output=True, text=True, timeout=timeout
@@ -192,3 +196,203 @@ def test_trial_task_installs_invalidation_on_its_worker(tmp_path):
         finally:
             spark.stop()
     """, timeout=300)
+
+
+# `TCP_QUICKACK` reads back 0 while the socket is in delayed-ACK
+# (ping-pong) mode; setting it to 0 puts the socket there, so a later
+# read of 1 shows the flush reached that socket.
+ACK_PRELUDE = """
+import os, socket
+from maggy_spark.executor import _flush_delayed_ack
+
+QUICKACK = getattr(socket, "TCP_QUICKACK", None)
+
+def open_fds():
+    return len(os.listdir("/proc/self/fd"))
+
+def tcp_pair(family=socket.AF_INET, host="127.0.0.1"):
+    srv = socket.socket(family, socket.SOCK_STREAM)
+    srv.bind((host, 0))
+    srv.listen(1)
+    client = socket.create_connection(srv.getsockname()[:2])
+    conn, _ = srv.accept()
+    return srv, client, conn
+
+def delay_acks(sock):
+    sock.setsockopt(socket.IPPROTO_TCP, QUICKACK, 0)
+    assert sock.getsockopt(socket.IPPROTO_TCP, QUICKACK) == 0
+
+def carries_data(a, b):
+    a.sendall(b"ping")
+    assert b.recv(4) == b"ping"
+    b.sendall(b"pong")
+    assert a.recv(4) == b"pong"
+"""
+needs_quickack = pytest.mark.skipif(
+    not (hasattr(socket, "TCP_QUICKACK") and os.path.isdir("/proc/self/fd")),
+    reason="needs TCP_QUICKACK and /proc",
+)
+
+
+@needs_quickack
+def test_flush_reaches_loopback_tcp_and_keeps_it_open(tmp_path):
+    _run(tmp_path, """
+        pairs = [tcp_pair()]
+        if socket.has_ipv6:
+            try:
+                pairs.append(tcp_pair(socket.AF_INET6, "::1"))
+            except OSError:
+                pass  # no IPv6 loopback here
+        for _, client, conn in pairs:
+            delay_acks(client)
+            delay_acks(conn)
+        before = open_fds()
+        _flush_delayed_ack()
+        assert open_fds() == before
+        for _, client, conn in pairs:
+            assert client.getsockopt(socket.IPPROTO_TCP, QUICKACK) == 1
+            assert conn.getsockopt(socket.IPPROTO_TCP, QUICKACK) == 1
+            carries_data(client, conn)
+    """, prelude=ACK_PRELUDE)
+
+
+@needs_quickack
+def test_flush_leaves_unix_sockets_and_other_fds_alone(tmp_path):
+    _run(tmp_path, """
+        a, b = socket.socketpair(socket.AF_UNIX, socket.SOCK_STREAM)
+        r, w = os.pipe()
+        fh = open(__file__)
+        srv, client, conn = tcp_pair()  # a listening socket has no peer
+        before = open_fds()
+        _flush_delayed_ack()
+        assert open_fds() == before
+        carries_data(a, b)
+        os.write(w, b"x")
+        assert os.read(r, 1) == b"x"
+        assert "_flush_delayed_ack" in fh.read()
+        assert srv.getsockname()[1] > 0
+
+        # a failure inside the helper is swallowed, whatever it is
+        real_listdir = os.listdir
+        for exc in (FileNotFoundError("/proc"), RuntimeError("boom")):
+            def broken(path, exc=exc):
+                raise exc
+            os.listdir = broken
+            _flush_delayed_ack()
+        os.listdir = real_listdir
+        assert open_fds() == before
+    """, prelude=ACK_PRELUDE)
+
+
+@needs_quickack
+def test_flush_is_a_noop_without_tcp_quickack(tmp_path):
+    _run(tmp_path, """
+        srv, client, conn = tcp_pair()
+        delay_acks(client)
+        del socket.TCP_QUICKACK
+        before = open_fds()
+        _flush_delayed_ack()
+        assert open_fds() == before
+        assert client.getsockopt(socket.IPPROTO_TCP, QUICKACK) == 0
+        carries_data(client, conn)
+    """, prelude=ACK_PRELUDE)
+
+
+@needs_quickack
+def test_flush_keeps_blocking_mode_under_a_default_timeout(tmp_path):
+    """A default timeout makes `socket(fileno=...)` set O_NONBLOCK on
+    the fd, and a dup shares that flag with the worker's own socket."""
+    _run(tmp_path, """
+        srv, client, conn = tcp_pair()
+        _, nb_client, nb_conn = tcp_pair()
+        nb_client.setblocking(False)
+        socket.setdefaulttimeout(5)
+        for sock in (client, conn, nb_client):
+            delay_acks(sock)
+        _flush_delayed_ack()
+        assert os.get_blocking(client.fileno()) and os.get_blocking(conn.fileno())
+        assert os.get_blocking(nb_conn.fileno())
+        assert not os.get_blocking(nb_client.fileno())
+        for sock in (client, conn, nb_client):
+            assert sock.getsockopt(socket.IPPROTO_TCP, QUICKACK) == 1
+        carries_data(client, conn)
+        nb_conn.sendall(b"ping")
+        assert nb_client.recv(4) == b"ping"  # already queued on loopback
+    """, prelude=ACK_PRELUDE)
+
+
+def test_run_partition_flushes_before_pulling_its_row(tmp_path):
+    """The flush must precede the first pull of the partition: by the
+    time a row arrives it has already waited out the delayed ACK."""
+    _run(tmp_path, """
+        from maggy_spark import executor
+
+        events = []
+        executor._flush_delayed_ack = lambda: events.append("flush")
+
+        def partition(rows):
+            events.append("pull")
+            yield from rows
+
+        class Rdd:
+            def __init__(self, parts):
+                self.parts = parts
+            def mapPartitions(self, f):
+                return Rdd([list(f(partition(p))) for p in self.parts])
+            def collect(self):
+                return [x for p in self.parts for x in p]
+
+        class Context:
+            def parallelize(self, rows, n):
+                assert n == len(rows)
+                return Rdd([[r] for r in rows])
+
+        class Spark:
+            sparkContext = Context()
+
+        def train(x):
+            return x + 1
+
+        pending = [{"trial_id": f"t{i}", "params": {"x": float(i)}} for i in range(2)]
+        rows = executor.run_trial_wave(Spark(), pending, train)
+        assert [r["final_metric"] for r in rows] == [1.0, 2.0], rows
+        assert events == ["flush", "pull"] * 2, events
+    """, prelude=ACK_PRELUDE)
+
+
+def test_trial_tasks_flush_acks_on_one_reused_worker(tmp_path):
+    """Pins the call from `run_partition`: on `local[1]`, the first trial
+    swaps a counting wrapper into its worker's `executor` module; each
+    later trial task, which looks the helper up at call time, then counts
+    one call before its trial runs. One pid throughout shows the worker,
+    and so its socket to the JVM, outlived every flush."""
+    _run(tmp_path, """
+        from pyspark.sql import SparkSession
+        from maggy_spark.executor import run_trial_wave
+
+        spark = (SparkSession.builder.master("local[1]")
+                 .config("spark.ui.enabled", "false").getOrCreate())
+        try:
+            def train(x):
+                from maggy_spark import executor
+                if not hasattr(executor._flush_delayed_ack, "calls"):
+                    original = executor._flush_delayed_ack
+                    def counting():
+                        counting.calls += 1
+                        original()
+                    counting.calls = 0
+                    executor._flush_delayed_ack = counting
+                print(os.getpid(), executor._flush_delayed_ack.calls)
+                return x * 2
+
+            rows = [run_trial_wave(spark, [{"trial_id": f"t{i}", "params": {"x": float(i)}}], train)[0]
+                    for i in range(4)]
+            assert [r["trial_id"] for r in rows] == ["t0", "t1", "t2", "t3"]
+            assert [r["final_metric"] for r in rows] == [0.0, 2.0, 4.0, 6.0], rows
+            assert all(r["error"] is None and len(r) == 8 for r in rows), rows
+            pids, calls = zip(*(map(int, r["logs"][0].split()) for r in rows))
+            assert len(set(pids)) == 1, pids
+            assert calls == (0, 1, 2, 3), calls
+        finally:
+            spark.stop()
+    """, timeout=300, prelude=ACK_PRELUDE)

@@ -236,3 +236,24 @@ def test_next_seq_read_errors_propagate(spark, tmp_path):
     (path / "trials" / "part-0.parquet").write_bytes(b"not parquet")
     with pytest.raises(pa.ArrowInvalid):
         ExperimentStore(spark, str(path)).append_trials([_trial(1, 1.0)])
+
+
+def test_written_files_carry_the_arrow_schema(tmp_path):
+    """`trials()`/`metrics()` read with the pinned Spark schema, so the
+    read-back schema checks above no longer see what was written: pin
+    each file's footer to the Arrow schema instead."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from maggy_spark.store import METRICS_ARROW_SCHEMA, TRIALS_ARROW_SCHEMA
+
+    s = ExperimentStore(None, str(tmp_path / "footer"), direction="max")
+    for wave in ([_trial(1, 10.0, budget=1)], [_trial(2, 30.0, budget=2), _trial(3, 5.0)]):
+        s.append_trials(wave)
+        s.append_metrics(wave)
+    for table, schema in (("trials", TRIALS_ARROW_SCHEMA), ("metrics", METRICS_ARROW_SCHEMA)):
+        files = sorted(os.listdir(tmp_path / "footer" / table))
+        assert len(files) == 2, files
+        for name in files:
+            assert pq.read_schema(tmp_path / "footer" / table / name).equals(schema), (table, name)
