@@ -8,23 +8,23 @@ dataset column, layer trials drop one model layer (by name, group,
 or prefix).
 
 Rebuild: the component inventory is a relational `components` table
-(FIXTURES.md F4); the trial list is a UNION ALL projection over it
+(FIXTURES.md F4); the trial list has one trial per component row
 (operator G11); feature ablation is `.drop(column)` — i.e. column
 pruning, which parquet gives us for free; the ablated training table
 is read executor-side via pyarrow inside the trial task (the
-dataset_function contract, `loco.py:222-230`).
+dataset_function contract, `loco.py:222-230`). Trials run through the
+HPO lifecycle (`experiment._run_trials`) behind `_AblationController`,
+each its own Spark job with its dataset/model callables as extras.
 """
 
 from __future__ import annotations
 
 from abc import ABC, abstractmethod
-from typing import Any, Callable
+from typing import Callable
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from maggy_spark.config import AblationConfig
-from maggy_spark.executor import run_trial_wave
 from maggy_spark.trial import Trial
 
 
@@ -227,7 +227,9 @@ class AbstractAblator(ABC):
 
     Custom ablators written against the reference subclass this and
     are passed via ``AblationConfig(ablator=instance)``; the engine
-    drains `get_trial` into execution waves."""
+    drains `get_trial(None)` for the first trials, then hands every
+    settled trial back through `get_trial` and runs what it returns,
+    each trial its own job in the HPO dispatch loop."""
 
     def __init__(self, ablation_study, final_store=None) -> None:
         self.ablation_study = ablation_study
@@ -271,9 +273,10 @@ class LOCO(AbstractAblator):
     dataset/model callables), so trial ids hash the ablated labels
     exactly like the reference (`trial.py:62-67`).
 
-    The engine's relational LOCO path (loco_trials/components_df)
-    stays the scale-native default; this class exists so reference
-    user code subclassing or instantiating LOCO runs unchanged."""
+    The built-in "loco" ablator (loco_trials/components_df) stays the
+    default; this class exists so reference user code subclassing or
+    instantiating LOCO runs unchanged. Both run through the same
+    dispatch loop."""
 
     def get_number_of_trials(self) -> int:
         study = self.ablation_study
@@ -455,226 +458,142 @@ def make_dataset_function(path: str | None, label: str | None, ablated_feature: 
 
 
 def run_ablation(train_fn: Callable, config: AblationConfig, spark: SparkSession) -> dict:
-    """Execute the ablation study; early stopping forced off
-    (`ablation_driver.py:52`). The default "loco" ablator runs the
-    engine's relational path; a custom AbstractAblator instance
-    (reference `ablation_driver.py:65-77`) is drained through
-    `get_trial` reference-style."""
-    from maggy_spark.experiment import _aggregate_result
+    """Execute the ablation study through the HPO lifecycle
+    (`experiment._run_trials`; the reference `AblationDriver` subclasses
+    the HPO driver, `ablation_driver.py:32-87`): async refill at the
+    cluster's default parallelism, every trial its own job, early
+    stopping off (`ablation_driver.py:52`). The default "loco" ablator
+    runs `loco_trials`; a custom AbstractAblator instance (reference
+    `ablation_driver.py:65-77`) is drained through `get_trial`
+    reference-style."""
+    from maggy_spark.experiment import _run_trials
 
     study: AblationStudy = config.ablation_study
     if study is None:
         raise ValueError("AblationConfig.ablation_study is required")
-    ablator_spec = getattr(config, "ablator", "loco")
-    if not isinstance(ablator_spec, str):
-        if not callable(getattr(ablator_spec, "get_trial", None)):
+    ablator = getattr(config, "ablator", "loco")
+    if isinstance(ablator, str):
+        if ablator.lower() != "loco":
+            raise ValueError(f"unknown ablator {ablator!r}; only 'loco' is built in")
+        controller = _AblationController(loco_trials(study))
+        components = _loco_components(study)
+    else:
+        if not callable(getattr(ablator, "get_trial", None)):
             raise TypeError(
                 "ablator should be 'loco' or an instance of AbstractAblator, got "
-                f"{type(ablator_spec).__name__}"
+                f"{type(ablator).__name__}"
             )
-        return _run_custom_ablator(train_fn, config, spark, ablator_spec)
-    if ablator_spec.lower() != "loco":
-        raise ValueError(f"unknown ablator {ablator_spec!r}; only 'loco' is built in")
-    trials = loco_trials(study)
-
-    path = study.training_dataset_path
+        ablator.ablation_study = study
+        ablator.final_store = []
+        ablator.trial_buffer = list(getattr(ablator, "trial_buffer", []))
+        ablator.initialize()
+        # the reference driver requests trials with no finished
+        # reference until the ablator runs dry
+        controller = _AblationController(list(iter(lambda: ablator.get_trial(None), None)), ablator)
+        components = _reference_components
     label = study.label_name
+
+    def payload(trial: Trial) -> tuple[dict, dict]:
+        # the train_fn sees only these injected values (and reporter),
+        # never the trial's raw params
+        ablated_feature, ablated_layer, dataset_fn, model_fn = components(trial)
+        extras = {"ablated_feature": ablated_feature, "ablated_layer": ablated_layer, "label_name": label}
+        # a None callable is left out: it would clobber a user-supplied
+        # parameter default (build_kwargs prefers extras over defaults)
+        if dataset_fn is not None:
+            extras["dataset_function"] = dataset_fn
+        if model_fn is not None:
+            extras["model_function"] = model_fn
+        return {}, extras
+
+    def finish(result: dict) -> None:
+        best = result.get("best_config")
+        if best is not None:
+            # "BEST Config Excludes ..." (ablation_driver.py:153-183)
+            result["best_excludes"] = (
+                best.get("ablated", "None")
+                if isinstance(ablator, str)
+                else {k: best.get(k, "None") for k in ("ablated_feature", "ablated_layer")}
+            )
+        result["n_components"] = controller.num_trials - 1
+
+    return _run_trials(
+        train_fn, config, spark, controller, spark.sparkContext.defaultParallelism, "async", payload, finish
+    )
+
+
+class _AblationController:
+    """The controller protocol `experiment._drive` runs (`next_batch`,
+    `finalize_trial`, `report_error`, `done`, `num_trials`,
+    `final_store`) over an ablation study's trials.
+
+    With no ablator the trials are fixed. With a reference-protocol
+    ablator every settled trial, ERROR ones included, joins its
+    `final_store` and is handed back through `get_trial` in settle
+    order; a returned trial joins the queue. `finalize_experiment`
+    fires once, from the first `done()` that sees every trial settled.
+    """
+
+    def __init__(self, trials: list[Trial], ablator=None) -> None:
+        self._pending = list(trials)
+        self._ablator = ablator
+        self._finalized = False
+        self.num_trials = len(self._pending)
+        self.final_store: list[Trial] = ablator.final_store if ablator is not None else []
+
+    def next_batch(self, max_trials: int) -> list[Trial]:
+        batch, self._pending = self._pending[:max_trials], self._pending[max_trials:]
+        return batch
+
+    def finalize_trial(self, trial: Trial) -> None:
+        self.final_store.append(trial)
+        if self._ablator is not None:
+            follow_up = self._ablator.get_trial(trial)
+            if follow_up is not None:
+                self._pending.append(follow_up)
+                self.num_trials += 1
+
+    report_error = finalize_trial
+
+    def done(self) -> bool:
+        finished = not self._pending and len(self.final_store) == self.num_trials
+        if finished and self._ablator is not None and not self._finalized:
+            self._finalized = True
+            self._ablator.finalize_experiment(self.final_store)
+        return finished
+
+
+def _loco_components(study: AblationStudy) -> Callable:
+    """(ablated_feature, ablated_layer, dataset_function, model_function)
+    of a `loco_trials` trial. A user-set dataset generator replaces the
+    parquet reader for every trial (reference loco.py:45-47 — the
+    generator owns the ablation logic); the base model generator goes to
+    every non-custom trial, with layer trials getting the ablating
+    wrapper."""
     custom_gens = dict(study.custom_model_generators)
     for gen, identifier in study.model.custom_model_generators:
         custom_gens.setdefault(identifier, gen)
-    # a user-set dataset generator replaces the parquet reader for
-    # every trial (reference loco.py:45-47 — the generator owns the
-    # ablation logic); the base model generator is injected for every
-    # non-custom trial, with layer trials getting the ablating wrapper
-    custom_dataset_gen = study.custom_dataset_generator or None
-    base_model_gen = study.model.base_model_generator
-    # Serialize the USER fn by value here: `wrapped` (a local function)
-    # is always pickled by value, but a closure cell holding train_fn
-    # would be pickled by REFERENCE to train_fn's module — exactly the
-    # executor-side ModuleNotFoundError _dumps_by_value prevents.
-    from maggy_spark.executor import _dumps_by_value
+    base = study.model.base_model_generator
 
-    train_fn_bytes = _dumps_by_value(train_fn)
-
-    def wrapped(hparams: dict, reporter: Any = None, **_kw) -> Any:
-        from pyspark import cloudpickle as _cp
-
-        user_fn = _cp.loads(train_fn_bytes)
-        ablated = hparams.get("ablated", "None")
-        kind, _, name = ablated.partition(":")
+    def components(trial: Trial) -> tuple:
+        kind, _, name = trial.params["ablated"].partition(":")
         ablated_feature = name if kind == "feature" else None
         ablated_layer = name if kind in ("layer", "layer_group", "layer_prefix") else None
-        from maggy_spark.executor import build_kwargs
-
-        extras = {
-            "dataset_function": custom_dataset_gen
-            if custom_dataset_gen is not None
-            else make_dataset_function(path, label, ablated_feature),
-            "ablated_feature": ablated_feature,
-            "ablated_layer": ablated_layer,
-            "label_name": label,
-        }
-        # only inject model_function when this trial actually carries
-        # one — an unconditional None would clobber a user-supplied
-        # parameter default (build_kwargs prefers extras over defaults)
-        if kind == "custom" and custom_gens.get(name) is not None:
-            extras["model_function"] = custom_gens[name]
-        elif kind != "custom" and base_model_gen is not None:
-            extras["model_function"] = (
-                base_model_gen
-                if ablated_layer is None
-                else ablating_model_generator(base_model_gen, ablated_layer)
-            )
-        kwargs = build_kwargs(user_fn, {}, reporter, extras)
-        return user_fn(**kwargs)
-
-    pending = [{"trial_id": t.trial_id, "params": t.params, "budget": 0} for t in trials]
-    by_id = {t.trial_id: t for t in trials}
-    results = run_trial_wave(spark, pending, wrapped, optimization_key=config.optimization_key)
-    done: list[Trial] = []
-    for r in results:
-        t = by_id[r["trial_id"]]
-        if r["error"]:
-            t.status = Trial.ERROR
-            t.info_dict["error"] = r["error"]
+        dataset_fn = study.custom_dataset_generator or make_dataset_function(
+            study.training_dataset_path, study.label_name, ablated_feature
+        )
+        if kind == "custom":
+            model_fn = custom_gens.get(name)
+        elif base is not None and ablated_layer is not None:
+            model_fn = ablating_model_generator(base, ablated_layer)
         else:
-            t.status = Trial.FINALIZED
-            t.final_metric = r["final_metric"]
-        t.info_dict["seq"] = len(done)
-        done.append(t)
+            model_fn = base
+        return ablated_feature, ablated_layer, dataset_fn, model_fn
 
-    result = _aggregate_result(done, config.direction)
-    best = next((t for t in done if t.trial_id == result.get("best_id")), None)
-    if best is not None:
-        result["best_config"] = dict(best.params)
-        # "BEST Config Excludes ..." (ablation_driver.py:153-183)
-        result["best_excludes"] = best.params.get("ablated", "None")
-    result["n_components"] = len(trials) - 1
-    return result
+    return components
 
 
-def _run_custom_ablator(train_fn: Callable, config: AblationConfig, spark: SparkSession, ablator) -> dict:
-    """Drive a reference-protocol ablator (`abstractablator.py:20-86`)
-    through the engine's wave executor.
-
-    The reference driver hands each finished trial to the next
-    `get_trial` call; here finished trials queue during a wave and
-    drain one per call. Per-trial dataset/model callables cannot ride
-    the relational params payload (run_trial_wave strips callables
-    before shipping), so they are cloudpickled by value into a
-    trial_id-keyed map captured by the wave closure."""
-    from maggy_spark.executor import _dumps_by_value, build_kwargs  # noqa: F401
-    from maggy_spark.experiment import _aggregate_result
-
-    study: AblationStudy = config.ablation_study
-    final_store: list[Trial] = []
-    ablator.ablation_study = study
-    ablator.final_store = final_store
-    ablator.trial_buffer = list(getattr(ablator, "trial_buffer", []))
-    ablator.initialize()
-
-    train_fn_bytes = _dumps_by_value(train_fn)
-    label = study.label_name
-    finished_q: list[Trial] = []
-    done: list[Trial] = []
-
-    first_wave = True
-    while True:
-        batch: list[Trial] = []
-        if first_wave:
-            # initial drain: the reference driver requests trials with
-            # no finished reference until the ablator runs dry
-            first_wave = False
-            while True:
-                t = ablator.get_trial(None)
-                if t is None:
-                    break
-                batch.append(t)
-        else:
-            # EVERY finished trial is handed to get_trial, even when an
-            # earlier one returned None — stopping at the first None
-            # would drop queued finished trials and an adaptive ablator
-            # would never see them (the reference driver feeds each
-            # finished trial regardless of prior returns)
-            while finished_q:
-                t = ablator.get_trial(finished_q.pop(0))
-                if t is not None:
-                    batch.append(t)
-        if not batch:
-            break
-
-        # serialize EACH callable through _dumps_by_value: passing the
-        # tuple would defeat by-value module registration (getmodule on
-        # a tuple is None) and pickle the user's notebook functions by
-        # reference — the executor-side ModuleNotFoundError this path
-        # exists to prevent
-        def _ser(fn):
-            return None if fn is None else _dumps_by_value(fn)
-
-        fn_map = {
-            t.trial_id: (
-                _ser(t.params.get("dataset_function")),
-                _ser(t.params.get("model_function")),
-            )
-            for t in batch
-        }
-
-        def wrapped(hparams: dict, reporter: Any = None, **_kw) -> Any:
-            from pyspark import cloudpickle as _cp
-
-            user_fn = _cp.loads(train_fn_bytes)
-            tid = hparams.get("__trial_id__")
-            dataset_fn = model_fn = None
-            if tid in fn_map:
-                ds_bytes, mf_bytes = fn_map[tid]
-                dataset_fn = _cp.loads(ds_bytes) if ds_bytes is not None else None
-                model_fn = _cp.loads(mf_bytes) if mf_bytes is not None else None
-            extras = {
-                "ablated_feature": hparams.get("ablated_feature"),
-                "ablated_layer": hparams.get("ablated_layer"),
-                "label_name": label,
-            }
-            if dataset_fn is not None:
-                extras["dataset_function"] = dataset_fn
-            if model_fn is not None:
-                extras["model_function"] = model_fn
-            kwargs = build_kwargs(user_fn, {}, reporter, extras)
-            return user_fn(**kwargs)
-
-        pending = [
-            {
-                "trial_id": t.trial_id,
-                "params": {
-                    **{k: v for k, v in t.params.items() if not callable(v)},
-                    "__trial_id__": t.trial_id,
-                },
-                "budget": 0,
-            }
-            for t in batch
-        ]
-        by_id = {t.trial_id: t for t in batch}
-        results = run_trial_wave(spark, pending, wrapped, optimization_key=config.optimization_key)
-        for r in results:
-            t = by_id[r["trial_id"]]
-            if r["error"]:
-                t.status = Trial.ERROR
-                t.info_dict["error"] = r["error"]
-            else:
-                t.status = Trial.FINALIZED
-                t.final_metric = r["final_metric"]
-            t.info_dict["seq"] = len(done)
-            done.append(t)
-            final_store.append(t)
-            finished_q.append(t)
-
-    ablator.finalize_experiment(done)
-    result = _aggregate_result(done, config.direction)
-    best = next((t for t in done if t.trial_id == result.get("best_id")), None)
-    if best is not None:
-        result["best_config"] = {k: v for k, v in best.params.items() if not callable(v)}
-        result["best_excludes"] = {
-            "ablated_feature": best.params.get("ablated_feature", "None"),
-            "ablated_layer": best.params.get("ablated_layer", "None"),
-        }
-    result["n_components"] = len(done) - 1
-    return result
+def _reference_components(trial: Trial) -> tuple:
+    """The same four values from a reference-shaped trial's params."""
+    p = trial.params
+    return p.get("ablated_feature"), p.get("ablated_layer"), p.get("dataset_function"), p.get("model_function")

@@ -69,8 +69,9 @@ class AblationConfig(BaseConfig):
     (`ablation_driver.py:52`)."""
 
     ablation_study: Any = None
-    # "loco" (relational engine path) or a reference-protocol
-    # AbstractAblator instance (`ablation_driver.py:65-77`)
+    # "loco" (the built-in loco_trials list) or a reference-protocol
+    # AbstractAblator instance (`ablation_driver.py:65-77`); either
+    # runs through the HPO dispatch loop, async, one job per trial
     ablator: Any = "loco"
     direction: str = "max"
     optimization_key: str = "metric"

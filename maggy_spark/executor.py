@@ -132,7 +132,10 @@ def run_trial_wave(
     error (str or None), logs (list of str), duration_ms (int).
     `stop_check_source` is an optional serialized early-stop state
     (JSON) evaluated trial-locally at each broadcast — cooperative
-    cancellation, SURVEY.md §7.3a.
+    cancellation, SURVEY.md §7.3a. `extras` are keyword values injected
+    by name into every trial of the call (an ablation trial's
+    dataset/model callables and labels); they travel by value, like
+    the train_fn.
 
     Results are the CONTROL PLANE (one row per trial), so the `logs`
     list is capped at MAX_RESULT_LOG_LINES tail lines per trial — a
@@ -159,9 +162,11 @@ def run_trial_wave(
     # once per experiment, not once per trial.
     if fn_bytes is None:
         fn_bytes = _dumps_by_value(train_fn)
+    # extras may hold user callables too; captured as-is, Spark's
+    # closure pickler would pickle them by reference
+    extras_bytes = _dumps_by_value(extras) if extras else None
     opt_key = optimization_key
     stop_src = stop_check_source
-    extra_static = extras or {}
     tb_base = tb_base_dir
     log_base = log_dir
 
@@ -215,7 +220,7 @@ def run_trial_wave(
 
         buf = io.StringIO()
         try:
-            ex = dict(extra_static)
+            ex = _cp.loads(extras_bytes) if extras_bytes is not None else {}
             if budget:
                 ex.setdefault("budget", budget)
             kwargs = build_kwargs(fn, hparams, reporter, ex)
@@ -293,8 +298,8 @@ def _by_value_modules(obj, depth: int = 0, seen: set | None = None) -> set:
     defining module plus — recursively, to a small depth — those of
     callables reachable through closure cells, defaults, and plain
     containers. Without the recursion, a library-defined wrapper
-    closing over a user function (LOCO.get_model_generator, the
-    ablation wave closures, distributed config extras) registers only
+    closing over a user function (LOCO.get_model_generator, an
+    ablation trial's extras, distributed config extras) registers only
     the LIBRARY module and the user function silently pickles by
     reference — the exact ModuleNotFoundError this machinery exists
     to prevent."""
@@ -337,8 +342,8 @@ def _dumps_by_value(fn) -> bytes:
     restore the registry.
 
     Serialized under a lock: the register/unregister pair mutates
-    cloudpickle's GLOBAL registry, and experiments (or ablation waves)
-    may run from several driver threads at once — an interleaved
+    cloudpickle's GLOBAL registry, and the dispatch loop's pool threads
+    (or several experiments) may serialize at once — an interleaved
     unregister would silently flip a concurrent dumps back to
     by-reference pickling.
     """

@@ -8,7 +8,9 @@ a driver thread pool runs each as its own single-task Spark job
 (executor.py), finalized trials feed back into the controller, and
 the final result is the A1 summary computed on the driver over the
 trials it already holds — no RPC server, no reservation registry, no
-digestion threads.
+digestion threads. Ablation studies run through the same lifecycle
+(`_run_trials`) behind a controller adapter (ablation.py), as the
+reference's ablation driver subclasses its HPO driver (SURVEY.md §3.2).
 
 Asynchrony note (SURVEY.md §7.3b): the reference assigns a new trial
 the instant one finishes; `scheduling="async"` does the same.
@@ -106,7 +108,7 @@ def _es_custom_rule(config):
     """The user's `earlystop_check` for a custom rule (a class or
     instance implementing the reference's AbstractEarlyStop contract,
     `abstractearlystop.py:20-40`), or None for built-in policies."""
-    policy = config.es_policy
+    policy = getattr(config, "es_policy", None)
     if policy is None or isinstance(policy, str):
         return None
     if getattr(policy, "POLICY", None) in ("median", "none"):
@@ -119,10 +121,11 @@ def _es_enabled(config) -> bool:
     """Early stopping runs for the median policy or a custom
     reference-contract rule; None or "none" disable it. Anything else
     is rejected up front rather than being silently treated as
-    median."""
+    median. A config without an es_policy (ablation, reference
+    `ablation_driver.py:52`) never stops early."""
     if _es_custom_rule(config) is not None:
         return True
-    policy = config.es_policy
+    policy = getattr(config, "es_policy", None)
     # facade rule classes/instances (maggy.earlystop) carry a POLICY
     # string; strings pass through unchanged
     policy = getattr(policy, "POLICY", policy)
@@ -226,6 +229,7 @@ def _apply_result(controller, trial: Trial, r: dict, seq: int) -> None:
     trial.duration = (r["duration_ms"] or 0) / 1000.0
     if r.get("logs"):
         trial.info_dict["logs"] = list(r["logs"])
+    trial.info_dict["seq"] = seq
     if r["error"]:
         trial.status = Trial.ERROR
         trial.info_dict["error"] = r["error"]
@@ -234,7 +238,6 @@ def _apply_result(controller, trial: Trial, r: dict, seq: int) -> None:
         trial.status = Trial.FINALIZED
         trial.final_metric = r["final_metric"]
         controller.finalize_trial(trial)
-    trial.info_dict["seq"] = seq
 
 
 def _run_hpo(train_fn: Callable, config: HyperparameterOptConfig, spark: SparkSession) -> dict:
@@ -259,7 +262,17 @@ def _run_hpo(train_fn: Callable, config: HyperparameterOptConfig, spark: SparkSe
     controller.spark = spark  # controllers may fan work out (e.g. GP distributed scoring)
     controller._maggy_rule_b64 = None  # per-run custom-rule pickle memo (_bar_payload)
     parallelism = config.parallelism or spark.sparkContext.defaultParallelism
+    return _run_trials(train_fn, config, spark, controller, parallelism, config.scheduling)
 
+
+def _run_trials(
+    train_fn, config, spark, controller, parallelism, scheduling, payload=None, finish=None
+) -> dict:
+    """The experiment lifecycle after the controller is initialized,
+    shared by HPO and ablation: experiment dir and live store, `_drive`,
+    the A1 summary with best/worst config, then `finish(result)` (the
+    caller's own result keys) and the S5/S6 persist under log_dir.
+    `payload` is passed on to `_drive`."""
     store = None
     exp_dir = None
     if config.log_dir:
@@ -274,7 +287,7 @@ def _run_hpo(train_fn: Callable, config: HyperparameterOptConfig, spark: SparkSe
             store = ExperimentStore(spark, exp_dir + "/live", direction=config.direction)
 
     t_start = time.time()
-    all_trials, waves = _drive(train_fn, config, spark, controller, parallelism, store, exp_dir)
+    all_trials, waves = _drive(train_fn, config, spark, controller, parallelism, scheduling, store, exp_dir, payload)
 
     result = _aggregate_result(all_trials, config.direction)
     result["duration_sec"] = round(time.time() - t_start, 3)
@@ -286,6 +299,8 @@ def _run_hpo(train_fn: Callable, config: HyperparameterOptConfig, spark: SparkSe
     worst = next((t for t in all_trials if t.trial_id == result.get("worst_id")), None)
     if worst is not None:
         result["worst_config"] = {k: v for k, v in worst.params.items() if not callable(v)}
+    if finish is not None:
+        finish(result)
     if config.log_dir:
         result["log_dir"] = _persist_experiment(spark, config, all_trials, result, exp_dir)
     return result
@@ -319,11 +334,13 @@ def _tb_base(config) -> str:
     return os.path.join(base, f"{config.name}_tb")
 
 
-def _drive(train_fn, config, spark, controller, parallelism, store=None, exp_dir=None) -> tuple[list[Trial], int]:
+def _drive(
+    train_fn, config, spark, controller, parallelism, scheduling, store=None, exp_dir=None, payload=None
+) -> tuple[list[Trial], int]:
     """The dispatch loop: a driver thread pool keeps up to `parallelism`
     trials in flight, each as its own single-task Spark job in the
     'maggy' scheduler pool (SURVEY.md §7.3b), without the reference's
-    socket plane. `config.scheduling` picks only the refill rule:
+    socket plane. `scheduling` picks only the refill rule:
 
     - "wave" refills only once the pool is empty, with one
       next_batch(parallelism) call and one stop source per wave. It
@@ -337,6 +354,9 @@ def _drive(train_fn, config, spark, controller, parallelism, store=None, exp_dir
       its rule at every METRIC heartbeat (`optimization_driver.py:
       456-471`).
 
+    `payload(trial)` gives the (hparams, extras) a trial's task
+    receives; by default (trial.params, None).
+
     Returns (trials in `seq` order, waves run in wave mode or jobs run
     in async mode)."""
     import os
@@ -344,7 +364,7 @@ def _drive(train_fn, config, spark, controller, parallelism, store=None, exp_dir
 
     from maggy_spark.executor import _dumps_by_value
 
-    wave_mode = config.scheduling != "async"
+    wave_mode = scheduling != "async"
     # serialized ONCE per experiment: per-call _dumps_by_value would redo
     # the closure walk + cloudpickle registry dance (under a global
     # lock) for every trial
@@ -362,13 +382,15 @@ def _drive(train_fn, config, spark, controller, parallelism, store=None, exp_dir
 
     def run_one(trial: Trial, stop_src: str | None) -> dict:
         spark.sparkContext.setLocalProperty("spark.scheduler.pool", "maggy")
+        params, extras = payload(trial) if payload is not None else (trial.params, None)
         [r] = run_trial_wave(
             spark,
-            [{"trial_id": trial.trial_id, "params": trial.params,
+            [{"trial_id": trial.trial_id, "params": params,
               "budget": int(trial.info_dict.get("budget", 0))}],
             train_fn,
             optimization_key=config.optimization_key,
             stop_check_source=stop_src,
+            extras=extras,
             tb_base_dir=tb_base,
             fn_bytes=fn_bytes,
             log_dir=exp_dir,
