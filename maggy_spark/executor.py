@@ -32,8 +32,11 @@ Zip-directory invalidation: a reused pyspark worker calls
 archive's central directory, and a worker importing pyspark from
 `$SPARK_HOME/python/lib/pyspark.zip` holds ~16 of them (pyspark.zip,
 the py4j zip, the spark-core jar). Each trial task installs
-`_install_zip_invalidation`, which stat-gates that re-read; a fresh
-worker still pays it once, on its first trial.
+`_install_zip_invalidation`, which stat-gates that re-read. A fresh
+worker pays it on its first trial only: Spark's sweep before that
+task re-reads every archive, and `run_one` stamps them all with a
+second sweep right after the install, so the stamping re-read does not
+fall on the worker's second trial.
 
 Delayed-ACK flush: the JVM sends a Python task's command and its input
 partition in two writes on a loopback TCP socket without
@@ -178,6 +181,7 @@ def run_trial_wave(
     pkg_path = str(Path(__file__).resolve().parent.parent)
 
     def run_one(trial_id, params_json, budget) -> dict:
+        import importlib as _importlib
         import json as _json
         import time as _time
 
@@ -191,7 +195,8 @@ def run_trial_wave(
         )
         from maggy_spark.reporter import EarlyStopException, Reporter
 
-        _install_zip_invalidation()
+        if _install_zip_invalidation():
+            _importlib.invalidate_caches()  # stamp the archives (module docstring)
 
         fn = _cp.loads(fn_bytes)
         hparams = _json.loads(params_json)
@@ -368,9 +373,9 @@ def _dumps_by_value(fn) -> bytes:
                     pass
 
 
-def _install_zip_invalidation() -> None:
+def _install_zip_invalidation() -> bool:
     """Make `zipimporter.invalidate_caches` skip archives unchanged on disk
-    (see the module docstring).
+    (see the module docstring); True when this call installed it.
 
     The replacement stats the archive and, while `(st_mtime_ns,
     st_size)` matches the stamp taken at its last read, reuses the
@@ -386,10 +391,10 @@ def _install_zip_invalidation() -> None:
     import zipimport
 
     if not (3, 10) <= sys.version_info < (3, 13):
-        return
+        return False
     original = zipimport.zipimporter.invalidate_caches
     if getattr(original, "_stat_gated", False):
-        return
+        return False
     stamps: dict[str, tuple[int, int] | None] = {}
 
     def invalidate_caches(self):
@@ -407,6 +412,7 @@ def _install_zip_invalidation() -> None:
 
     invalidate_caches._stat_gated = True
     zipimport.zipimporter.invalidate_caches = invalidate_caches
+    return True
 
 
 def _flush_delayed_ack() -> None:

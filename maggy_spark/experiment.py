@@ -27,8 +27,8 @@ import math
 import time
 from typing import Any, Callable
 
+import pyarrow as pa
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from maggy_spark.config import (
     AblationConfig,
@@ -39,7 +39,7 @@ from maggy_spark.config import (
 )
 from maggy_spark.executor import run_trial_wave
 from maggy_spark.optimizers import get_controller
-from maggy_spark.store import TRIALS_SCHEMA, ExperimentStore, trial_rows
+from maggy_spark.store import TRIALS_ARROW_SCHEMA, TRIALS_SCHEMA, ExperimentStore, trial_rows
 from maggy_spark.trial import Trial
 
 _LOG = logging.getLogger("maggy_spark")
@@ -302,23 +302,20 @@ def _run_trials(
     if finish is not None:
         finish(result)
     if config.log_dir:
-        result["log_dir"] = _persist_experiment(spark, config, all_trials, result, exp_dir)
+        result["log_dir"] = _persist_experiment(config, all_trials, result, exp_dir)
     return result
 
 
-def _persist_experiment(spark, config, trials: list[Trial], result: dict, exp_dir: str | None = None) -> str:
-    """S5/S6 finalize: experiment dir + result.json + trials relation
-    (reference optimization_driver.py:235-253,294-342). Reuses the
-    live store's run dir when streaming was on."""
+def _persist_experiment(config, trials: list[Trial], result: dict, exp_dir: str) -> str:
+    """S5/S6 finalize into the experiment dir: result.json + trials
+    relation (reference optimization_driver.py:235-253,294-342),
+    written from the rows the driver holds, with no Spark job."""
     from maggy_spark.sources.sinks import write_experiment_result, write_trial_artifacts
-    from maggy_spark.util import next_run_id, register_environment
 
-    if exp_dir is None:
-        run_id = next_run_id(config.log_dir, config.name)
-        exp_dir = register_environment(config.name, run_id, config.log_dir)
     write_experiment_result(result, exp_dir)
     if trials:
-        write_trial_artifacts(trials_to_df(spark, trials, config.direction), exp_dir)
+        table = pa.Table.from_pylist(trial_rows(trials, config.direction), schema=TRIALS_ARROW_SCHEMA)
+        write_trial_artifacts(table, exp_dir)
     return exp_dir
 
 
@@ -463,24 +460,15 @@ def summarize_finalized(finalized_df, direction: str) -> dict:
     0 under the oracle kernel's decimal(18,4) accumulator, which
     exists for cross-engine parity on the fixtures, not results).
     """
-    sign = -1.0 if direction == "min" else 1.0
-    key = F.col("final_metric") * sign
-    agg = finalized_df.agg(
-        F.max(
-            F.when(
-                F.col("final_metric").isNotNull(),
-                F.struct(key.alias("m"), (-F.col("seq")).alias("ns"), F.col("trial_id"), F.col("final_metric")),
-            )
-        ).alias("b"),
-        F.min(
-            F.when(
-                F.col("final_metric").isNotNull(),
-                F.struct(key.alias("m"), F.col("seq"), F.col("trial_id"), F.col("final_metric")),
-            )
-        ).alias("w"),
-        F.avg("final_metric").alias("avg"),
-        F.count("*").alias("num_trials"),
-        F.sum(F.when(F.col("early_stop"), 1).otherwise(0)).cast("bigint").alias("early_stopped"),
+    sign = "-1.0D" if direction == "min" else "1.0D"
+    agg = finalized_df.selectExpr(
+        "max(CASE WHEN final_metric IS NOT NULL THEN named_struct("
+        f"'m', final_metric * {sign}, 'ns', -seq, 'trial_id', trial_id, 'final_metric', final_metric) END) AS b",
+        "min(CASE WHEN final_metric IS NOT NULL THEN named_struct("
+        f"'m', final_metric * {sign}, 'seq', seq, 'trial_id', trial_id, 'final_metric', final_metric) END) AS w",
+        "avg(final_metric) AS avg",
+        "count(*) AS num_trials",
+        "CAST(sum(CASE WHEN early_stop THEN 1 ELSE 0 END) AS BIGINT) AS early_stopped",
     ).collect()[0]
     if agg.num_trials == 0 or agg.b is None:
         return {"num_trials": int(agg.num_trials or 0), "early_stopped": int(agg.early_stopped or 0)}

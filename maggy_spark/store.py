@@ -12,19 +12,28 @@ Append-only parquet with one file per wave: cheap atomic appends, no
 compaction needed at experiment scale (thousands of trials, not
 billions of rows). Appends are written by the driver with pyarrow —
 the rows are already in its memory, so no Spark job is needed to put
-them on disk — and read back with Spark. The metric stream reuses the
-same expressions as operators/earlystop.py.
+them on disk — and read back with Spark.
+
+Each kernel is one SQL statement over the scanned tables: a
+DataFrame Column tree costs a py4j round trip per node (hundreds per
+read), a SQL string is parsed in the JVM in one call. A table that
+fits one of Spark's own file splits (files x openCostInBytes + bytes
+<= maxPartitionBytes, both read from the session) is scanned as one
+partition: the kernel then needs no exchange, and adaptive execution
+runs it as one job instead of a shuffle-map job plus a result job.
+A larger table keeps its parallel scan and its plan.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import uuid
+from typing import Callable
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from maggy_spark.trial import Trial
@@ -69,20 +78,32 @@ def _data_files(path: str) -> list[str]:
     return [os.path.join(path, n) for n in sorted(os.listdir(path)) if not n.startswith((".", "_"))]
 
 
-def _write_parquet(table: pa.Table, path: str) -> None:
-    """Add `table` to the directory as one new file. It is written
-    under a hidden name and published with os.replace, so a concurrent
-    Spark reader sees the whole file or none of it."""
-    os.makedirs(path, exist_ok=True)
-    name = f"part-{uuid.uuid4().hex}.parquet"
-    tmp = os.path.join(path, "." + name)
+def publish(path: str, write: Callable[[str], object]) -> None:
+    """Create the file `path` by calling `write` on a hidden name next
+    to it, then os.replace: a concurrent reader (Spark skips names
+    starting with '.') sees the whole file or none of it."""
+    folder, name = os.path.split(path)
+    tmp = os.path.join(folder, f".{name}.{uuid.uuid4().hex}")
     try:
-        pq.write_table(table, tmp)
-        os.replace(tmp, os.path.join(path, name))
+        write(tmp)
+        os.replace(tmp, path)
     except BaseException:
         if os.path.exists(tmp):
             os.remove(tmp)
         raise
+
+
+def _write_parquet(table: pa.Table, path: str) -> None:
+    """Add `table` to the directory as one new file."""
+    os.makedirs(path, exist_ok=True)
+    publish(os.path.join(path, f"part-{uuid.uuid4().hex}.parquet"), lambda tmp: pq.write_table(table, tmp))
+
+
+def _conf_bytes(value: str) -> int:
+    """A Spark byte-size conf value ("134217728b", "128m", "4MB") in
+    bytes; units are binary, as in Spark's JavaUtils.byteStringAsBytes."""
+    num, unit = re.fullmatch(r"\s*(\d+)\s*([a-z]*)\s*", value.lower()).groups()
+    return int(num) * 1024 ** "bkmgtp".index(unit[:1] or "b")
 
 
 class ExperimentStore:
@@ -155,6 +176,16 @@ class ExperimentStore:
     def metrics(self) -> DataFrame:
         return self.spark.read.schema(METRICS_SCHEMA).parquet(self._metrics_path)
 
+    def _scan(self, df: DataFrame, path: str) -> tuple[DataFrame, bool]:
+        """`df` as one partition when the whole table fits one of
+        Spark's file splits (module note); True when it was made so."""
+        files = _data_files(path)
+        conf = self.spark.conf
+        size = len(files) * _conf_bytes(conf.get("spark.sql.files.openCostInBytes"))
+        size += sum(os.path.getsize(f) for f in files)
+        one = size <= _conf_bytes(conf.get("spark.sql.files.maxPartitionBytes"))
+        return (df.coalesce(1) if one else df), one
+
     # -- kernel queries over the live store ----------------------------
 
     def result_summary(self) -> dict:
@@ -162,24 +193,22 @@ class ExperimentStore:
         path uses (single source in experiment.summarize_finalized)."""
         from maggy_spark.experiment import summarize_finalized
 
-        t = self.trials().where(F.col("status") == "FINALIZED")
-        return summarize_finalized(t, self.direction)
+        t, _ = self._scan(self.trials(), self._trials_path)
+        return summarize_finalized(t.where("status = 'FINALIZED'"), self.direction)
 
     def budget_stats(self) -> DataFrame:
         """A4 per-budget ybest/yworst/ymean over the live store —
         direction-aware: ybest is the BEST metric for this
         experiment's direction (the reference equates ybest with min
         only after sign-normalizing max-direction metrics)."""
-        t = self.trials().where(
-            (F.col("status") == "FINALIZED") & F.col("final_metric").isNotNull()
-        )
-        best = F.max("final_metric") if self.direction == "max" else F.min("final_metric")
-        worst = F.min("final_metric") if self.direction == "max" else F.max("final_metric")
-        return t.groupBy("budget").agg(
-            best.alias("ybest"),
-            worst.alias("yworst"),
-            F.avg("final_metric").alias("ymean"),
-            F.count("*").alias("n_trials"),
+        best, worst = ("max", "min") if self.direction == "max" else ("min", "max")
+        t, _ = self._scan(self.trials(), self._trials_path)
+        return self.spark.sql(
+            f"""SELECT budget, {best}(final_metric) AS ybest, {worst}(final_metric) AS yworst,
+                   avg(final_metric) AS ymean, count(*) AS n_trials
+            FROM {{t}} WHERE status = 'FINALIZED' AND final_metric IS NOT NULL
+            GROUP BY budget""",
+            t=t,
         )
 
     def promotable(self, eta: int = 2) -> DataFrame:
@@ -188,28 +217,34 @@ class ExperimentStore:
         Metric-less finalized trials are excluded up front: under
         direction='min' a null would sort FIRST (asc is nulls-first)
         and a broken trial would win the rung."""
-        from pyspark.sql.window import Window
-
-        t = self.trials().where(
-            (F.col("status") == "FINALIZED") & F.col("final_metric").isNotNull()
+        order = "DESC" if self.direction == "max" else "ASC"
+        t, _ = self._scan(self.trials(), self._trials_path)
+        return self.spark.sql(
+            f"""SELECT rung, trial_id, final_metric, rank FROM (
+                SELECT budget AS rung, trial_id, final_metric,
+                    row_number() OVER (PARTITION BY budget ORDER BY final_metric {order}, seq) AS rank,
+                    count(*) OVER (PARTITION BY budget) AS n
+                FROM {{t}} WHERE status = 'FINALIZED' AND final_metric IS NOT NULL)
+            WHERE rank <= floor(n / :eta)""",
+            args={"eta": eta},
+            t=t,
         )
-        order = F.col("final_metric").desc() if self.direction == "max" else F.col("final_metric").asc()
-        w = Window.partitionBy("budget").orderBy(order, F.col("seq"))
-        ranked = t.select(
-            F.col("budget").alias("rung"), "trial_id", "final_metric",
-            F.row_number().over(w).alias("rank"),
-            F.count("*").over(Window.partitionBy("budget")).alias("n"),
-        )
-        return ranked.where(F.col("rank") <= F.floor(F.col("n") / eta)).drop("n")
 
     def median_bar(self, step_limit: int = 3) -> float | None:
-        """A8: the early-stop bar from the live metric stream."""
-        fin = self.trials().where(F.col("status") == "FINALIZED").select("trial_id")
-        pavg = (
-            self.metrics().where(F.col("step") <= step_limit)
-            .join(fin, "trial_id")
-            .groupBy("trial_id")
-            .agg(F.avg("value").alias("pavg"))
-        )
-        row = pavg.agg(F.percentile("pavg", F.lit(0.5)).alias("bar")).collect()[0]
+        """A8: the early-stop bar from the live metric stream. When
+        both tables are one partition a sort-merge join needs no
+        exchange, where a broadcast join would cost its own job."""
+        t, t_one = self._scan(self.trials(), self._trials_path)
+        m, m_one = self._scan(self.metrics(), self._metrics_path)
+        hint = "/*+ MERGE(f) */" if t_one and m_one else ""
+        row = self.spark.sql(
+            f"""SELECT percentile(pavg, 0.5D) AS bar FROM (
+                SELECT {hint} trial_id, avg(value) AS pavg
+                FROM {{m}} JOIN (SELECT trial_id FROM {{t}} WHERE status = 'FINALIZED') f USING (trial_id)
+                WHERE step <= :step_limit
+                GROUP BY trial_id)""",
+            args={"step_limit": step_limit},
+            t=t,
+            m=m,
+        ).collect()[0]
         return None if row.bar is None else float(row.bar)

@@ -396,3 +396,37 @@ def test_trial_tasks_flush_acks_on_one_reused_worker(tmp_path):
         finally:
             spark.stop()
     """, timeout=300, prelude=ACK_PRELUDE)
+
+
+@needs_patch
+def test_first_trial_stamps_its_workers_archives(tmp_path):
+    """`run_one` runs the stamping sweep in a worker's first trial, so
+    the sweep before its second trial re-reads no archive. The trial
+    itself sweeps once more and counts the reads."""
+    _run(tmp_path, """
+        from pyspark.sql import SparkSession
+        from maggy_spark.executor import run_trial_wave
+
+        spark = (SparkSession.builder.master("local[1]")
+                 .config("spark.ui.enabled", "false").getOrCreate())
+        try:
+            def train(x):
+                import importlib, zipimport
+                read = zipimport._read_directory
+                seen = []
+                zipimport._read_directory = lambda archive: seen.append(archive) or read(archive)
+                try:
+                    importlib.invalidate_caches()
+                finally:
+                    zipimport._read_directory = read
+                zips = [f for f in sys.path_importer_cache.values() if isinstance(f, zipimport.zipimporter)]
+                print(len(seen), len(zips))
+                return x
+
+            (row,) = run_trial_wave(spark, [{"trial_id": "t0", "params": {"x": 1.0}}], train)
+            assert row["error"] is None, row
+            n_reads, n_zips = map(int, row["logs"][0].split())
+            assert n_zips > 0 and n_reads == 0, (n_reads, n_zips)
+        finally:
+            spark.stop()
+    """, timeout=300)

@@ -169,3 +169,95 @@ def test_trial_summaries_best_first_respects_direction(spark, tmp_path):
     write_trial_artifacts(trials_to_df(spark, trials, "min"), log_dir, buckets=2)
     summ = read_trial_summaries(spark, log_dir).collect()
     assert [r.final_metric for r in summ] == [1.0, 2.0, 3.0]
+
+
+# -- the driver-side pyarrow artifact writer ---------------------------
+
+
+def _artifact_trials(n, tag=""):
+    from maggy_spark.trial import Trial
+
+    trials = []
+    for i in range(n):
+        t = Trial({"x": i, "tag": tag})
+        t.finalize(float(i))
+        t.info_dict["seq"] = i
+        trials.append(t)
+    return trials
+
+
+def test_bucket_is_sparks_crc32(spark):
+    """zlib.crc32 over UTF-8, the driver-side writer's bucket, is the
+    value Spark's crc32(trial_id) % 64 gives, non-ASCII ids included."""
+    import hashlib
+    import zlib
+
+    from pyspark.sql import functions as F
+
+    ids = [hashlib.md5(str(i).encode()).hexdigest()[:16] for i in range(200)]
+    ids += [f"{p}-{i}" for p in ("é", "naïve", "試行", "проба", "🙂") for i in range(20)]
+    got = {t: zlib.crc32(t.encode("utf-8")) % 64 for t in ids}
+    df = spark.createDataFrame([(t,) for t in ids], "trial_id string")
+    want = dict(df.select("trial_id", (F.crc32("trial_id") % 64).cast("int")).collect())
+    assert got == want
+    assert len(set(got.values())) > 32  # spread over the buckets
+
+
+def test_pyarrow_artifacts_read_back_like_spark_written(spark, tmp_path):
+    """The pyarrow-written relation and one written by Spark's own
+    partitionBy read back alike, with `bucket: int` discovered from the
+    directories whether the schema is passed or inferred."""
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    from maggy_spark.sources.sinks import ARTIFACTS_SCHEMA
+    from maggy_spark.store import TRIALS_ARROW_SCHEMA, trial_rows
+
+    trials = _artifact_trials(40)
+    ours, theirs = str(tmp_path / "ours"), str(tmp_path / "theirs")
+    write_trial_artifacts(pa.Table.from_pylist(trial_rows(trials, "max"), schema=TRIALS_ARROW_SCHEMA), ours)
+    (
+        trials_to_df(spark, trials, "max")
+        .withColumn("bucket", (F.crc32(F.col("trial_id")) % 64).cast("int"))
+        .write.partitionBy("bucket")
+        .parquet(f"{theirs}/trials")
+    )
+    for log_dir in (ours, theirs):
+        assert spark.read.parquet(f"{log_dir}/trials").schema == ARTIFACTS_SCHEMA
+    a, b = read_experiment(spark, ours), read_experiment(spark, theirs)
+    assert a.schema == b.schema == ARTIFACTS_SCHEMA
+    assert sorted(a.collect()) == sorted(b.collect())
+    pairs = sorted((r.trial_id, r.bucket) for r in a.select("trial_id", "bucket").collect())
+    assert len(pairs) == 40 and len({b for _, b in pairs}) > 1
+
+
+def test_artifacts_overwrite_leaves_only_the_second_set(spark, tmp_path):
+    import os
+
+    log_dir = str(tmp_path / "twice")
+    first, second = _artifact_trials(6, "first"), _artifact_trials(3, "second")
+    write_trial_artifacts(trials_to_df(spark, first, "max"), log_dir)
+    write_experiment_result({"num_trials": 6}, log_dir)
+    write_trial_artifacts(trials_to_df(spark, second, "max"), log_dir)
+    write_experiment_result({"num_trials": 3}, log_dir)
+    ids = sorted(r.trial_id for r in read_experiment(spark, log_dir).collect())
+    assert ids == sorted(t.trial_id for t in second)
+    assert sorted(os.listdir(log_dir)) == ["result.json", "trials"]
+    with open(f"{log_dir}/result.json") as f:
+        assert json.load(f) == {"num_trials": 3}
+
+
+def test_read_experiment_runs_no_schema_inference_job(spark, tmp_path):
+    """read_experiment passes the relation's known schema: before an
+    action it runs no Spark job (schema inference ran one per call)."""
+    log_dir = str(tmp_path / "nojob")
+    write_trial_artifacts(trials_to_df(spark, _artifact_trials(4), "max"), log_dir)
+    sc = spark.sparkContext
+    sc.setJobGroup("read-experiment-nojob", "read-experiment-nojob")
+    try:
+        df = read_experiment(spark, log_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("read-experiment-nojob") == []
+    assert df.count() == 4

@@ -257,3 +257,145 @@ def test_written_files_carry_the_arrow_schema(tmp_path):
         assert len(files) == 2, files
         for name in files:
             assert pq.read_schema(tmp_path / "footer" / table / name).equals(schema), (table, name)
+
+
+# -- one SQL job per kernel read ---------------------------------------
+
+
+def _jobs_run(spark, read) -> int:
+    """Spark jobs that `read()` runs, counted under its own job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"store-read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        read()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _kernel_reads(s):
+    return {
+        "result_summary": s.result_summary,
+        "budget_stats": lambda: s.budget_stats().collect(),
+        "promotable": lambda: s.promotable(2).collect(),
+        "median_bar": s.median_bar,
+    }
+
+
+def test_small_store_reads_run_one_job_each(spark, tmp_path):
+    """A store that fits one file split is scanned as one partition, so
+    each kernel needs no exchange and runs as one Spark job (a
+    shuffle-map job plus a result job otherwise; four for the
+    broadcast join in median_bar)."""
+    s = ExperimentStore(spark, str(tmp_path / "onejob"), direction="max")
+    for wave in range(3):
+        trials = [_trial(2 * wave + 1, 10.0 + wave, budget=1 + wave % 2), _trial(2 * wave + 2, 5.0, budget=1)]
+        s.append_trials(trials)
+        s.append_metrics(trials)
+    for name, read in _kernel_reads(s).items():
+        assert _jobs_run(spark, read) == 1, name
+
+
+def _tricky_min_store(spark, path):
+    """direction='min' with a tie, a null-metric FINALIZED row, a NaN
+    metric and an ERROR row, over three appends. Each trial reports
+    steps 0..4 with value base + step, so its mean over steps 0..3 is
+    base + 1.5."""
+    s = ExperimentStore(spark, path, direction="min")
+    waves = [
+        # (name, budget, status, final_metric, early_stop, base)
+        [("A", 1, "FINALIZED", 2.0, False, 0.0), ("B", 1, "FINALIZED", 2.0, False, 1.0),
+         ("C", 1, "FINALIZED", None, False, 2.0)],
+        [("D", 2, "FINALIZED", float("nan"), False, 3.0), ("E", 2, "FINALIZED", 5.0, True, 4.0),
+         ("F", 2, "ERROR", None, False, 100.0)],
+        [("G", 1, "FINALIZED", 3.0, False, 5.0)],
+    ]
+    ids = {}
+    for wave in waves:
+        trials = []
+        for name, budget, status, metric, early_stop, base in wave:
+            t = Trial({"name": name})
+            for step in range(5):
+                t.append_metric(base + step, step)
+            t.finalize(metric)
+            t.status = status
+            t.early_stop = early_stop
+            t.info_dict["budget"] = budget
+            ids[name] = t.trial_id
+            trials.append(t)
+        s.append_trials(trials)
+        s.append_metrics(trials)
+    return s, ids
+
+
+def test_kernel_semantics_on_tricky_min_store(spark, tmp_path):
+    import math
+
+    s, ids = _tricky_min_store(spark, str(tmp_path / "tricky"))
+    name = {v: k for k, v in ids.items()}
+    assert {r.trial_id: r.seq for r in s.trials().collect()} == {ids[n]: i + 1 for i, n in enumerate("ABCDEFG")}
+
+    # A1: NaN orders above every number, and -NaN is NaN, so D wins
+    # best under min; worst is the largest metric, E. C (null) counts
+    # but is not scored; F (ERROR) is not counted.
+    res = s.result_summary()
+    assert (name[res["best_id"]], name[res["worst_id"]]) == ("D", "E")
+    assert math.isnan(res["best_val"]) and res["worst_val"] == 5.0 and math.isnan(res["avg"])
+    assert (res["num_trials"], res["early_stopped"]) == (6, 1)
+
+    # A4 under min: ybest = min, yworst = max; NaN is the max
+    rows = {r.budget: r for r in s.budget_stats().collect()}
+    assert sorted(rows) == [1, 2]
+    assert (rows[1].ybest, rows[1].yworst, rows[1].n_trials) == (2.0, 3.0, 3)
+    assert rows[1].ymean == pytest.approx(7.0 / 3)
+    assert rows[2].ybest == 5.0 and math.isnan(rows[2].yworst) and math.isnan(rows[2].ymean)
+    assert rows[2].n_trials == 2
+
+    # G5 ascending, ties broken by seq (A before B), NaN last
+    def promo(eta):
+        return sorted((r.rung, r.rank, name[r.trial_id]) for r in s.promotable(eta).collect())
+
+    assert promo(1) == [(1, 1, "A"), (1, 2, "B"), (1, 3, "G"), (2, 1, "E"), (2, 2, "D")]
+    assert promo(2) == [(1, 1, "A"), (2, 1, "E")]
+    assert promo(3) == [(1, 1, "A")]
+
+    # A8 over FINALIZED trials only (A B C D E G, not F): the step 0..3
+    # means are 1.5 2.5 3.5 4.5 5.5 6.5, median 4.0; at step 0 the
+    # values are 0 1 2 3 4 5, median 2.5
+    assert s.median_bar() == pytest.approx(4.0)
+    assert s.median_bar(step_limit=0) == pytest.approx(2.5)
+
+
+def test_store_past_one_split_reads_the_same(spark, tmp_path):
+    """A table larger than one file split keeps its parallel scan, and
+    the kernels answer the same as on the one-partition scan."""
+    s, _ids = _tricky_min_store(spark, str(tmp_path / "split"))
+    path = s._trials_path
+
+    def answers():
+        rows = {k: read() for k, read in _kernel_reads(s).items()}
+        return repr({k: sorted(v) if isinstance(v, list) else v for k, v in rows.items()})
+
+    assert s._scan(s.trials(), path)[1]
+    small = answers()
+    # 3 files x the 4 MB default open cost no longer fit one 8 MB split
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "8m")
+    try:
+        assert not s._scan(s.trials(), path)[1]
+        assert answers() == small
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+
+
+@pytest.mark.parametrize(
+    "value, size",
+    [("134217728b", 134217728), ("4194304", 4194304), ("128m", 128 << 20), ("4MB", 4 << 20), (" 1g ", 1 << 30)],
+)
+def test_conf_bytes_parses_spark_byte_strings(value, size):
+    from maggy_spark.store import _conf_bytes
+
+    assert _conf_bytes(value) == size
