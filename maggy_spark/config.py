@@ -47,6 +47,9 @@ class HyperparameterOptConfig(BaseConfig):
     # "hyperband" or a HyperbandPruner instance. The pruner then owns
     # budgets/promotions and OVERRIDES num_trials (reference
     # optimization_driver.py:87-89; pruner/hyperband.py).
+    # optimizer="hyperband" names the same composition, RandomSearch
+    # with this pruner, on the default ladder (1, 9, 3, 2);
+    # get_controller("hyperband", **ladder) builds another ladder.
     pruner: Any = None
     pruner_kwargs: dict | None = None
     seed: int | None = None

@@ -14,6 +14,9 @@ Reference semantics:
 - ASHA: async successive halving — random at rung 0 with
   budget=resource_min; promote the top 1/reduction_factor of a rung
   to budget min*factor^(rung+1) (`optimizer/asha.py:71-169`).
+- Hyperband: a pruner, not a controller (`pruner/hyperband.py`); the
+  name "hyperband" is RandomSearch with `pruner.HyperbandPruner`
+  attached.
 - Dedup guard: a candidate whose params (ex budget) equal a
   finished/running trial's is rejected; random retry <= 3
   (`abstractoptimizer.py:254-295`, `bayes/base.py:288-301`).
@@ -39,8 +42,8 @@ def exact_smax(min_budget: int, max_budget: int, eta: int) -> int:
     integer search. The float form int(floor(log(max/min)/log(eta)))
     silently DROPS the top rung for exact powers — log(1000)/log(10)
     evaluates to 2.9999999999999996 — so every ladder consumer
-    (Hyperband, Asha, g10) derives its geometry from this one
-    function (same fix the pruner applied at pruner.py:71-79)."""
+    (HyperbandPruner, Asha, g10) derives its geometry from this one
+    function."""
     if min_budget <= 0:
         # a non-positive floor makes the search condition always true
         # (0 * anything <= max) — an infinite loop, not a ladder
@@ -56,6 +59,16 @@ def exact_smax(min_budget: int, max_budget: int, eta: int) -> int:
     while min_budget * eta ** (s + 1) <= max_budget:
         s += 1
     return s
+
+
+def min_rank_key(metric) -> tuple:
+    """Sort key for promotion ranking in min-space: ascending, with NaN
+    and None last. Python's sort is not a total order over NaN — one
+    NaN metric scrambles the whole ranking — so every promotion sort
+    (SHIteration.promote, Asha._promotable) ranks by this key; sorted()
+    keeps ties in input order."""
+    missing = metric is None or math.isnan(metric)
+    return (missing, 0.0 if missing else metric)
 
 
 class AbstractOptimizer(ABC):
@@ -132,10 +145,13 @@ class AbstractOptimizer(ABC):
         if isinstance(trial_ids, str):
             trial_ids = [trial_ids]
         wanted = set(trial_ids)
+        # a trial finalized without a metric (EarlyStopException before
+        # any broadcast) is finished all the same: score it +inf, as
+        # the pruner scores ERROR trials, or its rung never settles
         return {
-            t.trial_id: self.metric_for_min(t.final_metric)
+            t.trial_id: math.inf if t.final_metric is None else self.metric_for_min(t.final_metric)
             for t in self.final_store
-            if t.trial_id in wanted and t.final_metric is not None
+            if t.trial_id in wanted
         }
 
     def _initialize(self) -> None:  # hook
@@ -497,7 +513,7 @@ class Asha(AbstractOptimizer):
         k = len(fin) // self.eta - len(self._promoted[rung])
         if k <= 0:
             return []
-        fin.sort(key=lambda t: self.metric_for_min(t.final_metric))
+        fin.sort(key=lambda t: min_rank_key(self.metric_for_min(t.final_metric)))
         top = [t for t in fin if t.trial_id not in self._promoted[rung]][: k]
         return top
 
@@ -851,9 +867,9 @@ def get_controller(spec, **kwargs) -> AbstractOptimizer:
 
         return GP(**kwargs) if name == "gp" else TPE(**kwargs)
     if name == "hyperband":
-        from maggy_spark.hyperband import Hyperband
-
-        return Hyperband(**kwargs)
+        # Hyperband is a pruner (reference pruner/hyperband.py): the
+        # name is RandomSearch with it attached, as config.pruner builds
+        return RandomSearch(pruner="hyperband", pruner_kwargs=kwargs)
     if name not in CONTROLLERS:
         raise ValueError(
             f"unknown optimizer {spec!r}; expected one of "

@@ -27,24 +27,39 @@ min..max; SH iteration i (cycling i mod R) spans s = R-1-(i mod R)
 promotions, seeds n0 = floor(R/(s+1)) * eta^s configs at the ladder's
 (R-1-s)-th budget, and keeps 1/eta per rung.
 
+Rung stepping: each SH iteration is an `SHIteration`
+(`hyperband.py:304-527`), the engine's one successive-halving
+implementation. The optimizer name "hyperband" is RandomSearch with
+this pruner attached (`optimizers.get_controller`).
+
 Divergence from the reference (by design): errored trials are
 reported via `report_error` and treated as finished-with-worst-metric
 so a rung can still promote — the reference's `trial_metric_getter`
 never learns about failures and its iteration would stall forever.
+A finalized trial without a metric scores +inf the same way, and a
+NaN metric ranks last (`optimizers.min_rank_key`).
 """
 
 from __future__ import annotations
 
 import math
 
+from maggy_spark.optimizers import exact_smax, min_rank_key
+
 
 class HyperbandPruner:
-    """Successive-halving rung ledger with the reference's geometry.
+    """Hyperband over the reference's ladder geometry: one
+    `SHIteration` per successive-halving iteration, started in order.
+
+    The pruner owns the geometry (`n_budgets`, `budgets`, each
+    iteration's `ns` and base rung), the order iterations start in with
+    the IDLE/None answers of `pruning_routine`, and the +inf score of
+    ERROR trials; the iterations do the rung stepping.
 
     `trial_metric_getter(ids)` must return `{trial_id: metric}` for the
     FINISHED trials among `ids` (metrics already normalized so lower is
     better); unfinished ids are simply absent from the dict. The
-    attached optimizer provides it (optimizers.py attach_pruner).
+    attached optimizer provides it (`AbstractOptimizer._pruner_metrics`).
     """
 
     IDLE = "IDLE"
@@ -72,75 +87,50 @@ class HyperbandPruner:
         # R = largest k with min*eta^k <= max, plus 1 — via the shared
         # exact-integer search (float-log dropped rungs for exact
         # powers; see optimizers.exact_smax)
-        from maggy_spark.optimizers import exact_smax
-
         self.n_budgets = exact_smax(min_budget, max_budget, eta) + 1
         self.budgets = [max_budget // eta ** (self.n_budgets - 1 - j) for j in range(self.n_budgets)]
         self._iters = [self._plan_iteration(i) for i in range(n_iterations)]
-        self._started = 0  # iterations set live so far
-        self._activate_next()
         self._updating: int | None = None  # iteration awaiting report_trial
         self._errored: set[str] = set()
 
     # -- geometry ------------------------------------------------------
 
-    def _plan_iteration(self, i: int) -> dict:
+    def _plan_iteration(self, i: int) -> SHIteration:
         R = self.n_budgets
         s = R - 1 - (i % R)  # promotions in this iteration
         n0 = int(math.floor(R / (s + 1))) * self.eta**s
         ns = [max(int(n0 * self.eta ** (-j)), 1) for j in range(s + 1)]
-        return {
-            "live": False,
-            "done": False,
-            "ns": ns,                              # configs per rung
-            "budgets": self.budgets[R - 1 - s:],   # ladder tail
-            "base_rung": R - 1 - s,                # ladder index of rung 0
-            "rung": 0,                             # cursor within the iteration
-            "started": [0] * (s + 1),              # slots handed to the optimizer
-            "slots": [[] for _ in range(s + 1)],   # [{orig, actual}] per rung
-        }
+        # the iteration runs the ladder's tail: its rung 0 is ladder
+        # rung R-1-s
+        return SHIteration(ns, self.budgets[R - 1 - s:], iteration_id=i, trial_metric_getter=self._metrics)
 
-    def _activate_next(self) -> bool:
-        for it in self._iters:
-            if not it["live"] and not it["done"]:
-                it["live"] = True
-                self._started += 1
-                return True
-        return False
+    def _base_rung(self, it: SHIteration) -> int:
+        return self.n_budgets - it.n_rungs
 
     # -- optimizer interface -------------------------------------------
 
     def num_trials(self) -> int:
         """Total trials across every SH iteration — overrides the
         experiment's num_trials (optimization_driver.py:87-89)."""
-        return sum(sum(it["ns"]) for it in self._iters)
+        return sum(sum(it.n_configs) for it in self._iters)
 
     def pruning_routine(self):
+        # iterations start in order: a later one is asked for a slot
+        # (its first ask starts it) only while every earlier one is
+        # finished or waiting on running trials
         for idx, it in enumerate(self._iters):
-            if not it["live"] or it["done"]:
+            if it.state == SHIteration.FINISHED:
                 continue
-            nxt = self._next_run(it)
+            nxt = it.get_next_run()
             if nxt is not None:
                 self._updating = idx
                 return nxt
-        if self._started < self.n_iterations and self._activate_next():
-            return self.pruning_routine()
-        if self.finished():
-            return None
-        return self.IDLE
+        return None if self.finished() else self.IDLE
 
     def report_trial(self, original_trial_id, new_trial_id) -> None:
         """Record the trial the optimizer actually started for the slot
         most recently handed out (`hyperband.py:266-279,445-476`)."""
-        it = self._iters[self._updating]
-        rung = it["rung"]
-        if original_trial_id is None:
-            it["slots"][rung].append({"orig": new_trial_id, "actual": new_trial_id})
-        else:
-            for slot in it["slots"][rung]:
-                if slot["orig"] == original_trial_id and slot["actual"] is None:
-                    slot["actual"] = new_trial_id
-                    break
+        self._iters[self._updating].report_trial(original_trial_id, new_trial_id)
         self._updating = None
 
     def report_error(self, trial_id: str) -> None:
@@ -149,9 +139,7 @@ class HyperbandPruner:
         self._errored.add(trial_id)
 
     def finished(self) -> bool:
-        return all(it["done"] for it in self._iters) if self._iters else True
-
-    # -- SH iteration stepping -----------------------------------------
+        return all(it.finished() for it in self._iters)
 
     def _metrics(self, ids: list[str]) -> dict[str, float]:
         got = dict(self.trial_metric_getter(ids) or {}) if self.trial_metric_getter else {}
@@ -160,41 +148,6 @@ class HyperbandPruner:
                 got[tid] = math.inf
         return got
 
-    def _next_run(self, it: dict):
-        rung = it["rung"]
-        if it["started"][rung] < it["ns"][rung]:
-            if rung == 0:
-                it["started"][0] += 1
-                return {"trial_id": None, "budget": it["budgets"][0]}
-            for slot in it["slots"][rung]:
-                if slot["actual"] is None:
-                    it["started"][rung] += 1
-                    return {"trial_id": slot["orig"], "budget": it["budgets"][rung]}
-            return None  # promotions not materialized yet (awaiting report_trial)
-        # rung fully handed out: finished trials decide what happens next
-        actual = [s["actual"] for s in it["slots"][rung]]
-        if len(actual) < it["ns"][rung] or any(a is None for a in actual):
-            return None  # optimizer hasn't reported every slot yet
-        metrics = self._metrics(actual)
-        if len(metrics) < len(actual):
-            return None  # trials still running
-        if rung + 1 < len(it["ns"]):
-            self._promote(it, metrics)
-            return self._next_run(it)
-        it["done"] = True
-        return None
-
-    def _promote(self, it: dict, metrics: dict[str, float]) -> None:
-        """Keep the best 1/eta of the finished rung (`hyperband.py:487-527`):
-        ascending metric sort, ties broken by insertion order (python
-        sort is stable, matching the reference's sorted-dict trick)."""
-        rung = it["rung"]
-        keep = it["ns"][rung + 1]
-        ranked = sorted((s["actual"] for s in it["slots"][rung]), key=lambda tid: metrics[tid])
-        it["rung"] = rung + 1
-        for tid in ranked[:keep]:
-            it["slots"][rung + 1].append({"orig": tid, "actual": None})
-
     # -- introspection --------------------------------------------------
 
     def schedule_rows(self) -> list[tuple[int, int, int, int]]:
@@ -202,8 +155,8 @@ class HyperbandPruner:
         plan; relational twin is operator g14_pruner_schedule."""
         out = []
         for i, it in enumerate(self._iters):
-            for j, n in enumerate(it["ns"]):
-                out.append((i, it["base_rung"] + j, it["budgets"][j], n))
+            for j, n in enumerate(it.n_configs):
+                out.append((i, self._base_rung(it) + j, it.budgets[j], n))
         return out
 
     def rungs_df(self, spark):
@@ -211,11 +164,11 @@ class HyperbandPruner:
         rungs relation): one row per slot with promotion lineage."""
         rows = []
         for i, it in enumerate(self._iters):
-            for j, slots in enumerate(it["slots"]):
-                for s in slots:
+            for j in range(it.n_rungs):
+                for cfg in it.configs[j]:
                     rows.append(
-                        (i, it["base_rung"] + j, int(it["budgets"][j]),
-                         s["orig"], s["actual"], j > 0)
+                        (i, self._base_rung(it) + j, int(it.budgets[j]),
+                         cfg["original_trial_id"], cfg["actual_trial_id"], j > 0)
                     )
         return spark.createDataFrame(
             rows,
@@ -230,9 +183,9 @@ class SHIteration:
     `get_next_run` hands out (trial_id, budget) slots, `report_trial`
     binds the optimizer's emitted trial ids, `promotable`/`promote`
     advance the best 1/eta of a settled rung, `finished` closes the
-    iteration. The engine's HyperbandPruner runs the same algorithm on
-    its internal ledger; this class exists for reference user code
-    (custom pruners, tests) that drives iterations directly.
+    iteration. HyperbandPruner steps every one of its iterations with
+    this class; reference user code (custom pruners) can drive it
+    directly too.
 
     `trial_metric_getter(ids) -> {trial_id: metric}` must return
     entries only for FINISHED trials (lower is better)."""
@@ -315,12 +268,13 @@ class SHIteration:
 
     def promote(self):
         """Advance the best 1/eta of the settled rung; returns the
-        promoted trial ids (ascending metric, stable ties)."""
+        promoted trial ids (ascending metric, NaN/None last, stable
+        ties)."""
         rung = self.current_rung
         actual = [c["actual_trial_id"] for c in self.configs[rung]]
         metrics = self._metrics(actual)
         keep = self.n_configs[rung + 1]
-        ranked = sorted(actual, key=lambda tid: metrics[tid])[:keep]
+        ranked = sorted(actual, key=lambda tid: min_rank_key(metrics[tid]))[:keep]
         self.current_rung = rung + 1
         for tid in ranked:
             self.configs[self.current_rung].append(
@@ -330,15 +284,6 @@ class SHIteration:
 
     def finished(self):
         """True once the last rung has fully settled."""
-        last = self.n_rungs - 1
-        if self.current_rung != last:
-            return False
-        if self.actual_n_configs[last] < self.n_configs[last]:
-            return False
-        actual = [c["actual_trial_id"] for c in self.configs[last]]
-        if len(actual) < self.n_configs[last] or any(a is None for a in actual):
-            return False
-        if len(self._metrics(actual)) == len(actual):
+        if self.state != SHIteration.FINISHED and self.current_rung == self.n_rungs - 1 and self.promotable():
             self.state = SHIteration.FINISHED
-            return True
-        return False
+        return self.state == SHIteration.FINISHED

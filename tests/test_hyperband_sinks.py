@@ -1,4 +1,4 @@
-"""Hyperband controller golden scenario, sinks round-trip, callbacks."""
+"""Hyperband golden scenario, sinks round-trip, callbacks."""
 
 import json
 
@@ -8,7 +8,7 @@ from maggy_spark import Searchspace, lagom
 from maggy_spark.callbacks import KerasBatchEnd, KerasEpochEnd
 from maggy_spark.config import HyperparameterOptConfig
 from maggy_spark.experiment import trials_to_df
-from maggy_spark.hyperband import Hyperband
+from maggy_spark.optimizers import get_controller
 from maggy_spark.reporter import Reporter
 from maggy_spark.sources import (
     read_experiment,
@@ -19,9 +19,9 @@ from maggy_spark.sources import (
 
 
 def test_hyperband_golden_schedule():
-    hb = Hyperband(min_budget=1, max_budget=9, eta=3, n_iterations=2)
+    hb = get_controller("hyperband", min_budget=1, max_budget=9, eta=3, n_iterations=2)
     hb.initialize(Searchspace(x=("DOUBLE", [0, 1])), 0, "max", 42)
-    sched = {(s["iteration"], s["rung"]): (s["budget"], s["n_configs"]) for s in hb.schedule()}
+    sched = {(i, r): (b, n) for i, r, b, n in hb.pruner.schedule_rows()}
     # golden from FIXTURES.md F6 (reference hyperband.py:115-124,200-209)
     assert sched == {
         (0, 0): (1, 9), (0, 1): (3, 3), (0, 2): (9, 1),
@@ -34,7 +34,7 @@ def test_hyperband_e2e_promotes_best(spark):
     def fn(x, budget=1):
         return x * budget  # richer budget + better x wins
 
-    hb = Hyperband(min_budget=1, max_budget=9, eta=3, n_iterations=2)
+    hb = get_controller("hyperband", min_budget=1, max_budget=9, eta=3, n_iterations=2)
     config = HyperparameterOptConfig(
         optimizer=hb, searchspace=Searchspace(x=("DOUBLE", [0.0, 1.0])),
         direction="max", es_policy="none", seed=17, parallelism=16, num_trials=0,
@@ -45,7 +45,7 @@ def test_hyperband_e2e_promotes_best(spark):
     best = next(t for t in hb.final_store if t.trial_id == res["best_id"])
     assert best.info_dict["budget"] == 9
     # rung ledger: iteration 0 rung 1 holds exactly 3 trials, all promoted
-    rungs = hb.rungs_df(spark)
+    rungs = hb.pruner.rungs_df(spark)
     r01 = rungs.where("iteration = 0 AND rung = 1").collect()
     assert len(r01) == 3 and all(r.promoted for r in r01)
     # promoted trials carry their source id
@@ -58,14 +58,14 @@ def test_hyperband_promotes_in_metric_order(spark):
     def fn(x, budget=1):
         return x
 
-    hb = Hyperband(min_budget=1, max_budget=4, eta=2, n_iterations=1)
+    hb = get_controller("hyperband", min_budget=1, max_budget=4, eta=2, n_iterations=1)
     config = HyperparameterOptConfig(
         optimizer=hb, searchspace=Searchspace(x=("DOUBLE", [0.0, 1.0])),
         direction="max", es_policy="none", seed=3, parallelism=8, num_trials=0,
     )
     lagom(fn, config, spark)
-    rung0 = [t for t in hb.final_store if t.info_dict["rung"] == 0]
-    rung1 = [t for t in hb.final_store if t.info_dict["rung"] == 1]
+    rung0 = [t for t in hb.final_store if t.info_dict["budget"] == 1]
+    rung1 = [t for t in hb.final_store if t.info_dict["budget"] == 2]
     top_x = sorted((t.params["x"] for t in rung0), reverse=True)[: len(rung1)]
     assert sorted(t.params["x"] for t in rung1) == sorted(top_x)
 

@@ -6,6 +6,8 @@ overrides num_trials), `maggy/optimizer/bayes/base.py:186-211`
 (pruning_routine consulted before every suggestion).
 """
 
+import math
+
 import pytest
 
 from maggy_spark import Searchspace, lagom
@@ -177,34 +179,61 @@ def test_exact_smax_keeps_top_rung_for_exact_powers():
     """Float-log ladder math drops the max-budget rung for exact
     powers (log(1000)/log(10) = 2.999...); every consumer shares the
     exact integer search."""
-    from maggy_spark.hyperband import Hyperband
     from maggy_spark.optimizers import Asha, exact_smax
 
     assert exact_smax(1, 1000, 10) == 3
     assert exact_smax(1, 243, 3) == 5
     assert exact_smax(1, 9, 3) == 2
-    hb = Hyperband(min_budget=1, max_budget=1000, eta=10, n_iterations=1)
+    hb = HyperbandPruner(min_budget=1, max_budget=1000, eta=10, n_iterations=1)
     assert hb.budgets == [1, 10, 100, 1000]
     asha = Asha(resource_min=1, resource_max=243, reduction_factor=3)
     assert asha.max_rung == 5
 
 
+def _rung0_settled(metrics, direction="max"):
+    """A one-iteration (1,9,3) hyperband controller whose 9 rung-0
+    trials are finalized with `metrics`; returns (rung-0 wave, the
+    next batch)."""
+    ctrl = RandomSearch(
+        pruner="hyperband",
+        pruner_kwargs={"min_budget": 1, "max_budget": 9, "eta": 3, "n_iterations": 1},
+    )
+    ctrl.initialize(Searchspace(x=("DOUBLE", [0, 1])), num_trials=100, direction=direction, seed=7)
+    wave = ctrl.next_batch(16)
+    assert len(wave) == 9
+    for t, m in zip(wave, metrics):
+        t.finalize(m)
+        ctrl.finalize_trial(t)
+    return wave, ctrl.next_batch(16)
+
+
 def test_hyperband_promotion_skips_metricless_trials():
     """A trial finalized with final_metric=None (train_fn raised
-    EarlyStopException without reporting) must not crash or win a
-    promotion sort."""
-    from maggy_spark.hyperband import Hyperband
-    from maggy_spark.searchspace import Searchspace
-
-    hb = Hyperband(min_budget=1, max_budget=9, eta=3, n_iterations=1)
-    hb.initialize(
-        searchspace=Searchspace(x=("DOUBLE", [0, 1])), num_trials=100, direction="max", seed=7
-    )
-    wave = hb.next_batch(16)
-    assert wave
-    for i, t in enumerate(wave):
-        t.finalize(None if i == 0 else float(i))
-        hb.finalize_trial(t)
-    nxt = hb.next_batch(16)  # promotion sort must not TypeError
+    EarlyStopException without reporting) must not crash, stall the
+    rung or win a promotion sort."""
+    wave, nxt = _rung0_settled([None] + [float(i) for i in range(1, 9)])
+    assert len(nxt) == 3  # the rung settled and promoted
     promoted_src = {t.info_dict.get("original_trial_id") for t in nxt}
     assert wave[0].trial_id not in promoted_src
+
+
+def test_hyperband_promotion_ranks_nan_last():
+    """One NaN metric must not scramble the promotion order: the best
+    three (min) are promoted, best first."""
+    metrics = [5.0, math.nan, 1.0, 4.0, 3.0, 2.0, 6.0, 7.0, 8.0]
+    wave, nxt = _rung0_settled(metrics, direction="min")
+    by_id = {t.trial_id: t.final_metric for t in wave}
+    assert [by_id[t.info_dict["original_trial_id"]] for t in nxt] == [1.0, 2.0, 3.0]
+
+
+def test_asha_promotion_ranks_nan_last():
+    from maggy_spark.optimizers import Asha
+
+    asha = Asha(reduction_factor=3, resource_min=1, resource_max=9)
+    asha.initialize(Searchspace(x=("DOUBLE", [0, 1])), num_trials=9, direction="min", seed=7)
+    wave = asha.next_batch(9)
+    assert len(wave) == 9
+    for t, m in zip(wave, [5.0, math.nan, 1.0, 4.0, 3.0, 2.0, 6.0, 7.0, 8.0]):
+        t.finalize(m)
+        asha.finalize_trial(t)
+    assert [t.final_metric for t in asha._promotable(0)] == [1.0, 2.0, 3.0]

@@ -5,8 +5,7 @@ import pytest
 from maggy_spark import Searchspace, lagom
 from maggy_spark.bayes import GP, TPE
 from maggy_spark.config import HyperparameterOptConfig, TorchDistributedConfig
-from maggy_spark.hyperband import Hyperband
-from maggy_spark.optimizers import Asha
+from maggy_spark.optimizers import Asha, get_controller
 
 
 def test_hyperband_small_parallelism_runs_all_trials(spark):
@@ -14,7 +13,7 @@ def test_hyperband_small_parallelism_runs_all_trials(spark):
     def fn(x, budget=1):
         return x * budget
 
-    hb = Hyperband(min_budget=1, max_budget=9, eta=3, n_iterations=2)
+    hb = get_controller("hyperband", min_budget=1, max_budget=9, eta=3, n_iterations=2)
     config = HyperparameterOptConfig(
         optimizer=hb, searchspace=Searchspace(x=("DOUBLE", [0.0, 1.0])),
         direction="max", es_policy="none", seed=17, parallelism=4, num_trials=0,
@@ -30,7 +29,7 @@ def test_hyperband_async_small_parallelism(spark):
     def fn(x, budget=1):
         return x * budget
 
-    hb = Hyperband(min_budget=1, max_budget=4, eta=2, n_iterations=1)
+    hb = get_controller("hyperband", min_budget=1, max_budget=4, eta=2, n_iterations=1)
     config = HyperparameterOptConfig(
         optimizer=hb, searchspace=Searchspace(x=("DOUBLE", [0.0, 1.0])),
         direction="max", es_policy="none", seed=3, parallelism=2,
@@ -199,12 +198,12 @@ def test_controller_reuse_across_runs(spark):
 
 
 def test_hyperband_by_name(spark):
-    from maggy_spark.optimizers import get_controller
+    from maggy_spark.optimizers import RandomSearch
+    from maggy_spark.pruner import HyperbandPruner
 
     hb = get_controller("hyperband", min_budget=1, max_budget=4, eta=2, n_iterations=1)
-    from maggy_spark.hyperband import Hyperband
-
-    assert isinstance(hb, Hyperband)
+    hb.initialize(Searchspace(x=("DOUBLE", [0, 1])), 0, "max", 0)
+    assert isinstance(hb, RandomSearch) and isinstance(hb.pruner, HyperbandPruner)
 
 
 def test_hyperband_survives_errored_trial(spark):
@@ -214,9 +213,7 @@ def test_hyperband_survives_errored_trial(spark):
             raise RuntimeError("flaky trial")
         return x * budget
 
-    from maggy_spark.hyperband import Hyperband
-
-    hb = Hyperband(min_budget=1, max_budget=4, eta=2, n_iterations=1)
+    hb = get_controller("hyperband", min_budget=1, max_budget=4, eta=2, n_iterations=1)
     cfg = HyperparameterOptConfig(
         optimizer=hb, searchspace=Searchspace(x=("DOUBLE", [0, 1])),
         direction="max", es_policy="none", seed=8, parallelism=8, num_trials=0,
