@@ -1,20 +1,20 @@
 """Early-stop rule facade (reference `maggy/earlystop/__init__.py`).
 
-The engine's built-in early stopping is policy-by-name ("median" /
-"none", evaluated trial-locally — SURVEY §7.3a); these classes keep
-the reference's import and config shape: passing `MedianStoppingRule`
-(the class or an instance) as `es_policy` selects the median rule.
-
-A CUSTOM rule subclasses AbstractEarlyStop and implements the static
+Every policy is a rule with the reference's static
 ``earlystop_check(to_check, finalized_trials, direction)`` contract
-(reference `abstractearlystop.py:20-40`); the engine cloudpickles the
-check into the trial-local stop source and stops the trial whenever
-it returns non-None.
+(`abstractearlystop.py:20-40`), evaluated trial-locally (SURVEY §7.3a):
+pass the class or an instance as `es_policy`. The built-in checks are
+the engine's own functions, `MedianStoppingRule.earlystop_check` is
+`maggy_spark.executor.median_rule` and `NoStoppingRule`'s is
+`no_stop_rule`, so a subclass that overrides the check runs its
+override. The engine cloudpickles the check into the trial-local stop
+source and stops the trial whenever it returns non-None. `POLICY` names
+each built-in ("median", "none"); the engine does not read it.
 """
 
 from __future__ import annotations
 
-import statistics
+from maggy_spark.executor import median_rule, no_stop_rule
 
 
 class AbstractEarlyStop:
@@ -31,39 +31,18 @@ class AbstractEarlyStop:
 
 class MedianStoppingRule(AbstractEarlyStop):
     """Median rule (reference medianrule.py:24-59): stop a trial whose
-    best metric falls on the wrong side of the median of completed
-    trials' prefix averages at the same step."""
+    best metric falls on the wrong side of the median of finalized
+    trials' prefix averages at the same step (see `median_rule`)."""
 
     POLICY = "median"
-
-    @staticmethod
-    def earlystop_check(to_check, finalized_trials, direction):
-        step = len(to_check.metric_history)
-        if step == 0:
-            return None
-        averages = [
-            sum(t.metric_history[:step]) / float(step)
-            for t in finalized_trials
-            if len(t.metric_history) >= step
-        ]
-        if not averages:
-            return None
-        median = statistics.median(averages)
-        if direction == "max" and max(to_check.metric_history) < median:
-            return to_check.trial_id
-        if direction == "min" and min(to_check.metric_history) > median:
-            return to_check.trial_id
-        return None
+    earlystop_check = staticmethod(median_rule)
 
 
 class NoStoppingRule(AbstractEarlyStop):
     """Never stops (reference nostop.py)."""
 
     POLICY = "none"
-
-    @staticmethod
-    def earlystop_check(to_check, finalized_trials, direction):
-        return None
+    earlystop_check = staticmethod(no_stop_rule)
 
 
 __all__ = ["AbstractEarlyStop", "MedianStoppingRule", "NoStoppingRule"]

@@ -26,8 +26,8 @@ class BaseConfig:
     log_dir: str | None = None
     # with log_dir set, also append trials/metrics to a live
     # ExperimentStore after every wave, so other Spark sessions can
-    # watch the running experiment relationally (costs one small
-    # write job per wave)
+    # watch the running experiment relationally (each append is one
+    # small parquet file written with pyarrow, no Spark job)
     stream_artifacts: bool = False
 
 
@@ -41,7 +41,10 @@ class HyperparameterOptConfig(BaseConfig):
     direction: str = "max"
     es_interval: int = 1    # early-stop check cadence (steps)
     es_min: int = 10        # min finalized trials before checking
-    es_policy: Any = "median"  # "median" | "none" | rule instance
+    # "median", "none", None, or a rule class or instance with
+    # earlystop_check(to_check, finalized_trials, direction), such as
+    # maggy.earlystop's (a subclass's override is what runs)
+    es_policy: Any = "median"
     optimization_key: str = "metric"
     # multi-fidelity: attach a Hyperband pruner to the optimizer —
     # "hyperband" or a HyperbandPruner instance. The pruner then owns

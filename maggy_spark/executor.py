@@ -133,12 +133,12 @@ def run_trial_wave(
     trial_id (str), final_metric (float or None), metric_history
     (list of float), step_history (list of int), early_stop (bool),
     error (str or None), logs (list of str), duration_ms (int).
-    `stop_check_source` is an optional serialized early-stop state
-    (JSON) evaluated trial-locally at each broadcast — cooperative
-    cancellation, SURVEY.md §7.3a. `extras` are keyword values injected
-    by name into every trial of the call (an ablation trial's
-    dataset/model callables and labels); they travel by value, like
-    the train_fn.
+    `stop_check_source` is an optional early-stop state (written by
+    `encode_stop_source`) evaluated trial-locally at each broadcast —
+    cooperative cancellation, SURVEY.md §7.3a. `extras` are keyword
+    values injected by name into every trial of the call (an ablation
+    trial's dataset/model callables and labels); they travel by value,
+    like the train_fn.
 
     Results are the CONTROL PLANE (one row per trial), so the `logs`
     list is capped at MAX_RESULT_LOG_LINES tail lines per trial — a
@@ -471,119 +471,142 @@ def _flush_delayed_ack() -> None:
         pass
 
 
-def _make_stop_check(stop_src: str | None):
-    """Rebuild the early-stop predicate from its serialized state.
+def median_rule(to_check, finalized, direction):
+    """The built-in median rule (reference medianrule.py:27-60; the
+    median stopping rule of Vizier, Golovin et al. 2017), in the
+    `earlystop_check(to_check, finalized_trials, direction)` shape.
 
-    State: {"direction": "max"|"min", "es_interval": int,
-    "prefix_histories": [[v1, v2, ...], ...], "refresh_path": str?} —
-    finished trials' metric histories. At step s the bar is the median
-    of each finished history's mean-of-first-s; stop if the checked
-    trial's best (direction=max: max; min: min) is on the wrong side
-    (reference medianrule.py:27-60).
+    At step s (the checked trial's history length) the bar is the
+    median over finalized trials of each history's mean over its first
+    min(s, len) values; empty histories are skipped. The checked trial
+    stops (its trial_id is returned) when its best value (max for
+    direction "max", min for "min") is on the wrong side of the bar."""
+    history = to_check.metric_history
+    s = len(history)
+    if s == 0:
+        return None
+    means = sorted(sum(h[:s]) / min(s, len(h)) for h in (t.metric_history for t in finalized) if h)
+    if not means:
+        return None
+    n = len(means)
+    median = means[n // 2] if n % 2 == 1 else (means[n // 2 - 1] + means[n // 2]) / 2.0
+    worse = max(history) < median if direction == "max" else min(history) > median
+    return to_check.trial_id if worse else None
+
+
+def no_stop_rule(to_check, finalized, direction):
+    """Never stops (reference nostop.py); the driver ships no stop
+    source for it."""
+    return None
+
+
+def encode_stop_source(
+    rule: bytes, direction: str, es_interval: int, finalized, refresh_path: str | None = None
+) -> str:
+    """Serialize the early-stop state that `_make_stop_check` reads: the
+    pickled rule, the experiment's direction and check cadence, and the
+    finalized trials (objects with trial_id, metric_history and
+    final_metric) the rule compares against."""
+    import base64
+
+    state = {
+        "direction": direction,
+        "es_interval": es_interval,
+        "rule": base64.b64encode(rule).decode("ascii"),
+        "finalized": [
+            {"trial_id": t.trial_id, "metric_history": list(t.metric_history), "final_metric": t.final_metric}
+            for t in finalized
+        ],
+    }
+    if refresh_path is not None:
+        state["refresh_path"] = refresh_path
+    return json.dumps(state)
+
+
+def _make_stop_check(stop_src: str | None):
+    """Rebuild the trial-local early-stop check from the state
+    `encode_stop_source` wrote.
+
+    Every `es_interval` steps (clamped to >= 1) the check calls the rule
+    with Trial-shaped views of the checked trial and of the finalized
+    trials, and stops the trial on any non-None return (the reference
+    driver treats the returned trial_id as the stop set,
+    `optimization_driver.py:456-471`). While nothing is finalized it
+    never stops, and a rule that raises lets the trial continue: the
+    reference logs rule exceptions and keeps running
+    (`optimization_driver.py:466-469`).
 
     With `refresh_path` set (async scheduling), the check re-reads the
     driver-maintained bar file (mtime-gated, so an unchanged bar costs
     one stat per interval) before every evaluation: a long-running
     trial sees the bar TIGHTEN as later trials finish, matching the
-    reference's per-heartbeat re-evaluation
-    (`optimization_driver.py:456-471`) without its socket plane. The
-    file lives under log_dir (shared storage on a real cluster) or the
-    local tmpdir in local mode.
+    reference's per-heartbeat re-evaluation without its socket plane.
+    The finalized views are built once per bar load. The file lives
+    under log_dir (shared storage on a real cluster) or the local
+    tmpdir in local mode.
     """
     if not stop_src:
         return None
     state = json.loads(stop_src)
-    direction = state.get("direction", "max")
-    # clamp to >= 1: a 0 would turn every reporter.broadcast into a
-    # ZeroDivisionError -> ERROR row ("check every step" is 1)
-    es_interval = max(1, int(state.get("es_interval", 1)))
     refresh_path = state.get("refresh_path")
-    holder = {
-        "histories": state.get("prefix_histories", []),
-        "finalized": state.get("finalized", []),
-        "mtime": None,
-    }
-    if not holder["histories"] and not holder["finalized"] and not refresh_path:
+    if not state["finalized"] and not refresh_path:
         return None
+    import base64
+    import types
 
-    def _maybe_refresh() -> None:
-        if not refresh_path:
-            return
+    from pyspark import cloudpickle as _cp
+
+    rule = _cp.loads(base64.b64decode(state["rule"]))
+    direction = state["direction"]
+    # a 0 would turn every reporter.broadcast into a ZeroDivisionError
+    # -> ERROR row ("check every step" is 1)
+    es_interval = max(1, int(state["es_interval"]))
+
+    def views(finalized: list[dict]) -> list:
+        return [
+            types.SimpleNamespace(
+                trial_id=f.get("trial_id"),
+                metric_history=list(f["metric_history"]),
+                final_metric=f.get("final_metric"),
+            )
+            for f in finalized
+        ]
+
+    bar = {"finalized": views(state["finalized"]), "mtime": None}
+
+    def refresh() -> None:
         import os
 
         try:
             mt = os.stat(refresh_path).st_mtime_ns
         except OSError:
             return  # bar not published yet
-        if mt == holder["mtime"]:
+        if mt == bar["mtime"]:
             return
         try:
             with open(refresh_path) as f:
-                fresh = json.load(f)
-            holder["histories"] = fresh.get("prefix_histories", holder["histories"])
-            holder["finalized"] = fresh.get("finalized", holder["finalized"])
-            holder["mtime"] = mt
-        except (OSError, json.JSONDecodeError, ValueError):
+                bar["finalized"] = views(json.load(f)["finalized"])
+            bar["mtime"] = mt
+        except (OSError, ValueError):
             pass  # concurrent replace: keep the previous bar, retry next check
-
-    rule_b64 = state.get("custom_rule")
-    if rule_b64:
-        # custom reference-contract rule (`abstractearlystop.py:20-40`):
-        # rebuild the user's earlystop_check and feed it Trial-shaped
-        # views of the checked trial + finalized snapshots; any
-        # non-None return means stop (the reference driver treats the
-        # returned trial_id as the stop set, optimization_driver.py:456-471)
-        import base64
-        import types
-
-        from pyspark import cloudpickle as _cp
-
-        rule_fn = _cp.loads(base64.b64decode(rule_b64))
-
-        def custom_check(step_history: list[int], metric_history: list[float]) -> bool:
-            s = len(metric_history)
-            if s == 0 or s % es_interval != 0:
-                return False
-            _maybe_refresh()
-            fins = holder.get("finalized") or []
-            if not fins:
-                return False
-            to_check = types.SimpleNamespace(
-                trial_id="__checked__",
-                metric_history=list(metric_history),
-                step_history=list(step_history),
-                metric_dict=dict(zip(step_history, metric_history)),
-            )
-            finalized = [
-                types.SimpleNamespace(
-                    trial_id=f.get("trial_id"),
-                    metric_history=list(f.get("metric_history", [])),
-                    final_metric=f.get("final_metric"),
-                )
-                for f in fins
-            ]
-            try:
-                return rule_fn(to_check, finalized, direction) is not None
-            except Exception:
-                # reference logs rule exceptions and keeps running
-                # (optimization_driver.py:466-469)
-                return False
-
-        return custom_check
 
     def check(step_history: list[int], metric_history: list[float]) -> bool:
         s = len(metric_history)
         if s == 0 or s % es_interval != 0:
             return False
-        _maybe_refresh()
-        means = [sum(h[:s]) / min(s, len(h)) for h in holder["histories"] if h]
-        if not means:
+        if refresh_path:
+            refresh()
+        if not bar["finalized"]:
             return False
-        means.sort()
-        n = len(means)
-        median = means[n // 2] if n % 2 == 1 else (means[n // 2 - 1] + means[n // 2]) / 2.0
-        if direction == "max":
-            return max(metric_history) < median
-        return min(metric_history) > median
+        to_check = types.SimpleNamespace(
+            trial_id="__checked__",
+            metric_history=list(metric_history),
+            step_history=list(step_history),
+            metric_dict=dict(zip(step_history, metric_history)),
+        )
+        try:
+            return rule(to_check, bar["finalized"], direction) is not None
+        except Exception:  # noqa: BLE001 - a failing rule never fails the trial
+            return False
 
     return check

@@ -21,7 +21,6 @@ one seed gives one result.
 
 from __future__ import annotations
 
-import json
 import logging
 import math
 import time
@@ -37,7 +36,7 @@ from maggy_spark.config import (
     TfDistributedConfig,
     TorchDistributedConfig,
 )
-from maggy_spark.executor import run_trial_wave
+from maggy_spark.executor import encode_stop_source, median_rule, no_stop_rule, run_trial_wave
 from maggy_spark.optimizers import get_controller
 from maggy_spark.store import TRIALS_ARROW_SCHEMA, TRIALS_SCHEMA, ExperimentStore, trial_rows
 from maggy_spark.trial import Trial
@@ -104,39 +103,32 @@ def _run_base(train_fn: Callable, config: BaseConfig, spark: SparkSession) -> di
     return {"test result": metric, "logs": reporter.logs}
 
 
-def _es_custom_rule(config):
-    """The user's `earlystop_check` for a custom rule (a class or
-    instance implementing the reference's AbstractEarlyStop contract,
-    `abstractearlystop.py:20-40`), or None for built-in policies."""
+def _es_rule(config) -> Callable | None:
+    """The experiment's early-stop rule: an `earlystop_check(to_check,
+    finalized_trials, direction)` function (reference
+    `abstractearlystop.py:20-40`), or None when nothing stops early.
+
+    es_policy may be "median" (`executor.median_rule`), None or "none",
+    or a rule class or instance with a callable `earlystop_check`,
+    which runs as given; a rule whose check is `executor.no_stop_rule`
+    disables early stopping. Checks compare by function identity, so a
+    MedianStoppingRule or NoStoppingRule subclass that overrides the
+    check runs its override. A config without es_policy (ablation,
+    reference `ablation_driver.py:52`) never stops early. Anything else
+    is rejected rather than silently treated as median."""
     policy = getattr(config, "es_policy", None)
-    if policy is None or isinstance(policy, str):
+    name = policy.lower() if isinstance(policy, str) else None
+    if name == "median":
+        return median_rule
+    if policy is None or name == "none":
         return None
-    if getattr(policy, "POLICY", None) in ("median", "none"):
-        return None  # facade built-ins select by name
-    fn = getattr(policy, "earlystop_check", None)
-    return fn if callable(fn) else None
-
-
-def _es_enabled(config) -> bool:
-    """Early stopping runs for the median policy or a custom
-    reference-contract rule; None or "none" disable it. Anything else
-    is rejected up front rather than being silently treated as
-    median. A config without an es_policy (ablation, reference
-    `ablation_driver.py:52`) never stops early."""
-    if _es_custom_rule(config) is not None:
-        return True
-    policy = getattr(config, "es_policy", None)
-    # facade rule classes/instances (maggy.earlystop) carry a POLICY
-    # string; strings pass through unchanged
-    policy = getattr(policy, "POLICY", policy)
-    if policy is None or (isinstance(policy, str) and policy.lower() == "none"):
-        return False
-    if isinstance(policy, str) and policy.lower() == "median":
-        return True
-    raise ValueError(
-        f"unsupported es_policy {policy!r}: expected 'median', 'none', None, "
-        "or a rule implementing earlystop_check"
-    )
+    rule = getattr(policy, "earlystop_check", None)
+    if not callable(rule):
+        raise ValueError(
+            f"unsupported es_policy {policy!r}: expected 'median', 'none', None, "
+            "or a rule implementing earlystop_check"
+        )
+    return None if rule is no_stop_rule else rule
 
 
 def _log_progress(controller, settled: int) -> None:
@@ -148,77 +140,27 @@ def _log_progress(controller, settled: int) -> None:
     _LOG.info("maggy experiment %s", progress_bar(settled, total))
 
 
-def _bar_payload(controller, config) -> dict:
-    """Current early-stop state: histories appear only once es_min
-    trials have finalized (medianrule.py min-completed gate). For a
-    custom rule, the rule's check function travels cloudpickled (by
-    value — user rules live in un-importable notebook modules) with
-    richer finalized-trial snapshots for its Trial-shaped arguments."""
-    histories = []
-    finalized = []
-    past_gate = len(controller.final_store) >= config.es_min
-    if past_gate:
-        histories = [t.metric_history for t in controller.final_store if t.metric_history]
-    payload = {
-        "direction": config.direction,
-        "es_interval": config.es_interval,
-        "prefix_histories": histories,
-    }
-    rule_fn = _es_custom_rule(config)
-    if rule_fn is not None:
-        import base64
-
-        from maggy_spark.executor import _dumps_by_value
-
-        if past_gate:
-            finalized = [
-                {
-                    "trial_id": t.trial_id,
-                    "metric_history": list(t.metric_history),
-                    "final_metric": t.final_metric,
-                }
-                for t in controller.final_store
-            ]
-        # the rule function is static WITHIN one experiment: pickle it
-        # once per run and memoize on the CONTROLLER (reset at
-        # initialize) — _bar_payload runs per bar refresh and, in the
-        # async path, per trial submission. Memoizing on the function
-        # object itself would live for the whole process: a rule
-        # reused across experiments whose closure state was mutated
-        # between runs would ship the stale first pickle forever.
-        cached = getattr(controller, "_maggy_rule_b64", None)
-        if cached is None:
-            cached = base64.b64encode(_dumps_by_value(rule_fn)).decode("ascii")
-            controller._maggy_rule_b64 = cached
-        payload["custom_rule"] = cached
-        payload["finalized"] = finalized
-    return payload
-
-
-def _stop_source(controller, config, refresh_path: str | None = None) -> str | None:
-    if not _es_enabled(config):
+def _stop_source(controller, config, rule: bytes, refresh_path: str | None = None) -> str | None:
+    """The early-stop state trial tasks check against. Finalized trials
+    appear only once es_min have finalized (medianrule.py
+    min-completed gate). Under async scheduling (`refresh_path`) even a
+    trial submitted before the gate gets a source: its check re-reads
+    the bar file as the bar tightens."""
+    finalized = controller.final_store if len(controller.final_store) >= config.es_min else []
+    if not finalized and refresh_path is None:
         return None
-    payload = _bar_payload(controller, config)
-    if refresh_path is not None:
-        # async scheduling: the trial-local check re-reads the bar file
-        # as it tightens, so even a trial submitted BEFORE es_min
-        # finishers gets a stop source (empty bar now, live bar later)
-        payload["refresh_path"] = refresh_path
-    elif not payload["prefix_histories"] and not payload.get("finalized"):
-        return None
-    return json.dumps(payload)
+    return encode_stop_source(rule, config.direction, config.es_interval, finalized, refresh_path)
 
 
-def _publish_bar(controller, config, refresh_path: str) -> None:
+def _publish_bar(controller, config, rule: bytes, refresh_path: str) -> None:
     """Atomically publish the tightened bar for in-flight trials
     (write + os.replace: readers see the old or the new file, never a
     torn one)."""
     import os
 
-    payload = _bar_payload(controller, config)
     tmp = f"{refresh_path}.tmp.{os.getpid()}"
     with open(tmp, "w") as f:
-        json.dump(payload, f)
+        f.write(_stop_source(controller, config, rule, refresh_path))
     os.replace(tmp, refresh_path)
 
 
@@ -242,17 +184,24 @@ def _apply_result(controller, trial: Trial, r: dict, seq: int) -> None:
 
 def _run_hpo(train_fn: Callable, config: HyperparameterOptConfig, spark: SparkSession) -> dict:
     controller = get_controller(config.optimizer)
-    if getattr(config, "pruner", None) is not None and controller._pruner_spec is None:
+    if config.pruner is not None:
         # config-level pruner attaches to whatever optimizer was chosen
         # (reference passes pruner via the optimizer constructor;
-        # config-level is the ergonomic equivalent)
-        controller._pruner_spec = config.pruner
-        controller._pruner_kwargs = dict(config.pruner_kwargs or {})
+        # config-level is the ergonomic equivalent). An optimizer that
+        # already carries another pruner ("hyperband", GP(pruner=...))
+        # would silently drop this one.
+        spec = (config.pruner, dict(config.pruner_kwargs or {}))
+        if controller._pruner_spec is not None and (controller._pruner_spec, controller._pruner_kwargs) != spec:
+            raise ValueError(
+                f"optimizer {config.optimizer!r} already carries pruner {controller._pruner_spec!r} "
+                f"with {controller._pruner_kwargs}; config.pruner={config.pruner!r} with "
+                f"pruner_kwargs={spec[1]} would be ignored: set the pruner in one place"
+            )
+        controller._pruner_spec, controller._pruner_kwargs = spec
     if config.searchspace is None:
         raise ValueError("HyperparameterOptConfig.searchspace is required")
     if config.direction not in ("min", "max"):
         raise ValueError(f"direction must be 'min' or 'max', got {config.direction!r}")
-    _es_enabled(config)  # reject unsupported policies before any work
     controller.initialize(
         searchspace=config.searchspace,
         num_trials=config.num_trials,
@@ -260,7 +209,6 @@ def _run_hpo(train_fn: Callable, config: HyperparameterOptConfig, spark: SparkSe
         seed=config.seed,
     )
     controller.spark = spark  # controllers may fan work out (e.g. GP distributed scoring)
-    controller._maggy_rule_b64 = None  # per-run custom-rule pickle memo (_bar_payload)
     parallelism = config.parallelism or spark.sparkContext.defaultParallelism
     return _run_trials(train_fn, config, spark, controller, parallelism, config.scheduling)
 
@@ -273,6 +221,7 @@ def _run_trials(
     the A1 summary with best/worst config, then `finish(result)` (the
     caller's own result keys) and the S5/S6 persist under log_dir.
     `payload` is passed on to `_drive`."""
+    rule = _es_rule(config)  # reject an unsupported policy before any work
     store = None
     exp_dir = None
     if config.log_dir:
@@ -287,7 +236,9 @@ def _run_trials(
             store = ExperimentStore(spark, exp_dir + "/live", direction=config.direction)
 
     t_start = time.time()
-    all_trials, waves = _drive(train_fn, config, spark, controller, parallelism, scheduling, store, exp_dir, payload)
+    all_trials, waves = _drive(
+        train_fn, config, spark, controller, parallelism, scheduling, store, exp_dir, payload, rule
+    )
 
     result = _aggregate_result(all_trials, config.direction)
     result["duration_sec"] = round(time.time() - t_start, 3)
@@ -332,7 +283,7 @@ def _tb_base(config) -> str:
 
 
 def _drive(
-    train_fn, config, spark, controller, parallelism, scheduling, store=None, exp_dir=None, payload=None
+    train_fn, config, spark, controller, parallelism, scheduling, store=None, exp_dir=None, payload=None, rule=None
 ) -> tuple[list[Trial], int]:
     """The dispatch loop: a driver thread pool keeps up to `parallelism`
     trials in flight, each as its own single-task Spark job in the
@@ -352,7 +303,8 @@ def _drive(
       456-471`).
 
     `payload(trial)` gives the (hparams, extras) a trial's task
-    receives; by default (trial.params, None).
+    receives; by default (trial.params, None). `rule` is the early-stop
+    rule (`_es_rule`), or None.
 
     Returns (trials in `seq` order, waves run in wave mode or jobs run
     in async mode)."""
@@ -366,11 +318,14 @@ def _drive(
     # the closure walk + cloudpickle registry dance (under a global
     # lock) for every trial
     fn_bytes = _dumps_by_value(train_fn)
+    # the rule travels the same way, pickled once per run: a rule reused
+    # across experiments ships whatever state it holds at this run
+    rule_bytes = None if rule is None else _dumps_by_value(rule)
     tb_base = _tb_base(config)
     # Under log_dir the bar file is on the experiment's (shared)
     # storage; tmpdir in local mode.
     bar_path = None
-    if not wave_mode and _es_enabled(config):
+    if not wave_mode and rule_bytes is not None:
         import tempfile
 
         base = config.log_dir or tempfile.gettempdir()
@@ -407,7 +362,7 @@ def _drive(
                     batch = controller.next_batch(parallelism if wave_mode else 1)
                     if not batch:
                         break
-                    stop_src = _stop_source(controller, config, bar_path)
+                    stop_src = None if rule_bytes is None else _stop_source(controller, config, rule_bytes, bar_path)
                     for t in batch:
                         in_flight[pool.submit(run_one, t, stop_src)] = t
                     rounds += 1
@@ -417,7 +372,13 @@ def _drive(
                     # ask done() one last time — it is the hook that
                     # fires a reference optimizer's finalize_experiment,
                     # which must run on EVERY exit path
-                    controller.done()
+                    if not controller.done():
+                        # legitimate for a searchspace smaller than
+                        # num_trials, but never silent
+                        _LOG.warning(
+                            "%s stopped suggesting trials with %d of %d settled; the experiment ends early",
+                            type(controller).__name__, len(all_trials), controller.num_trials,
+                        )
                     break
                 finished, _ = wait(in_flight, return_when=ALL_COMPLETED if wave_mode else FIRST_COMPLETED)
                 settled = []
@@ -427,7 +388,7 @@ def _drive(
                     all_trials.append(trial)
                     settled.append(trial)
                 if bar_path is not None:
-                    _publish_bar(controller, config, bar_path)
+                    _publish_bar(controller, config, rule_bytes, bar_path)
                 if store is not None:
                     store.append_trials(settled)
                     store.append_metrics(settled)

@@ -84,7 +84,7 @@ def c3_median_rule(spark: SparkSession, sf_dir: str, step_limit: int = 3) -> Dat
         # "first s" is POSITIONAL (the first s observations of the
         # history, row_number over step order), matching the reference,
         # which indexes interim-metric ARRAYS (medianrule.py:44-51),
-        # and the trial-local predicate (executor._make_stop_check) —
+        # and the trial-local rule (executor.median_rule) —
         # fixture histories have step-label gaps, so filtering on the
         # label would silently diverge (pinned by
         # tests/test_earlystop_parity.py). The window's trial_id

@@ -85,7 +85,7 @@ def early_stop_decisions_stream(
     deduped = dedup_metric_stream(metrics_stream, watermark)
     # "best so far" is direction-dependent: max of the stream when
     # maximizing, min when minimizing (matches the batch twin in
-    # executor._make_stop_check)
+    # executor.median_rule)
     best_agg = F.max("value") if direction == "max" else F.min("value")
     best = deduped.groupBy("trial_id").agg(best_agg.alias("best_metric"))
     cmp = (F.col("best_metric") < F.col("median_bar")) if direction == "max" else (

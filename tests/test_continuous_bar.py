@@ -4,37 +4,42 @@ re-read it (reference re-evaluates per heartbeat,
 optimization_driver.py:456-471).
 """
 
+import base64
 import json
 import os
 import time
 
 from maggy_spark import Searchspace, lagom
 from maggy_spark.config import HyperparameterOptConfig
-from maggy_spark.executor import _make_stop_check
+from maggy_spark.executor import _dumps_by_value, _make_stop_check, median_rule
+
+_MEDIAN = base64.b64encode(_dumps_by_value(median_rule)).decode("ascii")
 
 
 def test_stop_check_refreshes_from_file(tmp_path):
     bar = tmp_path / "bar.json"
     src = json.dumps({
         "direction": "max", "es_interval": 1,
-        "prefix_histories": [], "refresh_path": str(bar),
+        "rule": _MEDIAN, "finalized": [], "refresh_path": str(bar),
     })
     check = _make_stop_check(src)
     assert check is not None  # empty bar + refresh path still builds a check
     # no bar published yet -> never stops
     assert check([0], [0.01]) is False
     # driver publishes a tightened bar
-    bar.write_text(json.dumps({"prefix_histories": [[1.0, 1.0], [0.9, 0.9], [1.1, 1.1]]}))
+    bar.write_text(json.dumps({"finalized": [
+        {"metric_history": [1.0, 1.0]}, {"metric_history": [0.9, 0.9]}, {"metric_history": [1.1, 1.1]},
+    ]}))
     assert check([0, 1], [0.01, 0.01]) is True  # 0.01 < median(1.0)
     # a refreshed file wins over the (stale) submit-time snapshot
-    bar.write_text(json.dumps({"prefix_histories": [[0.001, 0.001]]}))
+    bar.write_text(json.dumps({"finalized": [{"metric_history": [0.001, 0.001]}]}))
     # mtime granularity: force distinct mtime
     os.utime(bar, ns=(time.time_ns(), time.time_ns() + 1))
     assert check([0, 1, 2], [0.01, 0.01, 0.01]) is False  # bar below the trial now
 
 
 def test_stop_check_without_refresh_keeps_old_contract():
-    src = json.dumps({"direction": "max", "es_interval": 1, "prefix_histories": []})
+    src = json.dumps({"direction": "max", "es_interval": 1, "rule": _MEDIAN, "finalized": []})
     assert _make_stop_check(src) is None  # no histories, no path -> no check
 
 

@@ -5,21 +5,28 @@ than the checked step, whose prefix mean must average over the steps
 that exist, not divide by s (reference medianrule.py:27-60).
 """
 
+import base64
 import json
 import statistics
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from maggy_spark.executor import _make_stop_check
+from maggy_spark.executor import _dumps_by_value, _make_stop_check, median_rule
 
+_MEDIAN = base64.b64encode(_dumps_by_value(median_rule)).decode("ascii")
 _vals = st.floats(min_value=-100, max_value=100, allow_nan=False, allow_infinity=False)
 
 
 def _check_for(histories, direction="max", es_interval=1):
     return _make_stop_check(
         json.dumps(
-            {"direction": direction, "es_interval": es_interval, "prefix_histories": histories}
+            {
+                "direction": direction,
+                "es_interval": es_interval,
+                "rule": _MEDIAN,
+                "finalized": [{"metric_history": h} for h in histories],
+            }
         )
     )
 

@@ -2,6 +2,8 @@
 (`maggy/tests/test_randomsearch.py:66-100`: 5-trial random search,
 reporter broadcasts, result is a dict with best/worst/avg)."""
 
+import logging
+
 import pytest
 
 from maggy_spark import Searchspace, lagom
@@ -428,9 +430,10 @@ def test_run_trial_wave_result_rows_are_plain_python(spark):
     """The row contract a Spark result schema used to enforce: exact
     keys, plain Python types, rows in `pending` order, for one trial
     and for several in one call."""
+    import base64
     import json
 
-    from maggy_spark.executor import run_trial_wave
+    from maggy_spark.executor import _dumps_by_value, median_rule, run_trial_wave
 
     [row] = run_trial_wave(spark, [{"trial_id": "solo", "params": {"x": 2}}], _contract_train_fn)
     _assert_plain_row(row)
@@ -439,7 +442,11 @@ def test_run_trial_wave_result_rows_are_plain_python(spark):
 
     # a finished history far above trial x=1's reports: the median rule
     # stops x=1 at its first broadcast and leaves x=2 running
-    stop_src = json.dumps({"direction": "max", "es_interval": 1, "prefix_histories": [[50.0, 50.0, 50.0]]})
+    stop_src = json.dumps({
+        "direction": "max", "es_interval": 1,
+        "rule": base64.b64encode(_dumps_by_value(median_rule)).decode("ascii"),
+        "finalized": [{"metric_history": [50.0, 50.0, 50.0]}],
+    })
     pending = [
         {"trial_id": "t_done", "params": {"x": 2}},
         {"trial_id": "t_error", "params": {"x": 0}},
@@ -571,3 +578,19 @@ def test_wave_mode_finalizes_optimizer_that_runs_dry(spark):
     res = lagom(lambda x: float(x), config, spark)
     assert res["num_trials"] == 2 and res["best_val"] == 2.0
     assert opt.finalized_with is not None and len(opt.finalized_with) == 2
+
+
+def test_stalled_controller_warns(spark, caplog):
+    """A controller that runs dry before num_trials ends the experiment
+    with the trials it settled and one warning that says so."""
+    config = HyperparameterOptConfig(
+        num_trials=10, optimizer="randomsearch",
+        searchspace=Searchspace(x=("INTEGER", [1, 2])),
+        direction="max", es_policy="none", seed=1,
+    )
+    with caplog.at_level(logging.WARNING, logger="maggy_spark"):
+        res = lagom(lambda x: float(x), config, spark)
+    assert res["num_trials"] == 2
+    warnings = [r for r in caplog.records if r.name == "maggy_spark" and r.levelno == logging.WARNING]
+    assert len(warnings) == 1
+    assert "RandomSearch" in warnings[0].getMessage() and "2 of 10" in warnings[0].getMessage()

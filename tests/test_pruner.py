@@ -175,6 +175,49 @@ def test_lagom_hyperband_large_ladder_under_fair_pool(spark):
     assert wall / res["num_trials"] <= 2.0, f"{wall:.1f}s for 40 trials"
 
 
+@pytest.mark.parametrize(
+    "make_optimizer", [lambda: "hyperband", lambda: GP(pruner="hyperband")], ids=["hyperband", "gp_pruner"]
+)
+def test_config_pruner_on_pruned_optimizer_rejected(spark, monkeypatch, make_optimizer):
+    """A config pruner on an optimizer that already carries a different
+    one raises before any trial job, instead of silently running the
+    optimizer's ladder."""
+    from maggy_spark import experiment
+
+    def no_jobs(*args, **kwargs):
+        raise AssertionError("no trial may run")
+
+    monkeypatch.setattr(experiment, "run_trial_wave", no_jobs)
+    config = HyperparameterOptConfig(
+        optimizer=make_optimizer(),
+        searchspace=Searchspace(**SP),
+        direction="max",
+        es_policy="none",
+        pruner="hyperband",
+        pruner_kwargs={"min_budget": 1, "max_budget": 27, "eta": 3, "n_iterations": 1},
+    )
+    with pytest.raises(ValueError, match="already carries pruner"):
+        lagom(hb_train_fn, config, spark)
+
+
+def test_config_pruner_matching_optimizer_pruner_accepted(spark, monkeypatch):
+    """The same pruner named on both the optimizer and the config is one
+    pruner, not a conflict (a reused optimizer instance carries the
+    pruner an earlier run attached)."""
+    from maggy_spark import experiment
+
+    kwargs = {"min_budget": 1, "max_budget": 27, "eta": 3, "n_iterations": 1}
+    monkeypatch.setattr(experiment, "_run_trials", lambda train_fn, config, spark, controller, *a: controller)
+    config = HyperparameterOptConfig(
+        optimizer=GP(pruner="hyperband", pruner_kwargs=kwargs),
+        searchspace=Searchspace(**SP),
+        direction="max",
+        es_policy="none",
+        pruner="hyperband",
+        pruner_kwargs=kwargs,
+    )
+    assert lagom(hb_train_fn, config, spark).pruner.budgets == [1, 3, 9, 27]
+
 def test_exact_smax_keeps_top_rung_for_exact_powers():
     """Float-log ladder math drops the max-budget rung for exact
     powers (log(1000)/log(10) = 2.999...); every consumer shares the

@@ -287,16 +287,87 @@ def test_custom_rule_stops_trials_e2e(spark):
     assert res["best_val"] == 0.9
 
 
+def test_median_rule_subclass_override_runs_e2e(spark):
+    """A MedianStoppingRule subclass that overrides earlystop_check runs
+    its override, not the built-in median: every trial after the es_min
+    gate is stopped. All trials report the same metric, so the median
+    rule itself would stop none."""
+    from maggy import Searchspace, experiment
+    from maggy.config import HyperparameterOptConfig
+    from maggy.earlystop import MedianStoppingRule
+
+    class AlwaysStop(MedianStoppingRule):
+        @staticmethod
+        def earlystop_check(to_check, finalized_trials, direction):
+            return to_check.trial_id
+
+    def fn(x, reporter):
+        for step in range(5):
+            reporter.broadcast(1.0, step)
+        return 1.0
+
+    config = HyperparameterOptConfig(
+        num_trials=5,
+        optimizer="randomsearch",
+        searchspace=Searchspace(x=("DOUBLE", [0.0, 1.0])),
+        direction="max",
+        es_policy=AlwaysStop,
+        es_min=2,
+        es_interval=1,
+        parallelism=1,
+        seed=3,
+    )
+    res = experiment.lagom(fn, config, spark)
+    assert res["num_trials"] == 5
+    assert res["early_stopped"] == 3
+
+
+def test_no_stopping_rule_subclass_override_runs_e2e(spark):
+    """A NoStoppingRule subclass that overrides earlystop_check stops
+    trials: overriding the check must not leave early stopping off."""
+    from maggy import Searchspace, experiment
+    from maggy.config import HyperparameterOptConfig
+    from maggy.earlystop import NoStoppingRule
+
+    class StopWeak(NoStoppingRule):
+        @staticmethod
+        def earlystop_check(to_check, finalized_trials, direction):
+            best = max(t.final_metric for t in finalized_trials)
+            if to_check.metric_history[0] < best - 0.5:
+                return to_check.trial_id
+            return None
+
+    def fn(x, reporter):
+        for step in range(10):
+            reporter.broadcast(x, step)
+        return x
+
+    config = HyperparameterOptConfig(
+        num_trials=6,
+        optimizer="gridsearch",
+        # grid order: the strong configs run in wave 1 (parallelism=2),
+        # then 0.1/0.05 land in wave 2 with two finalized trials
+        searchspace=Searchspace(x=("DISCRETE", [0.9, 0.85, 0.1, 0.05, 0.8, 0.75])),
+        direction="max",
+        es_policy=StopWeak,
+        es_min=2,
+        es_interval=1,
+        parallelism=2,
+    )
+    res = experiment.lagom(fn, config, spark)
+    assert res["num_trials"] == 6
+    assert res["early_stopped"] >= 1
+
 def test_unknown_es_policy_still_rejected(spark):
     from maggy_spark.config import HyperparameterOptConfig
-    from maggy_spark.experiment import _es_enabled
+    from maggy_spark.experiment import _es_rule
 
     config = HyperparameterOptConfig(
         num_trials=1, optimizer="randomsearch", searchspace=None,
         direction="max", es_policy="aggressive",
     )
     with pytest.raises(ValueError):
-        _es_enabled(config)
+        _es_rule(config)
 
 
 def test_handle_return_val_accepts_zero_metric(tmp_path):

@@ -339,13 +339,16 @@ def test_reference_finalize_fires_on_wave_boundary_exhaustion(spark):
 def test_stop_check_clamps_zero_interval():
     """es_interval=0 in the serialized stop state must not turn every
     broadcast into a ZeroDivisionError ERROR row."""
+    import base64
     import json
 
-    from maggy_spark.executor import _make_stop_check
+    from maggy_spark.executor import _dumps_by_value, _make_stop_check, median_rule
 
-    src = json.dumps(
-        {"direction": "max", "es_interval": 0, "prefix_histories": [[1.0], [2.0], [3.0]]}
-    )
+    src = json.dumps({
+        "direction": "max", "es_interval": 0,
+        "rule": base64.b64encode(_dumps_by_value(median_rule)).decode("ascii"),
+        "finalized": [{"metric_history": [1.0]}, {"metric_history": [2.0]}, {"metric_history": [3.0]}],
+    })
     check = _make_stop_check(src)
     assert check([0], [0.1]) in (True, False)  # no ZeroDivisionError
 
@@ -399,10 +402,12 @@ def test_append_trials_mixed_seq_orders_presets_first(spark, tmp_path):
     assert stored[t_noseq.trial_id] == 3  # seq-less lands after presets
 
 
-def test_custom_rule_repickled_per_experiment(spark):
+def test_custom_rule_repickled_per_experiment(spark, monkeypatch):
     """A rule object reused across experiments with MUTATED closure
     state must ship the fresh state, not the first run's pickle."""
-    from maggy_spark.experiment import _bar_payload
+    from pyspark import cloudpickle
+
+    from maggy_spark import executor
 
     class Rule:
         POLICY = "custom"
@@ -417,26 +422,34 @@ def test_custom_rule_repickled_per_experiment(spark):
     cfg = HyperparameterOptConfig(
         num_trials=2, optimizer="randomsearch",
         searchspace=Searchspace(x=("DOUBLE", [0.0, 1.0])),
-        direction="max", es_policy=rule, es_min=1, seed=5,
+        direction="max", es_policy=rule, es_min=1, seed=5, parallelism=1,
     )
+    pickles = []
+    dumps = executor._dumps_by_value
 
-    class Ctl:  # minimal controller shape for _bar_payload
-        final_store = []
-        _maggy_rule_b64 = None
+    def recording(obj):
+        out = dumps(obj)
+        if getattr(obj, "__self__", None) is rule:
+            pickles.append(out)
+        return out
 
-    c1 = Ctl()
-    first = _bar_payload(c1, cfg)["custom_rule"]
-    assert _bar_payload(c1, cfg)["custom_rule"] is first  # memoized within a run
+    monkeypatch.setattr(executor, "_dumps_by_value", recording)
+
+    def fn(x, reporter):
+        reporter.broadcast(x, 0)
+        return x
+
+    lagom(fn, cfg, spark)
+    # two waves, the second with a stop source: one pickle within a run
+    assert len(pickles) == 1
+    first = pickles[0]
     rule.threshold = 42.0  # mutate closure state between experiments
-    c2 = Ctl()
-    second = _bar_payload(c2, cfg)["custom_rule"]
+    lagom(fn, cfg, spark)
+    assert len(pickles) == 2
+    second = pickles[1]
     assert second != first  # fresh pickle for the new run
 
-    import base64
-
-    from pyspark import cloudpickle
-
-    rebuilt = cloudpickle.loads(base64.b64decode(second))
+    rebuilt = cloudpickle.loads(second)
     assert rebuilt.__self__.threshold == 42.0
 
 
