@@ -4,10 +4,14 @@ maggy_spark.pruner.HyperbandPruner (same pruning_routine contract,
 pruner/hyperband.py:137-195).
 
 `AbstractPruner` keeps the reference's subclassing contract
-(`pruner/abstractpruner.py:20-70`): implement `pruning_routine` /
-`report_trial` / `finished` / `num_trials` and attach via the
-optimizer's pruner hooks. The engine's Hyperband is registered as a
-virtual subclass, so `isinstance(p, AbstractPruner)` holds for it.
+(`pruner/abstractpruner.py:20-70`): `pruning_routine` /
+`report_trial` / `finished` / `num_trials`. The engine's Hyperband is
+registered as a virtual subclass, so `isinstance(p, AbstractPruner)`
+holds for it. An optimizer attaches only "hyperband" or a
+HyperbandPruner instance, a subclass included: the subclass is
+rebuilt from its four ladder fields at every `initialize`, so its
+overrides run on a fresh ledger. Any other pruner is rejected with a
+ValueError.
 """
 
 from __future__ import annotations

@@ -7,11 +7,12 @@ base trial plus one per included component; feature trials drop one
 dataset column, layer trials drop one model layer (by name, group,
 or prefix).
 
-Rebuild: the component inventory is a relational `components` table
-(FIXTURES.md F4); the trial list has one trial per component row
-(operator G11); feature ablation is `.drop(column)` — i.e. column
-pruning, which parquet gives us for free; the ablated training table
-is read executor-side via pyarrow inside the trial task (the
+Rebuild: `ablator="loco"` is the `LOCO` class, as in the reference
+driver; its trials carry the reference param shape (`ablated_feature`,
+`ablated_layer` and the dataset/model callables). The component
+inventory is also a relational `components` table (FIXTURES.md F4,
+`components_df`). Feature ablation is column pruning at the parquet
+scan, read executor-side via pyarrow inside the trial task (the
 dataset_function contract, `loco.py:222-230`). Trials run through the
 HPO lifecycle (`experiment._run_trials`) behind `_AblationController`,
 each its own Spark job with its dataset/model callables as extras.
@@ -273,10 +274,10 @@ class LOCO(AbstractAblator):
     dataset/model callables), so trial ids hash the ablated labels
     exactly like the reference (`trial.py:62-67`).
 
-    The built-in "loco" ablator (loco_trials/components_df) stays the
-    default; this class exists so reference user code subclassing or
-    instantiating LOCO runs unchanged. Both run through the same
-    dispatch loop."""
+    It is the built-in ablator: `AblationConfig(ablator="loco")` runs
+    `LOCO(study, [])`, and reference user code subclassing or
+    instantiating LOCO runs the same way. `get_trial` hands the buffer
+    out last-in first-out, as the reference pops it."""
 
     def get_number_of_trials(self) -> int:
         study = self.ablation_study
@@ -378,31 +379,6 @@ class LOCO(AbstractAblator):
         return trial_dict
 
 
-def loco_trials(study: AblationStudy) -> list[Trial]:
-    """The LOCO trial list: base + one per component
-    (`loco.py:138-194`; count `loco.py:31-39` =
-    n_features + n_layers + n_groups + n_custom + 1).
-    Trial ids hash only the ablation labels (`trial.py:62-67`)."""
-    trials = [Trial({"ablated": "None"}, trial_type="ablation", info_dict={"component": "base"})]
-    for f in study.features:
-        trials.append(Trial({"ablated": f"feature:{f}"}, trial_type="ablation",
-                            info_dict={"component": "feature", "name": f}))
-    for layer in study.model.layers:
-        trials.append(Trial({"ablated": f"layer:{layer}"}, trial_type="ablation",
-                            info_dict={"component": "layer", "name": layer}))
-    for group in study.model.layers.list_groups():
-        gname = ",".join(group)
-        trials.append(Trial({"ablated": f"layer_group:{gname}"}, trial_type="ablation",
-                            info_dict={"component": "layer_group", "members": group}))
-    for prefix in study.model.layers.list_prefixes():
-        trials.append(Trial({"ablated": f"layer_prefix:{prefix}"}, trial_type="ablation",
-                            info_dict={"component": "layer_prefix", "name": prefix}))
-    for name in study._custom_model_names():
-        trials.append(Trial({"ablated": f"custom:{name}"}, trial_type="ablation",
-                            info_dict={"component": "custom_model", "name": name}))
-    return trials
-
-
 def components_df(spark: SparkSession, study: AblationStudy):
     """The `components` relation (FIXTURES.md F4) for relational use."""
     rows = (
@@ -462,10 +438,10 @@ def run_ablation(train_fn: Callable, config: AblationConfig, spark: SparkSession
     (`experiment._run_trials`; the reference `AblationDriver` subclasses
     the HPO driver, `ablation_driver.py:32-87`): async refill at the
     cluster's default parallelism, every trial its own job, early
-    stopping off (`ablation_driver.py:52`). The default "loco" ablator
-    runs `loco_trials`; a custom AbstractAblator instance (reference
-    `ablation_driver.py:65-77`) is drained through `get_trial`
-    reference-style."""
+    stopping off (`ablation_driver.py:52`). The ablator is "loco" (the
+    `LOCO` class, as the reference driver builds it,
+    `ablation_driver.py:66-68`) or an AbstractAblator instance, and is
+    drained through `get_trial` reference-style."""
     from maggy_spark.experiment import _run_trials
 
     study: AblationStudy = config.ablation_study
@@ -475,46 +451,37 @@ def run_ablation(train_fn: Callable, config: AblationConfig, spark: SparkSession
     if isinstance(ablator, str):
         if ablator.lower() != "loco":
             raise ValueError(f"unknown ablator {ablator!r}; only 'loco' is built in")
-        controller = _AblationController(loco_trials(study))
-        components = _loco_components(study)
-    else:
-        if not callable(getattr(ablator, "get_trial", None)):
-            raise TypeError(
-                "ablator should be 'loco' or an instance of AbstractAblator, got "
-                f"{type(ablator).__name__}"
-            )
-        ablator.ablation_study = study
-        ablator.final_store = []
-        ablator.trial_buffer = list(getattr(ablator, "trial_buffer", []))
-        ablator.initialize()
-        # the reference driver requests trials with no finished
-        # reference until the ablator runs dry
-        controller = _AblationController(list(iter(lambda: ablator.get_trial(None), None)), ablator)
-        components = _reference_components
+        ablator = LOCO(study, [])
+    elif not callable(getattr(ablator, "get_trial", None)):
+        raise TypeError(
+            "ablator should be 'loco' or an instance of AbstractAblator, got "
+            f"{type(ablator).__name__}"
+        )
+    ablator.ablation_study = study
+    ablator.final_store = []
+    ablator.trial_buffer = list(getattr(ablator, "trial_buffer", []))
+    ablator.initialize()
+    controller = _AblationController(ablator)
     label = study.label_name
 
     def payload(trial: Trial) -> tuple[dict, dict]:
         # the train_fn sees only these injected values (and reporter),
         # never the trial's raw params
-        ablated_feature, ablated_layer, dataset_fn, model_fn = components(trial)
-        extras = {"ablated_feature": ablated_feature, "ablated_layer": ablated_layer, "label_name": label}
+        p = trial.params
+        extras = {"ablated_feature": p.get("ablated_feature"), "ablated_layer": p.get("ablated_layer"),
+                  "label_name": label}
         # a None callable is left out: it would clobber a user-supplied
         # parameter default (build_kwargs prefers extras over defaults)
-        if dataset_fn is not None:
-            extras["dataset_function"] = dataset_fn
-        if model_fn is not None:
-            extras["model_function"] = model_fn
+        for key in ("dataset_function", "model_function"):
+            if p.get(key) is not None:
+                extras[key] = p[key]
         return {}, extras
 
     def finish(result: dict) -> None:
         best = result.get("best_config")
         if best is not None:
             # "BEST Config Excludes ..." (ablation_driver.py:153-183)
-            result["best_excludes"] = (
-                best.get("ablated", "None")
-                if isinstance(ablator, str)
-                else {k: best.get(k, "None") for k in ("ablated_feature", "ablated_layer")}
-            )
+            result["best_excludes"] = {k: best.get(k, "None") for k in ("ablated_feature", "ablated_layer")}
         result["n_components"] = controller.num_trials - 1
 
     return _run_trials(
@@ -525,21 +492,22 @@ def run_ablation(train_fn: Callable, config: AblationConfig, spark: SparkSession
 class _AblationController:
     """The controller protocol `experiment._drive` runs (`next_batch`,
     `finalize_trial`, `report_error`, `done`, `num_trials`,
-    `final_store`) over an ablation study's trials.
+    `final_store`) over an initialized reference-protocol ablator.
 
-    With no ablator the trials are fixed. With a reference-protocol
-    ablator every settled trial, ERROR ones included, joins its
-    `final_store` and is handed back through `get_trial` in settle
-    order; a returned trial joins the queue. `finalize_experiment`
-    fires once, from the first `done()` that sees every trial settled.
+    The first trials are those `get_trial(None)` hands out until it
+    returns None (the reference driver's first requests). Every settled
+    trial, ERROR ones included, joins the ablator's `final_store` and is
+    handed back through `get_trial` in settle order; a returned trial
+    joins the queue. `finalize_experiment` fires once, from the first
+    `done()` that sees every trial settled.
     """
 
-    def __init__(self, trials: list[Trial], ablator=None) -> None:
-        self._pending = list(trials)
+    def __init__(self, ablator) -> None:
         self._ablator = ablator
+        self._pending = list(iter(lambda: ablator.get_trial(None), None))
         self._finalized = False
         self.num_trials = len(self._pending)
-        self.final_store: list[Trial] = ablator.final_store if ablator is not None else []
+        self.final_store: list[Trial] = ablator.final_store
 
     def next_batch(self, max_trials: int) -> list[Trial]:
         batch, self._pending = self._pending[:max_trials], self._pending[max_trials:]
@@ -547,53 +515,16 @@ class _AblationController:
 
     def finalize_trial(self, trial: Trial) -> None:
         self.final_store.append(trial)
-        if self._ablator is not None:
-            follow_up = self._ablator.get_trial(trial)
-            if follow_up is not None:
-                self._pending.append(follow_up)
-                self.num_trials += 1
+        follow_up = self._ablator.get_trial(trial)
+        if follow_up is not None:
+            self._pending.append(follow_up)
+            self.num_trials += 1
 
     report_error = finalize_trial
 
     def done(self) -> bool:
         finished = not self._pending and len(self.final_store) == self.num_trials
-        if finished and self._ablator is not None and not self._finalized:
+        if finished and not self._finalized:
             self._finalized = True
             self._ablator.finalize_experiment(self.final_store)
         return finished
-
-
-def _loco_components(study: AblationStudy) -> Callable:
-    """(ablated_feature, ablated_layer, dataset_function, model_function)
-    of a `loco_trials` trial. A user-set dataset generator replaces the
-    parquet reader for every trial (reference loco.py:45-47 — the
-    generator owns the ablation logic); the base model generator goes to
-    every non-custom trial, with layer trials getting the ablating
-    wrapper."""
-    custom_gens = dict(study.custom_model_generators)
-    for gen, identifier in study.model.custom_model_generators:
-        custom_gens.setdefault(identifier, gen)
-    base = study.model.base_model_generator
-
-    def components(trial: Trial) -> tuple:
-        kind, _, name = trial.params["ablated"].partition(":")
-        ablated_feature = name if kind == "feature" else None
-        ablated_layer = name if kind in ("layer", "layer_group", "layer_prefix") else None
-        dataset_fn = study.custom_dataset_generator or make_dataset_function(
-            study.training_dataset_path, study.label_name, ablated_feature
-        )
-        if kind == "custom":
-            model_fn = custom_gens.get(name)
-        elif base is not None and ablated_layer is not None:
-            model_fn = ablating_model_generator(base, ablated_layer)
-        else:
-            model_fn = base
-        return ablated_feature, ablated_layer, dataset_fn, model_fn
-
-    return components
-
-
-def _reference_components(trial: Trial) -> tuple:
-    """The same four values from a reference-shaped trial's params."""
-    p = trial.params
-    return p.get("ablated_feature"), p.get("ablated_layer"), p.get("dataset_function"), p.get("model_function")

@@ -47,7 +47,8 @@ class HyperparameterOptConfig(BaseConfig):
     es_policy: Any = "median"
     optimization_key: str = "metric"
     # multi-fidelity: attach a Hyperband pruner to the optimizer —
-    # "hyperband" or a HyperbandPruner instance. The pruner then owns
+    # "hyperband" or a HyperbandPruner (or subclass) instance, for
+    # this run only. The pruner then owns
     # budgets/promotions and OVERRIDES num_trials (reference
     # optimization_driver.py:87-89; pruner/hyperband.py).
     # optimizer="hyperband" names the same composition, RandomSearch
@@ -75,9 +76,10 @@ class AblationConfig(BaseConfig):
     (`ablation_driver.py:52`)."""
 
     ablation_study: Any = None
-    # "loco" (the built-in loco_trials list) or a reference-protocol
-    # AbstractAblator instance (`ablation_driver.py:65-77`); either
-    # runs through the HPO dispatch loop, async, one job per trial
+    # "loco" (runs `ablation.LOCO(study, [])`, as the reference
+    # driver does) or a reference-protocol AbstractAblator instance
+    # (`ablation_driver.py:65-77`); either runs through the HPO
+    # dispatch loop, async, one job per trial
     ablator: Any = "loco"
     direction: str = "max"
     optimization_key: str = "metric"

@@ -209,7 +209,7 @@ def run_trial_wave(
             from maggy import tensorboard as _tb
 
             _tb._register(_os.path.join(tb_base, str(trial_id)))
-        stop_check = _make_stop_check(stop_src)
+        stop_check = _make_stop_check(stop_src, trial_id)
         reporter = Reporter(stop_check=stop_check)
         t0 = _time.time()
         final = None
@@ -523,18 +523,18 @@ def encode_stop_source(
     return json.dumps(state)
 
 
-def _make_stop_check(stop_src: str | None):
+def _make_stop_check(stop_src: str | None, trial_id: str):
     """Rebuild the trial-local early-stop check from the state
     `encode_stop_source` wrote.
 
     Every `es_interval` steps (clamped to >= 1) the check calls the rule
-    with Trial-shaped views of the checked trial and of the finalized
-    trials, and stops the trial on any non-None return (the reference
-    driver treats the returned trial_id as the stop set,
-    `optimization_driver.py:456-471`). While nothing is finalized it
-    never stops, and a rule that raises lets the trial continue: the
-    reference logs rule exceptions and keeps running
-    (`optimization_driver.py:466-469`).
+    with Trial-shaped views of the checked trial (`trial_id` is the
+    running trial's) and of the finalized trials, and stops the trial
+    on any non-None return (the reference driver treats the returned
+    trial_id as the stop set, `optimization_driver.py:456-471`). While
+    nothing is finalized it never stops, and a rule that raises lets
+    the trial continue: the reference logs rule exceptions and keeps
+    running (`optimization_driver.py:466-469`).
 
     With `refresh_path` set (async scheduling), the check re-reads the
     driver-maintained bar file (mtime-gated, so an unchanged bar costs
@@ -599,7 +599,7 @@ def _make_stop_check(stop_src: str | None):
         if not bar["finalized"]:
             return False
         to_check = types.SimpleNamespace(
-            trial_id="__checked__",
+            trial_id=trial_id,
             metric_history=list(metric_history),
             step_history=list(step_history),
             metric_dict=dict(zip(step_history, metric_history)),

@@ -187,9 +187,9 @@ def _run_hpo(train_fn: Callable, config: HyperparameterOptConfig, spark: SparkSe
     if config.pruner is not None:
         # config-level pruner attaches to whatever optimizer was chosen
         # (reference passes pruner via the optimizer constructor;
-        # config-level is the ergonomic equivalent). An optimizer that
-        # already carries another pruner ("hyperband", GP(pruner=...))
-        # would silently drop this one.
+        # config-level is the ergonomic equivalent), for this run only.
+        # An optimizer that already carries another pruner
+        # ("hyperband", GP(pruner=...)) would silently drop this one.
         spec = (config.pruner, dict(config.pruner_kwargs or {}))
         if controller._pruner_spec is not None and (controller._pruner_spec, controller._pruner_kwargs) != spec:
             raise ValueError(
@@ -197,7 +197,6 @@ def _run_hpo(train_fn: Callable, config: HyperparameterOptConfig, spark: SparkSe
                 f"with {controller._pruner_kwargs}; config.pruner={config.pruner!r} with "
                 f"pruner_kwargs={spec[1]} would be ignored: set the pruner in one place"
             )
-        controller._pruner_spec, controller._pruner_kwargs = spec
     if config.searchspace is None:
         raise ValueError("HyperparameterOptConfig.searchspace is required")
     if config.direction not in ("min", "max"):
@@ -207,6 +206,8 @@ def _run_hpo(train_fn: Callable, config: HyperparameterOptConfig, spark: SparkSe
         num_trials=config.num_trials,
         direction=config.direction,
         seed=config.seed,
+        pruner=config.pruner,
+        pruner_kwargs=config.pruner_kwargs,
     )
     controller.spark = spark  # controllers may fan work out (e.g. GP distributed scoring)
     parallelism = config.parallelism or spark.sparkContext.defaultParallelism

@@ -95,7 +95,19 @@ class AbstractOptimizer(ABC):
         # sampling-time stopwatch consumed by create_trial
         self.sampling_time_start: float = 0.0
 
-    def initialize(self, searchspace: Searchspace, num_trials: int, direction: str, seed: int | None) -> None:
+    def initialize(
+        self,
+        searchspace: Searchspace,
+        num_trials: int,
+        direction: str,
+        seed: int | None,
+        pruner=None,
+        pruner_kwargs: dict | None = None,
+    ) -> None:
+        """Reset for one experiment. `pruner`/`pruner_kwargs` are the
+        run's own pruner (`config.pruner`); without one the pruner given
+        to the constructor, if any, attaches. Neither is stored on the
+        optimizer, so a reused instance's next run starts clean."""
         self.searchspace = searchspace
         self.num_trials = num_trials
         self.direction = direction
@@ -108,14 +120,16 @@ class AbstractOptimizer(ABC):
         self._seen_params = set()
         self.n_errors = 0
         self.pruner = None
-        if self._pruner_spec is not None:
-            self.pruner = self._build_pruner()
+        if pruner is None:
+            pruner, pruner_kwargs = self._pruner_spec, self._pruner_kwargs
+        if pruner is not None:
+            self.pruner = self._build_pruner(pruner, dict(pruner_kwargs or {}))
             # a pruner overrides num_trials (optimization_driver.py:87-89)
             self.num_trials = self.pruner.num_trials()
             self._pruned_params: dict[str, dict] = {}
         self._initialize()
 
-    def _build_pruner(self):
+    def _build_pruner(self, spec, kwargs: dict):
         from maggy_spark.pruner import HyperbandPruner
 
         if type(self)._suggest_one is AbstractOptimizer._suggest_one:
@@ -123,15 +137,20 @@ class AbstractOptimizer(ABC):
                 f"{type(self).__name__} cannot drive a pruner: it has no "
                 "_suggest_one (use RandomSearch, GP, or TPE)"
             )
-        spec = self._pruner_spec
         if isinstance(spec, str):
             if spec.lower() != "hyperband":
                 raise ValueError(f"unknown pruner {spec!r}; only 'hyperband' is supported")
-            return HyperbandPruner(**self._pruner_kwargs, trial_metric_getter=self._pruner_metrics)
+            return HyperbandPruner(**kwargs, trial_metric_getter=self._pruner_metrics)
+        if not isinstance(spec, HyperbandPruner):
+            raise ValueError(
+                f"unsupported pruner {spec!r}: expected 'hyperband' or a "
+                "HyperbandPruner (or subclass) instance"
+            )
         # an INSTANCE spec is a parameter carrier only: rebuild a fresh
-        # ledger every initialize(), else a reused controller inherits
-        # the exhausted rung state and the second lagom() emits 0 trials
-        return HyperbandPruner(
+        # ledger of its class every initialize(), else a reused
+        # controller inherits the exhausted rung state and the second
+        # lagom() emits 0 trials
+        return type(spec)(
             min_budget=spec.min_budget,
             max_budget=spec.max_budget,
             eta=spec.eta,
@@ -759,8 +778,8 @@ class ReferenceOptimizerAdapter(AbstractOptimizer):
                 )
         self.wrapped = wrapped
 
-    def initialize(self, searchspace, num_trials, direction, seed) -> None:
-        super().initialize(searchspace, num_trials, direction, seed)
+    def initialize(self, searchspace, num_trials, direction, seed, pruner=None, pruner_kwargs=None) -> None:
+        super().initialize(searchspace, num_trials, direction, seed, pruner, pruner_kwargs)
         w = self.wrapped
         w.searchspace = searchspace
         w.num_trials = num_trials

@@ -111,16 +111,35 @@ def _assert_one_call_per_trial(wave_calls, trial_ids, slots):
 
 
 def test_loco_runs_one_job_per_trial_within_parallelism(spark, tmp_path, wave_calls):
-    from maggy_spark.ablation import loco_trials
+    from maggy_spark.ablation import LOCO
 
     slots = spark.sparkContext.defaultParallelism
     study = wide_study(tmp_path, slots + 2)
     res = lagom(feature_score, AblationConfig(ablation_study=study, direction="max"), spark)
 
-    _assert_one_call_per_trial(wave_calls, [t.trial_id for t in loco_trials(study)], slots)
+    loco = LOCO(study, [])
+    loco.initialize()
+    _assert_one_call_per_trial(wave_calls, [t.trial_id for t in loco.trial_buffer], slots)
     assert res["num_trials"] == slots + 3 and res["errors"] == 0
-    assert res["best_excludes"] == f"feature:f{slots + 1}"
+    assert res["best_excludes"] == {"ablated_feature": f"f{slots + 1}", "ablated_layer": "None"}
     assert res["n_components"] == slots + 2
+
+
+def test_loco_name_and_loco_instance_run_the_same_trials(spark, tmp_path, wave_calls):
+    """ablator="loco" is the LOCO class: both settle the same trial ids
+    (layer-group and prefix labels included) and name the same best."""
+    from maggy_spark.ablation import LOCO
+
+    study = wide_study(tmp_path, 3)
+    study.model.layers.include_groups(["dense_1", "dense_2"], prefix="conv")
+    runs = []
+    for ablator in ("loco", LOCO(study, [])):
+        wave_calls["calls"].clear()
+        res = lagom(feature_score, AblationConfig(ablation_study=study, ablator=ablator, direction="max"), spark)
+        runs.append(({c[0] for c in wave_calls["calls"]}, res["best_excludes"]))
+    assert len(runs[0][0]) == 6
+    assert runs[0] == runs[1]
+    assert runs[0][1] == {"ablated_feature": "f2", "ablated_layer": "None"}
 
 
 def test_custom_ablator_runs_one_job_per_trial_within_parallelism(spark, tmp_path, wave_calls):

@@ -5,7 +5,7 @@ import numpy as np
 import pytest
 
 from maggy_spark import Searchspace, lagom
-from maggy_spark.ablation import AblationStudy, components_df, loco_trials
+from maggy_spark.ablation import LOCO, AblationStudy, components_df
 from maggy_spark.bayes import GP, TPE, _GPModel, expected_improvement
 from maggy_spark.config import AblationConfig, HyperparameterOptConfig, TorchDistributedConfig
 
@@ -100,12 +100,17 @@ def test_loco_trial_count():
     study.model.layers.include_groups(["dense_1", "dense_2"], prefix="dense")
     study.add_custom_model_generator("wide", lambda: None)
     # n_features(3) + n_layers(2) + groups(1) + prefix(1) + custom(1) + base(1)
-    assert len(loco_trials(study)) == 9
+    loco = LOCO(study, [])
+    assert loco.get_number_of_trials() == 9
+    loco.initialize()
+    assert len(loco.trial_buffer) == 9
 
 
 def test_loco_trial_ids_stable():
-    s1, s2 = make_study(), make_study()
-    assert [t.trial_id for t in loco_trials(s1)] == [t.trial_id for t in loco_trials(s2)]
+    l1, l2 = LOCO(make_study(), []), LOCO(make_study(), [])
+    l1.initialize()
+    l2.initialize()
+    assert [t.trial_id for t in l1.trial_buffer] == [t.trial_id for t in l2.trial_buffer]
 
 
 def test_components_df(spark):
@@ -131,7 +136,7 @@ def test_ablation_e2e_feature_importance(spark):
     res = lagom(train_fn, config, spark)
     assert res["num_trials"] == 4  # base + 3 features
     # best config (highest corr) should NOT be the one that dropped the signal
-    assert res["best_excludes"] != "feature:f_signal"
+    assert res["best_excludes"]["ablated_feature"] != "f_signal"
     assert res["worst_val"] <= res["best_val"]
 
 

@@ -22,7 +22,7 @@ def test_stop_check_refreshes_from_file(tmp_path):
         "direction": "max", "es_interval": 1,
         "rule": _MEDIAN, "finalized": [], "refresh_path": str(bar),
     })
-    check = _make_stop_check(src)
+    check = _make_stop_check(src, "t0")
     assert check is not None  # empty bar + refresh path still builds a check
     # no bar published yet -> never stops
     assert check([0], [0.01]) is False
@@ -40,7 +40,7 @@ def test_stop_check_refreshes_from_file(tmp_path):
 
 def test_stop_check_without_refresh_keeps_old_contract():
     src = json.dumps({"direction": "max", "es_interval": 1, "rule": _MEDIAN, "finalized": []})
-    assert _make_stop_check(src) is None  # no histories, no path -> no check
+    assert _make_stop_check(src, "t0") is None  # no histories, no path -> no check
 
 
 def test_async_bar_tightens_after_submission(spark):

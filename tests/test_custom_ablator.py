@@ -286,3 +286,40 @@ def test_loco_buffers_engine_native_custom_generators(parquet_ds):
     assert len(loco.trial_buffer) == loco.get_number_of_trials()
     labels = {t.params["ablated_layer"] for t in loco.trial_buffer}
     assert "custom model: narrow" in labels and "custom model: wide" in labels
+
+
+def test_builtin_loco_ablates_layer_groups_and_prefixes_as_sets(spark, parquet_ds, monkeypatch):
+    """ablator="loco" hands Keras layer surgery the reference's layer
+    identifiers: the group's member set and a prefix as a singleton
+    set, not their string labels. The payload's model functions run on
+    the driver against a stub tensorflow module and a recording
+    ablate_keras_layer."""
+    import sys
+    import types
+
+    from maggy_spark import experiment, frameworks
+    from maggy_spark.config import AblationConfig
+
+    captured = {}
+
+    def capture(train_fn, config, spark, controller, parallelism, scheduling, payload, finish):
+        captured.update(controller=controller, payload=payload)
+        return {}
+
+    monkeypatch.setattr(experiment, "_run_trials", capture)
+    recorded = []
+    monkeypatch.setattr(frameworks, "ablate_keras_layer", lambda model, layer: recorded.append(layer) or model)
+    monkeypatch.setitem(sys.modules, "tensorflow", types.ModuleType("tensorflow"))
+
+    study = make_study(parquet_ds)
+    study.model.set_base_model_generator(lambda: "base-model")
+    study.model.layers.include("dense_0")
+    study.model.layers.include_groups(["dense_1", "dense_2"], prefix="conv")
+    experiment.lagom(lambda model_function: 1.0, AblationConfig(ablation_study=study, ablator="loco"), spark)
+
+    controller = captured["controller"]
+    for trial in controller.next_batch(controller.num_trials):
+        _, extras = captured["payload"](trial)
+        assert extras["model_function"]() == "base-model"
+    assert len(recorded) == 3
+    assert "dense_0" in recorded and {"dense_1", "dense_2"} in recorded and {"conv"} in recorded

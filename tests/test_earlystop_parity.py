@@ -27,7 +27,8 @@ def _check_for(histories, direction="max", es_interval=1):
                 "rule": _MEDIAN,
                 "finalized": [{"metric_history": h} for h in histories],
             }
-        )
+        ),
+        "t0",
     )
 
 
@@ -92,3 +93,31 @@ def test_trial_local_bar_equals_c3_bar_on_fixture(spark, sf_dir):
     steps3 = [0, 1, 2]
     assert check(steps3, [bar_c3 - 1e-3] * 3) is True  # just below the bar -> stop
     assert check(steps3, [bar_c3 + 1e-3] * 3) is False  # just above -> continue
+
+
+def _stop_only_real(to_check, finalized, direction):
+    """A rule keyed on the checked trial's id: it stops trial "real"."""
+    return to_check.trial_id if to_check.trial_id == "real" else None
+
+
+def _three_steps(reporter):
+    for step in range(3):
+        reporter.broadcast(float(step), step)
+    return 3.0
+
+
+def test_rule_sees_the_checked_trials_real_id(spark):
+    """The rule's `to_check.trial_id` is the running trial's id, not a
+    placeholder: a rule that returns it only for one trial stops only
+    that trial."""
+    from maggy_spark.executor import run_trial_wave
+
+    src = json.dumps({
+        "direction": "max", "es_interval": 1,
+        "rule": base64.b64encode(_dumps_by_value(_stop_only_real)).decode("ascii"),
+        "finalized": [{"trial_id": "done", "metric_history": [1.0, 1.0, 1.0]}],
+    })
+    pending = [{"trial_id": "real", "params": {}}, {"trial_id": "other", "params": {}}]
+    real, other = run_trial_wave(spark, pending, _three_steps, stop_check_source=src)
+    assert real["early_stop"] and real["metric_history"] == [0.0]
+    assert not other["early_stop"] and other["final_metric"] == 3.0

@@ -280,3 +280,46 @@ def test_asha_promotion_ranks_nan_last():
         t.finalize(m)
         asha.finalize_trial(t)
     assert [t.final_metric for t in asha._promotable(0)] == [1.0, 2.0, 3.0]
+
+
+def test_config_pruner_does_not_outlive_its_run(spark, monkeypatch):
+    """A config pruner attaches for its own run only: the same optimizer
+    instance reused without one runs plain random search."""
+    from maggy_spark import experiment
+
+    monkeypatch.setattr(experiment, "_run_trials", lambda train_fn, config, spark, controller, *a: controller)
+    optimizer = RandomSearch()
+    first = HyperparameterOptConfig(
+        optimizer=optimizer, searchspace=Searchspace(**SP), direction="max", es_policy="none", pruner="hyperband"
+    )
+    assert lagom(hb_train_fn, first, spark).num_trials == 17
+    second = HyperparameterOptConfig(
+        optimizer=optimizer, searchspace=Searchspace(**SP), direction="max", es_policy="none", num_trials=4
+    )
+    controller = lagom(hb_train_fn, second, spark)
+    assert controller.pruner is None and controller.num_trials == 4
+
+
+class CountingPruner(HyperbandPruner):
+    def __init__(self, *args, **kwargs):
+        super().__init__(*args, **kwargs)
+        self.routine_calls = 0
+
+    def pruning_routine(self):
+        self.routine_calls += 1
+        return super().pruning_routine()
+
+
+def test_hyperband_pruner_subclass_keeps_its_override():
+    """An instance spec is rebuilt with its own class on a fresh ledger,
+    so a subclass's override runs on every reuse."""
+    ctrl = RandomSearch(pruner=CountingPruner(1, 9, 3, 2))
+    for seed in (7, 8):
+        ctrl.initialize(Searchspace(**SP), 5, "max", seed)
+        assert len(ctrl.next_batch(4)) == 4
+        assert type(ctrl.pruner) is CountingPruner and ctrl.pruner.routine_calls == 4
+
+
+def test_non_hyperband_pruner_instance_rejected():
+    with pytest.raises(ValueError, match="HyperbandPruner"):
+        _drive(RandomSearch(pruner=object()))

@@ -116,16 +116,17 @@ def test_ablation_layers_group_encoding_and_exclude_groups():
 
 
 def test_ablation_model_level_custom_generators_make_trials():
-    from maggy.ablation import AblationStudy
-    from maggy_spark.ablation import loco_trials
+    from maggy.ablation import LOCO, AblationStudy
 
     study = AblationStudy("ds", 1, "label")
     study.model.set_base_model_generator(lambda: "base")
     study.model.add_custom_model_generator(lambda: "m1", "wide_model")
     assert study.model.base_model_generator() == "base"
-    trials = loco_trials(study)
-    ablated = {t.params["ablated"] for t in trials}
-    assert "custom:wide_model" in ablated  # base + the custom trial
+    loco = LOCO(study, [])
+    loco.initialize()
+    trials = loco.trial_buffer
+    ablated = {t.params["ablated_layer"] for t in trials}
+    assert "custom model: wide_model" in ablated  # base + the custom trial
     assert len(trials) == 2
 
 

@@ -349,7 +349,7 @@ def test_stop_check_clamps_zero_interval():
         "rule": base64.b64encode(_dumps_by_value(median_rule)).decode("ascii"),
         "finalized": [{"metric_history": [1.0]}, {"metric_history": [2.0]}, {"metric_history": [3.0]}],
     })
-    check = _make_stop_check(src)
+    check = _make_stop_check(src, "t0")
     assert check([0], [0.1]) in (True, False)  # no ZeroDivisionError
 
 
