@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import math
 import random
+import warnings
 
 import numpy as np
 
@@ -413,12 +414,8 @@ class GP(BaseAsyncBO):
     (`liar_strategy`): cl_min/cl_max/cl_mean constant liars or `kb`
     kriging believer (gp.py:329-373).
 
-    Candidate scoring is driver-side numpy by default (10k x d is
-    microseconds); set `distributed_scoring=True` to fan the EI
-    evaluation out as an Arrow-batched `mapInPandas` job over
-    `spark.range` — the SURVEY §2.2 G6 scale path for very large
-    candidate pools (the fitted GP factors are a few KB and ship in
-    the task closure)."""
+    Candidate scoring is driver-side numpy. `distributed_scoring` is
+    deprecated and does nothing."""
 
     ACQ_FUNS = ("EI", "PI", "LCB", "asy_ts")
     # how many points a joint-posterior Thompson draw can afford: the
@@ -429,7 +426,7 @@ class GP(BaseAsyncBO):
         self,
         n_points: int = DEFAULT_N_POINTS,
         liar_strategy: str = "cl_min",
-        distributed_scoring: bool = False,
+        distributed_scoring: bool | None = None,
         acq_fun: str = "EI",
         acq_fun_kwargs: dict | None = None,
         acq_optimizer: str = "sampling",
@@ -437,6 +434,12 @@ class GP(BaseAsyncBO):
         **kw,
     ):
         super().__init__(**kw)
+        if distributed_scoring is not None:
+            warnings.warn(
+                "GP(distributed_scoring=...) is deprecated and does nothing: candidates are scored on the driver",
+                DeprecationWarning,
+                stacklevel=2,
+            )
         self.n_points = n_points
         if liar_strategy not in ("cl_min", "cl_max", "cl_mean", "kb"):
             raise ValueError(f"unknown liar strategy {liar_strategy!r} (gp.py:345-373)")
@@ -449,15 +452,11 @@ class GP(BaseAsyncBO):
         self.acq_fun_kwargs = dict(acq_fun_kwargs or {})
         self.acq_optimizer = acq_optimizer
         self.n_restarts_optimizer = n_restarts_optimizer
-        self.distributed_scoring = distributed_scoring
-        self.spark = None  # set by the experiment loop when available
         self._busy: list[tuple[str, dict]] = []  # (trial_id, params)
-        self._suggest_calls = 0
 
     def _initialize(self) -> None:
         super()._initialize()
         self._busy = []
-        self._suggest_calls = 0
 
     def suggest_model_params(self) -> dict:
         # multi-fidelity: train on the biggest budget with enough data;
@@ -507,31 +506,28 @@ class GP(BaseAsyncBO):
         model = _GPModel()
         model.fit(X, y)
         y_best = float(y.min())
-        if self.acq_fun == "EI" and self.distributed_scoring and self.spark is not None:
-            best = self._argmax_ei_distributed(model, y_best, augmented=interim_fit)
+        n_cand = min(self.n_points, self.MAX_TS_CANDIDATES) if self.acq_fun == "asy_ts" else self.n_points
+        cand = self._nprng.random((n_cand, len(self.searchspace)))
+        if interim_fit:
+            # acquire at max budget: candidates are [x, z=1]
+            # (reference gp.py:200-204); lbfgs then refines over
+            # the augmented box like the reference's bounds list
+            # (gp.py:224-232)
+            cand = np.hstack([cand, np.ones((n_cand, 1))])
+        util = self._utility(model, cand, y_best)
+        if self.acq_optimizer == "lbfgs" and self.acq_fun != "asy_ts":
+            # asy_ts re-draws a fresh posterior sample per evaluation
+            # (the reference falls back to approx_grad for the same
+            # reason, gp.py:220-227); gradient steps on noise are
+            # meaningless, so TS stays pure-sampling here
+            starts = cand[np.argsort(-util)[: self.n_restarts_optimizer]]
+            # the budget coordinate is NOT free: trials always run
+            # at full budget, so refinement must hold z = 1 (else
+            # gradient ascent optimizes EI at a lower fidelity and
+            # the z it chose is silently dropped)
+            best = self._refine(model, starts, y_best, n_free=len(self.searchspace))
         else:
-            n_cand = min(self.n_points, self.MAX_TS_CANDIDATES) if self.acq_fun == "asy_ts" else self.n_points
-            cand = self._nprng.random((n_cand, len(self.searchspace)))
-            if interim_fit:
-                # acquire at max budget: candidates are [x, z=1]
-                # (reference gp.py:200-204); lbfgs then refines over
-                # the augmented box like the reference's bounds list
-                # (gp.py:224-232)
-                cand = np.hstack([cand, np.ones((n_cand, 1))])
-            util = self._utility(model, cand, y_best)
-            if self.acq_optimizer == "lbfgs" and self.acq_fun != "asy_ts":
-                # asy_ts re-draws a fresh posterior sample per evaluation
-                # (the reference falls back to approx_grad for the same
-                # reason, gp.py:220-227); gradient steps on noise are
-                # meaningless, so TS stays pure-sampling here
-                starts = cand[np.argsort(-util)[: self.n_restarts_optimizer]]
-                # the budget coordinate is NOT free: trials always run
-                # at full budget, so refinement must hold z = 1 (else
-                # gradient ascent optimizes EI at a lower fidelity and
-                # the z it chose is silently dropped)
-                best = self._refine(model, starts, y_best, n_free=len(self.searchspace))
-            else:
-                best = cand[int(np.argmax(util))]
+            best = cand[int(np.argmax(util))]
         # inverse_transform drops the augmented budget column, like the
         # reference's inverse_transform after clipping (gp.py:256-261)
         best = best[: len(self.searchspace)]
@@ -599,75 +595,6 @@ class GP(BaseAsyncBO):
             if ux > best_u:
                 best_x, best_u = x, ux
         return best_x
-
-    def _argmax_ei_distributed(self, model: "_GPModel", y_best: float, n_parts: int = 16, augmented: bool = False):
-        """EI argmax over the candidate pool as a Spark job: each task
-        draws its deterministic slice of candidates (seeded by slice
-        id), scores them vectorized, and emits only its local argmax;
-        the driver reduces 16 rows."""
-        import pandas as pd
-
-        d = len(self.searchspace)
-        per_part = max(1, self.n_points // n_parts)
-        # per-call seed base: the candidate pool must VARY across
-        # suggestions (the driver path's rng advances naturally);
-        # seeded runs stay deterministic via the call counter,
-        # unseeded runs draw the base from the session rng
-        self._suggest_calls += 1
-        seed_base = (
-            self.seed * 1_000_003 + self._suggest_calls * 7919
-            if self.seed is not None
-            else int(self._nprng.integers(2**31))
-        )
-        state = {
-            "X": model.X.tolist(), "chol": model._chol.tolist(),
-            "alpha": model._alpha.tolist(), "ls": model.ls,
-            "y_mean": model.y_mean, "y_std": model.y_std,
-            "seed": seed_base, "per_part": per_part, "d": d, "y_best": y_best,
-            # multi-fidelity: candidates carry the budget column at
-            # z = 1 (acquire at max budget, gp.py:200-204)
-            "aug": bool(augmented),
-        }
-
-        from pathlib import Path
-
-        pkg_path = str(Path(__file__).resolve().parent.parent)
-
-        def score(batches):
-            import sys as _sys
-
-            import numpy as _np
-            import pandas as pd
-
-            if pkg_path not in _sys.path:
-                _sys.path.insert(0, pkg_path)
-            from maggy_spark.bayes import expected_improvement, matern52
-
-            Xtr = _np.array(state["X"]); L = _np.array(state["chol"])
-            alpha = _np.array(state["alpha"])
-            for pdf in batches:
-                for pid in pdf["id"]:
-                    rng = _np.random.default_rng(state["seed"] + int(pid))
-                    cand = rng.random((state["per_part"], state["d"]))
-                    if state["aug"]:
-                        cand = _np.hstack([cand, _np.ones((len(cand), 1))])
-                    Ks = matern52(cand, Xtr, state["ls"])
-                    mu = Ks @ alpha * state["y_std"] + state["y_mean"]
-                    v = _np.linalg.solve(L, Ks.T)
-                    sigma = _np.sqrt(_np.maximum(1.0 - (v**2).sum(0), 1e-12)) * state["y_std"]
-                    ei = expected_improvement(mu, sigma, state["y_best"])
-                    b = int(_np.argmax(ei))
-                    yield pd.DataFrame([{"ei": float(ei[b]),
-                                         "x": ",".join(map(repr, cand[b]))}])
-
-        rows = (
-            self.spark.range(n_parts)
-            .repartition(n_parts)
-            .mapInPandas(score, "ei double, x string")
-            .collect()
-        )
-        best = max(rows, key=lambda r: r.ei)
-        return [float(t) for t in best.x.split(",")]
 
     def _on_emit(self, trial: Trial) -> None:
         # every emitted trial joins the busy set the moment it exists,

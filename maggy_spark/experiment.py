@@ -11,6 +11,9 @@ trials it already holds — no RPC server, no reservation registry, no
 digestion threads. Ablation studies run through the same lifecycle
 (`_run_trials`) behind a controller adapter (ablation.py), as the
 reference's ablation driver subclasses its HPO driver (SURVEY.md §3.2).
+MLlib tuning (`mllib_bridge.fit_with_lagom`) runs through it too, with
+a driver-side runner that fits each estimator in place of the Spark
+task runner.
 
 Asynchrony note (SURVEY.md §7.3b): the reference assigns a new trial
 the instant one finishes; `scheduling="async"` does the same.
@@ -183,6 +186,13 @@ def _apply_result(controller, trial: Trial, r: dict, seq: int) -> None:
 
 
 def _run_hpo(train_fn: Callable, config: HyperparameterOptConfig, spark: SparkSession) -> dict:
+    controller, parallelism = _init_hpo(config, spark)
+    return _run_trials(train_fn, config, spark, controller, parallelism, config.scheduling)
+
+
+def _init_hpo(config: HyperparameterOptConfig, spark: SparkSession) -> tuple[Any, int]:
+    """Validate an HPO config and initialize its controller for this
+    run; returns (controller, parallelism)."""
     controller = get_controller(config.optimizer)
     if config.pruner is not None:
         # config-level pruner attaches to whatever optimizer was chosen
@@ -209,19 +219,21 @@ def _run_hpo(train_fn: Callable, config: HyperparameterOptConfig, spark: SparkSe
         pruner=config.pruner,
         pruner_kwargs=config.pruner_kwargs,
     )
-    controller.spark = spark  # controllers may fan work out (e.g. GP distributed scoring)
-    parallelism = config.parallelism or spark.sparkContext.defaultParallelism
-    return _run_trials(train_fn, config, spark, controller, parallelism, config.scheduling)
+    return controller, config.parallelism or spark.sparkContext.defaultParallelism
 
 
 def _run_trials(
-    train_fn, config, spark, controller, parallelism, scheduling, payload=None, finish=None
+    train_fn, config, spark, controller, parallelism, scheduling, payload=None, finish=None, runner=None
 ) -> dict:
     """The experiment lifecycle after the controller is initialized,
-    shared by HPO and ablation: experiment dir and live store, `_drive`,
-    the A1 summary with best/worst config, then `finish(result)` (the
-    caller's own result keys) and the S5/S6 persist under log_dir.
-    `payload` is passed on to `_drive`."""
+    shared by HPO, ablation and MLlib tuning: experiment dir and live
+    store, `_drive`, the A1 summary with best/worst config, then
+    `finish(result)` (the caller's own result keys) and the S5/S6
+    persist under log_dir.
+
+    `runner(trial, stop_src) -> row` runs one trial; by default it is
+    `_spark_runner` over `train_fn`, whose tasks receive
+    `payload(trial)` as their (hparams, extras)."""
     rule = _es_rule(config)  # reject an unsupported policy before any work
     store = None
     exp_dir = None
@@ -237,9 +249,9 @@ def _run_trials(
             store = ExperimentStore(spark, exp_dir + "/live", direction=config.direction)
 
     t_start = time.time()
-    all_trials, waves = _drive(
-        train_fn, config, spark, controller, parallelism, scheduling, store, exp_dir, payload, rule
-    )
+    if runner is None:
+        runner = _spark_runner(train_fn, config, spark, exp_dir, payload)
+    all_trials, waves = _drive(runner, config, controller, parallelism, scheduling, store, rule)
 
     result = _aggregate_result(all_trials, config.direction)
     result["duration_sec"] = round(time.time() - t_start, 3)
@@ -283,55 +295,19 @@ def _tb_base(config) -> str:
     return os.path.join(base, f"{config.name}_tb")
 
 
-def _drive(
-    train_fn, config, spark, controller, parallelism, scheduling, store=None, exp_dir=None, payload=None, rule=None
-) -> tuple[list[Trial], int]:
-    """The dispatch loop: a driver thread pool keeps up to `parallelism`
-    trials in flight, each as its own single-task Spark job in the
-    'maggy' scheduler pool (SURVEY.md §7.3b), without the reference's
-    socket plane. `scheduling` picks only the refill rule:
-
-    - "wave" refills only once the pool is empty, with one
-      next_batch(parallelism) call and one stop source per wave. It
-      applies results, assigns `seq` and appends to the live store in
-      submission order once the whole wave has settled, so one seed
-      gives one result however the trials finish.
-    - "async" refills a slot the moment its trial settles
-      (`optimization_driver.py:519-541`) and applies results in
-      completion order. In-flight trials re-read a bar file that the
-      driver republishes as trials settle — the reference re-evaluates
-      its rule at every METRIC heartbeat (`optimization_driver.py:
-      456-471`).
-
-    `payload(trial)` gives the (hparams, extras) a trial's task
-    receives; by default (trial.params, None). `rule` is the early-stop
-    rule (`_es_rule`), or None.
-
-    Returns (trials in `seq` order, waves run in wave mode or jobs run
-    in async mode)."""
-    import os
-    from concurrent.futures import ALL_COMPLETED, FIRST_COMPLETED, ThreadPoolExecutor, wait
-
+def _spark_runner(train_fn, config, spark, exp_dir, payload=None) -> Callable:
+    """The Spark task runner: `run_one(trial, stop_src)` runs one trial
+    as its own single-task `run_trial_wave` job in the 'maggy'
+    scheduler pool and returns its result row. `payload(trial)` gives
+    the (hparams, extras) the task receives; by default
+    (trial.params, None)."""
     from maggy_spark.executor import _dumps_by_value
 
-    wave_mode = scheduling != "async"
     # serialized ONCE per experiment: per-call _dumps_by_value would redo
     # the closure walk + cloudpickle registry dance (under a global
     # lock) for every trial
     fn_bytes = _dumps_by_value(train_fn)
-    # the rule travels the same way, pickled once per run: a rule reused
-    # across experiments ships whatever state it holds at this run
-    rule_bytes = None if rule is None else _dumps_by_value(rule)
     tb_base = _tb_base(config)
-    # Under log_dir the bar file is on the experiment's (shared)
-    # storage; tmpdir in local mode.
-    bar_path = None
-    if not wave_mode and rule_bytes is not None:
-        import tempfile
-
-        base = config.log_dir or tempfile.gettempdir()
-        os.makedirs(base, exist_ok=True)
-        bar_path = os.path.join(base, f".maggy_bar_{config.name}_{os.getpid()}_{id(controller):x}.json")
 
     def run_one(trial: Trial, stop_src: str | None) -> dict:
         spark.sparkContext.setLocalProperty("spark.scheduler.pool", "maggy")
@@ -350,6 +326,55 @@ def _drive(
         )
         return r
 
+    return run_one
+
+
+def _drive(runner, config, controller, parallelism, scheduling, store=None, rule=None) -> tuple[list[Trial], int]:
+    """The dispatch loop: a driver thread pool keeps up to `parallelism`
+    trials in flight, each run by `runner(trial, stop_src) -> row`, where
+    the row has `run_trial_wave`'s shape (trial_id, final_metric,
+    metric_history, step_history, early_stop, error, logs, duration_ms)
+    and a failed trial carries its `error` instead of raising. For
+    lagom the runner is `_spark_runner`, one single-task Spark job per
+    trial in the 'maggy' scheduler pool (SURVEY.md §7.3b), without the
+    reference's socket plane. `scheduling` picks only the refill rule:
+
+    - "wave" refills only once the pool is empty, with one
+      next_batch(parallelism) call and one stop source per wave. It
+      applies results, assigns `seq` and appends to the live store in
+      submission order once the whole wave has settled, so one seed
+      gives one result however the trials finish.
+    - "async" refills a slot the moment its trial settles
+      (`optimization_driver.py:519-541`) and applies results in
+      completion order. In-flight trials re-read a bar file that the
+      driver republishes as trials settle — the reference re-evaluates
+      its rule at every METRIC heartbeat (`optimization_driver.py:
+      456-471`).
+
+    `rule` is the early-stop rule (`_es_rule`), or None; `stop_src` is
+    then always None.
+
+    Returns (trials in `seq` order, waves run in wave mode or jobs run
+    in async mode)."""
+    import os
+    from concurrent.futures import ALL_COMPLETED, FIRST_COMPLETED, ThreadPoolExecutor, wait
+
+    from maggy_spark.executor import _dumps_by_value
+
+    wave_mode = scheduling != "async"
+    # the rule is pickled once per run: a rule reused across
+    # experiments ships whatever state it holds at this run
+    rule_bytes = None if rule is None else _dumps_by_value(rule)
+    # Under log_dir the bar file is on the experiment's (shared)
+    # storage; tmpdir in local mode.
+    bar_path = None
+    if not wave_mode and rule_bytes is not None:
+        import tempfile
+
+        base = config.log_dir or tempfile.gettempdir()
+        os.makedirs(base, exist_ok=True)
+        bar_path = os.path.join(base, f".maggy_bar_{config.name}_{os.getpid()}_{id(controller):x}.json")
+
     all_trials: list[Trial] = []
     rounds = 0
     limit, unit = (10_000, "wave") if wave_mode else (100_000, "job")
@@ -365,7 +390,7 @@ def _drive(
                         break
                     stop_src = None if rule_bytes is None else _stop_source(controller, config, rule_bytes, bar_path)
                     for t in batch:
-                        in_flight[pool.submit(run_one, t, stop_src)] = t
+                        in_flight[pool.submit(runner, t, stop_src)] = t
                     rounds += 1
                 if not in_flight:
                     # the controller is done or ran dry (e.g. a custom

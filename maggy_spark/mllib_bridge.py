@@ -7,14 +7,15 @@ Two integration points:
   `TrainValidationSplit` (DISCRETE/CATEGORICAL verbatim; continuous
   hparams are lattice-sampled with `num_points`).
 - `fit_with_lagom`: our controllers (random/ASHA/GP/TPE) drive MLlib
-  estimator fits. Each fit is itself a distributed Spark job, so
-  trials run driver-threaded (FAIR-pool style) rather than inside a
-  trial task — two nested levels of Spark parallelism.
+  estimator fits as trials of lagom's one dispatch loop
+  (`experiment._drive`). Each fit is itself a distributed Spark job,
+  so its runner fits on the driver thread (FAIR-pool style) rather
+  than inside a trial task — two nested levels of Spark parallelism.
 """
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
+import time
 from typing import Any
 
 from maggy_spark.searchspace import CATEGORICAL, DISCRETE, DOUBLE, INTEGER, Searchspace
@@ -101,58 +102,52 @@ def fit_with_lagom(
 ) -> dict:
     """Drive MLlib fits with a maggy controller.
 
-    `estimator_factory(params) -> Estimator`; each wave's fits run in
-    a driver thread pool — each fit is a distributed Spark job (use a
-    FAIR scheduler pool on a shared cluster). The result dict matches
-    `lagom`'s.
+    `estimator_factory(params) -> Estimator`. Each fit is a trial of
+    lagom's dispatch loop (`experiment._drive`), wave-refilled with
+    early stopping off, run on a driver thread in the 'maggy'
+    scheduler pool (use a FAIR scheduler on a shared cluster). A fit
+    or evaluation that raises becomes an ERROR row and the other
+    trials go on. The result dict is `lagom`'s.
     """
-    from maggy_spark.optimizers import get_controller
+    from maggy_spark.config import HyperparameterOptConfig
+    from maggy_spark.experiment import _init_hpo, _run_trials
 
-    controller = get_controller(optimizer)
-    controller.initialize(searchspace=searchspace, num_trials=num_trials, direction=direction, seed=seed)
+    spark = train_df.sparkSession
+    config = HyperparameterOptConfig(
+        num_trials=num_trials,
+        optimizer=optimizer,
+        searchspace=searchspace,
+        direction=direction,
+        es_policy="none",
+        seed=seed,
+        parallelism=parallelism,
+        scheduling="wave",
+    )
+    controller, parallelism = _init_hpo(config, spark)
 
-    results: list[Trial] = []
-
-    def run_one(trial: Trial) -> Trial:
+    def run_fit(trial: Trial, stop_src: str | None) -> dict:
         # concurrent fits share executors fairly when the session runs
         # spark.scheduler.mode=FAIR; harmless under FIFO
-        train_df.sparkSession.sparkContext.setLocalProperty("spark.scheduler.pool", "maggy")
-        est = estimator_factory(trial.params)
-        model = est.fit(train_df)
-        metric = float(evaluator.evaluate(model.transform(val_df)))
-        trial.finalize(metric)
-        return trial
+        spark.sparkContext.setLocalProperty("spark.scheduler.pool", "maggy")
+        t0 = time.time()
+        metric = error = None
+        try:
+            model = estimator_factory(trial.params).fit(train_df)
+            metric = float(evaluator.evaluate(model.transform(val_df)))
+        except Exception as e:  # noqa: BLE001 - errors become ERROR rows
+            error = f"{type(e).__name__}: {e}"
+        return {
+            "trial_id": trial.trial_id, "final_metric": metric, "metric_history": [], "step_history": [],
+            "early_stop": False, "error": error, "logs": [], "duration_ms": int((time.time() - t0) * 1000),
+        }
 
-    seq = 0
-    while not controller.done():
-        wave = controller.next_batch(parallelism)
-        if not wave:
-            break
-        with ThreadPoolExecutor(max_workers=parallelism) as pool:
-            for t in pool.map(run_one, wave):
-                seq += 1
-                t.info_dict["seq"] = seq
-                controller.finalize_trial(t)
-                results.append(t)
-
-    if not results:
+    result = _run_trials(None, config, spark, controller, parallelism, "wave", runner=run_fit)
+    if not result["num_waves"]:
         raise ValueError(
             "controller produced no trials (num_trials=0 or done() was "
             "immediately true) — nothing to fit"
         )
-    sign = -1.0 if direction == "min" else 1.0
-    ordered = sorted(results, key=lambda t: sign * t.final_metric, reverse=True)
-    best, worst = ordered[0], ordered[-1]
-    return {
-        "best_id": best.trial_id,
-        "best_val": best.final_metric,
-        "best_config": dict(best.params),
-        "worst_id": worst.trial_id,
-        "worst_val": worst.final_metric,
-        "avg": sum(t.final_metric for t in results) / len(results),
-        "num_trials": len(results),
-        "early_stopped": 0,
-    }
+    return result
 
 
 def minhash_lsh_near_dup(

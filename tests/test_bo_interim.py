@@ -137,19 +137,20 @@ def test_gp_interim_e2e(spark):
     assert res["best_val"] < 0.1
 
 
-def test_gp_interim_distributed_scoring(spark):
-    """distributed_scoring with interim_results: workers score
-    budget-augmented candidates at z = 1 and the suggestion still
-    decodes to the plain searchspace box."""
-    gp = GP(
-        n_points=256,
-        num_warmup_trials=0,
-        interim_results=True,
-        interim_results_interval=2,
-        distributed_scoring=True,
-    )
+def test_gp_interim_distributed_scoring():
+    """The deprecated distributed_scoring flag warns and is a no-op
+    under interim_results: budget-augmented candidates are scored on
+    the driver at z = 1 and the suggestion still decodes to the plain
+    searchspace box."""
+    with pytest.warns(DeprecationWarning, match="distributed_scoring"):
+        gp = GP(
+            n_points=256,
+            num_warmup_trials=0,
+            interim_results=True,
+            interim_results_interval=2,
+            distributed_scoring=True,
+        )
     gp.initialize(Searchspace(x=("DOUBLE", [0.0, 1.0])), 10, "min", 5)
-    gp.spark = spark
     rng = np.random.default_rng(4)
     for i in range(4):
         t = Trial({"x": float(rng.random())})

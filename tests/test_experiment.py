@@ -594,3 +594,62 @@ def test_stalled_controller_warns(spark, caplog):
     warnings = [r for r in caplog.records if r.name == "maggy_spark" and r.levelno == logging.WARNING]
     assert len(warnings) == 1
     assert "RandomSearch" in warnings[0].getMessage() and "2 of 10" in warnings[0].getMessage()
+
+
+@pytest.mark.parametrize("scheduling", ["wave", "async"])
+def test_drive_runs_a_fake_runner_without_spark(monkeypatch, scheduling):
+    """`_drive` only schedules: with an in-process runner and no
+    SparkSession, every RandomSearch trial settles exactly once, `seq`
+    runs 1..8, and the third emitted trial, whose fake training raises,
+    ends as an ERROR row."""
+    import threading
+    import time
+    from collections import Counter
+
+    from maggy_spark import experiment
+
+    def no_spark(*args, **kwargs):
+        raise AssertionError("_drive started a Spark job")
+
+    monkeypatch.setattr(experiment, "run_trial_wave", no_spark)
+    controller = RandomSearch()
+    controller.initialize(Searchspace(x=("DOUBLE", [0.0, 1.0])), num_trials=8, direction="max", seed=5)
+    emitted = []
+    next_batch = controller.next_batch
+
+    def recording_next_batch(n):
+        batch = next_batch(n)
+        emitted.extend(batch)
+        return batch
+
+    monkeypatch.setattr(controller, "next_batch", recording_next_batch)
+    calls = Counter()
+    lock = threading.Lock()
+
+    def runner(trial, stop_src):
+        # the runner contract: a trial that raises comes back as a row
+        # carrying its error, like run_trial_wave's rows
+        with lock:
+            calls[trial.trial_id] += 1
+        time.sleep(0.02 * trial.params["x"])  # finish out of submission order
+        metric = error = None
+        try:
+            if trial is emitted[2]:
+                raise RuntimeError("boom")
+            metric = trial.params["x"]
+        except RuntimeError as e:
+            error = f"{type(e).__name__}: {e}"
+        return {"trial_id": trial.trial_id, "final_metric": metric, "metric_history": [], "step_history": [],
+                "early_stop": False, "error": error, "logs": [], "duration_ms": 1}
+
+    config = HyperparameterOptConfig(es_policy="none", name="fake_runner")
+    trials, rounds = experiment._drive(runner, config, controller, 3, scheduling)
+
+    assert len(emitted) == 8 and {t.trial_id for t in trials} == {t.trial_id for t in emitted}
+    assert set(calls.values()) == {1} and len(calls) == 8
+    assert [t.info_dict["seq"] for t in trials] == list(range(1, 9))
+    assert rounds == (3 if scheduling == "wave" else 8)
+    [failed] = [t for t in trials if t.status == "ERROR"]
+    assert failed is emitted[2] and failed.info_dict["error"] == "RuntimeError: boom"
+    assert all(t.status == "FINALIZED" and t.final_metric == t.params["x"] for t in trials if t is not failed)
+    assert len(controller.final_store) == 7 and controller.done()

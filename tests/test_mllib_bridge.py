@@ -160,3 +160,98 @@ def test_brp_lsh_finds_planted_euclidean_dup(spark):
     pairs = {(r.id_a, r.id_b): r.euclidean_dist for r in brp_lsh_near_dup(df, distance_threshold=1.0).collect()}
     assert (1, 2) in pairs and pairs[(1, 2)] == pytest.approx(0.1, abs=1e-6)
     assert all(k == (1, 2) for k in pairs)  # the far vector never pairs
+
+
+# -- fit_with_lagom runs its fits through lagom's dispatch loop ---------
+# Stub estimator/evaluator: fit(params) sleeps delays[x] and raises for
+# x == fail; the evaluator reads the metric for x. No MLlib fit runs.
+
+
+class _StubModel:
+    def __init__(self, x):
+        self.x = x
+
+    def transform(self, df):
+        return self.x
+
+
+class _StubEstimator:
+    def __init__(self, params, delays, fail):
+        self.x, self.delays, self.fail = params["x"], delays, fail
+
+    def fit(self, df):
+        import time
+
+        time.sleep(self.delays[self.x])
+        if self.x == self.fail:
+            raise RuntimeError("boom")
+        return _StubModel(self.x)
+
+
+class _StubEvaluator:
+    def __init__(self, metrics):
+        self.metrics = metrics
+
+    def evaluate(self, x):
+        return self.metrics[x]
+
+
+GRID = Searchspace(x=("DISCRETE", [0, 1, 2, 3]))
+
+
+def _stub_fit(spark, metrics, delays=(0, 0, 0, 0), fail=None, **kw):
+    df = spark.range(1)
+    kw = {"optimizer": "gridsearch", "num_trials": 4, **kw}
+    return fit_with_lagom(
+        lambda params: _StubEstimator(params, delays, fail), _StubEvaluator(metrics), GRID, df, df, **kw
+    )
+
+
+def test_fit_with_lagom_raising_fit_is_an_error_row(spark):
+    """One raising fit among four grid trials becomes an ERROR row; the
+    other three settle and the run returns."""
+    res = _stub_fit(spark, [1.0, 4.0, 2.0, 3.0], fail=2, parallelism=2)
+    assert res["errors"] == 1 and res["num_trials"] == 3
+    assert (res["best_config"], res["best_val"]) == ({"x": 1}, 4.0)
+    assert (res["worst_config"], res["worst_val"]) == ({"x": 0}, 1.0)
+    assert res["avg"] == pytest.approx(8.0 / 3)
+    assert res["num_waves"] == 2 and res["duration_sec"] >= 0
+
+
+def test_fit_with_lagom_ranks_like_aggregate_result(spark):
+    """A NaN metric is ranked by `_aggregate_result`'s rule, over trials
+    in grid (submission) order, whichever order the fits finish in."""
+    import math
+
+    from maggy_spark.experiment import _aggregate_result
+    from maggy_spark.trial import Trial
+
+    metrics = [1.0, 3.0, 2.0, math.nan]
+    expected_trials = []
+    for seq, (x, m) in enumerate(zip(GRID.get("x"), metrics), start=1):
+        t = Trial({"x": x})
+        t.finalize(m)
+        t.info_dict["seq"] = seq
+        expected_trials.append(t)
+    expected = _aggregate_result(expected_trials, "max")
+
+    def plain(d):
+        return {k: "nan" if isinstance(v, float) and math.isnan(v) else v for k, v in d.items()}
+
+    runs = [
+        _stub_fit(spark, metrics, delays=delays, parallelism=4)
+        for delays in ((0.0, 0.05, 0.1, 0.15), (0.15, 0.1, 0.05, 0.0))
+    ]
+    for res in runs:
+        assert plain({k: res[k] for k in expected}) == plain(expected)
+        assert res["best_config"] == {"x": 3} and res["worst_config"] == {"x": 0}
+    assert plain({k: v for k, v in runs[0].items() if k != "duration_sec"}) == plain(
+        {k: v for k, v in runs[1].items() if k != "duration_sec"}
+    )
+
+
+def test_fit_with_lagom_rejects_unknown_direction(spark):
+    """The controller and the result read one direction, so a value
+    that is neither 'min' nor 'max' is rejected before any fit."""
+    with pytest.raises(ValueError, match="direction"):
+        _stub_fit(spark, [1.0, 2.0, 3.0, 4.0], direction="minimize")
