@@ -4,8 +4,9 @@ Reference semantics (SURVEY.md §2.2 G6-G9):
 - Async BO base loop (`maggy/optimizer/bayes/base.py:170-313`):
   warmup buffer of random configs, epsilon-random fraction, surrogate
   update from finalized trials, acquisition-optimized sampling,
-  dedup with <=3 random retries (`base.py:288-301`), busy-location
-  imputation via constant liar (`gp.py:329-373`).
+  dedup by one `_draw_unseen` redraw of at most MAX_DEDUP_RETRIES + 1
+  draws (`base.py:288-301`), busy-location imputation via constant
+  liar (`gp.py:329-373`).
 - GP surrogate (`bayes/gp.py:266-327`): Matern nu=2.5 kernel with
   normalize_y and gaussian noise; acquisition EI over `n_points`
   sampled candidates (`gp.py:183-264` "sampling" routine).
@@ -23,12 +24,11 @@ Spark (executor.py), matching the reference's division of labor.
 from __future__ import annotations
 
 import math
-import random
 import warnings
 
 import numpy as np
 
-from maggy_spark.optimizers import MAX_DEDUP_RETRIES, AbstractOptimizer
+from maggy_spark.optimizers import AbstractOptimizer
 from maggy_spark.searchspace import CATEGORICAL, DISCRETE
 from maggy_spark.trial import Trial
 
@@ -66,17 +66,13 @@ class BaseAsyncBO(AbstractOptimizer):
                 f"interim_results_interval must be >= 1, got {interim_results_interval}"
             )
         self.interim_results_interval = int(interim_results_interval)
-        self._rng: random.Random | None = None
         self._nprng: np.random.Generator | None = None
         self._emitted = 0
-        self._draws = 0  # total random draws, incl. dedup retries
 
     def _initialize(self) -> None:
-        self._rng = random.Random(self.seed)
         self._nprng = np.random.default_rng(self.seed)
         # reset per-run state (instances may be reused across lagom calls)
         self._emitted = 0
-        self._draws = 0
         # effective warmup for THIS run: clamp a copy, not the
         # configured value — a reused controller initialized for a
         # small run must not carry the smaller warmup into a later,
@@ -189,15 +185,6 @@ class BaseAsyncBO(AbstractOptimizer):
         sufficient = [b for b, n in counts.items() if n >= self.min_model_trials()]
         return max(sufficient) if sufficient else None
 
-    def _random_params(self) -> dict:
-        # seed advances with EVERY draw (not just emitted trials), so
-        # dedup retries actually redraw instead of repeating the same
-        # seeded sample three times
-        self._draws += 1
-        return self.searchspace.get_random_parameter_values(
-            1, seed=None if self.seed is None else self.seed * 100_003 + self._draws
-        )[0]
-
     def _emit(self, params: dict, sample_type: str) -> Trial:
         t = Trial(params, info_dict={"sample_type": sample_type})
         self._on_emit(t)
@@ -211,24 +198,23 @@ class BaseAsyncBO(AbstractOptimizer):
         return len(self.searchspace) + 1
 
     def _suggest_one(self) -> tuple[dict, str] | None:
-        """One warmup/ε-random/model suggestion with the <=3-retry
-        dedup guard (base.py:232-301); None = searchspace exhausted.
-        Shared by the single-fidelity loop and pruner slot fills."""
-        n_done = len(self.final_store)
-        if self._emitted < self._warmup or n_done < self.min_model_trials():
-            params, stype = self._random_params(), "random"
-        elif self._rng.random() < self.random_fraction:
+        """One warmup/ε-random/model suggestion; a candidate already
+        seen is replaced by one `_draw_unseen` redraw
+        (base.py:232-301), None when that finds nothing (searchspace
+        exhausted). Shared by the single-fidelity loop and pruner slot
+        fills."""
+        if (
+            self._emitted < self._warmup
+            or len(self.final_store) < self.min_model_trials()
+            or self._sampler.random() < self.random_fraction
+        ):
             params, stype = self._random_params(), "random"
         else:
             params, stype = self.suggest_model_params(), "model"
-        retries = 0
-        while self.hparams_exist(params) and retries < MAX_DEDUP_RETRIES:
-            params = self._random_params()
-            stype = "random_forced"
-            retries += 1
-        if self.hparams_exist(params):
-            return None  # searchspace exhausted (base.py:288-301)
-        return params, stype
+        if not self.hparams_exist(params):
+            return params, stype
+        forced = self._draw_unseen()
+        return (forced[0], "random_forced") if forced else None
 
     def _next_batch(self, max_trials: int) -> list[Trial]:
         out: list[Trial] = []

@@ -483,12 +483,7 @@ def _aggregate_result(trials: list[Trial], direction: str) -> dict:
     trials_to_df; NaN orders above every number, as Spark orders
     doubles.
     """
-    if not trials:
-        return {"num_trials": 0, "early_stopped": 0}
     finalized = [(t.info_dict.get("seq", i), t) for i, t in enumerate(trials) if t.status == Trial.FINALIZED]
-    if not finalized:
-        errs = sum(t.status == Trial.ERROR for t in trials)
-        return {"num_trials": len(trials), "errors": errs, "early_stopped": 0}
     early_stopped = sum(bool(t.early_stop) for _, t in finalized)
     scored = [(seq, t.trial_id, float(t.final_metric)) for seq, t in finalized if t.final_metric is not None]
     if not scored:

@@ -17,8 +17,12 @@ Reference semantics:
 - Hyperband: a pruner, not a controller (`pruner/hyperband.py`); the
   name "hyperband" is RandomSearch with `pruner.HyperbandPruner`
   attached.
+- Random draws: every controller draws from one `random.Random(seed)`
+  stream per run (`_random_params`), so one seed gives one run and
+  adjacent seeds share no draws.
 - Dedup guard: a candidate whose params (ex budget) equal a
-  finished/running trial's is rejected; random retry <= 3
+  finished/running trial's is rejected and redrawn by `_draw_unseen`,
+  at most n * (MAX_DEDUP_RETRIES + 1) draws for n configs
   (`abstractoptimizer.py:254-295`, `bayes/base.py:288-301`).
 """
 
@@ -112,6 +116,8 @@ class AbstractOptimizer(ABC):
         self.num_trials = num_trials
         self.direction = direction
         self.seed = seed
+        # the run's one draw stream: a reused instance replays its draws
+        self._sampler = random.Random(seed)
         # a controller instance may be reused across lagom() calls
         # (get_controller accepts instances): reset accumulated state
         # or the second run sees done()==True immediately and every
@@ -221,17 +227,9 @@ class AbstractOptimizer(ABC):
             if src_id:
                 params, stype = dict(self._pruned_params[src_id]), "promoted"
             else:
-                sug = self._suggest_one()
-                if sug is None:
-                    # slot already allocated in the rung ledger: fill it
-                    # with an unconditional random rather than stalling
-                    sug = (
-                        self.searchspace.get_random_parameter_values(
-                            1, seed=None if self.seed is None else self.seed + len(self._pruned_params) + 7
-                        )[0],
-                        "random_forced",
-                    )
-                params, stype = sug
+                # a slot already allocated in the rung ledger is filled
+                # with an unconditional random rather than stalling
+                params, stype = self._suggest_one() or (self._random_params(), "random_forced")
             t = Trial(
                 {**params, "budget": budget},
                 info_dict={"sample_type": stype, "budget": budget},
@@ -271,7 +269,26 @@ class AbstractOptimizer(ABC):
             return self.pruner.finished()
         return len(self.final_store) + self.n_errors >= self.num_trials
 
-    # -- dedup guard (G12) ---------------------------------------------
+    # -- random draws and the dedup guard (G1, G12) --------------------
+
+    def _random_params(self) -> dict:
+        """One uniform config from the run's draw stream: every random
+        draw a controller makes comes through here."""
+        return self.searchspace.get_random_parameter_values(1, seed=self._sampler.getrandbits(64))[0]
+
+    def _draw_unseen(self, n: int = 1) -> list[dict]:
+        """Up to n random configs never seen before, each marked seen.
+        Makes at most n * (MAX_DEDUP_RETRIES + 1) draws in total, so a
+        space with fewer than n unseen configs yields fewer."""
+        out: list[dict] = []
+        for _ in range(n * (MAX_DEDUP_RETRIES + 1)):
+            if len(out) == n:
+                break
+            params = self._random_params()
+            if not self.hparams_exist(params):
+                self._seen_params.add(self._params_key(params))
+                out.append(params)
+        return out
 
     def _params_key(self, params: dict) -> str:
         clean = {k: v for k, v in params.items() if k != "budget" and not callable(v)}
@@ -418,20 +435,7 @@ class RandomSearch(AbstractOptimizer):
                 "RandomSearch requires at least one continuous (DOUBLE/INTEGER) "
                 "hyperparameter (reference randomsearch.py:30-36)"
             )
-        self._buffer = []
-        rng_seed = self.seed
-        drawn = 0
-        attempts = 0
-        while drawn < self.num_trials and attempts < self.num_trials * (MAX_DEDUP_RETRIES + 1):
-            params = self.searchspace.get_random_parameter_values(
-                1, seed=None if rng_seed is None else rng_seed + attempts
-            )[0]
-            attempts += 1
-            if self.hparams_exist(params):
-                continue
-            t = Trial(params, info_dict={"sample_type": "random"})
-            self._buffer.append(self._register(t))
-            drawn += 1
+        self._buffer = [Trial(p, info_dict={"sample_type": "random"}) for p in self._draw_unseen(self.num_trials)]
 
     def _next_batch(self, max_trials: int) -> list[Trial]:
         out, self._buffer = self._buffer[:max_trials], self._buffer[max_trials:]
@@ -442,15 +446,9 @@ class RandomSearch(AbstractOptimizer):
         drawing fresh randoms (the pruner's rung-0 demand can exceed
         the original buffer when iterations shrink rungs)."""
         if self._buffer:
-            t = self._buffer.pop(0)
-            return dict(t.params), "random"
-        for attempt in range(MAX_DEDUP_RETRIES + 1):
-            params = self.searchspace.get_random_parameter_values(
-                1, seed=None if self.seed is None else self.seed + 104_729 + len(self._seen_params) * 31 + attempt
-            )[0]
-            if not self.hparams_exist(params):
-                return params, "random"
-        return None
+            return dict(self._buffer.pop(0).params), "random"
+        drawn = self._draw_unseen()
+        return (drawn[0], "random") if drawn else None
 
 
 class GridSearch(AbstractOptimizer):
@@ -508,16 +506,12 @@ class Asha(AbstractOptimizer):
         # max rung: largest k with min*eta^k <= max  (asha.py:78-83)
         self.max_rung = exact_smax(resource_min, resource_max, reduction_factor)
         self._promoted: dict[int, set[str]] = {r: set() for r in range(self.max_rung + 1)}
-        self._rng = None
         self._emitted_rung0 = 0
-        self._rung0_draws = 0
 
     def _initialize(self) -> None:
-        self._rng = random.Random(self.seed)
         # reset per-run state (instances may be reused across lagom calls)
         self._promoted = {r: set() for r in range(self.max_rung + 1)}
         self._emitted_rung0 = 0
-        self._rung0_draws = 0
 
     def budget_for_rung(self, rung: int) -> int:
         return self.resource_min * self.eta**rung
@@ -556,28 +550,17 @@ class Asha(AbstractOptimizer):
                 t.trial_id = Trial({**params, "budget": self.budget_for_rung(rung + 1)}).trial_id
                 self._promoted[rung].add(src.trial_id)
                 out.append(t)
-        # fill with rung-0 randoms (asha.py:149-156); the draw counter
-        # salts the seed per attempt, while _emitted_rung0 counts only
-        # trials actually emitted (a dedup skip must not inflate the
-        # done() accounting)
-        attempts = 0
-        while len(out) < max_trials and self._emitted_rung0 < self.num_trials:
-            params = self.searchspace.get_random_parameter_values(
-                1, seed=None if self.seed is None else self.seed + self._rung0_draws
-            )[0]
-            self._rung0_draws += 1
-            attempts += 1
-            if self.hparams_exist(params):
-                if attempts > (MAX_DEDUP_RETRIES + 1) * self.num_trials:
-                    break  # searchspace effectively exhausted
-                continue
-            t = Trial(params, info_dict={
+        # fill with rung-0 randoms (asha.py:149-156); _emitted_rung0
+        # counts only trials actually emitted (a dedup skip must not
+        # inflate the done() accounting)
+        slots = min(max_trials - len(out), self.num_trials - self._emitted_rung0)
+        for params in self._draw_unseen(slots):
+            out.append(Trial(params, info_dict={
                 "sample_type": "random",
                 "rung": 0,
                 "budget": self.budget_for_rung(0),
-            })
+            }))
             self._emitted_rung0 += 1
-            out.append(self._register(t))
         return out
 
     def done(self) -> bool:
@@ -634,29 +617,13 @@ class Pbt(AbstractOptimizer):
         self.num_trials = self.generations * self.population
         self._gen = 0
         self._gen_errors = 0
-        self._buffer = [
-            self._make_trial(params, 0, "random")
-            for params in self._draw_randoms(self.population, salt=0)
-        ]
+        self._buffer = [self._make_trial(p, 0, "random") for p in self._draw_unseen(self.population)]
         # errored trials shrink a generation's settle target — gate on
         # what was actually EMITTED, not the nominal population, or an
         # error-bearing generation waits forever
         self._gen_emitted = len(self._buffer)
 
     # -- generation plumbing -------------------------------------------
-
-    def _draw_randoms(self, n: int, salt: int) -> list[dict]:
-        out, attempts = [], 0
-        while len(out) < n and attempts < n * (MAX_DEDUP_RETRIES + 1) * 4:
-            params = self.searchspace.get_random_parameter_values(
-                1, seed=None if self.seed is None else self.seed + salt * 100_003 + attempts
-            )[0]
-            attempts += 1
-            if self.hparams_exist(params):
-                continue
-            self._seen_params.add(self._params_key(params))
-            out.append(params)
-        return out
 
     def _make_trial(self, params: dict, generation: int, sample_type: str, donor_id: str | None = None) -> Trial:
         info = {"sample_type": sample_type, "generation": generation, "budget": generation}
@@ -683,10 +650,7 @@ class Pbt(AbstractOptimizer):
         perturb DOUBLE params by the coin factor; survivors carry."""
         valid = [t for t in finalized if t.final_metric is not None]
         if not valid:
-            return [
-                self._make_trial(p, generation, "random")
-                for p in self._draw_randoms(self.population, salt=generation)
-            ]
+            return [self._make_trial(p, generation, "random") for p in self._draw_unseen(self.population)]
         # g14's two windows verbatim: rk_best orders metric best-first,
         # rk_worst worst-first, BOTH tie-breaking on trial_id ASC
         ranked = sorted(

@@ -53,6 +53,56 @@ def test_random_search_deterministic_under_seed(spark):
     assert r1["best_val"] == r2["best_val"]
 
 
+SEED_SPACE = {
+    "lr": ("DOUBLE", [1e-4, 1e-1]),
+    "units": ("INTEGER", [8, 256]),
+    "act": ("CATEGORICAL", ["relu", "tanh", "gelu"]),
+}
+
+
+def _first_batch(controller, seed):
+    """The configs (budget ignored) of a controller's first next_batch."""
+    import json
+
+    controller.initialize(Searchspace(**SEED_SPACE), 24, "max", seed)
+    return [
+        json.dumps({k: v for k, v in t.params.items() if k != "budget"}, sort_keys=True)
+        for t in controller.next_batch(24)
+    ]
+
+
+@pytest.mark.parametrize("name", ["randomsearch", "asha", "pbt", "hyperband", "tpe", "gp"])
+def test_adjacent_seeds_share_no_config(name):
+    """Every random draw comes from one random.Random(seed) stream per
+    run, so seeds s and s + 1 start different experiments (a
+    `seed + i` salt made them share all configs but one), and a reused
+    instance initialized with s again replays s's configs."""
+    from maggy_spark.optimizers import get_controller
+
+    reused = get_controller(name)
+    for s in (3, 41):
+        first = _first_batch(reused, s)
+        adjacent = _first_batch(get_controller(name), s + 1)
+        assert first and adjacent and not set(first) & set(adjacent)
+        assert _first_batch(reused, s) == first
+
+
+def test_draw_unseen_budget_is_per_call(monkeypatch):
+    """_draw_unseen(n) stops after n * (MAX_DEDUP_RETRIES + 1) draws: a
+    2-value space fills 2 of 10 pre-buffer slots, and a later call on
+    the exhausted space returns nothing after its own budget."""
+    from maggy_spark.optimizers import MAX_DEDUP_RETRIES
+
+    rs = RandomSearch()
+    rs.initialize(Searchspace(x=("INTEGER", [1, 2])), num_trials=10, direction="max", seed=1)
+    assert sorted(t.params["x"] for t in rs.next_batch(10)) == [1, 2]
+    draws = []
+    draw = rs._random_params
+    monkeypatch.setattr(rs, "_random_params", lambda: draws.append(1) or draw())
+    assert rs._draw_unseen(3) == []
+    assert len(draws) == 3 * (MAX_DEDUP_RETRIES + 1)
+
+
 def test_grid_search_e2e(spark):
     def fn(a, b):
         return float(len(a)) * b
@@ -340,6 +390,8 @@ AGG_CASES = {
         _agg_trial(1, 2.0), _agg_trial(2, None, status="ERROR"), _agg_trial(3, 2.0), _agg_trial(4, 0.5),
     ],
     "all_metrics_null": lambda: [_agg_trial(1, None, seq=1), _agg_trial(2, None, seq=2)],
+    # errors are counted by _run_trials, never in num_trials
+    "all_error": lambda: [_agg_trial(i, None, seq=i, status="ERROR") for i in range(1, 4)],
     "empty": lambda: [],
 }
 
@@ -389,7 +441,7 @@ def test_aggregate_result_keeps_error_only_shape():
     from maggy_spark.experiment import _aggregate_result
 
     trials = [_agg_trial(i, None, status="ERROR") for i in range(3)]
-    assert _aggregate_result(trials, "max") == {"num_trials": 3, "errors": 3, "early_stopped": 0}
+    assert _aggregate_result(trials, "max") == {"num_trials": 0, "early_stopped": 0}
     assert _aggregate_result([], "min") == {"num_trials": 0, "early_stopped": 0}
 
 
@@ -653,3 +705,35 @@ def test_drive_runs_a_fake_runner_without_spark(monkeypatch, scheduling):
     assert failed is emitted[2] and failed.info_dict["error"] == "RuntimeError: boom"
     assert all(t.status == "FINALIZED" and t.final_metric == t.params["x"] for t in trials if t is not failed)
     assert len(controller.final_store) == 7 and controller.done()
+
+
+@pytest.mark.parametrize("scheduling", ["wave", "async"])
+def test_all_error_run_counts_each_trial_once(monkeypatch, scheduling):
+    """ROADMAP item 3's invariant on the all-ERROR path: `num_trials`
+    plus `errors` equals the settled trials, with no Spark job."""
+    import threading
+
+    from maggy_spark import experiment
+
+    def no_spark(*args, **kwargs):
+        raise AssertionError("_run_trials started a Spark job")
+
+    monkeypatch.setattr(experiment, "run_trial_wave", no_spark)
+    settled = []
+    lock = threading.Lock()
+
+    def failing_runner(trial, stop_src):
+        with lock:
+            settled.append(trial.trial_id)
+        return {"trial_id": trial.trial_id, "final_metric": None, "metric_history": [], "step_history": [],
+                "early_stop": False, "error": "RuntimeError: boom", "logs": [], "duration_ms": 1}
+
+    controller = RandomSearch()
+    controller.initialize(Searchspace(x=("DOUBLE", [0.0, 1.0])), num_trials=5, direction="max", seed=5)
+    config = HyperparameterOptConfig(es_policy="none", name="all_error", log_dir=None)
+    res = experiment._run_trials(None, config, None, controller, 2, scheduling, runner=failing_runner)
+
+    assert len(settled) == 5
+    assert res["num_trials"] + res["errors"] == len(settled)
+    assert (res["num_trials"], res["errors"]) == (0, 5)
+    assert "best_id" not in res and "best_config" not in res
