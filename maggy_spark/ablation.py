@@ -491,21 +491,20 @@ def run_ablation(train_fn: Callable, config: AblationConfig, spark: SparkSession
 
 class _AblationController:
     """The controller protocol `experiment._drive` runs (`next_batch`,
-    `finalize_trial`, `report_error`, `done`, `num_trials`,
+    `finalize_trial`, `report_error`, `end_experiment`, `num_trials`,
     `final_store`) over an initialized reference-protocol ablator.
 
     The first trials are those `get_trial(None)` hands out until it
     returns None (the reference driver's first requests). Every settled
     trial, ERROR ones included, joins the ablator's `final_store` and is
     handed back through `get_trial` in settle order; a returned trial
-    joins the queue. `finalize_experiment` fires once, from the first
-    `done()` that sees every trial settled.
+    joins the queue. `end_experiment` runs `finalize_experiment` once
+    the run ends, after the last trial settled.
     """
 
     def __init__(self, ablator) -> None:
         self._ablator = ablator
         self._pending = list(iter(lambda: ablator.get_trial(None), None))
-        self._finalized = False
         self.num_trials = len(self._pending)
         self.final_store: list[Trial] = ablator.final_store
 
@@ -522,9 +521,5 @@ class _AblationController:
 
     report_error = finalize_trial
 
-    def done(self) -> bool:
-        finished = not self._pending and len(self.final_store) == self.num_trials
-        if finished and not self._finalized:
-            self._finalized = True
-            self._ablator.finalize_experiment(self.final_store)
-        return finished
+    def end_experiment(self) -> None:
+        self._ablator.finalize_experiment(self.final_store)

@@ -67,7 +67,6 @@ class BaseAsyncBO(AbstractOptimizer):
             )
         self.interim_results_interval = int(interim_results_interval)
         self._nprng: np.random.Generator | None = None
-        self._emitted = 0
 
     def _initialize(self) -> None:
         self._nprng = np.random.default_rng(self.seed)
@@ -78,12 +77,6 @@ class BaseAsyncBO(AbstractOptimizer):
         # small run must not carry the smaller warmup into a later,
         # larger run
         self._warmup = min(self.num_warmup_trials, self.num_trials)
-
-    def report_error(self, trial) -> None:
-        """A failed trial frees its emission slot so a replacement can
-        be drawn (the experiment still attempts num_trials results)."""
-        super().report_error(trial)
-        self._emitted = max(0, self._emitted - 1)
 
     # -- training data: X in [0,1]^d, y sign-normalized to min ----------
 

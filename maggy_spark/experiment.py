@@ -178,7 +178,7 @@ def _apply_result(controller, trial: Trial, r: dict, seq: int) -> None:
     if r["error"]:
         trial.status = Trial.ERROR
         trial.info_dict["error"] = r["error"]
-        controller.report_error(trial)  # rung ledgers / busy sets / done() accounting
+        controller.report_error(trial)  # rung ledgers / busy sets
     else:
         trial.status = Trial.FINALIZED
         trial.final_metric = r["final_metric"]
@@ -354,6 +354,11 @@ def _drive(runner, config, controller, parallelism, scheduling, store=None, rule
     `rule` is the early-stop rule (`_es_rule`), or None; `stop_src` is
     then always None.
 
+    The run ends when `next_batch` emits nothing and no trial is in
+    flight (a controller changes only when a trial settles). Then
+    `controller.end_experiment()` runs once, and a run that settled
+    fewer than `controller.num_trials` trials logs a warning.
+
     Returns (trials in `seq` order, waves run in wave mode or jobs run
     in async mode)."""
     import os
@@ -384,7 +389,7 @@ def _drive(runner, config, controller, parallelism, scheduling, store=None, rule
             while True:
                 # the refill rule: a wave only into an empty pool, an
                 # async trial into any free slot
-                while len(in_flight) < parallelism and not (wave_mode and in_flight) and not controller.done():
+                while len(in_flight) < parallelism and not (wave_mode and in_flight):
                     batch = controller.next_batch(parallelism if wave_mode else 1)
                     if not batch:
                         break
@@ -393,18 +398,14 @@ def _drive(runner, config, controller, parallelism, scheduling, store=None, rule
                         in_flight[pool.submit(runner, t, stop_src)] = t
                     rounds += 1
                 if not in_flight:
-                    # the controller is done or ran dry (e.g. a custom
-                    # optimizer out of suggestions before num_trials):
-                    # ask done() one last time — it is the hook that
-                    # fires a reference optimizer's finalize_experiment,
-                    # which must run on EVERY exit path
-                    if not controller.done():
+                    if len(all_trials) < controller.num_trials:
                         # legitimate for a searchspace smaller than
                         # num_trials, but never silent
                         _LOG.warning(
                             "%s stopped suggesting trials with %d of %d settled; the experiment ends early",
                             type(controller).__name__, len(all_trials), controller.num_trials,
                         )
+                    controller.end_experiment()
                     break
                 finished, _ = wait(in_flight, return_when=ALL_COMPLETED if wave_mode else FIRST_COMPLETED)
                 settled = []

@@ -144,8 +144,8 @@ def fit_with_lagom(
     result = _run_trials(None, config, spark, controller, parallelism, "wave", runner=run_fit)
     if not result["num_waves"]:
         raise ValueError(
-            "controller produced no trials (num_trials=0 or done() was "
-            "immediately true) — nothing to fit"
+            "controller produced no trials (num_trials=0 or an empty "
+            "searchspace) — nothing to fit"
         )
     return result
 

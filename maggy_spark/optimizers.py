@@ -120,11 +120,10 @@ class AbstractOptimizer(ABC):
         self._sampler = random.Random(seed)
         # a controller instance may be reused across lagom() calls
         # (get_controller accepts instances): reset accumulated state
-        # or the second run sees done()==True immediately and every
+        # or the second run sees every trial as settled and every
         # redraw as a duplicate
         self.final_store = []
         self._seen_params = set()
-        self.n_errors = 0
         self.pruner = None
         if pruner is None:
             pruner, pruner_kwargs = self._pruner_spec, self._pruner_kwargs
@@ -183,8 +182,8 @@ class AbstractOptimizer(ABC):
         pass
 
     def next_batch(self, max_trials: int) -> list[Trial]:
-        """Emit up to max_trials new pending trials; [] when done (or,
-        with a pruner, when every startable slot is in flight)."""
+        """Emit up to max_trials new pending trials; [] when the trial
+        budget is spent or the next trial waits on one in flight."""
         if self.pruner is not None:
             return self._next_batch_pruned(max_trials)
         return self._next_batch(max_trials)
@@ -258,16 +257,13 @@ class AbstractOptimizer(ABC):
 
     def report_error(self, trial: Trial) -> None:
         """An emitted trial failed (ERROR row): it will never finalize.
-        Controllers must not wait on it (rung ledgers, done()
-        accounting, busy sets)."""
-        self.n_errors += 1
+        Controllers must not wait on it (rung ledgers, busy sets). It
+        still counts toward num_trials and is not replaced."""
         if self.pruner is not None:
             self.pruner.report_error(trial.trial_id)
 
-    def done(self) -> bool:
-        if self.pruner is not None:
-            return self.pruner.finished()
-        return len(self.final_store) + self.n_errors >= self.num_trials
+    def end_experiment(self) -> None:
+        """Hook: runs once per run, after its last trial settled."""
 
     # -- random draws and the dedup guard (G1, G12) --------------------
 
@@ -505,12 +501,10 @@ class Asha(AbstractOptimizer):
         self.resource_max = resource_max
         # max rung: largest k with min*eta^k <= max  (asha.py:78-83)
         self.max_rung = exact_smax(resource_min, resource_max, reduction_factor)
-        self._promoted: dict[int, set[str]] = {r: set() for r in range(self.max_rung + 1)}
-        self._emitted_rung0 = 0
 
     def _initialize(self) -> None:
         # reset per-run state (instances may be reused across lagom calls)
-        self._promoted = {r: set() for r in range(self.max_rung + 1)}
+        self._promoted: dict[int, set[str]] = {r: set() for r in range(self.max_rung + 1)}
         self._emitted_rung0 = 0
 
     def budget_for_rung(self, rung: int) -> int:
@@ -552,7 +546,7 @@ class Asha(AbstractOptimizer):
                 out.append(t)
         # fill with rung-0 randoms (asha.py:149-156); _emitted_rung0
         # counts only trials actually emitted (a dedup skip must not
-        # inflate the done() accounting)
+        # use up the rung-0 budget)
         slots = min(max_trials - len(out), self.num_trials - self._emitted_rung0)
         for params in self._draw_unseen(slots):
             out.append(Trial(params, info_dict={
@@ -562,15 +556,6 @@ class Asha(AbstractOptimizer):
             }))
             self._emitted_rung0 += 1
         return out
-
-    def done(self) -> bool:
-        # done when every rung-0 candidate is emitted and no promotion
-        # pending; errored trials count as settled (they never finalize)
-        if self._emitted_rung0 < self.num_trials:
-            return False
-        pending = any(self._promotable(r) for r in range(self.max_rung))
-        settled = len(self.final_store) + self.n_errors
-        return not pending and settled >= self._emitted_rung0 + sum(len(s) for s in self._promoted.values())
 
 
 class Pbt(AbstractOptimizer):
@@ -602,7 +587,8 @@ class Pbt(AbstractOptimizer):
     ``num_trials=16, population=4`` runs 4 generations of 4. Waits
     (returns []) while a generation is in flight — same contract as
     Asha's promotion gates. Errored trials never finalize and are
-    excluded from ranking; a generation that settles with zero
+    excluded from ranking, so the next generation shrinks and the run
+    ends short of ``num_trials``; a generation that settles with zero
     finalized trials falls back to fresh random draws.
     """
 
@@ -701,13 +687,6 @@ class Pbt(AbstractOptimizer):
         out, self._buffer = self._buffer[:max_trials], self._buffer[max_trials:]
         return out
 
-    def done(self) -> bool:
-        return (
-            not self._buffer
-            and self._gen + 1 >= self.generations
-            and self._settled_in_gen(self._gen) >= self._gen_emitted
-        )
-
 
 CONTROLLERS = {
     "randomsearch": RandomSearch,
@@ -730,7 +709,9 @@ class ReferenceOptimizerAdapter(AbstractOptimizer):
     finished trials queue up during a wave and drain one per
     suggestion. `final_store` is shared by reference (the same list
     object) so the wrapped optimizer's helper calls see every
-    finalized trial without copying."""
+    finalized trial without copying. At most `num_trials` trials are
+    emitted, and `finalize_experiment` runs from `end_experiment`,
+    once, after the last trial settled."""
 
     def __init__(self, wrapped) -> None:
         super().__init__()
@@ -752,12 +733,12 @@ class ReferenceOptimizerAdapter(AbstractOptimizer):
         w.final_store = self.final_store  # alias, not copy
         self._finished_queue: list[Trial] = []
         self._exhausted = False
-        self._finalized = False
+        self._emitted = 0
         w.initialize()
 
     def _next_batch(self, max_trials: int) -> list[Trial]:
         out: list[Trial] = []
-        while len(out) < max_trials and not self._exhausted:
+        while len(out) < max_trials and not self._exhausted and self._emitted < self.num_trials:
             last = self._finished_queue.pop(0) if self._finished_queue else None
             self.wrapped.sampling_time_start = time.time()
             t = self.wrapped.get_suggestion(last)
@@ -775,6 +756,7 @@ class ReferenceOptimizerAdapter(AbstractOptimizer):
                     continue
                 break
             self.wrapped.trial_store[t.trial_id] = t
+            self._emitted += 1
             out.append(self._register(t))
         return out
 
@@ -785,18 +767,12 @@ class ReferenceOptimizerAdapter(AbstractOptimizer):
 
     def report_error(self, trial: Trial) -> None:
         # an ERROR trial never finalizes: drop it from the wrapped
-        # optimizer's in-flight store so exhaustion can complete
+        # optimizer's in-flight store
         super().report_error(trial)
         self.wrapped.trial_store.pop(trial.trial_id, None)
 
-    def done(self) -> bool:
-        finished = (
-            self._exhausted and not getattr(self.wrapped, "trial_store", None)
-        ) or super().done()
-        if finished and not getattr(self, "_finalized", False):
-            self._finalized = True
-            self.wrapped.finalize_experiment(self.final_store)
-        return finished
+    def end_experiment(self) -> None:
+        self.wrapped.finalize_experiment(self.final_store)
 
 
 def _is_reference_protocol(spec) -> bool:

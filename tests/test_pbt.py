@@ -127,8 +127,9 @@ def test_pbt_direction_min_ranks_invert():
 def test_pbt_scheduler_contract_with_errors():
     """Unit drive of the wave contract: waits ([] while a generation
     is in flight), evolves when the EMITTED count settles even if
-    some trials errored, and done() terminates on the emitted count
-    — the deadlock the _gen_emitted gate exists to prevent."""
+    some trials errored, and emits nothing more once the last
+    generation settles on the emitted count — the deadlock the
+    _gen_emitted gate exists to prevent."""
     sp = Searchspace(x=("DOUBLE", [0.0, 1.0]))
     pbt = Pbt(population=4)
     pbt.initialize(sp, 8, "max", seed=3)
@@ -144,12 +145,12 @@ def test_pbt_scheduler_contract_with_errors():
     pbt.report_error(gen0[3])
     gen1 = pbt._next_batch(10)
     assert len(gen1) == 3  # population shrank to the 3 survivors
-    assert not pbt.done()
+    assert pbt._next_batch(10) == []  # generation 1 in flight: wait
     for t in gen1:
         t.final_metric = t.params["x"]
         pbt.finalize_trial(t)
     assert pbt._next_batch(10) == []
-    assert pbt.done()
+    assert pbt._next_batch(10) == []  # nothing in flight: the run ends
 
 
 def test_controller_regret_comparison_cross_engine(spark, tmp_path):

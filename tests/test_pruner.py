@@ -64,21 +64,19 @@ def _drive(controller, num_trials=5, seed=7, direction="max"):
     controller.initialize(Searchspace(**SP), num_trials, direction, seed)
     emitted = []
     for _ in range(500):
-        if controller.done():
-            break
         batch = controller.next_batch(4)
         if not batch:
             # the rung ledger steps lazily inside pruning_routine: an
-            # empty batch right after the last finalize means "re-check
-            # done()", which must now be True
-            assert controller.done(), "controller stalled before done()"
+            # empty batch with nothing in flight ends the run, so the
+            # pruner must be finished by now
+            assert controller.pruner.finished(), "controller stalled before the pruner finished"
             break
         for t in batch:
             x = t.params["x"]
             t.final_metric = -((x - 0.3) ** 2)
             controller.finalize_trial(t)
         emitted.extend(batch)
-    assert controller.done()
+    assert controller.pruner.finished()
     return emitted
 
 

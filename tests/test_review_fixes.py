@@ -304,8 +304,8 @@ def test_get_controller_rejects_class_spec():
 def test_reference_finalize_fires_on_wave_boundary_exhaustion(spark):
     """A custom reference-protocol optimizer that runs out of
     suggestions before num_trials must still get its
-    finalize_experiment hook (it previously only fired through the
-    done()-gated loop entry, not the empty-wave break)."""
+    finalize_experiment hook, which the dispatch loop runs once the
+    run ends."""
 
     class Tiny:
         def __init__(self):

@@ -95,7 +95,7 @@ def test_adapter_runs_every_value_exactly_once(values):
             t.finalize(float(t.params["x"]))
             ctrl.finalize_trial(t)
     assert seen == list(values)  # exactly once, emission order
-    assert ctrl.done()
+    ctrl.end_experiment()
     assert len(ctrl.wrapped.done_trials) == len(values)
 
 

@@ -120,8 +120,6 @@ def test_tpe_seeded_determinism_mixed_space():
         t, _ = _mixed_tpe(seed)
         out = []
         for _ in range(60):
-            if t.done():
-                break
             batch = t.next_batch(1)
             if not batch:
                 break
@@ -160,8 +158,6 @@ def test_tpe_beats_random_on_mixed_space():
         ctrl.initialize(sp, n, "max", seed)
         best = -np.inf
         for _ in range(120):
-            if ctrl.done():
-                break
             batch = ctrl.next_batch(1)
             if not batch:
                 break
