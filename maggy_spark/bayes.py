@@ -6,7 +6,8 @@ Reference semantics (SURVEY.md §2.2 G6-G9):
   update from finalized trials, acquisition-optimized sampling,
   dedup by one `_draw_unseen` redraw of at most MAX_DEDUP_RETRIES + 1
   draws (`base.py:288-301`), busy-location imputation via constant
-  liar (`gp.py:329-373`).
+  liar (`gp.py:329-373`) over the in-flight trials of the base's
+  `trial_store`, as the reference reads its driver's store.
 - GP surrogate (`bayes/gp.py:266-327`): Matern nu=2.5 kernel with
   normalize_y and gaussian noise; acquisition EI over `n_points`
   sampled candidates (`gp.py:183-264` "sampling" routine).
@@ -70,8 +71,6 @@ class BaseAsyncBO(AbstractOptimizer):
 
     def _initialize(self) -> None:
         self._nprng = np.random.default_rng(self.seed)
-        # reset per-run state (instances may be reused across lagom calls)
-        self._emitted = 0
         # effective warmup for THIS run: clamp a copy, not the
         # configured value — a reused controller initialized for a
         # small run must not carry the smaller warmup into a later,
@@ -163,6 +162,15 @@ class BaseAsyncBO(AbstractOptimizer):
                 y_parts.append(self.metric_for_min(hist[i]))
         return np.array(X_parts), np.array(y_parts)
 
+    def _model_xy(self) -> tuple[np.ndarray, np.ndarray]:
+        """The surrogate's training set: the trials at `model_budget()`,
+        or every finalized trial when those are fewer than
+        `min_model_trials()`."""
+        X, y = self.get_xy(self.model_budget())
+        if len(y) < self.min_model_trials():
+            X, y = self.get_xy()
+        return X, y
+
     def model_budget(self) -> int | None:
         """The fidelity whose surrogate to use: the LARGEST budget with
         enough finalized observations (reference reuses the
@@ -179,12 +187,7 @@ class BaseAsyncBO(AbstractOptimizer):
         return max(sufficient) if sufficient else None
 
     def _emit(self, params: dict, sample_type: str) -> Trial:
-        t = Trial(params, info_dict={"sample_type": sample_type})
-        self._on_emit(t)
-        return self._register(t)
-
-    def _on_emit(self, trial: Trial) -> None:
-        self._emitted += 1
+        return self._record(Trial(params, info_dict={"sample_type": sample_type}))
 
     def min_model_trials(self) -> int:
         """Finalized trials required before the surrogate can suggest."""
@@ -197,7 +200,7 @@ class BaseAsyncBO(AbstractOptimizer):
         exhausted). Shared by the single-fidelity loop and pruner slot
         fills."""
         if (
-            self._emitted < self._warmup
+            self._n_emitted < self._warmup
             or len(self.final_store) < self.min_model_trials()
             or self._sampler.random() < self.random_fraction
         ):
@@ -211,7 +214,7 @@ class BaseAsyncBO(AbstractOptimizer):
 
     def _next_batch(self, max_trials: int) -> list[Trial]:
         out: list[Trial] = []
-        while len(out) < max_trials and self._emitted < self.num_trials:
+        while len(out) < max_trials and self._n_emitted < self.num_trials:
             sug = self._suggest_one()
             if sug is None:
                 break
@@ -431,11 +434,6 @@ class GP(BaseAsyncBO):
         self.acq_fun_kwargs = dict(acq_fun_kwargs or {})
         self.acq_optimizer = acq_optimizer
         self.n_restarts_optimizer = n_restarts_optimizer
-        self._busy: list[tuple[str, dict]] = []  # (trial_id, params)
-
-    def _initialize(self) -> None:
-        super()._initialize()
-        self._busy = []
 
     def suggest_model_params(self) -> dict:
         # multi-fidelity: train on the biggest budget with enough data;
@@ -449,24 +447,19 @@ class GP(BaseAsyncBO):
             X, y = self.get_XY(budget=self.model_budget() or 0, interim_results=True)
             if len(y) == 0:
                 X, y = self.get_XY(interim_results=True)
-            if len(y) == 0:
-                # no finalized trial carries a metric history (train_fn
-                # never broadcast): fall back to the final-metric
-                # matrix — everything downstream must then run
-                # UN-augmented, or y.min() dies on a zero-size array
-                interim_fit = False
-                X, y = self.get_xy(self.model_budget())
-                if len(y) < self.min_model_trials():
-                    X, y = self.get_xy()
-        else:
-            X, y = self.get_xy(self.model_budget())
-            if len(y) < self.min_model_trials():
-                X, y = self.get_xy()
-        # busy-location imputation (gp.py:329-373): busy param vectors
+            # no finalized trial carries a metric history (train_fn
+            # never broadcast): fall back to the final-metric matrix —
+            # everything downstream must then run UN-augmented, or
+            # y.min() dies on a zero-size array
+            interim_fit = len(y) > 0
+        if not interim_fit:
+            X, y = self._model_xy()
+        # busy-location imputation (gp.py:329-373): in-flight trials
         # get pseudo-observations — constant liar (ybest/yworst/ymean)
         # or kriging believer (posterior mean of a model fit on the
-        # observed data only, gp.py:345-361 'kb')
-        busy = [p for _, p in self._busy]
+        # observed data only, gp.py:345-361 'kb'). The budget key is
+        # dropped so the liar vector stays in-space.
+        busy = [{k: v for k, v in t.params.items() if k != "budget"} for t in self.trial_store.values()]
         if busy:
             Xb = np.array([self.searchspace.transform(p) for p in busy])
             if interim_fit:
@@ -574,29 +567,6 @@ class GP(BaseAsyncBO):
             if ux > best_u:
                 best_x, best_u = x, ux
         return best_x
-
-    def _on_emit(self, trial: Trial) -> None:
-        # every emitted trial joins the busy set the moment it exists,
-        # so (a) later suggestions within the same batch see earlier
-        # ones, and (b) async single-trial batches ACCUMULATE in-flight
-        # trials instead of overwriting the set. Keyed by the trial's
-        # FINAL id (budget-salted under a pruner), params stored
-        # without the budget key so the liar vector stays in-space.
-        super()._on_emit(trial)
-        self._busy.append(
-            (trial.trial_id, {k: v for k, v in trial.params.items() if k != "budget"})
-        )
-
-    def finalize_trial(self, trial: Trial) -> None:
-        super().finalize_trial(trial)
-        self._busy = [(tid, p) for tid, p in self._busy if tid != trial.trial_id]
-
-    def report_error(self, trial: Trial) -> None:
-        """Errored trials leave the busy set too — otherwise they pin a
-        phantom constant-liar pseudo-observation into every later
-        surrogate fit."""
-        super().report_error(trial)
-        self._busy = [(tid, p) for tid, p in self._busy if tid != trial.trial_id]
 
 
 # ---------------------------------------------------------------------
@@ -726,9 +696,7 @@ class TPE(BaseAsyncBO):
 
     def suggest_model_params(self) -> dict:
         # multi-fidelity: same biggest-sufficient-budget rule as GP
-        X, y = self.get_xy(self.model_budget())
-        if len(y) < self.min_model_trials():
-            X, y = self.get_xy()
+        X, y = self._model_xy()
         good, bad = self._split(X, y)
         if len(bad) == 0:  # defensive: min_model_trials should prevent this
             return self._random_params()

@@ -500,23 +500,28 @@ def no_stop_rule(to_check, finalized, direction):
     return None
 
 
+def stop_views(finalized) -> list[dict]:
+    """The JSON form of the finalized trials (objects with trial_id,
+    metric_history and final_metric) a stop check compares against."""
+    return [
+        {"trial_id": t.trial_id, "metric_history": list(t.metric_history), "final_metric": t.final_metric}
+        for t in finalized
+    ]
+
+
 def encode_stop_source(
     rule: bytes, direction: str, es_interval: int, finalized, refresh_path: str | None = None
 ) -> str:
     """Serialize the early-stop state that `_make_stop_check` reads: the
     pickled rule, the experiment's direction and check cadence, and the
-    finalized trials (objects with trial_id, metric_history and
-    final_metric) the rule compares against."""
+    finalized trials the rule compares against (`stop_views`)."""
     import base64
 
     state = {
         "direction": direction,
         "es_interval": es_interval,
         "rule": base64.b64encode(rule).decode("ascii"),
-        "finalized": [
-            {"trial_id": t.trial_id, "metric_history": list(t.metric_history), "final_metric": t.final_metric}
-            for t in finalized
-        ],
+        "finalized": stop_views(finalized),
     }
     if refresh_path is not None:
         state["refresh_path"] = refresh_path

@@ -39,7 +39,7 @@ from maggy_spark.config import (
     TfDistributedConfig,
     TorchDistributedConfig,
 )
-from maggy_spark.executor import encode_stop_source, median_rule, no_stop_rule, run_trial_wave
+from maggy_spark.executor import encode_stop_source, median_rule, no_stop_rule, run_trial_wave, stop_views
 from maggy_spark.optimizers import get_controller
 from maggy_spark.store import TRIALS_ARROW_SCHEMA, TRIALS_SCHEMA, ExperimentStore, trial_rows
 from maggy_spark.trial import Trial
@@ -143,27 +143,34 @@ def _log_progress(controller, settled: int) -> None:
     _LOG.info("maggy experiment %s", progress_bar(settled, total))
 
 
+def _bar(controller, config) -> list[Trial]:
+    """The finalized trials a stop check compares against: none until
+    es_min have finalized (medianrule.py min-completed gate)."""
+    return controller.final_store if len(controller.final_store) >= config.es_min else []
+
+
 def _stop_source(controller, config, rule: bytes, refresh_path: str | None = None) -> str | None:
-    """The early-stop state trial tasks check against. Finalized trials
-    appear only once es_min have finalized (medianrule.py
-    min-completed gate). Under async scheduling (`refresh_path`) even a
-    trial submitted before the gate gets a source: its check re-reads
-    the bar file as the bar tightens."""
-    finalized = controller.final_store if len(controller.final_store) >= config.es_min else []
+    """The early-stop state trial tasks check against. Under async
+    scheduling (`refresh_path`) even a trial submitted before the gate
+    gets a source: its check re-reads the bar file as the bar
+    tightens."""
+    finalized = _bar(controller, config)
     if not finalized and refresh_path is None:
         return None
     return encode_stop_source(rule, config.direction, config.es_interval, finalized, refresh_path)
 
 
-def _publish_bar(controller, config, rule: bytes, refresh_path: str) -> None:
-    """Atomically publish the tightened bar for in-flight trials
+def _publish_bar(controller, config, refresh_path: str) -> None:
+    """Atomically publish the tightened bar for in-flight trials: only
+    `{"finalized": [...]}`, the one key the checks' refresh reads
     (write + os.replace: readers see the old or the new file, never a
     torn one)."""
+    import json
     import os
 
     tmp = f"{refresh_path}.tmp.{os.getpid()}"
     with open(tmp, "w") as f:
-        f.write(_stop_source(controller, config, rule, refresh_path))
+        json.dump({"finalized": stop_views(_bar(controller, config))}, f)
     os.replace(tmp, refresh_path)
 
 
@@ -178,7 +185,7 @@ def _apply_result(controller, trial: Trial, r: dict, seq: int) -> None:
     if r["error"]:
         trial.status = Trial.ERROR
         trial.info_dict["error"] = r["error"]
-        controller.report_error(trial)  # rung ledgers / busy sets
+        controller.report_error(trial)
     else:
         trial.status = Trial.FINALIZED
         trial.final_metric = r["final_metric"]
@@ -194,23 +201,12 @@ def _init_hpo(config: HyperparameterOptConfig, spark: SparkSession) -> tuple[Any
     """Validate an HPO config and initialize its controller for this
     run; returns (controller, parallelism)."""
     controller = get_controller(config.optimizer)
-    if config.pruner is not None:
-        # config-level pruner attaches to whatever optimizer was chosen
-        # (reference passes pruner via the optimizer constructor;
-        # config-level is the ergonomic equivalent), for this run only.
-        # An optimizer that already carries another pruner
-        # ("hyperband", GP(pruner=...)) would silently drop this one.
-        spec = (config.pruner, dict(config.pruner_kwargs or {}))
-        if controller._pruner_spec is not None and (controller._pruner_spec, controller._pruner_kwargs) != spec:
-            raise ValueError(
-                f"optimizer {config.optimizer!r} already carries pruner {controller._pruner_spec!r} "
-                f"with {controller._pruner_kwargs}; config.pruner={config.pruner!r} with "
-                f"pruner_kwargs={spec[1]} would be ignored: set the pruner in one place"
-            )
     if config.searchspace is None:
         raise ValueError("HyperparameterOptConfig.searchspace is required")
     if config.direction not in ("min", "max"):
         raise ValueError(f"direction must be 'min' or 'max', got {config.direction!r}")
+    # config.pruner attaches for this run only; initialize rejects one
+    # that conflicts with the optimizer's own
     controller.initialize(
         searchspace=config.searchspace,
         num_trials=config.num_trials,
@@ -415,7 +411,7 @@ def _drive(runner, config, controller, parallelism, scheduling, store=None, rule
                     all_trials.append(trial)
                     settled.append(trial)
                 if bar_path is not None:
-                    _publish_bar(controller, config, rule_bytes, bar_path)
+                    _publish_bar(controller, config, bar_path)
                 if store is not None:
                     store.append_trials(settled)
                     store.append_metrics(settled)

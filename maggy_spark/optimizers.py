@@ -20,9 +20,13 @@ Reference semantics:
 - Random draws: every controller draws from one `random.Random(seed)`
   stream per run (`_random_params`), so one seed gives one run and
   adjacent seeds share no draws.
-- Dedup guard: a candidate whose params (ex budget) equal a
-  finished/running trial's is rejected and redrawn by `_draw_unseen`,
-  at most n * (MAX_DEDUP_RETRIES + 1) draws for n configs
+- Trial ledger: only `AbstractOptimizer` records a trial's lifecycle,
+  in the reference driver's `trial_store` (in flight) and `final_store`
+  plus an `error_store` (`optimization_driver.py:71-72,111-117`); GP's
+  busy-location imputation and the dedup guard read it.
+- Dedup guard: a candidate whose params (ex budget) equal an emitted
+  trial's is rejected and redrawn by `_draw_unseen`, at most
+  n * (MAX_DEDUP_RETRIES + 1) draws for n configs
   (`abstractoptimizer.py:254-295`, `bayes/base.py:288-301`).
 """
 
@@ -76,7 +80,7 @@ def min_rank_key(metric) -> tuple:
 
 
 class AbstractOptimizer(ABC):
-    """Controller base: holds searchspace + finalized-trial feed.
+    """Controller base: holds the searchspace and the trial ledger.
 
     A Hyperband pruner may be attached (reference
     `abstractoptimizer.py:29-46` accepts pruner/pruner_kwargs): the
@@ -90,7 +94,9 @@ class AbstractOptimizer(ABC):
         self.num_trials: int = 0
         self.direction: str = "max"
         self.seed: int | None = None
+        self.trial_store: dict[str, Trial] = {}
         self.final_store: list[Trial] = []
+        self.error_store: list[Trial] = []
         self._seen_params: set[str] = set()
         self._pruner_spec = pruner
         self._pruner_kwargs = dict(pruner_kwargs or {})
@@ -111,7 +117,15 @@ class AbstractOptimizer(ABC):
         """Reset for one experiment. `pruner`/`pruner_kwargs` are the
         run's own pruner (`config.pruner`); without one the pruner given
         to the constructor, if any, attaches. Neither is stored on the
-        optimizer, so a reused instance's next run starts clean."""
+        optimizer, so a reused instance's next run starts clean. A run
+        pruner that differs from the constructor's raises ValueError,
+        since one of the two would be silently dropped."""
+        own = (self._pruner_spec, self._pruner_kwargs)
+        if pruner is not None and own[0] is not None and own != (pruner, dict(pruner_kwargs or {})):
+            raise ValueError(
+                f"optimizer {type(self).__name__} already carries pruner {own[0]!r} with {own[1]}; config.pruner="
+                f"{pruner!r} with pruner_kwargs={pruner_kwargs} would be ignored: set the pruner in one place"
+            )
         self.searchspace = searchspace
         self.num_trials = num_trials
         self.direction = direction
@@ -122,11 +136,13 @@ class AbstractOptimizer(ABC):
         # (get_controller accepts instances): reset accumulated state
         # or the second run sees every trial as settled and every
         # redraw as a duplicate
+        self.trial_store = {}
         self.final_store = []
+        self.error_store = []
         self._seen_params = set()
         self.pruner = None
         if pruner is None:
-            pruner, pruner_kwargs = self._pruner_spec, self._pruner_kwargs
+            pruner, pruner_kwargs = own
         if pruner is not None:
             self.pruner = self._build_pruner(pruner, dict(pruner_kwargs or {}))
             # a pruner overrides num_trials (optimization_driver.py:87-89)
@@ -165,28 +181,35 @@ class AbstractOptimizer(ABC):
 
     def _pruner_metrics(self, trial_ids) -> dict[str, float]:
         """trial_metric_getter contract (`pruner/abstractpruner.py`):
-        {trial_id: min-normalized metric} for the FINISHED subset."""
+        {trial_id: min-normalized metric} for the SETTLED subset."""
         if isinstance(trial_ids, str):
             trial_ids = [trial_ids]
         wanted = set(trial_ids)
-        # a trial finalized without a metric (EarlyStopException before
-        # any broadcast) is finished all the same: score it +inf, as
-        # the pruner scores ERROR trials, or its rung never settles
-        return {
+        # an ERROR trial, or one finalized without a metric
+        # (EarlyStopException before any broadcast), is settled all the
+        # same: score it +inf, or its rung never settles
+        scores = {
             t.trial_id: math.inf if t.final_metric is None else self.metric_for_min(t.final_metric)
             for t in self.final_store
             if t.trial_id in wanted
         }
+        scores.update((t.trial_id, math.inf) for t in self.error_store if t.trial_id in wanted)
+        return scores
 
     def _initialize(self) -> None:  # hook
         pass
 
     def next_batch(self, max_trials: int) -> list[Trial]:
-        """Emit up to max_trials new pending trials; [] when the trial
-        budget is spent or the next trial waits on one in flight."""
+        """Emit up to max_trials new pending trials, each recorded in
+        flight; [] when the trial budget is spent or the next trial
+        waits on one in flight."""
         if self.pruner is not None:
-            return self._next_batch_pruned(max_trials)
-        return self._next_batch(max_trials)
+            batch = self._next_batch_pruned(max_trials)
+        else:
+            batch = self._next_batch(max_trials)
+        for t in batch:
+            self._record(t)
+        return batch
 
     def _next_batch(self, max_trials: int) -> list[Trial]:
         """Single-fidelity batch emission (no pruner attached).
@@ -243,24 +266,36 @@ class AbstractOptimizer(ABC):
                 salt += 1
                 t.trial_id = trial_id_for_params({**params, "budget": budget, "rerun": salt})
             self._pruned_params[t.trial_id] = dict(params)
-            self._register(t)
-            self._on_emit(t)
+            self._record(t)
             self.pruner.report_trial(original_trial_id=src_id, new_trial_id=t.trial_id)
             out.append(t)
         return out
 
-    def _on_emit(self, trial: Trial) -> None:
-        """Hook: an emitted trial now exists (busy sets, counters)."""
+    # -- the trial ledger ----------------------------------------------
+
+    def _record(self, trial: Trial) -> Trial:
+        """An emitted trial: in flight until it settles, and seen by the
+        dedup guard. Paths that make several trials per batch record
+        each as it is made, so the next suggestion sees it."""
+        self.trial_store[trial.trial_id] = trial
+        self._seen_params.add(self._params_key(trial.params))
+        return trial
+
+    @property
+    def _n_emitted(self) -> int:
+        """Trials emitted this run: in flight, finalized or errored."""
+        return len(self.trial_store) + len(self.final_store) + len(self.error_store)
 
     def finalize_trial(self, trial: Trial) -> None:
+        self.trial_store.pop(trial.trial_id, None)
         self.final_store.append(trial)
 
     def report_error(self, trial: Trial) -> None:
         """An emitted trial failed (ERROR row): it will never finalize.
-        Controllers must not wait on it (rung ledgers, busy sets). It
-        still counts toward num_trials and is not replaced."""
-        if self.pruner is not None:
-            self.pruner.report_error(trial.trial_id)
+        It still counts toward num_trials and is not replaced; the
+        pruner scores it +inf (`_pruner_metrics`)."""
+        self.trial_store.pop(trial.trial_id, None)
+        self.error_store.append(trial)
 
     def end_experiment(self) -> None:
         """Hook: runs once per run, after its last trial settled."""
@@ -296,10 +331,6 @@ class AbstractOptimizer(ABC):
         if isinstance(params, Trial):
             params = params.params
         return self._params_key(params) in self._seen_params
-
-    def _register(self, trial: Trial) -> Trial:
-        self._seen_params.add(self._params_key(trial.params))
-        return trial
 
     # -- sign normalization (A2) ---------------------------------------
 
@@ -458,8 +489,7 @@ class GridSearch(AbstractOptimizer):
         names = list(self.searchspace.keys())
         domains = [self.searchspace.get(n) for n in names]
         self._buffer = [
-            self._register(Trial(dict(zip(names, combo)), info_dict={"sample_type": "grid"}))
-            for combo in itertools.product(*domains)
+            Trial(dict(zip(names, combo)), info_dict={"sample_type": "grid"}) for combo in itertools.product(*domains)
         ]
         self.num_trials = len(self._buffer)
 
@@ -469,15 +499,9 @@ class GridSearch(AbstractOptimizer):
 
 
 class SingleRun(AbstractOptimizer):
-    def _initialize(self) -> None:
-        self._emitted = 0
-
     def _next_batch(self, max_trials: int) -> list[Trial]:
-        out = []
-        while self._emitted < self.num_trials and len(out) < max_trials:
-            out.append(Trial({"run": self._emitted}, info_dict={"sample_type": "random"}))
-            self._emitted += 1
-        return out
+        runs = range(self._n_emitted, min(self._n_emitted + max_trials, self.num_trials))
+        return [Trial({"run": i}, info_dict={"sample_type": "random"}) for i in runs]
 
 
 class Asha(AbstractOptimizer):
@@ -602,7 +626,6 @@ class Pbt(AbstractOptimizer):
         self.generations = max(self.num_trials // self.population, 1)
         self.num_trials = self.generations * self.population
         self._gen = 0
-        self._gen_errors = 0
         self._buffer = [self._make_trial(p, 0, "random") for p in self._draw_unseen(self.population)]
         # errored trials shrink a generation's settle target — gate on
         # what was actually EMITTED, not the nominal population, or an
@@ -662,26 +685,15 @@ class Pbt(AbstractOptimizer):
                 out.append(self._make_trial(dict(t.params), generation, "promoted"))
         return out
 
-    def _settled_in_gen(self, generation: int) -> int:
-        fin = sum(
-            1 for t in self.final_store if t.info_dict.get("generation") == generation
-        )
-        return fin + self._gen_errors
-
-    def report_error(self, trial: Trial) -> None:
-        super().report_error(trial)
-        if trial.info_dict.get("generation") == self._gen:
-            self._gen_errors += 1
-
     def _next_batch(self, max_trials: int) -> list[Trial]:
         if not self._buffer and self._gen + 1 < self.generations:
-            if self._settled_in_gen(self._gen) >= self._gen_emitted:
+            settled = self.final_store + self.error_store
+            if sum(t.info_dict.get("generation") == self._gen for t in settled) >= self._gen_emitted:
                 finalized = [
                     t for t in self.final_store
                     if t.info_dict.get("generation") == self._gen
                 ]
                 self._gen += 1
-                self._gen_errors = 0
                 self._buffer = self._evolve(finalized, self._gen)
                 self._gen_emitted = len(self._buffer)
         out, self._buffer = self._buffer[:max_trials], self._buffer[max_trials:]
@@ -707,11 +719,12 @@ class ReferenceOptimizerAdapter(AbstractOptimizer):
     The reference driver hands each finished trial to the next
     `get_suggestion` call (`optimization_driver.py:341-370`); here
     finished trials queue up during a wave and drain one per
-    suggestion. `final_store` is shared by reference (the same list
-    object) so the wrapped optimizer's helper calls see every
-    finalized trial without copying. At most `num_trials` trials are
-    emitted, and `finalize_experiment` runs from `end_experiment`,
-    once, after the last trial settled."""
+    suggestion. The wrapped optimizer's `trial_store`, `final_store`
+    and `_seen_params` are the adapter's own ledger (the same objects),
+    so its helper calls and its `hparams_exist` see every emitted trial
+    without copying. At most `num_trials` trials are emitted, and
+    `finalize_experiment` runs from `end_experiment`, once, after the
+    last trial settled."""
 
     def __init__(self, wrapped) -> None:
         super().__init__()
@@ -729,16 +742,15 @@ class ReferenceOptimizerAdapter(AbstractOptimizer):
         w.searchspace = searchspace
         w.num_trials = num_trials
         w.direction = direction
-        w.trial_store = {}
-        w.final_store = self.final_store  # alias, not copy
+        # aliases, not copies
+        w.trial_store, w.final_store, w._seen_params = self.trial_store, self.final_store, self._seen_params
         self._finished_queue: list[Trial] = []
         self._exhausted = False
-        self._emitted = 0
         w.initialize()
 
     def _next_batch(self, max_trials: int) -> list[Trial]:
         out: list[Trial] = []
-        while len(out) < max_trials and not self._exhausted and self._emitted < self.num_trials:
+        while len(out) < max_trials and not self._exhausted and self._n_emitted < self.num_trials:
             last = self._finished_queue.pop(0) if self._finished_queue else None
             self.wrapped.sampling_time_start = time.time()
             t = self.wrapped.get_suggestion(last)
@@ -755,21 +767,12 @@ class ReferenceOptimizerAdapter(AbstractOptimizer):
                 if self._finished_queue:
                     continue
                 break
-            self.wrapped.trial_store[t.trial_id] = t
-            self._emitted += 1
-            out.append(self._register(t))
+            out.append(self._record(t))
         return out
 
     def finalize_trial(self, trial: Trial) -> None:
         super().finalize_trial(trial)
-        self.wrapped.trial_store.pop(trial.trial_id, None)
         self._finished_queue.append(trial)
-
-    def report_error(self, trial: Trial) -> None:
-        # an ERROR trial never finalizes: drop it from the wrapped
-        # optimizer's in-flight store
-        super().report_error(trial)
-        self.wrapped.trial_store.pop(trial.trial_id, None)
 
     def end_experiment(self) -> None:
         self.wrapped.finalize_experiment(self.final_store)

@@ -32,12 +32,14 @@ Rung stepping: each SH iteration is an `SHIteration`
 implementation. The optimizer name "hyperband" is RandomSearch with
 this pruner attached (`optimizers.get_controller`).
 
-Divergence from the reference (by design): errored trials are
-reported via `report_error` and treated as finished-with-worst-metric
-so a rung can still promote — the reference's `trial_metric_getter`
-never learns about failures and its iteration would stall forever.
-A finalized trial without a metric scores +inf the same way, and a
-NaN metric ranks last (`optimizers.min_rank_key`).
+Divergence from the reference (by design): the attached optimizer's
+getter (`AbstractOptimizer._pruner_metrics`) scores an ERROR trial
++inf, read from its trial ledger, so a rung can still promote; the
+reference's `trial_metric_getter` never learns about failures and its
+iteration would stall forever. As with the reference `AbstractPruner`,
+a standalone pruner knows only its getter, so that getter must score a
+failed trial itself. A finalized trial without a metric scores +inf
+the same way, and a NaN metric ranks last (`optimizers.min_rank_key`).
 """
 
 from __future__ import annotations
@@ -52,14 +54,15 @@ class HyperbandPruner:
     `SHIteration` per successive-halving iteration, started in order.
 
     The pruner owns the geometry (`n_budgets`, `budgets`, each
-    iteration's `ns` and base rung), the order iterations start in with
-    the IDLE/None answers of `pruning_routine`, and the +inf score of
-    ERROR trials; the iterations do the rung stepping.
+    iteration's `ns` and base rung) and the order iterations start in
+    with the IDLE/None answers of `pruning_routine`; the iterations do
+    the rung stepping.
 
     `trial_metric_getter(ids)` must return `{trial_id: metric}` for the
-    FINISHED trials among `ids` (metrics already normalized so lower is
-    better); unfinished ids are simply absent from the dict. The
-    attached optimizer provides it (`AbstractOptimizer._pruner_metrics`).
+    SETTLED trials among `ids` (metrics already normalized so lower is
+    better, a failed trial scored +inf); unsettled ids are simply
+    absent from the dict. The attached optimizer provides it
+    (`AbstractOptimizer._pruner_metrics`).
     """
 
     IDLE = "IDLE"
@@ -91,7 +94,6 @@ class HyperbandPruner:
         self.budgets = [max_budget // eta ** (self.n_budgets - 1 - j) for j in range(self.n_budgets)]
         self._iters = [self._plan_iteration(i) for i in range(n_iterations)]
         self._updating: int | None = None  # iteration awaiting report_trial
-        self._errored: set[str] = set()
 
     # -- geometry ------------------------------------------------------
 
@@ -102,7 +104,7 @@ class HyperbandPruner:
         ns = [max(int(n0 * self.eta ** (-j)), 1) for j in range(s + 1)]
         # the iteration runs the ladder's tail: its rung 0 is ladder
         # rung R-1-s
-        return SHIteration(ns, self.budgets[R - 1 - s:], iteration_id=i, trial_metric_getter=self._metrics)
+        return SHIteration(ns, self.budgets[R - 1 - s:], iteration_id=i, trial_metric_getter=self.trial_metric_getter)
 
     def _base_rung(self, it: SHIteration) -> int:
         return self.n_budgets - it.n_rungs
@@ -133,20 +135,8 @@ class HyperbandPruner:
         self._iters[self._updating].report_trial(original_trial_id, new_trial_id)
         self._updating = None
 
-    def report_error(self, trial_id: str) -> None:
-        """An ERROR trial never reaches the final store; score it as
-        +inf so its rung completes and it can never be promoted."""
-        self._errored.add(trial_id)
-
     def finished(self) -> bool:
         return all(it.finished() for it in self._iters)
-
-    def _metrics(self, ids: list[str]) -> dict[str, float]:
-        got = dict(self.trial_metric_getter(ids) or {}) if self.trial_metric_getter else {}
-        for tid in ids:
-            if tid in self._errored:
-                got[tid] = math.inf
-        return got
 
     # -- introspection --------------------------------------------------
 

@@ -106,7 +106,7 @@ def test_gp_interim_busy_locations_augmented_at_full_budget():
         t.step_history = [0, 1, 2]
         t.finalize(t.metric_history[-1])
         gp.finalize_trial(t)
-    gp._busy = [("b0", {"x": 0.25}), ("b1", {"x": 0.75})]
+    gp.trial_store = {t.trial_id: t for t in (Trial({"x": 0.25}), Trial({"x": 0.75}))}
     params = gp.suggest_model_params()
     assert set(params) == {"x"}
     assert 0.0 <= params["x"] <= 1.0

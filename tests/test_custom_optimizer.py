@@ -101,6 +101,44 @@ def test_adapter_stops_when_suggestion_none_before_num_trials():
     assert ctrl.next_batch(4) == []  # exhausted despite num_trials=10
 
 
+class CentreLineSearch(AbstractOptimizer):
+    """Walks x, then y, through five steps while holding the other at
+    the midpoint, skipping any config `hparams_exist` has seen: both
+    walks pass the centre (0.5, 0.5)."""
+
+    def initialize(self):
+        steps = [i / 4 for i in range(5)]
+        self.queue = [{"x": v, "y": 0.5} for v in steps] + [{"x": 0.5, "y": v} for v in steps]
+
+    def get_suggestion(self, trial=None):
+        while self.queue:
+            candidate = self.create_trial(self.queue.pop(0), sample_type="grid")
+            if not self.hparams_exist(candidate):
+                return candidate
+        return None
+
+    def finalize_experiment(self, trials):
+        pass
+
+
+@pytest.mark.parametrize("batch", [1, 10])
+def test_adapter_hparams_exist_sees_emitted_trials(batch):
+    """The wrapped optimizer's own dedup guard reads the adapter's
+    ledger, so the centre config runs once, whether its twin is already
+    finalized (batch 1) or still in flight in the same batch (batch
+    10)."""
+    ctrl = get_controller(CentreLineSearch())
+    ctrl.initialize(Searchspace(x=("DOUBLE", [0.0, 1.0]), y=("DOUBLE", [0.0, 1.0])), 10, "min", 0)
+    emitted = []
+    while wave := ctrl.next_batch(batch):
+        emitted.extend(wave)
+        for t in wave:
+            t.finalize(t.params["x"] + t.params["y"])
+            ctrl.finalize_trial(t)
+    ids = [t.trial_id for t in emitted]
+    assert len(ids) == len(set(ids)) == 9
+
+
 def test_lagom_accepts_reference_custom_optimizer(spark):
     from maggy_spark.config import HyperparameterOptConfig
     from maggy_spark.experiment import lagom

@@ -5,7 +5,8 @@ optimizer and the LOCO ablation controller settle the same trials at
 parallelism 3 as at parallelism 1, under both schedulings; the ERROR
 trial counts toward `num_trials` and is never replaced; the end hook
 (`finalize_experiment` for the reference protocols) runs once, after
-the last settle."""
+the last settle. Every engine controller's trial ledger ends with
+nothing in flight and each settled trial finalized or errored once."""
 
 from __future__ import annotations
 
@@ -128,6 +129,12 @@ def test_one_error_settles_the_same_trials_at_any_parallelism(monkeypatch, caplo
         assert len(warnings) == 1 and f"{settled} of {NUM_TRIALS}" in warnings[0]
     else:
         assert warnings == []
+    if isinstance(controller, AbstractOptimizer):
+        # the ledger: nothing left in flight, and every settled trial
+        # is finalized or errored exactly once
+        assert controller.trial_store == {}
+        assert Counter(t.trial_id for t in controller.final_store + controller.error_store) == Counter(returned)
+        assert len(controller.error_store) == 1
     if case in ("reference", "loco"):
         # once, after the last settle, over every finalized trial (the
         # ablator's final_store also holds its ERROR trials)

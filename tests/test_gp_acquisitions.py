@@ -108,14 +108,14 @@ def test_liar_strategies_with_busy_trials(liar):
         t.final_metric = quadratic(t.params)
         ctrl.finalize_trial(t)
     busy = ctrl.next_batch(2)
-    assert len(ctrl._busy) == 2
+    assert len(ctrl.trial_store) == 2
     params = ctrl.suggest_model_params()
     assert set(params) == {"x", "y"}
     assert all(0.0 <= params[k] <= 1.0 for k in params)
-    for t in busy:  # cleanup contract: finalize clears the busy set
+    for t in busy:  # cleanup contract: finalize clears the in-flight store
         t.final_metric = quadratic(t.params)
         ctrl.finalize_trial(t)
-    assert not ctrl._busy
+    assert not ctrl.trial_store
 
 
 def test_invalid_configs_rejected():

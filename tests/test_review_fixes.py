@@ -94,9 +94,9 @@ def test_gp_busy_accumulates():
     gp.initialize(Searchspace(x=("DOUBLE", [0, 1])), 6, "min", 7)
     b1 = gp.next_batch(1)
     b2 = gp.next_batch(1)
-    assert len(gp._busy) == 2  # not overwritten
+    assert len(gp.trial_store) == 2  # not overwritten
     gp.finalize_trial(_finalized(b1[0]))
-    assert len(gp._busy) == 1
+    assert len(gp.trial_store) == 1
 
 
 def _finalized(trial):
