@@ -39,11 +39,11 @@ class LineSearch(AbstractOptimizer):
             if t not in ("DOUBLE", "INTEGER"):
                 continue
             lo, hi = float(region[0]), float(region[1])
-            mids = {
-                n: (float(r[0]) + float(r[1])) / 2.0
-                for n, tt, r in self.searchspace.items()
-                if tt in ("DOUBLE", "INTEGER") and n != name
-            }
+            mids = {}
+            for n, tt, r in self.searchspace.items():
+                if tt in ("DOUBLE", "INTEGER") and n != name:
+                    mid = (float(r[0]) + float(r[1])) / 2.0
+                    mids[n] = int(round(mid)) if tt == "INTEGER" else mid
             for i in range(self.STEPS):
                 val = lo + (hi - lo) * i / (self.STEPS - 1)
                 params = {name: val, **mids}

@@ -25,7 +25,6 @@ one seed gives one result.
 from __future__ import annotations
 
 import logging
-import math
 import time
 from typing import Any, Callable
 
@@ -41,7 +40,7 @@ from maggy_spark.config import (
 )
 from maggy_spark.executor import encode_stop_source, median_rule, no_stop_rule, run_trial_wave, stop_views
 from maggy_spark.optimizers import get_controller
-from maggy_spark.store import TRIALS_ARROW_SCHEMA, TRIALS_SCHEMA, ExperimentStore, trial_rows
+from maggy_spark.store import TRIALS_ARROW_SCHEMA, TRIALS_SCHEMA, ExperimentStore, summarize_trials, trial_rows
 from maggy_spark.trial import Trial
 
 _LOG = logging.getLogger("maggy_spark")
@@ -433,73 +432,14 @@ def trials_to_df(spark: SparkSession, trials: list[Trial], direction: str = "max
     return spark.createDataFrame(trial_rows(trials, direction), TRIALS_SCHEMA)
 
 
-def summarize_finalized(finalized_df, direction: str) -> dict:
-    """The A1 summary over a FINALIZED-trials relation — shared by the
-    experiment finalize path and the live ExperimentStore.
-
-    Null metrics are excluded from best/worst/avg (a null struct field
-    would sort below every real metric under min and win `worst`);
-    num_trials still counts every finalized row. Plain double avg:
-    user metrics have arbitrary scale (a loss of 4e-5 would round to
-    0 under the oracle kernel's decimal(18,4) accumulator, which
-    exists for cross-engine parity on the fixtures, not results).
-    """
-    sign = "-1.0D" if direction == "min" else "1.0D"
-    agg = finalized_df.selectExpr(
-        "max(CASE WHEN final_metric IS NOT NULL THEN named_struct("
-        f"'m', final_metric * {sign}, 'ns', -seq, 'trial_id', trial_id, 'final_metric', final_metric) END) AS b",
-        "min(CASE WHEN final_metric IS NOT NULL THEN named_struct("
-        f"'m', final_metric * {sign}, 'seq', seq, 'trial_id', trial_id, 'final_metric', final_metric) END) AS w",
-        "avg(final_metric) AS avg",
-        "count(*) AS num_trials",
-        "CAST(sum(CASE WHEN early_stop THEN 1 ELSE 0 END) AS BIGINT) AS early_stopped",
-    ).collect()[0]
-    if agg.num_trials == 0 or agg.b is None:
-        return {"num_trials": int(agg.num_trials or 0), "early_stopped": int(agg.early_stopped or 0)}
-    return {
-        "best_id": agg.b.trial_id,
-        "best_val": agg.b.final_metric,
-        "worst_id": agg.w.trial_id,
-        "worst_val": agg.w.final_metric,
-        "avg": agg.avg,
-        "num_trials": agg.num_trials,
-        "early_stopped": agg.early_stopped,
-    }
-
-
 def _aggregate_result(trials: list[Trial], direction: str) -> dict:
-    """The A1 result aggregation over the experiment's own trials
+    """The A1 result summary over the experiment's own trials
     (reference optimization_driver.py:344-406 + prep_results).
 
-    Computed in Python: the driver already holds every row. It follows
-    summarize_finalized's rules exactly — that function computes the
-    same summary over the live store, and the two are checked against
-    each other. Only FINALIZED trials count; null metrics are left out
-    of best/worst/avg; best is max (sign*m, -seq) and worst is
-    min (sign*m, seq), with seq defaulting to the list index as in
-    trials_to_df; NaN orders above every number, as Spark orders
-    doubles.
+    Computed on the driver, which already holds every row: it is
+    `store.summarize_trials` over the trials' table rows, the same
+    function the live store's result_summary runs over its files, so
+    the result dict and the store agree. A trial without a seq takes
+    its list index, as in trials_to_df.
     """
-    finalized = [(t.info_dict.get("seq", i), t) for i, t in enumerate(trials) if t.status == Trial.FINALIZED]
-    early_stopped = sum(bool(t.early_stop) for _, t in finalized)
-    scored = [(seq, t.trial_id, float(t.final_metric)) for seq, t in finalized if t.final_metric is not None]
-    if not scored:
-        return {"num_trials": len(finalized), "early_stopped": early_stopped}
-    sign = -1.0 if direction == "min" else 1.0
-
-    def order(m: float) -> tuple:
-        m *= sign
-        return (True, 0.0) if math.isnan(m) else (False, m)
-
-    # struct order as in summarize_finalized: metric, seq, then trial_id
-    _, best_id, best_val = max(scored, key=lambda r: (order(r[2]), -r[0], r[1]))
-    _, worst_id, worst_val = min(scored, key=lambda r: (order(r[2]), r[0], r[1]))
-    return {
-        "best_id": best_id,
-        "best_val": best_val,
-        "worst_id": worst_id,
-        "worst_val": worst_val,
-        "avg": sum(m for _, _, m in scored) / len(scored),
-        "num_trials": len(finalized),
-        "early_stopped": early_stopped,
-    }
+    return summarize_trials(trial_rows(trials, direction), direction)

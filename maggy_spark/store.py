@@ -3,33 +3,42 @@
 SURVEY.md §3.1's rebuild lifecycle: "controller emits pending trials
 -> execute batch -> APPEND TO trials/metrics TABLES -> early-stop +
 result aggregation SQL". This store is those tables — appended per
-wave, queried with the same relational kernel shapes the oracle gate
-checks (A1 summary, A4 budget stats, G5 promotions, A8 median bar) —
-so dashboards/other sessions can watch a running experiment with
-plain Spark SQL instead of asking the driver process.
+wave, queried with the kernel shapes the oracle gate checks (A1
+summary, A4 budget stats, G5 promotions, A8 median bar) — so
+dashboards/other sessions can watch a running experiment with plain
+Spark SQL instead of asking the driver process.
 
 Append-only parquet with one file per wave: cheap atomic appends, no
 compaction needed at experiment scale (thousands of trials, not
 billions of rows). Appends are written by the driver with pyarrow —
 the rows are already in its memory, so no Spark job is needed to put
-them on disk — and read back with Spark.
+them on disk.
 
-Each kernel is one SQL statement over the scanned tables: a
-DataFrame Column tree costs a py4j round trip per node (hundreds per
-read), a SQL string is parsed in the JVM in one call. A table that
-fits one of Spark's own file splits (files x openCostInBytes + bytes
-<= maxPartitionBytes, both read from the session) is scanned as one
-partition: the kernel then needs no exchange, and adaptive execution
-runs it as one job instead of a shuffle-map job plus a result job.
-A larger table keeps its parallel scan and its plan.
+The scalar kernels, `result_summary` (A1, a dict) and `median_bar`
+(A8, a float), run on the driver: one multi-file pyarrow read of the
+store's own files, then Python. Their input is a few kilobytes the
+driver wrote itself, so a Spark job (~200 ms) would cost far more than
+the read (a few ms). A1 is `summarize_trials`, which the experiment's
+result dict runs too, so the two cannot drift.
+
+`budget_stats` (A4) and `promotable` (G5) return DataFrames for the
+caller to build on, so they stay Spark SQL, one statement each: a
+DataFrame Column tree costs a py4j round trip per node, a SQL string
+is parsed in the JVM in one call. A table that fits one of Spark's
+own file splits (files x openCostInBytes + bytes <= maxPartitionBytes,
+both read from the session) is scanned as one partition: the kernel
+then needs no exchange, and adaptive execution runs it as one job
+instead of a shuffle-map job plus a result job. A larger table keeps
+its parallel scan and its plan.
 """
 
 from __future__ import annotations
 
+import math
 import os
 import re
 import uuid
-from typing import Callable
+from typing import Callable, Iterable
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -70,12 +79,59 @@ def trial_rows(trials: list[Trial], direction: str) -> list[dict]:
     ]
 
 
+def summarize_trials(rows: Iterable[dict], direction: str) -> dict:
+    """A1, the result summary, over `trials` table rows (trial_id, seq,
+    status, final_metric, early_stop): the one implementation behind
+    the experiment's result dict and the live store's result_summary.
+
+    Only FINALIZED rows count. Null metrics are left out of
+    best/worst/avg; num_trials still counts them. best is the max of
+    (sign*metric, -seq, trial_id) and worst the min of
+    (sign*metric, seq, trial_id); NaN orders above every number, as
+    Spark orders doubles, and -NaN is NaN. avg is a plain double mean
+    summed in seq order, so it does not depend on the order the rows
+    were read in (user metrics have arbitrary scale: the oracle
+    kernels' decimal(18,4) accumulator would round a 4e-5 loss to 0).
+    """
+    finalized = [r for r in rows if r["status"] == "FINALIZED"]
+    early_stopped = sum(bool(r["early_stop"]) for r in finalized)
+    scored = sorted((r["seq"], r["trial_id"], r["final_metric"]) for r in finalized if r["final_metric"] is not None)
+    if not scored:
+        return {"num_trials": len(finalized), "early_stopped": early_stopped}
+    sign = -1.0 if direction == "min" else 1.0
+
+    def order(m: float) -> tuple:
+        m *= sign
+        return (True, 0.0) if math.isnan(m) else (False, m)
+
+    _, best_id, best_val = max(scored, key=lambda r: (order(r[2]), -r[0], r[1]))
+    _, worst_id, worst_val = min(scored, key=lambda r: (order(r[2]), r[0], r[1]))
+    return {
+        "best_id": best_id,
+        "best_val": best_val,
+        "worst_id": worst_id,
+        "worst_val": worst_val,
+        "avg": sum(m for _, _, m in scored) / len(scored),
+        "num_trials": len(finalized),
+        "early_stopped": early_stopped,
+    }
+
+
 def _data_files(path: str) -> list[str]:
     """The parquet files Spark reads from a table directory: it skips
     names starting with '.' or '_' (temp files, checksums, _SUCCESS)."""
     if not os.path.isdir(path):
         return []
     return [os.path.join(path, n) for n in sorted(os.listdir(path)) if not n.startswith((".", "_"))]
+
+
+def _read(path: str, schema: pa.Schema, columns: list[str], filters=None) -> pa.Table:
+    """`columns` of a table's data files in one pyarrow read, rows in
+    file order; a table with no file yet raises, as Spark's does."""
+    files = _data_files(path)
+    if not files:
+        raise FileNotFoundError(f"no data file under {path}")
+    return pq.read_table(files, schema=schema, columns=columns, filters=filters, partitioning=None)
 
 
 def publish(path: str, write: Callable[[str], object]) -> None:
@@ -176,25 +232,21 @@ class ExperimentStore:
     def metrics(self) -> DataFrame:
         return self.spark.read.schema(METRICS_SCHEMA).parquet(self._metrics_path)
 
-    def _scan(self, df: DataFrame, path: str) -> tuple[DataFrame, bool]:
+    def _scan(self, df: DataFrame, path: str) -> DataFrame:
         """`df` as one partition when the whole table fits one of
-        Spark's file splits (module note); True when it was made so."""
+        Spark's file splits (module note)."""
         files = _data_files(path)
         conf = self.spark.conf
         size = len(files) * _conf_bytes(conf.get("spark.sql.files.openCostInBytes"))
         size += sum(os.path.getsize(f) for f in files)
-        one = size <= _conf_bytes(conf.get("spark.sql.files.maxPartitionBytes"))
-        return (df.coalesce(1) if one else df), one
+        return df.coalesce(1) if size <= _conf_bytes(conf.get("spark.sql.files.maxPartitionBytes")) else df
 
     # -- kernel queries over the live store ----------------------------
 
     def result_summary(self) -> dict:
-        """A1 over the live store — the same aggregation the finalize
-        path uses (single source in experiment.summarize_finalized)."""
-        from maggy_spark.experiment import summarize_finalized
-
-        t, _ = self._scan(self.trials(), self._trials_path)
-        return summarize_finalized(t.where("status = 'FINALIZED'"), self.direction)
+        """A1 over the live store, on the driver (module note)."""
+        cols = ["trial_id", "seq", "status", "final_metric", "early_stop"]
+        return summarize_trials(_read(self._trials_path, TRIALS_ARROW_SCHEMA, cols).to_pylist(), self.direction)
 
     def budget_stats(self) -> DataFrame:
         """A4 per-budget ybest/yworst/ymean over the live store —
@@ -202,7 +254,7 @@ class ExperimentStore:
         experiment's direction (the reference equates ybest with min
         only after sign-normalizing max-direction metrics)."""
         best, worst = ("max", "min") if self.direction == "max" else ("min", "max")
-        t, _ = self._scan(self.trials(), self._trials_path)
+        t = self._scan(self.trials(), self._trials_path)
         return self.spark.sql(
             f"""SELECT budget, {best}(final_metric) AS ybest, {worst}(final_metric) AS yworst,
                    avg(final_metric) AS ymean, count(*) AS n_trials
@@ -218,7 +270,7 @@ class ExperimentStore:
         direction='min' a null would sort FIRST (asc is nulls-first)
         and a broken trial would win the rung."""
         order = "DESC" if self.direction == "max" else "ASC"
-        t, _ = self._scan(self.trials(), self._trials_path)
+        t = self._scan(self.trials(), self._trials_path)
         return self.spark.sql(
             f"""SELECT rung, trial_id, final_metric, rank FROM (
                 SELECT budget AS rung, trial_id, final_metric,
@@ -231,20 +283,26 @@ class ExperimentStore:
         )
 
     def median_bar(self, step_limit: int = 3) -> float | None:
-        """A8: the early-stop bar from the live metric stream. When
-        both tables are one partition a sort-merge join needs no
-        exchange, where a broadcast join would cost its own job."""
-        t, t_one = self._scan(self.trials(), self._trials_path)
-        m, m_one = self._scan(self.metrics(), self._metrics_path)
-        hint = "/*+ MERGE(f) */" if t_one and m_one else ""
-        row = self.spark.sql(
-            f"""SELECT percentile(pavg, 0.5D) AS bar FROM (
-                SELECT {hint} trial_id, avg(value) AS pavg
-                FROM {{m}} JOIN (SELECT trial_id FROM {{t}} WHERE status = 'FINALIZED') f USING (trial_id)
-                WHERE step <= :step_limit
-                GROUP BY trial_id)""",
-            args={"step_limit": step_limit},
-            t=t,
-            m=m,
-        ).collect()[0]
-        return None if row.bar is None else float(row.bar)
+        """A8: the early-stop bar from the live metric stream — the
+        median over FINALIZED trials of each one's mean value at
+        step <= step_limit — on the driver (module note), with Spark
+        SQL's arithmetic: a mean sums in file row order, and the median
+        is `percentile(mean, 0.5)`, NaN sorting greatest, interpolated
+        between the middle two as (hi-pos)*a + (pos-lo)*b at
+        pos = (n-1)*0.5."""
+        t = _read(self._trials_path, TRIALS_ARROW_SCHEMA, ["trial_id"], [("status", "=", "FINALIZED")])
+        finalized = set(t["trial_id"].to_pylist())
+        m = _read(self._metrics_path, METRICS_ARROW_SCHEMA, ["trial_id", "value"], [("step", "<=", step_limit)])
+        sums: dict[str, list] = {}
+        for trial_id, value in zip(m["trial_id"].to_pylist(), m["value"].to_pylist()):
+            if trial_id in finalized and value is not None:
+                acc = sums.setdefault(trial_id, [0.0, 0])
+                acc[0] += value
+                acc[1] += 1
+        means = sorted((total / n for total, n in sums.values()), key=lambda v: (math.isnan(v), v))
+        if not means:
+            return None
+        pos = (len(means) - 1) * 0.5
+        lo, hi = math.floor(pos), math.ceil(pos)
+        a, b = means[lo], means[hi]
+        return a if lo == hi or a == b else (hi - pos) * a + (pos - lo) * b

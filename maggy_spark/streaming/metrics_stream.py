@@ -60,8 +60,8 @@ def windowed_metric_aggregates(
         # plain double mean: USER metrics have arbitrary scale — the
         # decimal(18,4) accumulator (which exists for cross-engine
         # parity on the fixtures) rounds a 4e-5 loss to 0 and overflows
-        # to null past 1e14 (same reasoning as summarize_finalized,
-        # experiment.py)
+        # to null past 1e14 (same reasoning as the A1 summary,
+        # store.summarize_trials)
         F.avg("value").alias("mean_value"),
         F.max("value").alias("max_value"),
     )

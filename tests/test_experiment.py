@@ -401,7 +401,8 @@ AGG_CASES = {
 def test_aggregate_result_matches_spark_summary(spark, case, direction):
     from pyspark.sql import functions as F
 
-    from maggy_spark.experiment import _aggregate_result, summarize_finalized, trials_to_df
+    from maggy_spark.experiment import _aggregate_result, trials_to_df
+    from tests.store_oracles import summarize_finalized
 
     trials = AGG_CASES[case]()
     got = _aggregate_result(trials, direction)

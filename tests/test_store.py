@@ -259,7 +259,7 @@ def test_written_files_carry_the_arrow_schema(tmp_path):
             assert pq.read_schema(tmp_path / "footer" / table / name).equals(schema), (table, name)
 
 
-# -- one SQL job per kernel read ---------------------------------------
+# -- Spark jobs per kernel read -----------------------------------------
 
 
 def _jobs_run(spark, read) -> int:
@@ -287,24 +287,25 @@ def _kernel_reads(s):
 
 
 def test_small_store_reads_run_one_job_each(spark, tmp_path):
-    """A store that fits one file split is scanned as one partition, so
-    each kernel needs no exchange and runs as one Spark job (a
-    shuffle-map job plus a result job otherwise; four for the
-    broadcast join in median_bar)."""
+    """The scalar kernels run on the driver with no Spark job. A store
+    that fits one file split is scanned as one partition, so each
+    DataFrame kernel needs no exchange and runs as one Spark job (a
+    shuffle-map job plus a result job otherwise)."""
     s = ExperimentStore(spark, str(tmp_path / "onejob"), direction="max")
     for wave in range(3):
         trials = [_trial(2 * wave + 1, 10.0 + wave, budget=1 + wave % 2), _trial(2 * wave + 2, 5.0, budget=1)]
         s.append_trials(trials)
         s.append_metrics(trials)
-    for name, read in _kernel_reads(s).items():
-        assert _jobs_run(spark, read) == 1, name
+    want = {"result_summary": 0, "budget_stats": 1, "promotable": 1, "median_bar": 0}
+    assert {name: _jobs_run(spark, read) for name, read in _kernel_reads(s).items()} == want
 
 
 def _tricky_min_store(spark, path):
     """direction='min' with a tie, a null-metric FINALIZED row, a NaN
     metric and an ERROR row, over three appends. Each trial reports
     steps 0..4 with value base + step, so its mean over steps 0..3 is
-    base + 1.5."""
+    base + 1.5. Returns the store, the trial ids by name and the
+    trials."""
     s = ExperimentStore(spark, path, direction="min")
     waves = [
         # (name, budget, status, final_metric, early_stop, base)
@@ -314,7 +315,7 @@ def _tricky_min_store(spark, path):
          ("F", 2, "ERROR", None, False, 100.0)],
         [("G", 1, "FINALIZED", 3.0, False, 5.0)],
     ]
-    ids = {}
+    ids, appended = {}, []
     for wave in waves:
         trials = []
         for name, budget, status, metric, early_stop, base in wave:
@@ -329,13 +330,14 @@ def _tricky_min_store(spark, path):
             trials.append(t)
         s.append_trials(trials)
         s.append_metrics(trials)
-    return s, ids
+        appended += trials
+    return s, ids, appended
 
 
 def test_kernel_semantics_on_tricky_min_store(spark, tmp_path):
     import math
 
-    s, ids = _tricky_min_store(spark, str(tmp_path / "tricky"))
+    s, ids, _trials = _tricky_min_store(spark, str(tmp_path / "tricky"))
     name = {v: k for k, v in ids.items()}
     assert {r.trial_id: r.seq for r in s.trials().collect()} == {ids[n]: i + 1 for i, n in enumerate("ABCDEFG")}
 
@@ -373,19 +375,19 @@ def test_kernel_semantics_on_tricky_min_store(spark, tmp_path):
 def test_store_past_one_split_reads_the_same(spark, tmp_path):
     """A table larger than one file split keeps its parallel scan, and
     the kernels answer the same as on the one-partition scan."""
-    s, _ids = _tricky_min_store(spark, str(tmp_path / "split"))
+    s, _ids, _trials = _tricky_min_store(spark, str(tmp_path / "split"))
     path = s._trials_path
 
     def answers():
         rows = {k: read() for k, read in _kernel_reads(s).items()}
         return repr({k: sorted(v) if isinstance(v, list) else v for k, v in rows.items()})
 
-    assert s._scan(s.trials(), path)[1]
+    assert s._scan(s.trials(), path).rdd.getNumPartitions() == 1
     small = answers()
     # 3 files x the 4 MB default open cost no longer fit one 8 MB split
     spark.conf.set("spark.sql.files.maxPartitionBytes", "8m")
     try:
-        assert not s._scan(s.trials(), path)[1]
+        assert s._scan(s.trials(), path).rdd.getNumPartitions() > 1
         assert answers() == small
     finally:
         spark.conf.unset("spark.sql.files.maxPartitionBytes")
@@ -399,3 +401,134 @@ def test_conf_bytes_parses_spark_byte_strings(value, size):
     from maggy_spark.store import _conf_bytes
 
     assert _conf_bytes(value) == size
+
+
+# -- the driver-side scalar kernels against their SQL oracles -----------
+
+
+def _exact(summary: dict) -> dict:
+    """`summary` with each float replaced by its repr, so `==` is exact
+    equality with NaN equal to NaN."""
+    return {k: repr(v) if isinstance(v, float) else v for k, v in summary.items()}
+
+
+def _assert_scalar_reads_match_oracles(spark, s, trials, step_limits=(0, 3)):
+    """result_summary and median_bar against the Spark SQL oracles over
+    the same files: ids, values, counts and bars exactly. avg is exactly
+    _aggregate_result's over the trials that were appended; Spark sums
+    it in the order its file splits are packed, so the oracle's avg may
+    differ in the last bits."""
+    from maggy_spark.experiment import _aggregate_result
+    from tests.store_oracles import median_bar_sql, summarize_finalized
+
+    got = s.result_summary()
+    want = summarize_finalized(s.trials().where("status = 'FINALIZED'"), s.direction)
+    assert got.keys() == want.keys()
+    assert _exact(got) == _exact(_aggregate_result(trials, s.direction))
+    if "avg" in want:
+        assert got.pop("avg") == pytest.approx(want.pop("avg"), rel=1e-12, nan_ok=True)
+    assert _exact(got) == _exact(want)
+    for step_limit in step_limits:
+        bar, want_bar = s.median_bar(step_limit), median_bar_sql(spark, s.trials(), s.metrics(), step_limit)
+        assert repr(bar) == repr(want_bar), step_limit
+
+
+@pytest.mark.parametrize("direction", ["min", "max"])
+def test_scalar_reads_match_sql_oracles_on_tricky_store(spark, tmp_path, direction):
+    """A tie, a null metric, NaN, an ERROR row and an early stop, read
+    at one file split and past one split."""
+    s, _ids, trials = _tricky_min_store(spark, str(tmp_path / "tricky"))
+    s = ExperimentStore(spark, s.path, direction=direction)
+    _assert_scalar_reads_match_oracles(spark, s, trials, step_limits=(-1, 0, 2, 3, 4))
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "8m")
+    try:
+        assert s._scan(s.trials(), s._trials_path).rdd.getNumPartitions() > 1
+        _assert_scalar_reads_match_oracles(spark, s, trials, step_limits=(-1, 0, 2, 3, 4))
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+
+
+def test_scalar_reads_match_sql_oracles_on_300_waves(spark, tmp_path):
+    import random
+
+    rnd = random.Random(300)
+    s = ExperimentStore(spark, str(tmp_path / "waves"), direction="max")
+    trials = []
+    for w in range(300):
+        wave = []
+        for i in range(4):
+            t = Trial({"x": rnd.random(), "wave": w, "slot": i})
+            for step in range(8):
+                t.append_metric(rnd.random(), step)
+            t.finalize(rnd.random())
+            t.early_stop = (w + i) % 5 == 0
+            if (w + i) % 11 == 0:
+                t.status = Trial.ERROR
+            t.info_dict["budget"] = 1 + (w + i) % 3
+            wave.append(t)
+        s.append_trials(wave)
+        s.append_metrics(wave)
+        trials += wave
+    for direction in ("max", "min"):
+        _assert_scalar_reads_match_oracles(spark, ExperimentStore(spark, s.path, direction), trials, (0, 3, 7))
+
+
+def test_median_bar_sorts_nan_greatest_like_percentile(spark, tmp_path):
+    """A NaN trial mean sorts above every number: with 3 means it sits
+    past the median, with 4 the median interpolates between numbers,
+    with 2 it interpolates into NaN."""
+    from tests.store_oracles import median_bar_sql
+
+    nan = float("nan")
+    for means, bar in (([1.0, nan, 3.0], 3.0), ([2.0, nan, 1.0, 3.0], 2.5), ([1.0, nan], nan)):
+        s = ExperimentStore(spark, str(tmp_path / f"nan{len(means)}"), direction="max")
+        trials = [_trial(seq, 1.0, steps=(m, m)) for seq, m in enumerate(means, 1)]
+        s.append_trials(trials)
+        s.append_metrics(trials)
+        got = s.median_bar()
+        assert repr(got) == repr(median_bar_sql(spark, s.trials(), s.metrics()))
+        assert repr(got) == repr(bar)
+
+
+def test_result_dict_store_and_sink_agree_without_spark(tmp_path):
+    """The result dict, the live store and the finalize sink's trials
+    relation give the same A1 summary, with no Spark session; the
+    scalar reads raise while a table has no file yet."""
+    import os
+    from types import SimpleNamespace
+
+    import pyarrow.parquet as pq
+
+    from maggy_spark.experiment import _aggregate_result, _persist_experiment
+    from maggy_spark.store import summarize_trials
+
+    s = ExperimentStore(None, str(tmp_path / "live"), direction="min")
+    with pytest.raises(FileNotFoundError):
+        s.result_summary()
+    with pytest.raises(FileNotFoundError):
+        s.median_bar()
+    null_metric = Trial({"x": 9})
+    null_metric.finalize(None)
+    # tie on 2.0 (seq 1 and 2), one null metric
+    wave1 = [_trial(1, 2.0), _trial(2, 2.0, steps=(4.0,)), null_metric]
+    s.append_trials(wave1)
+    with pytest.raises(FileNotFoundError):
+        s.median_bar()  # trials written, metrics not yet
+    s.append_metrics(wave1)
+    error, stopped = _trial(5, 100.0), _trial(6, 3.0)
+    error.status, stopped.early_stop = Trial.ERROR, True
+    wave2 = [_trial(4, 0.5), error, stopped]
+    s.append_trials(wave2)
+    s.append_metrics(wave2)
+    trials = wave1 + wave2
+
+    result = _aggregate_result(trials, "min")
+    assert (result["best_id"], result["worst_id"]) == (wave2[0].trial_id, stopped.trial_id)
+    assert (result["num_trials"], result["early_stopped"]) == (5, 1)
+    exp_dir = str(tmp_path / "exp")
+    _persist_experiment(SimpleNamespace(direction="min"), trials, result, exp_dir)
+    sink = summarize_trials(pq.read_table(os.path.join(exp_dir, "trials")).to_pylist(), "min")
+    assert _exact(result) == _exact(s.result_summary()) == _exact(sink)
+    # FINALIZED means over steps 0..2: 4, 8, 1 and 6 (the ERROR trial
+    # and the metric-less one are out): median of [1, 4, 6, 8] is 5
+    assert s.median_bar() == 5.0

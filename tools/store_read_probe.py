@@ -13,6 +13,10 @@ each of the four kernel reads (``result_summary``,
 - ``jobs``: Spark jobs it ran;
 - ``py4j``: driver-to-JVM round trips it made.
 
+``result_summary`` and ``median_bar`` read the store's files with
+pyarrow on the driver, so they show 0 jobs and 0 py4j; the other two
+return DataFrames and run Spark SQL.
+
 Then, per store, ``finalize_ms``: the median wall time of the
 finalize sinks (``experiment._persist_experiment``: ``result.json``
 and the bucketed ``trials/`` relation) over the store's trials.
