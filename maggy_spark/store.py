@@ -14,33 +14,31 @@ billions of rows). Appends are written by the driver with pyarrow —
 the rows are already in its memory, so no Spark job is needed to put
 them on disk.
 
-The scalar kernels, `result_summary` (A1, a dict) and `median_bar`
-(A8, a float), run on the driver: one multi-file pyarrow read of the
-store's own files, then Python. Their input is a few kilobytes the
+Every kernel read runs on the driver: one multi-file pyarrow read of
+the store's own files, then Python. Their input is a few kilobytes the
 driver wrote itself, so a Spark job (~200 ms) would cost far more than
-the read (a few ms). A1 is `summarize_trials`, which the experiment's
-result dict runs too, so the two cannot drift.
+the read (a few ms). `result_summary` (A1, a dict) is
+`summarize_trials`, which the experiment's result dict runs too, so
+the two cannot drift; `median_bar` (A8) returns a float.
 
 `budget_stats` (A4) and `promotable` (G5) return DataFrames for the
-caller to build on, so they stay Spark SQL, one statement each: a
-DataFrame Column tree costs a py4j round trip per node, a SQL string
-is parsed in the JVM in one call. A table that fits one of Spark's
-own file splits (files x openCostInBytes + bytes <= maxPartitionBytes,
-both read from the session) is scanned as one partition: the kernel
-then needs no exchange, and adaptive execution runs it as one job
-instead of a shuffle-map job plus a result job. A larger table keeps
-its parallel scan and its plan.
+caller to build on, made with `createDataFrame` from an Arrow table of
+the answer: a local relation, which runs no Spark job when collected
+(one made from Python rows runs one). It is a snapshot taken at call
+time: collecting it again does not see later appends, as a lazy scan
+of the files would. Call the method again for fresh numbers.
 """
 
 from __future__ import annotations
 
 import math
+import numbers
 import os
-import re
 import uuid
 from typing import Callable, Iterable
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import from_arrow_schema
@@ -69,6 +67,12 @@ METRICS_ARROW_SCHEMA = pa.schema([
     ("value", pa.float64()),
 ])
 METRICS_SCHEMA = from_arrow_schema(METRICS_ARROW_SCHEMA)
+# The answers of the two DataFrame kernels, nullability included, as
+# their Spark SQL definitions (tests/store_oracles.py) type them.
+_BUDGET_STATS_SCHEMA = pa.schema([("budget", pa.int32()), ("ybest", pa.float64()), ("yworst", pa.float64()),
+                                  ("ymean", pa.float64()), pa.field("n_trials", pa.int64(), nullable=False)])
+_PROMOTABLE_SCHEMA = pa.schema([("rung", pa.int32()), ("trial_id", pa.string()), ("final_metric", pa.float64()),
+                                pa.field("rank", pa.int32(), nullable=False)])
 
 
 def trial_rows(trials: list[Trial], direction: str) -> list[dict]:
@@ -77,6 +81,11 @@ def trial_rows(trials: list[Trial], direction: str) -> list[dict]:
         t.to_row(seq=t.info_dict.get("seq", i), direction=direction, budget=int(t.info_dict.get("budget", 0)))
         for i, t in enumerate(trials)
     ]
+
+
+def _nan_greatest(m: float) -> tuple:
+    """Sort key ordering doubles as Spark does: NaN above every number."""
+    return (True, 0.0) if math.isnan(m) else (False, m)
 
 
 def summarize_trials(rows: Iterable[dict], direction: str) -> dict:
@@ -99,13 +108,8 @@ def summarize_trials(rows: Iterable[dict], direction: str) -> dict:
     if not scored:
         return {"num_trials": len(finalized), "early_stopped": early_stopped}
     sign = -1.0 if direction == "min" else 1.0
-
-    def order(m: float) -> tuple:
-        m *= sign
-        return (True, 0.0) if math.isnan(m) else (False, m)
-
-    _, best_id, best_val = max(scored, key=lambda r: (order(r[2]), -r[0], r[1]))
-    _, worst_id, worst_val = min(scored, key=lambda r: (order(r[2]), r[0], r[1]))
+    _, best_id, best_val = max(scored, key=lambda r: (_nan_greatest(sign * r[2]), -r[0], r[1]))
+    _, worst_id, worst_val = min(scored, key=lambda r: (_nan_greatest(sign * r[2]), r[0], r[1]))
     return {
         "best_id": best_id,
         "best_val": best_val,
@@ -153,13 +157,6 @@ def _write_parquet(table: pa.Table, path: str) -> None:
     """Add `table` to the directory as one new file."""
     os.makedirs(path, exist_ok=True)
     publish(os.path.join(path, f"part-{uuid.uuid4().hex}.parquet"), lambda tmp: pq.write_table(table, tmp))
-
-
-def _conf_bytes(value: str) -> int:
-    """A Spark byte-size conf value ("134217728b", "128m", "4MB") in
-    bytes; units are binary, as in Spark's JavaUtils.byteStringAsBytes."""
-    num, unit = re.fullmatch(r"\s*(\d+)\s*([a-z]*)\s*", value.lower()).groups()
-    return int(num) * 1024 ** "bkmgtp".index(unit[:1] or "b")
 
 
 class ExperimentStore:
@@ -232,15 +229,6 @@ class ExperimentStore:
     def metrics(self) -> DataFrame:
         return self.spark.read.schema(METRICS_SCHEMA).parquet(self._metrics_path)
 
-    def _scan(self, df: DataFrame, path: str) -> DataFrame:
-        """`df` as one partition when the whole table fits one of
-        Spark's file splits (module note)."""
-        files = _data_files(path)
-        conf = self.spark.conf
-        size = len(files) * _conf_bytes(conf.get("spark.sql.files.openCostInBytes"))
-        size += sum(os.path.getsize(f) for f in files)
-        return df.coalesce(1) if size <= _conf_bytes(conf.get("spark.sql.files.maxPartitionBytes")) else df
-
     # -- kernel queries over the live store ----------------------------
 
     def result_summary(self) -> dict:
@@ -248,39 +236,51 @@ class ExperimentStore:
         cols = ["trial_id", "seq", "status", "final_metric", "early_stop"]
         return summarize_trials(_read(self._trials_path, TRIALS_ARROW_SCHEMA, cols).to_pylist(), self.direction)
 
+    def _scored_by_budget(self, *columns: str) -> dict:
+        """The FINALIZED rows with a metric as tuples of `columns`,
+        grouped by budget, in file row order: the input of A4 and G5."""
+        scored = (pc.field("status") == "FINALIZED") & pc.field("final_metric").is_valid()
+        t = _read(self._trials_path, TRIALS_ARROW_SCHEMA, ["budget", *columns], scored)
+        groups: dict = {}
+        for budget, *row in zip(*(t[c].to_pylist() for c in t.column_names)):
+            groups.setdefault(budget, []).append(row)
+        return groups
+
     def budget_stats(self) -> DataFrame:
-        """A4 per-budget ybest/yworst/ymean over the live store —
-        direction-aware: ybest is the BEST metric for this
-        experiment's direction (the reference equates ybest with min
-        only after sign-normalizing max-direction metrics)."""
-        best, worst = ("max", "min") if self.direction == "max" else ("min", "max")
-        t = self._scan(self.trials(), self._trials_path)
-        return self.spark.sql(
-            f"""SELECT budget, {best}(final_metric) AS ybest, {worst}(final_metric) AS yworst,
-                   avg(final_metric) AS ymean, count(*) AS n_trials
-            FROM {{t}} WHERE status = 'FINALIZED' AND final_metric IS NOT NULL
-            GROUP BY budget""",
-            t=t,
-        )
+        """A4 per-budget ybest/yworst/ymean/n_trials over the FINALIZED
+        trials with a metric — direction-aware: ybest is the BEST
+        metric for this experiment's direction (the reference equates
+        ybest with min only after sign-normalizing max-direction
+        metrics). NaN is the greatest double, as in Spark's max and
+        min; ymean sums in file row order. A snapshot taken at this
+        call: collecting it again sees no later append (module note)."""
+        best, worst = (max, min) if self.direction == "max" else (min, max)
+        rows = []
+        for budget, scored in self._scored_by_budget("final_metric").items():
+            ms = [m for m, in scored]
+            ybest, yworst = best(ms, key=_nan_greatest), worst(ms, key=_nan_greatest)
+            rows.append({"budget": budget, "ybest": ybest, "yworst": yworst, "ymean": sum(ms) / len(ms),
+                         "n_trials": len(ms)})
+        return self.spark.createDataFrame(pa.Table.from_pylist(rows, schema=_BUDGET_STATS_SCHEMA))
 
     def promotable(self, eta: int = 2) -> DataFrame:
-        """G5: top floor(n/eta) per budget-rung, direction-aware.
-
-        Metric-less finalized trials are excluded up front: under
-        direction='min' a null would sort FIRST (asc is nulls-first)
-        and a broken trial would win the rung."""
-        order = "DESC" if self.direction == "max" else "ASC"
-        t = self._scan(self.trials(), self._trials_path)
-        return self.spark.sql(
-            f"""SELECT rung, trial_id, final_metric, rank FROM (
-                SELECT budget AS rung, trial_id, final_metric,
-                    row_number() OVER (PARTITION BY budget ORDER BY final_metric {order}, seq) AS rank,
-                    count(*) OVER (PARTITION BY budget) AS n
-                FROM {{t}} WHERE status = 'FINALIZED' AND final_metric IS NOT NULL)
-            WHERE rank <= floor(n / :eta)""",
-            args={"eta": eta},
-            t=t,
-        )
+        """G5: per budget-rung, the top floor(n/eta) of its n FINALIZED
+        trials with a metric, ranked from 1 by final_metric (descending
+        for max, ascending for min; NaN is the greatest double), then by
+        seq. A metric-less trial is never ranked, so a broken trial
+        cannot win a rung under 'min'. An eta that is not an int >= 1
+        raises ValueError. A snapshot taken at this call (module note)."""
+        if isinstance(eta, bool) or not isinstance(eta, numbers.Integral) or eta < 1:
+            raise ValueError(f"eta must be an int >= 1, got {eta!r}")
+        rows = []
+        for rung, scored in self._scored_by_budget("trial_id", "final_metric", "seq").items():
+            scored.sort(key=lambda r: r[2])
+            scored.sort(key=lambda r: _nan_greatest(r[1]), reverse=self.direction == "max")
+            rows += [
+                {"rung": rung, "trial_id": trial_id, "final_metric": m, "rank": rank}
+                for rank, (trial_id, m, _seq) in enumerate(scored[: len(scored) // eta], 1)
+            ]
+        return self.spark.createDataFrame(pa.Table.from_pylist(rows, schema=_PROMOTABLE_SCHEMA))
 
     def median_bar(self, step_limit: int = 3) -> float | None:
         """A8: the early-stop bar from the live metric stream — the
@@ -299,7 +299,7 @@ class ExperimentStore:
                 acc = sums.setdefault(trial_id, [0.0, 0])
                 acc[0] += value
                 acc[1] += 1
-        means = sorted((total / n for total, n in sums.values()), key=lambda v: (math.isnan(v), v))
+        means = sorted((total / n for total, n in sums.values()), key=_nan_greatest)
         if not means:
             return None
         pos = (len(means) - 1) * 0.5

@@ -1,7 +1,9 @@
-"""Spark SQL reference implementations of the live store's two scalar
-kernels, which the engine computes on the driver:
+"""Spark SQL reference implementations of the live store's kernels,
+which the engine computes on the driver:
 
 - A1, the result summary (`store.summarize_trials`);
+- A4, the per-budget stats (`ExperimentStore.budget_stats`);
+- G5, the promotions (`ExperimentStore.promotable`);
 - A8, the median early-stop bar (`ExperimentStore.median_bar`).
 
 The tests compare the engine's answers against these relational
@@ -58,3 +60,31 @@ def median_bar_sql(spark, trials_df, metrics_df, step_limit: int = 3) -> float |
         m=metrics_df,
     ).collect()[0]
     return None if row.bar is None else float(row.bar)
+
+
+def budget_stats_sql(spark, trials_df, direction: str):
+    """A4: per-budget best, worst and mean metric over the FINALIZED
+    trials with a metric, direction-aware."""
+    best, worst = ("max", "min") if direction == "max" else ("min", "max")
+    return spark.sql(
+        f"""SELECT budget, {best}(final_metric) AS ybest, {worst}(final_metric) AS yworst,
+               avg(final_metric) AS ymean, count(*) AS n_trials
+        FROM {{t}} WHERE status = 'FINALIZED' AND final_metric IS NOT NULL
+        GROUP BY budget""",
+        t=trials_df,
+    )
+
+
+def promotable_sql(spark, trials_df, direction: str, eta: int):
+    """G5: the top floor(n/eta) per budget-rung by metric, then seq."""
+    order = "DESC" if direction == "max" else "ASC"
+    return spark.sql(
+        f"""SELECT rung, trial_id, final_metric, rank FROM (
+            SELECT budget AS rung, trial_id, final_metric,
+                row_number() OVER (PARTITION BY budget ORDER BY final_metric {order}, seq) AS rank,
+                count(*) OVER (PARTITION BY budget) AS n
+            FROM {{t}} WHERE status = 'FINALIZED' AND final_metric IS NOT NULL)
+        WHERE rank <= floor(n / :eta)""",
+        args={"eta": eta},
+        t=trials_df,
+    )

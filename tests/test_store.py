@@ -1,6 +1,8 @@
 """ExperimentStore: live relational analytics over a running
 experiment's trials/metrics tables."""
 
+from contextlib import contextmanager
+
 import pytest
 
 from maggy_spark.store import ExperimentStore
@@ -287,16 +289,14 @@ def _kernel_reads(s):
 
 
 def test_small_store_reads_run_one_job_each(spark, tmp_path):
-    """The scalar kernels run on the driver with no Spark job. A store
-    that fits one file split is scanned as one partition, so each
-    DataFrame kernel needs no exchange and runs as one Spark job (a
-    shuffle-map job plus a result job otherwise)."""
+    """Every kernel read runs on the driver with no Spark job: the
+    DataFrame kernels return a local relation, collected without one."""
     s = ExperimentStore(spark, str(tmp_path / "onejob"), direction="max")
     for wave in range(3):
         trials = [_trial(2 * wave + 1, 10.0 + wave, budget=1 + wave % 2), _trial(2 * wave + 2, 5.0, budget=1)]
         s.append_trials(trials)
         s.append_metrics(trials)
-    want = {"result_summary": 0, "budget_stats": 1, "promotable": 1, "median_bar": 0}
+    want = {"result_summary": 0, "budget_stats": 0, "promotable": 0, "median_bar": 0}
     assert {name: _jobs_run(spark, read) for name, read in _kernel_reads(s).items()} == want
 
 
@@ -372,35 +372,50 @@ def test_kernel_semantics_on_tricky_min_store(spark, tmp_path):
     assert s.median_bar(step_limit=0) == pytest.approx(2.5)
 
 
+# Spark's file splits for the trials table (the oracles' scan): with no
+# open cost and a minimum of one partition, a small table is one split;
+# 3 files x the 4 MB default open cost no longer fit one 8 MB split.
+ONE_SPLIT = {"spark.sql.files.minPartitionNum": "1", "spark.sql.files.openCostInBytes": "0"}
+PAST_ONE_SPLIT = {"spark.sql.files.maxPartitionBytes": "8m"}
+
+
+@contextmanager
+def _spark_conf(spark, conf: dict):
+    for key, value in conf.items():
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        for key in conf:
+            spark.conf.unset(key)
+
+
+def _at_one_split_and_past(spark, s, check):
+    """Run `check()` with the trials table read as one Spark partition,
+    then as several."""
+    with _spark_conf(spark, ONE_SPLIT):
+        assert s.trials().rdd.getNumPartitions() == 1
+        check()
+    with _spark_conf(spark, PAST_ONE_SPLIT):
+        assert s.trials().rdd.getNumPartitions() > 1
+        check()
+
+
 def test_store_past_one_split_reads_the_same(spark, tmp_path):
-    """A table larger than one file split keeps its parallel scan, and
-    the kernels answer the same as on the one-partition scan."""
+    """A table larger than one file split answers the same as one that
+    fits one split."""
     s, _ids, _trials = _tricky_min_store(spark, str(tmp_path / "split"))
-    path = s._trials_path
 
     def answers():
         rows = {k: read() for k, read in _kernel_reads(s).items()}
         return repr({k: sorted(v) if isinstance(v, list) else v for k, v in rows.items()})
 
-    assert s._scan(s.trials(), path).rdd.getNumPartitions() == 1
-    small = answers()
-    # 3 files x the 4 MB default open cost no longer fit one 8 MB split
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "8m")
-    try:
-        assert s._scan(s.trials(), path).rdd.getNumPartitions() > 1
+    with _spark_conf(spark, ONE_SPLIT):
+        assert s.trials().rdd.getNumPartitions() == 1
+        small = answers()
+    with _spark_conf(spark, PAST_ONE_SPLIT):
+        assert s.trials().rdd.getNumPartitions() > 1
         assert answers() == small
-    finally:
-        spark.conf.unset("spark.sql.files.maxPartitionBytes")
-
-
-@pytest.mark.parametrize(
-    "value, size",
-    [("134217728b", 134217728), ("4194304", 4194304), ("128m", 128 << 20), ("4MB", 4 << 20), (" 1g ", 1 << 30)],
-)
-def test_conf_bytes_parses_spark_byte_strings(value, size):
-    from maggy_spark.store import _conf_bytes
-
-    assert _conf_bytes(value) == size
 
 
 # -- the driver-side scalar kernels against their SQL oracles -----------
@@ -439,20 +454,17 @@ def test_scalar_reads_match_sql_oracles_on_tricky_store(spark, tmp_path, directi
     at one file split and past one split."""
     s, _ids, trials = _tricky_min_store(spark, str(tmp_path / "tricky"))
     s = ExperimentStore(spark, s.path, direction=direction)
-    _assert_scalar_reads_match_oracles(spark, s, trials, step_limits=(-1, 0, 2, 3, 4))
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "8m")
-    try:
-        assert s._scan(s.trials(), s._trials_path).rdd.getNumPartitions() > 1
-        _assert_scalar_reads_match_oracles(spark, s, trials, step_limits=(-1, 0, 2, 3, 4))
-    finally:
-        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    _at_one_split_and_past(spark, s, lambda: _assert_scalar_reads_match_oracles(spark, s, trials, (-1, 0, 2, 3, 4)))
 
 
-def test_scalar_reads_match_sql_oracles_on_300_waves(spark, tmp_path):
+@pytest.fixture(scope="module")
+def waves_store(spark, tmp_path_factory):
+    """A seeded 300-wave store of 4 trials a wave over budgets 1..3,
+    with early stops and ERROR rows, and its trials."""
     import random
 
     rnd = random.Random(300)
-    s = ExperimentStore(spark, str(tmp_path / "waves"), direction="max")
+    s = ExperimentStore(spark, str(tmp_path_factory.mktemp("waves") / "store"), direction="max")
     trials = []
     for w in range(300):
         wave = []
@@ -469,6 +481,11 @@ def test_scalar_reads_match_sql_oracles_on_300_waves(spark, tmp_path):
         s.append_trials(wave)
         s.append_metrics(wave)
         trials += wave
+    return s, trials
+
+
+def test_scalar_reads_match_sql_oracles_on_300_waves(spark, waves_store):
+    s, trials = waves_store
     for direction in ("max", "min"):
         _assert_scalar_reads_match_oracles(spark, ExperimentStore(spark, s.path, direction), trials, (0, 3, 7))
 
@@ -532,3 +549,96 @@ def test_result_dict_store_and_sink_agree_without_spark(tmp_path):
     # FINALIZED means over steps 0..2: 4, 8, 1 and 6 (the ERROR trial
     # and the metric-less one are out): median of [1, 4, 6, 8] is 5
     assert s.median_bar() == 5.0
+
+
+# -- the driver-side DataFrame kernels against their SQL oracles --------
+
+
+def _assert_frame_reads_match_oracles(spark, s, etas=(1, 2, 3)):
+    """budget_stats and promotable against the Spark SQL oracles over
+    the same files: the same schema, nullability included, and the same
+    rows exactly, except ymean within rel 1e-12 (Spark sums it in the
+    order its file splits are packed)."""
+    from tests.store_oracles import budget_stats_sql, promotable_sql
+
+    got, want = s.budget_stats(), budget_stats_sql(spark, s.trials(), s.direction)
+    assert got.schema == want.schema
+    got, want = (sorted((r.asDict() for r in df.collect()), key=lambda r: r["budget"]) for df in (got, want))
+    assert [r["budget"] for r in got] == [r["budget"] for r in want]
+    for g, w in zip(got, want):
+        assert g.pop("ymean") == pytest.approx(w.pop("ymean"), rel=1e-12, nan_ok=True)
+        assert _exact(g) == _exact(w)
+    for eta in etas:
+        got, want = s.promotable(eta), promotable_sql(spark, s.trials(), s.direction, eta)
+        assert got.schema == want.schema, eta
+        got, want = ([_exact(r.asDict()) for r in sorted(df.collect(), key=lambda r: (r.rung, r.rank))]
+                     for df in (got, want))
+        assert got == want, eta
+
+
+@pytest.mark.parametrize("direction", ["min", "max"])
+def test_frame_reads_match_sql_oracles_on_tricky_store(spark, tmp_path, direction):
+    """A tie, a null metric, NaN, an ERROR row and an early stop, read
+    at one file split and past one split."""
+    s, _ids, _trials = _tricky_min_store(spark, str(tmp_path / "tricky"))
+    s = ExperimentStore(spark, s.path, direction=direction)
+    _at_one_split_and_past(spark, s, lambda: _assert_frame_reads_match_oracles(spark, s))
+
+
+@pytest.mark.parametrize("direction", ["min", "max"])
+def test_frame_reads_match_sql_oracles_on_300_waves(spark, waves_store, direction):
+    s = ExperimentStore(spark, waves_store[0].path, direction)
+    _at_one_split_and_past(spark, s, lambda: _assert_frame_reads_match_oracles(spark, s))
+
+
+@pytest.mark.parametrize("direction", ["min", "max"])
+def test_promotable_breaks_ties_by_seq_not_file_order(spark, tmp_path, direction):
+    """A batch is written in list order, so the file can hold seq 2
+    before seq 1: the tie on 5.0 still goes to seq 1."""
+    s = ExperimentStore(spark, str(tmp_path / "ties"), direction=direction)
+    other = 1.0 if direction == "max" else 9.0
+    trials = [_trial(2, 5.0, budget=1), _trial(1, 5.0, budget=1), _trial(3, other, budget=1)]
+    s.append_trials(trials)
+    assert [r.seq for r in s.trials().collect()] == [2, 1, 3]
+    assert [(r.rank, r.trial_id) for r in s.promotable(3).collect()] == [(1, trials[1].trial_id)]
+    _assert_frame_reads_match_oracles(spark, s)
+
+
+@pytest.mark.parametrize("unscored", ["error_rows", "null_metrics"])
+def test_frame_reads_with_no_scored_trial_are_empty(spark, tmp_path, unscored):
+    """No FINALIZED trial with a metric: both reads are empty, with the
+    oracles' schema."""
+    from tests.store_oracles import budget_stats_sql, promotable_sql
+
+    s = ExperimentStore(spark, str(tmp_path / unscored), direction="min")
+    trials = [_trial(1, 1.0, budget=1), _trial(2, 2.0, budget=2)]
+    for t in trials:
+        if unscored == "error_rows":
+            t.status = Trial.ERROR
+        else:
+            t.finalize(None)
+    s.append_trials(trials)
+    got, want = s.budget_stats(), budget_stats_sql(spark, s.trials(), s.direction)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect() == []
+    for eta in (1, 2):
+        got, want = s.promotable(eta), promotable_sql(spark, s.trials(), s.direction, eta)
+        assert got.schema == want.schema
+        assert got.collect() == want.collect() == []
+
+
+@pytest.mark.parametrize("eta", [0, -1, 1.5, True])
+def test_promotable_rejects_eta_that_is_not_an_int_from_one(tmp_path, eta):
+    """Checked before the store is read, with no Spark session: at 0 the
+    SQL raised DIVIDE_BY_ZERO when collected, below 0 it returned no row."""
+    s = ExperimentStore(None, str(tmp_path / "eta"))
+    with pytest.raises(ValueError, match="eta"):
+        s.promotable(eta)
+
+
+def test_frame_reads_raise_before_the_trials_table_has_a_file(tmp_path):
+    s = ExperimentStore(None, str(tmp_path / "nofile"))
+    with pytest.raises(FileNotFoundError):
+        s.budget_stats()
+    with pytest.raises(FileNotFoundError):
+        s.promotable(2)

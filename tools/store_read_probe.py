@@ -11,11 +11,16 @@ each of the four kernel reads (``result_summary``,
 
 - ``ms``: wall time of the read;
 - ``jobs``: Spark jobs it ran;
-- ``py4j``: driver-to-JVM round trips it made.
+- ``py4j``: driver-to-JVM round trips it made;
+- ``pre_df``: those of them made before the read's first
+  ``spark.createDataFrame`` call (all of them if it makes none).
 
-``result_summary`` and ``median_bar`` read the store's files with
-pyarrow on the driver, so they show 0 jobs and 0 py4j; the other two
-return DataFrames and run Spark SQL.
+Every read computes its answer from the store's files with pyarrow on
+the driver, so each shows 0 jobs and 0 ``pre_df`` py4j.
+``result_summary`` and ``median_bar`` return Python values and make no
+py4j call at all; ``budget_stats`` and ``promotable`` hand their answer
+to ``spark.createDataFrame`` as an Arrow table, and the round trips of
+building and collecting that local relation are the rest of ``py4j``.
 
 Then, per store, ``finalize_ms``: the median wall time of the
 finalize sinks (``experiment._persist_experiment``: ``result.json``
@@ -73,32 +78,43 @@ def build_store(spark, path: str, waves: int):
 
 
 class Counter:
-    """Counts py4j commands sent by the driver and Spark jobs run under
-    a job group, around one call."""
+    """Counts py4j commands sent by the driver, those sent before the
+    first ``spark.createDataFrame`` call, and Spark jobs run under a job
+    group, around one call."""
 
     def __init__(self, spark):
         self.sc = spark.sparkContext
         client = self.sc._gateway._gateway_client
         send = client.send_command
         self.sent = 0
+        self.at_create = None
 
         def counting(*args, **kwargs):
             self.sent += 1
             return send(*args, **kwargs)
 
+        create = spark.createDataFrame
+
+        def marking(*args, **kwargs):
+            if self.at_create is None:
+                self.at_create = self.sent
+            return create(*args, **kwargs)
+
         client.send_command = counting
+        spark.createDataFrame = marking
         self.n = 0
 
-    def __call__(self, fn, *args) -> tuple[float, int, int]:
+    def __call__(self, fn, *args) -> tuple[float, int, int, int]:
         self.n += 1
         group = f"store_read_probe_{self.n}"
         self.sc.setJobGroup(group, group)
-        sent = self.sent
+        sent, self.at_create = self.sent, None
         t0 = time.perf_counter()
         fn(*args)
         ms = (time.perf_counter() - t0) * 1000
         py4j = self.sent - sent
-        return ms, len(self.sc.statusTracker().getJobIdsForGroup(group)), py4j
+        pre_df = py4j if self.at_create is None else self.at_create - sent
+        return ms, len(self.sc.statusTracker().getJobIdsForGroup(group)), py4j, pre_df
 
 
 def main(argv=None) -> None:
@@ -146,6 +162,7 @@ def main(argv=None) -> None:
                     "ms": round(statistics.median(s[0] for s in runs), 1),
                     "jobs": statistics.median(s[1] for s in runs),
                     "py4j": statistics.median(s[2] for s in runs),
+                    "pre_df": statistics.median(s[3] for s in runs),
                 }
                 for name, runs in samples.items()
             }
@@ -159,7 +176,7 @@ def main(argv=None) -> None:
         print(f"{store}: finalize_ms {row['finalize_ms']}")
         for name in READS:
             r = row[name]
-            print(f"  {name:>15}: {r['ms']:8.1f} ms {r['jobs']:3g} jobs {r['py4j']:5g} py4j")
+            print(f"  {name:>15}: {r['ms']:8.1f} ms {r['jobs']:3g} jobs {r['py4j']:5g} py4j {r['pre_df']:5g} pre_df")
     print(json.dumps(out))
 
 
