@@ -15,7 +15,11 @@ inventory is also a relational `components` table (FIXTURES.md F4,
 scan, read executor-side via pyarrow inside the trial task (the
 dataset_function contract, `loco.py:222-230`). Trials run through the
 HPO lifecycle (`experiment._run_trials`) behind `_AblationController`,
-each its own Spark job with its dataset/model callables as extras.
+an `AbstractOptimizer` subclass, so an ablation run keeps the same trial
+ledger (`trial_store`, `final_store`, `error_store`) and id rule as any
+HPO run; each trial is its own Spark job with its dataset/model
+callables as extras. The controller hands every settled trial, ERROR
+ones included, back to the ablator's own `final_store` and `get_trial`.
 """
 
 from __future__ import annotations
@@ -26,6 +30,7 @@ from typing import Callable
 from pyspark.sql import SparkSession
 
 from maggy_spark.config import AblationConfig
+from maggy_spark.optimizers import AbstractOptimizer
 from maggy_spark.trial import Trial
 
 
@@ -489,37 +494,42 @@ def run_ablation(train_fn: Callable, config: AblationConfig, spark: SparkSession
     )
 
 
-class _AblationController:
-    """The controller protocol `experiment._drive` runs (`next_batch`,
-    `finalize_trial`, `report_error`, `end_experiment`, `num_trials`,
-    `final_store`) over an initialized reference-protocol ablator.
+class _AblationController(AbstractOptimizer):
+    """An initialized reference-protocol ablator as a controller.
 
     The first trials are those `get_trial(None)` hands out until it
     returns None (the reference driver's first requests). Every settled
     trial, ERROR ones included, joins the ablator's `final_store` and is
     handed back through `get_trial` in settle order; a returned trial
     joins the queue. `end_experiment` runs `finalize_experiment` once
-    the run ends, after the last trial settled.
+    the run ends, after the last trial settled. Without a searchspace,
+    `_record` checks no params.
     """
 
     def __init__(self, ablator) -> None:
+        super().__init__()
         self._ablator = ablator
         self._pending = list(iter(lambda: ablator.get_trial(None), None))
         self.num_trials = len(self._pending)
-        self.final_store: list[Trial] = ablator.final_store
 
-    def next_batch(self, max_trials: int) -> list[Trial]:
+    def _next_batch(self, max_trials: int) -> list[Trial]:
         batch, self._pending = self._pending[:max_trials], self._pending[max_trials:]
         return batch
 
-    def finalize_trial(self, trial: Trial) -> None:
-        self.final_store.append(trial)
+    def _hand_back(self, trial: Trial) -> None:
+        self._ablator.final_store.append(trial)
         follow_up = self._ablator.get_trial(trial)
         if follow_up is not None:
             self._pending.append(follow_up)
             self.num_trials += 1
 
-    report_error = finalize_trial
+    def finalize_trial(self, trial: Trial) -> None:
+        super().finalize_trial(trial)
+        self._hand_back(trial)
+
+    def report_error(self, trial: Trial) -> None:
+        super().report_error(trial)
+        self._hand_back(trial)
 
     def end_experiment(self) -> None:
-        self._ablator.finalize_experiment(self.final_store)
+        self._ablator.finalize_experiment(self._ablator.final_store)

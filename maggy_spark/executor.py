@@ -9,11 +9,12 @@ function once per task, and each task yields one plain result dict
 that `collect()` brings back; no sockets, and no Arrow/pandas
 conversion for what is one small row per task. The experiment driver
 calls it with one trial per call, so every trial is its own job. A
-trial that raises comes back as an ERROR row, but nothing yet
-replaces the reference's lost-trial blacklist (C10): a trial whose
-Python worker dies fails its task, Spark's task retries (none in
-local mode) only re-run it, and the job failure aborts the whole
-experiment.
+trial that raises comes back as an ERROR row. A trial whose Python
+worker dies fails its task; Spark's task retries (none in local mode)
+only re-run it, and the failed job raises here. The experiment driver
+(`experiment._drive`) settles that trial as an ERROR row carrying
+Spark's reason, the reference's lost-trial rule (C10), and the
+experiment goes on; per-trial timeouts are still open.
 
 Kwarg injection mirrors `trial_executor.py:166-179` (signature
 inspection); return normalization mirrors `util.handle_return_val`

@@ -8,12 +8,16 @@ a driver thread pool runs each as its own single-task Spark job
 (executor.py), finalized trials feed back into the controller, and
 the final result is the A1 summary computed on the driver over the
 trials it already holds — no RPC server, no reservation registry, no
-digestion threads. Ablation studies run through the same lifecycle
-(`_run_trials`) behind a controller adapter (ablation.py), as the
+digestion threads. `_drive` runs one controller type,
+`optimizers.AbstractOptimizer`, whose `_record` is the one gate every
+emitted trial passes: run-unique trial ids and the searchspace check.
+Ablation studies run through the same lifecycle (`_run_trials`) behind
+an `AbstractOptimizer` subclass over the ablator (ablation.py), as the
 reference's ablation driver subclasses its HPO driver (SURVEY.md §3.2).
 MLlib tuning (`mllib_bridge.fit_with_lagom`) runs through it too, with
 a driver-side runner that fits each estimator in place of the Spark
-task runner.
+task runner. A trial that raises, or whose Python worker dies, becomes
+an ERROR row and the experiment goes on.
 
 Asynchrony note (SURVEY.md §7.3b): the reference assigns a new trial
 the instant one finishes; `scheduling="async"` does the same.
@@ -25,6 +29,7 @@ one seed gives one result.
 from __future__ import annotations
 
 import logging
+import re
 import time
 from typing import Any, Callable
 
@@ -171,6 +176,34 @@ def _publish_bar(controller, config, refresh_path: str) -> None:
     with open(tmp, "w") as f:
         json.dump({"finalized": stop_views(_bar(controller, config))}, f)
     os.replace(tmp, refresh_path)
+
+
+def _result_row(trial: Trial, final_metric: float | None = None, error: str | None = None,
+               duration_ms: int | None = None) -> dict:
+    """A runner's row for one trial without metric history: a
+    driver-side fit's result, or the ERROR row `_drive` settles for a
+    trial it could not run."""
+    return {"trial_id": trial.trial_id, "final_metric": final_metric, "metric_history": [], "step_history": [],
+            "early_stop": False, "error": error, "logs": [], "duration_ms": duration_ms}
+
+
+# Spark's reason for the task that failed a job: the text after
+# "most recent failure: Lost task 0.0 in stage 3.0 (TID 3) (host executor driver): "
+_LOST_TASK = re.compile(r"most recent failure: Lost task .*?\): (.*)")
+
+
+def _error_text(e: Exception) -> str:
+    """The `error` of a trial whose runner raised: `Type: message`. A
+    failed Spark job (py4j's Java error, ~8 KB of JVM trace) keeps only
+    Spark's reason for the lost task, such as "Python worker exited
+    unexpectedly (crashed)", bounded to 300 characters."""
+    if getattr(e, "java_exception", None) is None:
+        return f"{type(e).__name__}: {e}"
+    text = str(e)
+    line = next((ln[2:] for ln in text.splitlines() if ln.startswith(": ")), text)
+    m = _LOST_TASK.search(line)
+    reason = (m.group(1) if m else line).split(". Consider setting")[0]
+    return f"{type(e).__name__}: {reason}"[:300]
 
 
 def _apply_result(controller, trial: Trial, r: dict, seq: int) -> None:
@@ -329,10 +362,10 @@ def _drive(runner, config, controller, parallelism, scheduling, store=None, rule
     trials in flight, each run by `runner(trial, stop_src) -> row`, where
     the row has `run_trial_wave`'s shape (trial_id, final_metric,
     metric_history, step_history, early_stop, error, logs, duration_ms)
-    and a failed trial carries its `error` instead of raising. For
-    lagom the runner is `_spark_runner`, one single-task Spark job per
-    trial in the 'maggy' scheduler pool (SURVEY.md §7.3b), without the
-    reference's socket plane. `scheduling` picks only the refill rule:
+    and a failed trial carries its `error`. For lagom the runner is
+    `_spark_runner`, one single-task Spark job per trial in the 'maggy'
+    scheduler pool (SURVEY.md §7.3b), without the reference's socket
+    plane. `scheduling` picks only the refill rule:
 
     - "wave" refills only once the pool is empty, with one
       next_batch(parallelism) call and one stop source per wave. It
@@ -349,6 +382,16 @@ def _drive(runner, config, controller, parallelism, scheduling, store=None, rule
     `rule` is the early-stop rule (`_es_rule`), or None; `stop_src` is
     then always None.
 
+    Two more kinds of trial settle as ERROR rows (`_result_row`) through
+    the same settle loop, so `seq`, the store append and the end rule
+    treat them like any other. A trial the controller rejected at
+    emission (params outside the searchspace, `AbstractOptimizer.
+    _record`) never runs. A trial whose runner raised carries `Type:
+    message`; when its Spark job failed, for instance because the trial
+    killed its Python worker, the message is Spark's reason for the lost
+    task (`_error_text`), the reference's lost-trial rule (SURVEY.md
+    C10). The run goes on.
+
     The run ends when `next_batch` emits nothing and no trial is in
     flight (a controller changes only when a trial settles). Then
     `controller.end_experiment()` runs once, and a run that settled
@@ -357,7 +400,7 @@ def _drive(runner, config, controller, parallelism, scheduling, store=None, rule
     Returns (trials in `seq` order, waves run in wave mode or jobs run
     in async mode)."""
     import os
-    from concurrent.futures import ALL_COMPLETED, FIRST_COMPLETED, ThreadPoolExecutor, wait
+    from concurrent.futures import ALL_COMPLETED, FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 
     from maggy_spark.executor import _dumps_by_value
 
@@ -390,7 +433,14 @@ def _drive(runner, config, controller, parallelism, scheduling, store=None, rule
                         break
                     stop_src = None if rule_bytes is None else _stop_source(controller, config, rule_bytes, bar_path)
                     for t in batch:
-                        in_flight[pool.submit(runner, t, stop_src)] = t
+                        if "error" in t.info_dict:
+                            # rejected at emission (`_record`): settled
+                            # as an ERROR row, never run
+                            f = Future()
+                            f.set_result(_result_row(t, error=t.info_dict["error"]))
+                        else:
+                            f = pool.submit(runner, t, stop_src)
+                        in_flight[f] = t
                     rounds += 1
                 if not in_flight:
                     if len(all_trials) < controller.num_trials:
@@ -406,7 +456,13 @@ def _drive(runner, config, controller, parallelism, scheduling, store=None, rule
                 settled = []
                 for f in [f for f in in_flight if f in finished]:  # submission order
                     trial = in_flight.pop(f)
-                    _apply_result(controller, trial, f.result(), len(all_trials) + 1)
+                    try:
+                        row = f.result()
+                    except Exception as e:  # noqa: BLE001 - a lost worker or a raising runner
+                        row = _result_row(trial, error=_error_text(e))
+                        # the row keeps a bounded reason; the log keeps the trace
+                        _LOG.warning("trial %s failed: %s", trial.trial_id, row["error"], exc_info=e)
+                    _apply_result(controller, trial, row, len(all_trials) + 1)
                     all_trials.append(trial)
                     settled.append(trial)
                 if bar_path is not None:

@@ -110,7 +110,7 @@ def fit_with_lagom(
     trials go on. The result dict is `lagom`'s.
     """
     from maggy_spark.config import HyperparameterOptConfig
-    from maggy_spark.experiment import _init_hpo, _run_trials
+    from maggy_spark.experiment import _init_hpo, _run_trials, _result_row
 
     spark = train_df.sparkSession
     config = HyperparameterOptConfig(
@@ -130,16 +130,9 @@ def fit_with_lagom(
         # spark.scheduler.mode=FAIR; harmless under FIFO
         spark.sparkContext.setLocalProperty("spark.scheduler.pool", "maggy")
         t0 = time.time()
-        metric = error = None
-        try:
-            model = estimator_factory(trial.params).fit(train_df)
-            metric = float(evaluator.evaluate(model.transform(val_df)))
-        except Exception as e:  # noqa: BLE001 - errors become ERROR rows
-            error = f"{type(e).__name__}: {e}"
-        return {
-            "trial_id": trial.trial_id, "final_metric": metric, "metric_history": [], "step_history": [],
-            "early_stop": False, "error": error, "logs": [], "duration_ms": int((time.time() - t0) * 1000),
-        }
+        model = estimator_factory(trial.params).fit(train_df)
+        metric = float(evaluator.evaluate(model.transform(val_df)))
+        return _result_row(trial, metric, duration_ms=int((time.time() - t0) * 1000))
 
     result = _run_trials(None, config, spark, controller, parallelism, "wave", runner=run_fit)
     if not result["num_waves"]:

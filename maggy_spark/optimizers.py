@@ -40,7 +40,7 @@ import time
 from abc import ABC
 
 from maggy_spark.searchspace import CATEGORICAL, DISCRETE, DOUBLE, INTEGER, Searchspace
-from maggy_spark.trial import Trial
+from maggy_spark.trial import Trial, trial_id_for_params
 
 MAX_DEDUP_RETRIES = 3
 
@@ -98,6 +98,7 @@ class AbstractOptimizer(ABC):
         self.final_store: list[Trial] = []
         self.error_store: list[Trial] = []
         self._seen_params: set[str] = set()
+        self._trial_ids: set[str] = set()
         self._pruner_spec = pruner
         self._pruner_kwargs = dict(pruner_kwargs or {})
         self.pruner = None
@@ -140,6 +141,7 @@ class AbstractOptimizer(ABC):
         self.final_store = []
         self.error_store = []
         self._seen_params = set()
+        self._trial_ids = set()
         self.pruner = None
         if pruner is None:
             pruner, pruner_kwargs = own
@@ -238,8 +240,6 @@ class AbstractOptimizer(ABC):
         """Pruner-driven emission: `pruning_routine()` before every
         trial decides new-sample vs promotion vs wait
         (`bayes/base.py:186-211`)."""
-        from maggy_spark.trial import trial_id_for_params
-
         out: list[Trial] = []
         while len(out) < max_trials:
             nxt = self.pruner.pruning_routine()
@@ -259,14 +259,9 @@ class AbstractOptimizer(ABC):
             if src_id:
                 t.info_dict["original_trial_id"] = src_id
             # two SH iterations may run identical params at the same
-            # budget; ids must stay unique or result routing conflates
-            # them (the reference keeps per-rung trial copies)
-            salt = 0
-            while t.trial_id in self._pruned_params:
-                salt += 1
-                t.trial_id = trial_id_for_params({**params, "budget": budget, "rerun": salt})
-            self._pruned_params[t.trial_id] = dict(params)
+            # budget: _record salts the second id
             self._record(t)
+            self._pruned_params[t.trial_id] = dict(params)
             self.pruner.report_trial(original_trial_id=src_id, new_trial_id=t.trial_id)
             out.append(t)
         return out
@@ -276,7 +271,26 @@ class AbstractOptimizer(ABC):
     def _record(self, trial: Trial) -> Trial:
         """An emitted trial: in flight until it settles, and seen by the
         dedup guard. Paths that make several trials per batch record
-        each as it is made, so the next suggestion sees it."""
+        each as it is made, so the next suggestion sees it; `next_batch`
+        records every trial again, a no-op for one already recorded.
+
+        The run's one trial-id rule: an id already emitted this run is
+        salted with `rerun` until it is new, so result routing and the
+        ledger never conflate two trials (the reference keeps per-rung
+        trial copies). Params outside the searchspace put the reason in
+        `info_dict["error"]`, and `_drive` settles the trial as an ERROR
+        row without running it."""
+        if self.trial_store.get(trial.trial_id) is trial:
+            return trial
+        salt = 0
+        while trial.trial_id in self._trial_ids:
+            salt += 1
+            trial.trial_id = trial_id_for_params({**trial.params, "rerun": salt})
+        if self.searchspace is not None:
+            reason = self.searchspace.outside(trial.params)
+            if reason is not None:
+                trial.info_dict["error"] = reason
+        self._trial_ids.add(trial.trial_id)
         self.trial_store[trial.trial_id] = trial
         self._seen_params.add(self._params_key(trial.params))
         return trial

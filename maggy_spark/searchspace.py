@@ -15,6 +15,7 @@ Spark DataFrame for relational use (SURVEY.md §1.1).
 from __future__ import annotations
 
 import json
+import numbers
 import random
 from typing import Any
 
@@ -206,6 +207,28 @@ class Searchspace:
             elif v not in region:
                 return False
         return True
+
+    def outside(self, params: dict[str, Any]) -> str | None:
+        """Why params fall outside the space, or None: each declared
+        INTEGER the params carry must be integral and in [lo, hi], each
+        DISCRETE/CATEGORICAL in its domain. Unlike `contains`, a missing
+        name passes (SingleRun carries only `run`) and DOUBLE bounds are
+        not checked (Pbt's multiplicative walk leaves them)."""
+        bad = []
+        for name, t, region in self.items():
+            if name not in params or t == DOUBLE:
+                continue
+            v = params[name]
+            if t == INTEGER:
+                ok = (
+                    isinstance(v, numbers.Real) and not isinstance(v, bool)
+                    and float(v).is_integer() and region[0] <= v <= region[1]
+                )
+            else:
+                ok = v in region
+            if not ok:
+                bad.append(f"{name}={v} ({t} {region})")
+        return f"params outside the searchspace: {', '.join(bad)}" if bad else None
 
     # -- numeric transform layer (reference §1.4) -----------------------
 

@@ -5,11 +5,13 @@ optimizer and the LOCO ablation controller settle the same trials at
 parallelism 3 as at parallelism 1, under both schedulings; the ERROR
 trial counts toward `num_trials` and is never replaced; the end hook
 (`finalize_experiment` for the reference protocols) runs once, after
-the last settle. Every engine controller's trial ledger ends with
-nothing in flight and each settled trial finalized or errored once."""
+the last settle. Every controller's trial ledger ends with nothing in
+flight and each settled trial finalized or errored once, and every run
+emits unique trial ids, the same ids in the same order as pinned."""
 
 from __future__ import annotations
 
+import hashlib
 import logging
 import threading
 import time
@@ -31,6 +33,25 @@ LOCO_FEATURES = ("a", "b", "c", "d", "e")
 # its pruner's num_trials() for (1, 9, 3, 2); LOCO runs its study
 SETTLED = {"asha": 12, "pbt": 7, "hyperband": 17, "loco": 1 + len(LOCO_FEATURES)}
 CASES = ["randomsearch", "gridsearch", "none", "asha", "pbt", "hyperband", "gp", "tpe", "reference", "loco"]
+# md5[:12] of each run's comma-joined emitted trial ids, per case, or
+# per (scheduling, parallelism) where those change the run: the run's
+# id rule (`AbstractOptimizer._record`) renames no trial whose id is
+# already unique. GP and TPE stay in warmup, so they emit
+# RandomSearch's draws.
+ID_SEQUENCES = {
+    "randomsearch": "9f296c1e8207",
+    "gridsearch": "558eadd06322",
+    "none": "9adb22fccf6c",
+    "asha": {("wave", 1): "1633c29f5db0", ("wave", 3): "f6fbc267a29e",
+             ("async", 1): "1633c29f5db0", ("async", 3): "6ad52992c07a"},
+    "pbt": "7f22974f6194",
+    "hyperband": {("wave", 1): "393a63392d5c", ("wave", 3): "393a63392d5c",
+                  ("async", 1): "393a63392d5c", ("async", 3): "b2813fb93797"},
+    "gp": "9f296c1e8207",
+    "tpe": "9f296c1e8207",
+    "reference": "2d4e90afece4",
+    "loco": "fd13350147e2",
+}
 
 
 class EndlessReference(AbstractOptimizer):
@@ -86,10 +107,8 @@ def _controller(case: str, returned: list):
 @pytest.mark.parametrize("scheduling", ["wave", "async"])
 @pytest.mark.parametrize("case", CASES)
 def test_one_error_settles_the_same_trials_at_any_parallelism(monkeypatch, caplog, case, scheduling, parallelism):
-    def no_spark(*args, **kwargs):
-        raise AssertionError("_run_trials started a Spark job")
-
-    monkeypatch.setattr(experiment, "run_trial_wave", no_spark)
+    spark_jobs = []
+    monkeypatch.setattr(experiment, "run_trial_wave", lambda *a, **kw: spark_jobs.append(a))
     returned: list[str] = []
     controller, spec = _controller(case, returned)
     emitted = []
@@ -121,7 +140,13 @@ def test_one_error_settles_the_same_trials_at_any_parallelism(monkeypatch, caplo
         res = experiment._run_trials(None, config, None, controller, parallelism, scheduling, runner=runner)
 
     settled = SETTLED.get(case, NUM_TRIALS)
+    assert spark_jobs == []
     assert len(emitted) == settled and set(calls.values()) == {1} and len(calls) == settled
+    ids = [t.trial_id for t in emitted]
+    assert len(set(ids)) == len(ids)
+    want = ID_SEQUENCES[case]
+    want = want[scheduling, parallelism] if isinstance(want, dict) else want
+    assert hashlib.md5(",".join(ids).encode()).hexdigest()[:12] == want, ids
     assert res["errors"] == 1 and res["num_trials"] + res["errors"] == settled
     warnings = [r.getMessage() for r in caplog.records if r.name == "maggy_spark" and r.levelno == logging.WARNING]
     if case == "pbt":
@@ -129,12 +154,11 @@ def test_one_error_settles_the_same_trials_at_any_parallelism(monkeypatch, caplo
         assert len(warnings) == 1 and f"{settled} of {NUM_TRIALS}" in warnings[0]
     else:
         assert warnings == []
-    if isinstance(controller, AbstractOptimizer):
-        # the ledger: nothing left in flight, and every settled trial
-        # is finalized or errored exactly once
-        assert controller.trial_store == {}
-        assert Counter(t.trial_id for t in controller.final_store + controller.error_store) == Counter(returned)
-        assert len(controller.error_store) == 1
+    # the ledger: nothing left in flight, and every settled trial is
+    # finalized or errored exactly once
+    assert controller.trial_store == {} and controller._n_emitted == settled
+    assert Counter(t.trial_id for t in controller.final_store + controller.error_store) == Counter(returned)
+    assert len(controller.error_store) == 1
     if case in ("reference", "loco"):
         # once, after the last settle, over every finalized trial (the
         # ablator's final_store also holds its ERROR trials)

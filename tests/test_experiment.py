@@ -661,10 +661,8 @@ def test_drive_runs_a_fake_runner_without_spark(monkeypatch, scheduling):
 
     from maggy_spark import experiment
 
-    def no_spark(*args, **kwargs):
-        raise AssertionError("_drive started a Spark job")
-
-    monkeypatch.setattr(experiment, "run_trial_wave", no_spark)
+    spark_jobs = []
+    monkeypatch.setattr(experiment, "run_trial_wave", lambda *a, **kw: spark_jobs.append(a))
     controller = RandomSearch()
     controller.initialize(Searchspace(x=("DOUBLE", [0.0, 1.0])), num_trials=8, direction="max", seed=5)
     emitted = []
@@ -680,8 +678,9 @@ def test_drive_runs_a_fake_runner_without_spark(monkeypatch, scheduling):
     lock = threading.Lock()
 
     def runner(trial, stop_src):
-        # the runner contract: a trial that raises comes back as a row
-        # carrying its error, like run_trial_wave's rows
+        # a runner may return a failed trial's row carrying its error,
+        # like run_trial_wave's rows (a runner that raises is the other
+        # way, tests/test_emission_gate.py)
         with lock:
             calls[trial.trial_id] += 1
         time.sleep(0.02 * trial.params["x"])  # finish out of submission order
@@ -698,6 +697,7 @@ def test_drive_runs_a_fake_runner_without_spark(monkeypatch, scheduling):
     config = HyperparameterOptConfig(es_policy="none", name="fake_runner")
     trials, rounds = experiment._drive(runner, config, controller, 3, scheduling)
 
+    assert spark_jobs == []
     assert len(emitted) == 8 and {t.trial_id for t in trials} == {t.trial_id for t in emitted}
     assert set(calls.values()) == {1} and len(calls) == 8
     assert [t.info_dict["seq"] for t in trials] == list(range(1, 9))
@@ -716,10 +716,8 @@ def test_all_error_run_counts_each_trial_once(monkeypatch, scheduling):
 
     from maggy_spark import experiment
 
-    def no_spark(*args, **kwargs):
-        raise AssertionError("_run_trials started a Spark job")
-
-    monkeypatch.setattr(experiment, "run_trial_wave", no_spark)
+    spark_jobs = []
+    monkeypatch.setattr(experiment, "run_trial_wave", lambda *a, **kw: spark_jobs.append(a))
     settled = []
     lock = threading.Lock()
 
@@ -734,7 +732,7 @@ def test_all_error_run_counts_each_trial_once(monkeypatch, scheduling):
     config = HyperparameterOptConfig(es_policy="none", name="all_error", log_dir=None)
     res = experiment._run_trials(None, config, None, controller, 2, scheduling, runner=failing_runner)
 
-    assert len(settled) == 5
+    assert spark_jobs == [] and len(settled) == 5
     assert res["num_trials"] + res["errors"] == len(settled)
     assert (res["num_trials"], res["errors"]) == (0, 5)
     assert "best_id" not in res and "best_config" not in res

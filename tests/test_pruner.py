@@ -182,10 +182,8 @@ def test_config_pruner_on_pruned_optimizer_rejected(spark, monkeypatch, make_opt
     optimizer's ladder."""
     from maggy_spark import experiment
 
-    def no_jobs(*args, **kwargs):
-        raise AssertionError("no trial may run")
-
-    monkeypatch.setattr(experiment, "run_trial_wave", no_jobs)
+    trial_jobs = []
+    monkeypatch.setattr(experiment, "run_trial_wave", lambda *a, **kw: trial_jobs.append(a))
     config = HyperparameterOptConfig(
         optimizer=make_optimizer(),
         searchspace=Searchspace(**SP),
@@ -196,6 +194,7 @@ def test_config_pruner_on_pruned_optimizer_rejected(spark, monkeypatch, make_opt
     )
     with pytest.raises(ValueError, match="already carries pruner"):
         lagom(hb_train_fn, config, spark)
+    assert trial_jobs == []
 
 
 def test_config_pruner_matching_optimizer_pruner_accepted(spark, monkeypatch):
