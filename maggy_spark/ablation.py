@@ -501,26 +501,23 @@ class _AblationController(AbstractOptimizer):
     returns None (the reference driver's first requests). Every settled
     trial, ERROR ones included, joins the ablator's `final_store` and is
     handed back through `get_trial` in settle order; a returned trial
-    joins the queue. `end_experiment` runs `finalize_experiment` once
-    the run ends, after the last trial settled. Without a searchspace,
-    `_record` checks no params.
+    joins the `_buffer` queue the base `_next_batch` drains.
+    `end_experiment` runs `finalize_experiment` once the run ends, after
+    the last trial settled. Without a searchspace, `_record` checks no
+    params.
     """
 
     def __init__(self, ablator) -> None:
         super().__init__()
         self._ablator = ablator
-        self._pending = list(iter(lambda: ablator.get_trial(None), None))
-        self.num_trials = len(self._pending)
-
-    def _next_batch(self, max_trials: int) -> list[Trial]:
-        batch, self._pending = self._pending[:max_trials], self._pending[max_trials:]
-        return batch
+        self._buffer = list(iter(lambda: ablator.get_trial(None), None))
+        self.num_trials = len(self._buffer)
 
     def _hand_back(self, trial: Trial) -> None:
         self._ablator.final_store.append(trial)
         follow_up = self._ablator.get_trial(trial)
         if follow_up is not None:
-            self._pending.append(follow_up)
+            self._buffer.append(follow_up)
             self.num_trials += 1
 
     def finalize_trial(self, trial: Trial) -> None:

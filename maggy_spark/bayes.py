@@ -40,6 +40,11 @@ DEFAULT_TPE_SAMPLES = 24   # tpe.py:41,53-54
 EI_CLIP = 1e-32            # tpe.py:253-266
 
 
+def _finite(metric) -> bool:
+    """A metric the surrogates can train on: not None, NaN or ±inf."""
+    return metric is not None and math.isfinite(metric)
+
+
 class BaseAsyncBO(AbstractOptimizer):
     def __init__(
         self,
@@ -83,8 +88,10 @@ class BaseAsyncBO(AbstractOptimizer):
         """Transform finalized trials to surrogate training data
         (reference get_XY, base.py:459-641). With `budget`, only that
         fidelity's trials feed the model (per-budget surrogates,
-        base.py:243-268)."""
-        rows = [t for t in self.final_store if t.final_metric is not None]
+        base.py:243-268). A trial without a finite metric (None, NaN,
+        ±inf) is left out: one NaN row makes the GP predict NaN
+        everywhere."""
+        rows = [t for t in self.final_store if _finite(t.final_metric)]
         if budget is not None:
             rows = [t for t in rows if int(t.info_dict.get("budget", 0)) == budget]
         if not rows:
@@ -139,13 +146,14 @@ class BaseAsyncBO(AbstractOptimizer):
         relational twin of this matrix is
         `operators.aggregations.a10b_interim_xy`, which is
         DuckDB-oracle-checked; `tests/test_bo.py` pins this method's
-        rows to that relation."""
+        rows to that relation. Like `get_xy`, it skips a trial whose
+        final metric is not finite, and any non-finite interim value."""
         if not interim_results:
             return self.get_xy(budget=budget or None)
         interval = self.interim_results_interval if interim_results_interval is None else int(interim_results_interval)
         if interval < 1:
             raise ValueError(f"interim_results_interval must be >= 1, got {interval}")
-        rows = [t for t in self.final_store if t.final_metric is not None and t.metric_history]
+        rows = [t for t in self.final_store if _finite(t.final_metric) and t.metric_history]
         if budget:
             rows = [t for t in rows if int(t.info_dict.get("budget", 0)) == budget]
         d = len(self.searchspace)
@@ -158,9 +166,11 @@ class BaseAsyncBO(AbstractOptimizer):
             x = np.asarray(self.searchspace.transform(t.params), dtype=float)
             hist = t.metric_history
             for i in self.get_interim_result_idx(hist, interval):
+                if not _finite(hist[i]):
+                    continue
                 X_parts.append(np.append(x, i / denom))
                 y_parts.append(self.metric_for_min(hist[i]))
-        return np.array(X_parts), np.array(y_parts)
+        return np.array(X_parts).reshape(-1, d + 1), np.array(y_parts)
 
     def _model_xy(self) -> tuple[np.ndarray, np.ndarray]:
         """The surrogate's training set: the trials at `model_budget()`,
@@ -178,7 +188,7 @@ class BaseAsyncBO(AbstractOptimizer):
         no budgets (single-fidelity experiment)."""
         counts: dict[int, int] = {}
         for t in self.final_store:
-            if t.final_metric is not None:
+            if _finite(t.final_metric):
                 b = int(t.info_dict.get("budget", 0))
                 counts[b] = counts.get(b, 0) + 1
         if set(counts) <= {0}:
@@ -190,7 +200,8 @@ class BaseAsyncBO(AbstractOptimizer):
         return self._record(Trial(params, info_dict={"sample_type": sample_type}))
 
     def min_model_trials(self) -> int:
-        """Finalized trials required before the surrogate can suggest."""
+        """Finalized trials with a finite metric required before the
+        surrogate can suggest."""
         return len(self.searchspace) + 1
 
     def _suggest_one(self) -> tuple[dict, str] | None:
@@ -201,7 +212,7 @@ class BaseAsyncBO(AbstractOptimizer):
         fills."""
         if (
             self._n_emitted < self._warmup
-            or len(self.final_store) < self.min_model_trials()
+            or sum(_finite(t.final_metric) for t in self.final_store) < self.min_model_trials()
             or self._sampler.random() < self.random_fraction
         ):
             params, stype = self._random_params(), "random"

@@ -73,8 +73,8 @@ def min_rank_key(metric) -> tuple:
     """Sort key for promotion ranking in min-space: ascending, with NaN
     and None last. Python's sort is not a total order over NaN — one
     NaN metric scrambles the whole ranking — so every promotion sort
-    (SHIteration.promote, Asha._promotable) ranks by this key; sorted()
-    keeps ties in input order."""
+    (SHIteration.promote, Asha._promotable, Pbt._evolve) ranks by this
+    key; sorted() keeps ties in input order."""
     missing = metric is None or math.isnan(metric)
     return (missing, 0.0 if missing else metric)
 
@@ -102,6 +102,8 @@ class AbstractOptimizer(ABC):
         self._pruner_spec = pruner
         self._pruner_kwargs = dict(pruner_kwargs or {})
         self.pruner = None
+        # trials made but not yet emitted, drained by the base _next_batch
+        self._buffer: list[Trial] | None = None
         # reference bookkeeping (`abstractoptimizer.py:29-52`): the
         # sampling-time stopwatch consumed by create_trial
         self.sampling_time_start: float = 0.0
@@ -149,7 +151,6 @@ class AbstractOptimizer(ABC):
             self.pruner = self._build_pruner(pruner, dict(pruner_kwargs or {}))
             # a pruner overrides num_trials (optimization_driver.py:87-89)
             self.num_trials = self.pruner.num_trials()
-            self._pruned_params: dict[str, dict] = {}
         self._initialize()
 
     def _build_pruner(self, spec, kwargs: dict):
@@ -214,18 +215,22 @@ class AbstractOptimizer(ABC):
         return batch
 
     def _next_batch(self, max_trials: int) -> list[Trial]:
-        """Single-fidelity batch emission (no pruner attached).
+        """Single-fidelity batch emission (no pruner attached): the next
+        max_trials trials of the controller's `_buffer` queue.
 
-        Engine controllers override this. Deliberately NOT
-        @abstractmethod: a custom optimizer written against the
+        A controller without a `_buffer` overrides this. Deliberately
+        NOT @abstractmethod: a custom optimizer written against the
         reference's subclassing contract (no-arg initialize +
         get_suggestion) must stay instantiable — get_controller wraps
         such instances in ReferenceOptimizerAdapter, which drives
         get_suggestion and never reaches this base body."""
-        raise NotImplementedError(
-            f"{type(self).__name__} implements neither the engine contract "
-            "(_next_batch) nor the reference contract (get_suggestion)"
-        )
+        if self._buffer is None:
+            raise NotImplementedError(
+                f"{type(self).__name__} implements neither the engine contract "
+                "(_next_batch) nor the reference contract (get_suggestion)"
+            )
+        out, self._buffer = self._buffer[:max_trials], self._buffer[max_trials:]
+        return out
 
     def _suggest_one(self) -> tuple[dict, str] | None:
         """One (params, sample_type) suggestion for a pruner-allocated
@@ -247,7 +252,8 @@ class AbstractOptimizer(ABC):
                 break
             budget, src_id = int(nxt["budget"]), nxt.get("trial_id")
             if src_id:
-                params, stype = dict(self._pruned_params[src_id]), "promoted"
+                src = next(t for t in self.final_store + self.error_store if t.trial_id == src_id)
+                params, stype = {k: v for k, v in src.params.items() if k != "budget"}, "promoted"
             else:
                 # a slot already allocated in the rung ledger is filled
                 # with an unconditional random rather than stalling
@@ -261,7 +267,6 @@ class AbstractOptimizer(ABC):
             # two SH iterations may run identical params at the same
             # budget: _record salts the second id
             self._record(t)
-            self._pruned_params[t.trial_id] = dict(params)
             self.pruner.report_trial(original_trial_id=src_id, new_trial_id=t.trial_id)
             out.append(t)
         return out
@@ -295,9 +300,13 @@ class AbstractOptimizer(ABC):
         self._seen_params.add(self._params_key(trial.params))
         return trial
 
+    def _emitted(self) -> list[Trial]:
+        """Trials emitted this run: in flight, finalized or errored."""
+        return [*self.trial_store.values(), *self.final_store, *self.error_store]
+
     @property
     def _n_emitted(self) -> int:
-        """Trials emitted this run: in flight, finalized or errored."""
+        """len(self._emitted()), without building the list."""
         return len(self.trial_store) + len(self.final_store) + len(self.error_store)
 
     def finalize_trial(self, trial: Trial) -> None:
@@ -478,10 +487,6 @@ class RandomSearch(AbstractOptimizer):
             )
         self._buffer = [Trial(p, info_dict={"sample_type": "random"}) for p in self._draw_unseen(self.num_trials)]
 
-    def _next_batch(self, max_trials: int) -> list[Trial]:
-        out, self._buffer = self._buffer[:max_trials], self._buffer[max_trials:]
-        return out
-
     def _suggest_one(self) -> tuple[dict, str] | None:
         """Pruner slot fill: drain the pre-buffered configs, then keep
         drawing fresh randoms (the pruner's rung-0 demand can exceed
@@ -506,10 +511,6 @@ class GridSearch(AbstractOptimizer):
             Trial(dict(zip(names, combo)), info_dict={"sample_type": "grid"}) for combo in itertools.product(*domains)
         ]
         self.num_trials = len(self._buffer)
-
-    def _next_batch(self, max_trials: int) -> list[Trial]:
-        out, self._buffer = self._buffer[:max_trials], self._buffer[max_trials:]
-        return out
 
 
 class SingleRun(AbstractOptimizer):
@@ -540,11 +541,6 @@ class Asha(AbstractOptimizer):
         # max rung: largest k with min*eta^k <= max  (asha.py:78-83)
         self.max_rung = exact_smax(resource_min, resource_max, reduction_factor)
 
-    def _initialize(self) -> None:
-        # reset per-run state (instances may be reused across lagom calls)
-        self._promoted: dict[int, set[str]] = {r: set() for r in range(self.max_rung + 1)}
-        self._emitted_rung0 = 0
-
     def budget_for_rung(self, rung: int) -> int:
         return self.resource_min * self.eta**rung
 
@@ -553,14 +549,16 @@ class Asha(AbstractOptimizer):
 
     def _promotable(self, rung: int) -> list[Trial]:
         """Top floor(n_finished/eta) of a rung not yet promoted
-        (asha.py:100-147,161-169); direction-aware sort."""
+        (asha.py:100-147,161-169); direction-aware sort. The promoted
+        sources are read from the ledger: the `original_trial_id`s of
+        the trials emitted at rung + 1."""
         fin = [t for t in self.final_store if self._rung_of(t) == rung and t.final_metric is not None]
-        k = len(fin) // self.eta - len(self._promoted[rung])
+        promoted = {t.info_dict["original_trial_id"] for t in self._emitted() if self._rung_of(t) == rung + 1}
+        k = len(fin) // self.eta - len(promoted)
         if k <= 0:
             return []
         fin.sort(key=lambda t: min_rank_key(self.metric_for_min(t.final_metric)))
-        top = [t for t in fin if t.trial_id not in self._promoted[rung]][: k]
-        return top
+        return [t for t in fin if t.trial_id not in promoted][:k]
 
     def _next_batch(self, max_trials: int) -> list[Trial]:
         out: list[Trial] = []
@@ -580,19 +578,16 @@ class Asha(AbstractOptimizer):
                 # differ by rung — disambiguate like the reference's
                 # per-rung trial copies (hyperband.py:458-465)
                 t.trial_id = Trial({**params, "budget": self.budget_for_rung(rung + 1)}).trial_id
-                self._promoted[rung].add(src.trial_id)
                 out.append(t)
-        # fill with rung-0 randoms (asha.py:149-156); _emitted_rung0
-        # counts only trials actually emitted (a dedup skip must not
-        # use up the rung-0 budget)
-        slots = min(max_trials - len(out), self.num_trials - self._emitted_rung0)
-        for params in self._draw_unseen(slots):
+        # fill with rung-0 randoms (asha.py:149-156); the budget counts
+        # only trials actually emitted (a dedup skip must not use it up)
+        rung0 = sum(self._rung_of(t) == 0 for t in self._emitted())
+        for params in self._draw_unseen(min(max_trials - len(out), self.num_trials - rung0)):
             out.append(Trial(params, info_dict={
                 "sample_type": "random",
                 "rung": 0,
                 "budget": self.budget_for_rung(0),
             }))
-            self._emitted_rung0 += 1
         return out
 
 
@@ -641,10 +636,6 @@ class Pbt(AbstractOptimizer):
         self.num_trials = self.generations * self.population
         self._gen = 0
         self._buffer = [self._make_trial(p, 0, "random") for p in self._draw_unseen(self.population)]
-        # errored trials shrink a generation's settle target — gate on
-        # what was actually EMITTED, not the nominal population, or an
-        # error-bearing generation waits forever
-        self._gen_emitted = len(self._buffer)
 
     # -- generation plumbing -------------------------------------------
 
@@ -675,13 +666,12 @@ class Pbt(AbstractOptimizer):
         if not valid:
             return [self._make_trial(p, generation, "random") for p in self._draw_unseen(self.population)]
         # g14's two windows verbatim: rk_best orders metric best-first,
-        # rk_worst worst-first, BOTH tie-breaking on trial_id ASC
-        ranked = sorted(
-            valid, key=lambda t: (self.metric_for_min(t.final_metric), t.trial_id)
-        )
-        worst_first = sorted(
-            valid, key=lambda t: (-self.metric_for_min(t.final_metric), t.trial_id)
-        )
+        # rk_worst worst-first, BOTH tie-breaking on trial_id ASC; a
+        # NaN metric ranks last (min_rank_key): never a donor, the
+        # first loser
+        keys = {t.trial_id: min_rank_key(self.metric_for_min(t.final_metric)) for t in valid}
+        ranked = sorted(valid, key=lambda t: (keys[t.trial_id], t.trial_id))
+        worst_first = sorted(valid, key=lambda t: (not keys[t.trial_id][0], -keys[t.trial_id][1], t.trial_id))
         q = max(len(valid) // 4, 1)
         donors = ranked[:q]
         losers = worst_first[:q]  # pair_rank 1 = worst
@@ -700,18 +690,13 @@ class Pbt(AbstractOptimizer):
         return out
 
     def _next_batch(self, max_trials: int) -> list[Trial]:
-        if not self._buffer and self._gen + 1 < self.generations:
-            settled = self.final_store + self.error_store
-            if sum(t.info_dict.get("generation") == self._gen for t in settled) >= self._gen_emitted:
-                finalized = [
-                    t for t in self.final_store
-                    if t.info_dict.get("generation") == self._gen
-                ]
-                self._gen += 1
-                self._buffer = self._evolve(finalized, self._gen)
-                self._gen_emitted = len(self._buffer)
-        out, self._buffer = self._buffer[:max_trials], self._buffer[max_trials:]
-        return out
+        # a generation has settled, ERROR trials included, when its
+        # queue is drained and nothing is in flight
+        if not self._buffer and not self.trial_store and self._gen + 1 < self.generations:
+            finalized = [t for t in self.final_store if t.info_dict.get("generation") == self._gen]
+            self._gen += 1
+            self._buffer = self._evolve(finalized, self._gen)
+        return super()._next_batch(max_trials)
 
 
 CONTROLLERS = {
@@ -732,11 +717,11 @@ class ReferenceOptimizerAdapter(AbstractOptimizer):
 
     The reference driver hands each finished trial to the next
     `get_suggestion` call (`optimization_driver.py:341-370`); here
-    finished trials queue up during a wave and drain one per
-    suggestion. The wrapped optimizer's `trial_store`, `final_store`
-    and `_seen_params` are the adapter's own ledger (the same objects),
-    so its helper calls and its `hparams_exist` see every emitted trial
-    without copying. At most `num_trials` trials are emitted, and
+    each suggestion gets the next finalized trial not yet handed over,
+    in `final_store` order. The wrapped optimizer's `trial_store`,
+    `final_store` and `_seen_params` are the adapter's own ledger (the
+    same objects), so its helper calls and its `hparams_exist` see every
+    emitted trial without copying. At most `num_trials` trials are emitted, and
     `finalize_experiment` runs from `end_experiment`, once, after the
     last trial settled."""
 
@@ -758,14 +743,16 @@ class ReferenceOptimizerAdapter(AbstractOptimizer):
         w.direction = direction
         # aliases, not copies
         w.trial_store, w.final_store, w._seen_params = self.trial_store, self.final_store, self._seen_params
-        self._finished_queue: list[Trial] = []
+        self._fed = 0  # finalized trials handed to get_suggestion so far
         self._exhausted = False
         w.initialize()
 
     def _next_batch(self, max_trials: int) -> list[Trial]:
         out: list[Trial] = []
         while len(out) < max_trials and not self._exhausted and self._n_emitted < self.num_trials:
-            last = self._finished_queue.pop(0) if self._finished_queue else None
+            last = None
+            if self._fed < len(self.final_store):
+                last, self._fed = self.final_store[self._fed], self._fed + 1
             self.wrapped.sampling_time_start = time.time()
             t = self.wrapped.get_suggestion(last)
             if t is None:
@@ -778,15 +765,11 @@ class ReferenceOptimizerAdapter(AbstractOptimizer):
                 # unblock once it has seen all of them (e.g. a rung
                 # promotion needs every report); only stop filling the
                 # wave when there is nothing left to feed it
-                if self._finished_queue:
+                if self._fed < len(self.final_store):
                     continue
                 break
             out.append(self._record(t))
         return out
-
-    def finalize_trial(self, trial: Trial) -> None:
-        super().finalize_trial(trial)
-        self._finished_queue.append(trial)
 
     def end_experiment(self) -> None:
         self.wrapped.finalize_experiment(self.final_store)

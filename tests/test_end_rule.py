@@ -164,3 +164,45 @@ def test_one_error_settles_the_same_trials_at_any_parallelism(monkeypatch, caplo
         # ablator's final_store also holds its ERROR trials)
         finalized = settled if case == "loco" else settled - 1
         assert spec.finalize_calls == [(finalized, settled)]
+
+
+@pytest.mark.parametrize("parallelism", [1, 3])
+@pytest.mark.parametrize("case", CASES)
+def test_wave_run_replays_from_its_settled_rows(monkeypatch, case, parallelism):
+    """Replay: a fresh controller whose runner answers each trial with
+    the first run's row for that id emits the same trials in the same
+    order. A controller's state is therefore a function of its seed and
+    its settled rows alone."""
+    monkeypatch.setattr(experiment, "run_trial_wave", lambda *a, **kw: pytest.fail("no Spark job"))
+    config = HyperparameterOptConfig(es_policy="none", name=f"replay_{case}", log_dir=None)
+    lock = threading.Lock()
+    rows: dict[str, dict] = {}
+
+    def first(trial, stop_src):
+        with lock:
+            n = len(rows) + 1
+            # the second trial to run fails; metrics tie every fifth trial
+            rows[trial.trial_id] = {
+                "trial_id": trial.trial_id, "final_metric": None if n == 2 else float(n % 5),
+                "metric_history": [], "step_history": [], "early_stop": False,
+                "error": "RuntimeError: boom" if n == 2 else None, "logs": [], "duration_ms": 1,
+            }
+            return dict(rows[trial.trial_id])
+
+    def run(runner) -> list[str]:
+        controller, _ = _controller(case, [])
+        emitted = []
+        next_batch = controller.next_batch
+
+        def recording_next_batch(n):
+            batch = next_batch(n)
+            emitted.extend(t.trial_id for t in batch)
+            return batch
+
+        controller.next_batch = recording_next_batch
+        experiment._run_trials(None, config, None, controller, parallelism, "wave", runner=runner)
+        return emitted
+
+    ids = run(first)
+    assert len(ids) == len(rows) == SETTLED.get(case, NUM_TRIALS)
+    assert run(lambda trial, stop_src: dict(rows[trial.trial_id])) == ids

@@ -118,6 +118,48 @@ def test_liar_strategies_with_busy_trials(liar):
     assert not ctrl.trial_store
 
 
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
+def test_non_finite_metric_does_not_collapse_the_gp(bad):
+    """A finalized trial without a finite metric is left out of the
+    surrogate's data: the GP suggests what it suggests without it
+    (before, one NaN made every EI NaN and the argmax fell back to the
+    pool's first candidate)."""
+    from maggy_spark.trial import Trial
+
+    def suggest(extra):
+        ctrl = GP(n_points=300, num_warmup_trials=0, random_fraction=0.0)
+        ctrl.initialize(Searchspace(**SP), 20, "max", 3)
+        rng = np.random.default_rng(0)
+        for i in range(6):
+            t = Trial({"x": float(rng.random()), "y": float(rng.random())})
+            t.final_metric = quadratic(t.params)
+            ctrl.final_store.append(t)
+        ctrl.final_store.extend(extra)
+        return ctrl.suggest_model_params()
+
+    broken = Trial({"x": 0.5, "y": 0.5})
+    broken.final_metric = bad
+    assert suggest([broken]) == suggest([])
+
+
+@pytest.mark.parametrize("missing", [None, float("nan")])
+def test_model_gate_counts_only_finite_metrics(missing):
+    """Finalized trials without a finite metric (an early stop before any
+    broadcast, a diverged run) do not open the model phase: the GP
+    keeps drawing randoms instead of fitting an empty surrogate (which
+    raised ValueError on y.min())."""
+    from maggy_spark.trial import Trial
+
+    ctrl = GP(n_points=50, num_warmup_trials=0, random_fraction=0.0)
+    ctrl.initialize(Searchspace(**SP), 10, "max", 1)
+    for i in range(4):
+        t = Trial({"x": i / 10, "y": i / 10})
+        t.final_metric = missing
+        ctrl.final_store.append(t)
+    [t] = ctrl.next_batch(1)
+    assert t.info_dict["sample_type"] == "random"
+
+
 def test_invalid_configs_rejected():
     with pytest.raises(ValueError, match="unknown acquisition"):
         GP(acq_fun="UCB")

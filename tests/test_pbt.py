@@ -124,33 +124,56 @@ def test_pbt_direction_min_ranks_invert():
     assert ex.info_dict["donor_trial_id"] == donor.trial_id
 
 
+def test_pbt_nan_metric_is_never_a_donor():
+    """One NaN metric must not scramble the ranking: the donors are the
+    two best trials, and the NaN trial is the first loser."""
+    sp = Searchspace(x=("DOUBLE", [0.0, 100.0]))
+    pbt = Pbt(population=8)
+    pbt.initialize(sp, 16, "max", seed=1)
+    metrics = [0.5, float("nan"), 0.9, 0.1, 0.7, 0.3, 0.8, 0.2]
+    gen0 = [_mk_finalized({"x": float(i)}, metric=m, generation=0) for i, m in enumerate(metrics)]
+    out = pbt._evolve(gen0, generation=1)
+    by_metric = {str(t.final_metric): t for t in gen0}
+    exploited = [t for t in out if t.info_dict["sample_type"] == "model"]
+    assert sorted(t.info_dict["donor_trial_id"] for t in exploited) == sorted(
+        [by_metric["0.9"].trial_id, by_metric["0.8"].trial_id]
+    )
+    # worst-first pairing: NaN adopts the best donor, 0.1 the second
+    nan_child = next(t for t in exploited if t.info_dict["donor_trial_id"] == by_metric["0.9"].trial_id)
+    f = 1.2 if Pbt.pbt_coin(by_metric["nan"].trial_id) < 0.5 else 0.8
+    assert nan_child.params["x"] == 2.0 * f
+    carried = sorted(t.params["x"] for t in out if t.info_dict["sample_type"] == "promoted")
+    assert carried == [0.0, 2.0, 4.0, 5.0, 6.0, 7.0]  # the NaN (x=1) and 0.1 (x=3) trials are replaced
+
+
 def test_pbt_scheduler_contract_with_errors():
     """Unit drive of the wave contract: waits ([] while a generation
     is in flight), evolves when the EMITTED count settles even if
     some trials errored, and emits nothing more once the last
-    generation settles on the emitted count — the deadlock the
-    _gen_emitted gate exists to prevent."""
+    generation settles on the emitted count — the deadlock a gate on
+    the nominal population would cause. Driven through `next_batch`,
+    which records each emitted trial in flight."""
     sp = Searchspace(x=("DOUBLE", [0.0, 1.0]))
     pbt = Pbt(population=4)
     pbt.initialize(sp, 8, "max", seed=3)
     assert pbt.generations == 2 and pbt.num_trials == 8
-    gen0 = pbt._next_batch(10)
+    gen0 = pbt.next_batch(10)
     assert len(gen0) == 4
-    assert pbt._next_batch(10) == []  # in flight: wait
+    assert pbt.next_batch(10) == []  # in flight: wait
     # settle generation 0: 3 finalize, 1 errors
     for t in gen0[:3]:
         t.final_metric = t.params["x"]
         pbt.finalize_trial(t)
-    assert pbt._next_batch(10) == []  # still one outstanding
+    assert pbt.next_batch(10) == []  # still one outstanding
     pbt.report_error(gen0[3])
-    gen1 = pbt._next_batch(10)
+    gen1 = pbt.next_batch(10)
     assert len(gen1) == 3  # population shrank to the 3 survivors
-    assert pbt._next_batch(10) == []  # generation 1 in flight: wait
+    assert pbt.next_batch(10) == []  # generation 1 in flight: wait
     for t in gen1:
         t.final_metric = t.params["x"]
         pbt.finalize_trial(t)
-    assert pbt._next_batch(10) == []
-    assert pbt._next_batch(10) == []  # nothing in flight: the run ends
+    assert pbt.next_batch(10) == []
+    assert pbt.next_batch(10) == []  # nothing in flight: the run ends
 
 
 def test_controller_regret_comparison_cross_engine(spark, tmp_path):
